@@ -2,11 +2,12 @@
 """Capture .explain("formatted") before/after plans for every query the
 round-6 optimization touched → plans/r06/<name>_{before,after}.txt.
 
-"before" plans come from the round-start plan shapes: the decode path
-keeps a measurement escape hatch (P2S_DECODE_GROUPBY) that IS the old
-plan; the encode planner's old lazy-broadcast shape and the stats NDV
-direct-merge shape are reproduced inline below, byte-for-byte from the
-round-start source (git show 18c9fc2).
+"before" plans come from the round-start plan shapes: the encode
+planner's old lazy-broadcast shape and the stats NDV direct-merge shape
+are reproduced inline below, byte-for-byte from the round-start source
+(git show 18c9fc2). The decode "before" plan (groupBy exchange) has no
+code path left to produce it; plans/r06/decode_web_before.txt is the
+archived capture and is not regenerated.
 """
 from __future__ import annotations
 
@@ -92,15 +93,13 @@ def main() -> None:
     )
     write("encode_web_before.txt", explain(arranged_old))
 
-    # ---- decode_web / validate_web: decode plan (before via escape hatch)
+    # ---- decode_web / validate_web: decode plan (after only; the
+    # archived before-plan is kept as captured)
     snap = "/tmp/p2s_prof/plans_snap"
     import shutil
 
     shutil.rmtree(snap, ignore_errors=True)
     encode(spark, df, snap, cfg, resume=False)
-    os.environ["P2S_DECODE_GROUPBY"] = "1"
-    write("decode_web_before.txt", explain(decode_job.decode(spark, snap)))
-    del os.environ["P2S_DECODE_GROUPBY"]
     write("decode_web_after.txt", explain(decode_job.decode(spark, snap)))
 
     # ---- stats_web: NDV merge (before: round-start direct path inline)

@@ -13,10 +13,9 @@ strategy for our chunk-file layout:
 
 - **keepers** — partitions whose row count lies in
   ``[min_frac, max_frac] × target_rows`` (and whose snapshot carries the
-  table's full column set) are carried over VERBATIM: each task reads
-  the partition's self-contained chunk parquet, patches its embedded
-  ``part_id`` to the new numbering, and writes it into the new snapshot.
-  Payload bytes are never decoded; zone maps, page indexes, blooms,
+  table's full column set) are carried over VERBATIM: each task copies
+  the partition's self-contained chunk file into the new snapshot under
+  its new part id (``snapshot.copy_keepers``). Payload bytes are never decoded; zone maps, page indexes, blooms,
   NDV sketches and quantile grids ride along unchanged, so reads of the
   compacted table prune exactly as before.
 - **the tail** — undersized partitions (the small appends compaction
@@ -46,107 +45,16 @@ from __future__ import annotations
 
 import time
 
-import pyarrow as pa
-import pyarrow.compute as pc
-import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import fsio
-from .encode_job import CHUNK_SCHEMA, EncodeConfig, commit_metrics_action, encode
+from . import snapshot
+from .encode_job import EncodeConfig, commit_metrics_action, encode
 
 # Iceberg rewrite_data_files defaults: files between MIN_FRAC and
 # MAX_FRAC of the target size are left untouched
 MIN_FRAC = 0.75
 MAX_FRAC = 1.8
-
-# slim metric-row columns (CHUNK_SCHEMA order, minus wall_s which the
-# copy task appends)
-_METRIC_COLS = [
-    "part_id", "column", "type_code", "n_rows", "null_count", "n_pages",
-    "codecs", "outers", "raw_bytes", "enc_bytes", "min_bin", "max_bin",
-    "min_num", "max_num", "min_dbl", "max_dbl", "ndv", "page_rows",
-]
-_METRIC_TYPES = {
-    "part_id": pa.int64(), "column": pa.string(), "type_code": pa.int32(),
-    "n_rows": pa.int64(), "null_count": pa.int64(), "n_pages": pa.int32(),
-    "codecs": pa.string(), "outers": pa.string(), "raw_bytes": pa.int64(),
-    "enc_bytes": pa.int64(), "min_bin": pa.binary(), "max_bin": pa.binary(),
-    "min_num": pa.int64(), "max_num": pa.int64(), "min_dbl": pa.float64(),
-    "max_dbl": pa.float64(), "ndv": pa.int64(), "page_rows": pa.string(),
-}
-
-
-def metric_batch_schema() -> pa.Schema:
-    """Arrow schema of the slim metric rows a verbatim-copy task emits
-    (CHUNK_SCHEMA column order)."""
-    return pa.schema(
-        [pa.field(c, _METRIC_TYPES[c]) for c in _METRIC_COLS]
-        + [pa.field("wall_s", pa.float64())]
-    )
-
-
-def copy_chunk_file(
-    fs,
-    chunks_dir: str,
-    commits_dir: str,
-    tmp_dir: str,
-    src_fs,
-    src_path: str,
-    npid: int,
-    marker_extra: dict,
-    out_schema: pa.Schema,
-) -> pa.RecordBatch | None:
-    """Carry one partition's chunk parquet into the new snapshot as a
-    BYTE-VERBATIM copy and record the commit marker. Part identity
-    lives in the FILENAME — every reader derives ``part_id`` from it
-    (``decode_job.chunks_df``), so the embedded column's old value is
-    dead weight and the file needs NO rewrite: locally the copy streams
-    at IO speed with no parquet parse; on an object store the
-    ``fsio.copy_file_atomic`` hook becomes a server-side copy moving
-    zero bytes through the worker. Metric rows come from a
-    column-projected read of the slim stat columns (payload chunks are
-    never fetched), with ``part_id`` patched to ``npid`` in the METRIC
-    stream only. Returns the metric record batch, or None when the
-    marker already exists (resume). Shared by binpack compaction and
-    the incremental re-layout keeper path (merge_compact)."""
-    tw0 = time.time()
-    marker_path = fsio.join(commits_dir, f"{npid}.json")
-    if fsio.exists(fs, marker_path):
-        return None  # resume: this keeper already carried over
-    with src_fs.open_input_file(src_path) as f:
-        pf = pq.ParquetFile(f)
-        present = [c for c in _METRIC_COLS if c in pf.schema_arrow.names]
-        mt = pf.read(columns=present)
-    n = mt.num_rows
-    final = fsio.join(chunks_dir, f"part-{npid:06d}.parquet")
-    fsio.copy_file_atomic(src_fs, src_path, fs, final, tmp_dir=tmp_dir)
-    wall = time.time() - tw0
-    rows_n = 0
-    arrs = []
-    for c in _METRIC_COLS:
-        if c == "part_id":
-            arr = pa.array([npid] * n, pa.int64())
-        elif c in mt.schema.names:
-            arr = mt.column(c).combine_chunks().cast(_METRIC_TYPES[c])
-        else:  # chunk file from before this stat column existed
-            arr = pa.nulls(n, _METRIC_TYPES[c])
-        if c == "n_rows":
-            rows_n = int(pc.max(arr).as_py() or 0)
-        arrs.append(arr)
-    arrs.append(pa.array([wall] * n, pa.float64()))
-    fsio.write_json_atomic(
-        fs,
-        marker_path,
-        {
-            "part_id": int(npid),
-            "file": f"part-{npid:06d}.parquet",
-            "rows": rows_n,
-            "wall_s": wall,
-            **marker_extra,
-        },
-    )
-    return pa.record_batch(arrs, schema=out_schema)
 
 
 def binpack_compact(
@@ -175,7 +83,8 @@ def binpack_compact(
     # O(#snapshots) driver work, metadata JSON only.
     union_cols = decode_job.lineage(table_dir, filesystem=cfg.filesystem)["columns"]
     eligible_sids = []
-    for sid, sdir in table_mod.snapshot_dirs(table_dir, filesystem=cfg.filesystem):
+    snaps = table_mod.snapshot_dirs(table_dir, filesystem=cfg.filesystem)
+    for sid, sdir in snaps:
         lin_s = decode_job.lineage(sdir, filesystem=cfg.filesystem)
         if set(lin_s["columns"]) == set(union_cols):
             eligible_sids.append(sid)
@@ -256,42 +165,20 @@ def binpack_compact(
         *[x for sid, off in offsets.items() for x in (F.lit(sid), F.lit(off))]
     )
     rn = F.row_number().over(Window.partitionBy("sid").orderBy("part_id"))
-    plan = keepers.select(
-        "part_id",
-        (F.element_at(off_expr, F.col("sid")) + rn - 1).alias("new_pid"),
+    src_snap = F.create_map(
+        *[x for sid, sdir in snaps for x in (F.lit(int(sid)), F.lit(sdir))]
     )
-
-    snap_dirs = {
-        int(sid): sdir
-        for sid, sdir in table_mod.snapshot_dirs(table_dir, filesystem=cfg.filesystem)
-    }
-    shift = table_mod.SNAP_SHIFT
-    filesystem = cfg.filesystem
-    dest = snap_dir
-
-    def copy_tasks(batches):
-        fs, root = fsio.resolve(dest, filesystem)
-        chunks_dir = fsio.join(root, "chunks")
-        commits_dir = fsio.join(root, "_commits")
-        tmp_dir = fsio.join(root, "_tmp")
-        for d in (chunks_dir, commits_dir, tmp_dir):
-            fsio.mkdirs(fs, d)
-        out_schema = metric_batch_schema()
-        for rb in batches:
-            gpids = rb.column(rb.schema.get_field_index("part_id")).to_pylist()
-            npids = rb.column(rb.schema.get_field_index("new_pid")).to_pylist()
-            for gpid, npid in zip(gpids, npids):
-                sid, lpid = gpid >> shift, gpid & ((1 << shift) - 1)
-                src_fs, src_root = fsio.resolve(snap_dirs[sid], filesystem)
-                src = fsio.join(src_root, "chunks", f"part-{lpid:06d}.parquet")
-                out = copy_chunk_file(
-                    fs, chunks_dir, commits_dir, tmp_dir, src_fs, src,
-                    int(npid), {"binpack_copied_from": int(gpid)}, out_schema,
-                )
-                if out is not None:
-                    yield out
-
-    metrics_df = plan.repartition("new_pid").mapInArrow(copy_tasks, CHUNK_SCHEMA)
+    plan = keepers.select(
+        F.element_at(src_snap, F.col("sid")).alias("src_snap"),
+        F.col("part_id")
+        .bitwiseAND(F.lit((1 << table_mod.SNAP_SHIFT) - 1))
+        .alias("src_pid"),
+        (F.element_at(off_expr, F.col("sid")) + rn - 1).alias("new_pid"),
+        F.to_json(F.struct(F.col("part_id").alias("binpack_copied_from"))).alias(
+            "marker"
+        ),
+    )
+    metrics_df = snapshot.copy_keepers(plan, snap_dir, cfg.filesystem)
     # dtypes-only frame for lineage schema (never executed)
     full = decode_job.decode(spark, table_dir, filesystem=cfg.filesystem)
     lin = commit_metrics_action(

@@ -12,7 +12,6 @@ UDF via the chunk's page index (≙ IndexedPageReader).
 from __future__ import annotations
 
 import json
-import os
 
 import numpy as np
 import pandas as pd
@@ -22,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import blob, fsio
+from . import snapshot
 
 # Lineage stores df.dtypes simpleStrings, which are valid Spark DDL for
 # the whole type lattice ("bigint", "array<string>", "struct<a:int>",
@@ -164,7 +164,7 @@ def chunks_df(
     if table_mod.is_table(snapshot_dir, filesystem):
         parts = []
         for sid, sdir in table_mod.snapshot_dirs(snapshot_dir, as_of, filesystem, since):
-            d = spark.read.parquet(os.path.join(sdir, "chunks"))
+            d = spark.read.parquet(snapshot.chunks_dir(sdir))
             if _per_snapshot_filter is not None:
                 cond = _per_snapshot_filter(sid)
                 if cond is not None:
@@ -188,7 +188,7 @@ def chunks_df(
             # column existed (e.g. bloom) union with nulls there
             out = out.unionByName(p, allowMissingColumns=True)
         return out
-    out = spark.read.parquet(os.path.join(snapshot_dir, "chunks")).withColumn(
+    out = spark.read.parquet(snapshot.chunks_dir(snapshot_dir)).withColumn(
         "part_id", _filename_part_id()
     )
     if _per_snapshot_filter is not None:
@@ -700,22 +700,11 @@ def check_integrity(
         for _, sdir in table_mod.snapshot_dirs(snapshot_dir, as_of, filesystem, since):
             check_integrity(sdir, filesystem=filesystem)
         return
-    fs, root = fsio.resolve(snapshot_dir, filesystem)
-    commits = fsio.join(root, "_commits")
-    chunks = fsio.join(root, "chunks")
-    if not fsio.is_dir(fs, commits):
-        return
-    missing = []
-    for fname in fsio.listdir(fs, commits):
-        if not fname.endswith(".json"):
-            continue
-        pid = int(fname.split(".")[0])
-        if not fsio.exists(fs, fsio.join(chunks, f"part-{pid:06d}.parquet")):
-            missing.append(pid)
+    missing = snapshot.torn_parts(snapshot_dir, filesystem)
     if missing:
         raise FileNotFoundError(
             f"snapshot {snapshot_dir} is torn: committed partitions missing "
-            f"data files: {sorted(missing)[:10]}{'...' if len(missing) > 10 else ''}"
+            f"data files: {missing[:10]}{'...' if len(missing) > 10 else ''}"
         )
 
 
@@ -893,7 +882,7 @@ def decode(
             # no part. row_range is single-snapshot by contract, so the
             # chunks frame is exactly these files.
             df = spark.read.parquet(*[
-                os.path.join(snapshot_dir, "chunks", f"part-{pid:06d}.parquet")
+                snapshot.chunk_path(snapshot_dir, pid)
                 for pid in sorted(row_spans)
             ]).withColumn("part_id", _filename_part_id())
     # key_range (single) and key_ranges (multi, AND-combined) normalize to
@@ -1215,49 +1204,24 @@ def decode(
             cols.append(a)
         return pa.table(dict(zip(need, cols)))
 
-    if os.environ.get("P2S_DECODE_GROUPBY"):
-        # measurement escape hatch: the pre-round-6 plan shape (hash
-        # exchange on part_id + grouped rebuild) for A/B profiling
-        out = df.groupBy("part_id").applyInArrow(rebuild, out_schema)
-    else:
-        # EXCHANGE-FREE rebuild (guide §2.4): every chunk file is one
-        # partition's rows and one parquet row group (writers emit ≤
-        # ~30 rows/file), so a file can never split across scan tasks
-        # and a partition's chunk rows arrive CONTIGUOUS in the scan
-        # stream — the pruning joins are all broadcast (stream-side
-        # order preserved) and part_id is constant per file. Splitting
-        # the stream at part_id boundaries therefore feeds rebuild()
-        # exactly the groups the old groupBy(part_id) exchange built,
-        # without shuffling the payload bytes at all (measured: the
-        # groupBy plan shuffled every surviving payload byte once and
-        # AQE then coalesced the tiny-by-bytes exchange to 1-3 tasks,
-        # serializing the decode UDF behind it).
-        def rebuild_stream(batches):
-            bufs: list = []
-            cur_pid = None
-            pid_idx = None
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                if pid_idx is None:
-                    pid_idx = rb.schema.get_field_index("part_id")
-                pids = rb.column(pid_idx).to_numpy()
-                cuts = np.flatnonzero(pids[1:] != pids[:-1]) + 1
-                starts = np.concatenate(([0], cuts))
-                ends = np.concatenate((cuts, [len(pids)]))
-                for s, e in zip(starts, ends):
-                    p = int(pids[s])
-                    if cur_pid is None:
-                        cur_pid = p
-                    elif p != cur_pid:
-                        yield from rebuild(pa.Table.from_batches(bufs)).to_batches()
-                        bufs = []
-                        cur_pid = p
-                    bufs.append(rb.slice(s, e - s))
-            if bufs:
-                yield from rebuild(pa.Table.from_batches(bufs)).to_batches()
+    # EXCHANGE-FREE rebuild: every chunk file is one partition's rows
+    # and one parquet row group (writers emit ≤ ~30 rows/file), so a
+    # file can never split across scan tasks and a partition's chunk
+    # rows arrive CONTIGUOUS in the scan stream — the pruning joins are
+    # all broadcast (stream-side order preserved) and part_id is
+    # constant per file. Splitting the stream at part_id
+    # boundaries therefore feeds rebuild() exactly the groups a
+    # groupBy(part_id) exchange would build, without shuffling the
+    # payload bytes at all (measured: the groupBy plan shuffled every
+    # surviving payload byte once and AQE then coalesced the
+    # tiny-by-bytes exchange to 1-3 tasks, serializing the decode UDF
+    # behind it). split_runs raises if that contiguity ever breaks,
+    # instead of decoding half a partition with its columns all-null.
+    def rebuild_runs(batches):
+        for tbl in snapshot.split_runs(batches, "part_id"):
+            yield from rebuild(tbl).to_batches()
 
-        out = df.mapInArrow(rebuild_stream, out_schema)
+    out = df.mapInArrow(rebuild_runs, out_schema)
     # the key column rides along for pruning; drop it unless requested.
     # Residual equality filters go through _typed_lit for the same
     # session-tz reason as the bloom probes above.

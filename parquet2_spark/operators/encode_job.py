@@ -22,11 +22,8 @@ reference src/write/file.rs:61-75). Spark specifics:
   parquet Spark-side to the O(#columns) ``_lineage.json`` summary.
   Nothing O(#partitions) ever passes through the driver.
 
-Snapshot layout (Iceberg-style: immutable data files + manifest):
-    <snapshot>/chunks/part-<part_id>.parquet
-    <snapshot>/_commits/<part_id>.json
-    <snapshot>/_metrics/job-<uuid>/*.parquet
-    <snapshot>/_lineage.json
+The snapshot layout and the chunk-then-marker commit live in
+``operators/snapshot.py``.
 """
 
 from __future__ import annotations
@@ -47,6 +44,8 @@ from pyspark.sql import functions as F
 
 from .. import blob, fsio
 from ..functions.selector import SelectorConfig
+from . import snapshot
+from .snapshot import committed_parts
 
 CHUNK_SCHEMA = (
     "part_id long, column string, type_code int, n_rows long, null_count long, "
@@ -517,31 +516,12 @@ def _encode_partition_arrow(
         )
 
     out = pa.Table.from_pylist(rows, schema=CHUNK_PA_SCHEMA)
-    # metadata-plane IO through pyarrow.fs (local/HDFS/S3 behind one API;
-    # the filesystem object pickled in via cfg — see fsio module doc for
-    # the atomicity model on rename-free object stores)
-    fs, root = fsio.resolve(snapshot_dir, cfg.filesystem)
-    chunks_dir = fsio.join(root, "chunks")
-    commits_dir = fsio.join(root, "_commits")
-    tmp_dir = fsio.join(root, "_tmp")  # staged OUTSIDE the Spark scan dir
-    for d in (chunks_dir, commits_dir, tmp_dir):
-        fsio.mkdirs(fs, d)
-    final = fsio.join(chunks_dir, f"part-{part_id:06d}.parquet")
-    # our payloads are already compressed — store them raw
-    fsio.write_parquet_atomic(fs, final, out, tmp_dir=tmp_dir, compression="none")
-
-    wall = time.time() - t0
-    # slim resume ledger: the marker's existence is what matters
-    # (committed_parts reads filenames only); per-chunk metric detail
-    # lives in the chunk parquet itself and the _metrics sidecar
-    marker = {
-        "part_id": part_id,
-        "file": f"part-{part_id:06d}.parquet",
-        "rows": int(n),
-        "wall_s": wall,
-        "cpu_s": time.process_time() - c0,
-    }
-    fsio.write_json_atomic(fs, fsio.join(commits_dir, f"{part_id}.json"), marker)
+    # metadata-plane IO through pyarrow.fs (the filesystem object pickled
+    # in via cfg); per-chunk metric detail lives in the chunk parquet
+    # itself and the _metrics sidecar, the marker stays a slim ledger
+    wall = snapshot.PartWriter(snapshot_dir, cfg.filesystem).commit_table(
+        part_id, out, n, t0, c0
+    )
 
     metric_rows = [
         {
@@ -582,18 +562,6 @@ def _jstat(v, round_up: bool = False):
 
         return math.nextafter(float(v), math.inf if round_up else -math.inf)
     return v
-
-
-def committed_parts(snapshot_dir: str, filesystem=None) -> set[int]:
-    fs, root = fsio.resolve(snapshot_dir, filesystem)
-    commits = fsio.join(root, "_commits")
-    if not fsio.is_dir(fs, commits):
-        return set()
-    return {
-        int(f.split(".")[0])
-        for f in fsio.listdir(fs, commits)
-        if f.endswith(".json") and f.split(".")[0].isdigit()
-    }
 
 
 def encode(
@@ -645,14 +613,7 @@ def encode(
     if already:
         planned = planned.filter(~F.col("_part_id").isin([int(p) for p in already]))
 
-    def run(tbl: pa.Table) -> pa.Table:
-        return _encode_partition_arrow(tbl, cfg, snapshot_dir, columns, target_schema)
-
-    if cfg.shuffle and os.environ.get("P2S_ENCODE_GROUPBY"):
-        # measurement escape hatch: the pre-round-5 plan shape (hash
-        # exchange + Arrow-side sort inside the UDF) for A/B profiling
-        metrics_df = planned.groupBy("_part_id").applyInArrow(run, CHUNK_SCHEMA)
-    elif cfg.shuffle:
+    if cfg.shuffle:
         # One exchange on _part_id, then the SORT RUNS IN TUNGSTEN
         # (off-heap radix, spillable) instead of an Arrow
         # sort_indices+take gather of the whole text-heavy group in the
@@ -671,57 +632,23 @@ def encode(
         jvm_sort = [
             F.col(c).asc_nulls_last() for c in sort_cols if c in planned.columns
         ]
-        arranged = planned.repartition("_part_id").sortWithinPartitions(
+        planned = planned.repartition("_part_id").sortWithinPartitions(
             F.col("_part_id").asc(), *jvm_sort
         )
+    # Otherwise the input is pre-partitioned (_part_id ==
+    # spark_partition_id): a groupBy would STILL insert a hash exchange —
+    # pure waste when each input partition already is one output
+    # partition — and mapInArrow keeps that plan exchange-free. Either
+    # way each task sees its partitions as contiguous runs of _part_id.
 
-        def run_sorted(batches):
-            bufs: list = []
-            cur_pid = None
+    def run(batches):
+        for tbl in snapshot.split_runs(batches, "_part_id"):
+            yield from _encode_partition_arrow(
+                tbl, cfg, snapshot_dir, columns, target_schema,
+                presorted=cfg.shuffle,
+            ).to_batches()
 
-            def flush():
-                tbl = pa.Table.from_batches(bufs)
-                return _encode_partition_arrow(
-                    tbl, cfg, snapshot_dir, columns, target_schema, presorted=True
-                )
-
-            pid_idx = None
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                if pid_idx is None:
-                    pid_idx = rb.schema.get_field_index("_part_id")
-                pid = rb.column(pid_idx).to_numpy()
-                cuts = np.flatnonzero(pid[1:] != pid[:-1]) + 1
-                starts = np.concatenate(([0], cuts))
-                ends = np.concatenate((cuts, [len(pid)]))
-                for s, e in zip(starts, ends):
-                    p = int(pid[s])
-                    if cur_pid is None:
-                        cur_pid = p
-                    elif p != cur_pid:
-                        yield from flush().to_batches()
-                        bufs = []
-                        cur_pid = p
-                    bufs.append(rb.slice(s, e - s))
-            if bufs:
-                yield from flush().to_batches()
-
-        metrics_df = arranged.mapInArrow(run_sorted, CHUNK_SCHEMA)
-    else:
-        # pre-partitioned input (_part_id == spark_partition_id): a
-        # groupBy here would STILL insert a hash exchange — pure waste
-        # when each input partition already is one output partition.
-        # mapInArrow keeps the plan exchange-free (and, with no hash
-        # columns, fully columnar from the parquet scan to the UDF).
-        def run_map(batches):
-            bl = [rb for rb in batches if rb.num_rows]
-            if not bl:
-                return
-            out = run(pa.Table.from_batches(bl))
-            yield from out.to_batches()
-
-        metrics_df = planned.mapInArrow(run_map, CHUNK_SCHEMA)
+    metrics_df = planned.mapInArrow(run, CHUNK_SCHEMA)
 
     return commit_metrics_action(
         spark, metrics_df, snapshot_dir, cfg, columns, df, n_parts, t0,
@@ -753,7 +680,7 @@ def commit_metrics_action(
     # jobs. A resumed or dirty snapshot falls back to finalize()'s scan
     # of the chunk parquet (the authoritative store).
     fs0, root0 = fsio.resolve(snapshot_dir, cfg.filesystem)
-    chunks0 = fsio.join(root0, "chunks")
+    chunks0 = snapshot.chunks_dir(root0)
     fresh = not n_resumed and not (
         fsio.is_dir(fs0, chunks0)
         and any(f.endswith(".parquet") for f in fsio.listdir(fs0, chunks0))
@@ -867,7 +794,7 @@ def finalize(
     commit markers stay as the slim resume ledger only.
     """
     fs, root = fsio.resolve(snapshot_dir, cfg.filesystem)
-    chunks_dir = fsio.join(root, "chunks")
+    chunks_dir = snapshot.chunks_dir(root)
     chunk_files = (
         [f for f in fsio.listdir(fs, chunks_dir) if f.endswith(".parquet")]
         if fsio.is_dir(fs, chunks_dir)
@@ -884,7 +811,7 @@ def finalize(
         # committed-partition count is the FILE count (the embedded
         # part_id column is stale in verbatim-copied keepers)
         n_committed = len(chunk_files)
-        ch = spark.read.parquet(os.path.join(snapshot_dir, "chunks")).select(
+        ch = spark.read.parquet(snapshot.chunks_dir(snapshot_dir)).select(
             "column", "codecs", "raw_bytes", "enc_bytes", "n_rows"
         )
         agg_rows = (

@@ -46,6 +46,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import blob, fsio
+from . import snapshot
 
 # fall back to the shuffle path when the average input file overlaps
 # more than this many output buckets: the local plan re-reads a file's
@@ -186,7 +187,7 @@ def plan(
     frames = []
     for _sid, sdir in snaps:
         meta = (
-            spark.read.parquet(fsio.join(sdir, "chunks"))
+            spark.read.parquet(snapshot.chunks_dir(sdir))
             # identity from the FILENAME: copied keepers carry a stale
             # embedded part_id, and this pid names the file we re-open
             .withColumn("part_id", _filename_part_id())
@@ -281,44 +282,6 @@ def split_keepers(plan_df: DataFrame, eligible_snaps: list[str]):
     )
 
 
-def copy_keepers_metrics(keep_df: DataFrame, snapshot_dir: str, cfg) -> DataFrame:
-    """Metric-row frame for the keeper buckets: one mapInArrow task per
-    bucket copies the partition's chunk parquet with ``part_id``
-    patched to the bucket id (the same id the fused path would write).
-    Resumable via the shared ``_commits`` markers."""
-    from .binpack import copy_chunk_file, metric_batch_schema
-    from .encode_job import CHUNK_SCHEMA
-
-    filesystem = cfg.filesystem
-    dest = snapshot_dir
-
-    def copy_tasks(batches):
-        fs, root = fsio.resolve(dest, filesystem)
-        chunks_dir = fsio.join(root, "chunks")
-        commits_dir = fsio.join(root, "_commits")
-        tmp_dir = fsio.join(root, "_tmp")
-        for d in (chunks_dir, commits_dir, tmp_dir):
-            fsio.mkdirs(fs, d)
-        out_schema = metric_batch_schema()
-        for rb in batches:
-            for b, snap, pid in zip(
-                rb.column(rb.schema.get_field_index("bucket")).to_pylist(),
-                rb.column(rb.schema.get_field_index("snap")).to_pylist(),
-                rb.column(rb.schema.get_field_index("part_id")).to_pylist(),
-            ):
-                src_fs, src_root = fsio.resolve(snap, filesystem)
-                src = fsio.join(src_root, "chunks", f"part-{int(pid):06d}.parquet")
-                out = copy_chunk_file(
-                    fs, chunks_dir, commits_dir, tmp_dir, src_fs, src,
-                    int(b), {"layout_copied_from": f"{snap}#{int(pid)}"},
-                    out_schema,
-                )
-                if out is not None:
-                    yield out
-
-    return keep_df.repartition("bucket").mapInArrow(copy_tasks, CHUNK_SCHEMA)
-
-
 _LOSSY = object()  # sentinel: a bound that cannot enter page-stat space
 
 
@@ -393,13 +356,8 @@ def encode_fused(
         return arr
 
     def merge_encode(tbl: pa.Table) -> pa.Table:
-        import os as _os
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
-
-        _dbg = _os.environ.get("P2S_LM_DEBUG")
-        _t00 = time.time()
-        _ph = {"read": 0.0, "decode": 0.0, "filter": 0.0}
 
         b = int(tbl.column("bucket")[0].as_py())
         lo = bounds[b - 1] if b > 0 else None
@@ -412,10 +370,7 @@ def encode_fused(
             tbl.column("snap").to_pylist(), tbl.column("part_id").to_pylist()
         ):
             fs, root = fsio.resolve(snap, filesystem)
-            path = fsio.join(root, "chunks", f"part-{int(pid):06d}.parquet")
-            _t = time.time()
-            ct = pq.read_table(path, filesystem=fs)
-            _ph["read"] += time.time() - _t
+            ct = pq.read_table(snapshot.chunk_path(root, pid), filesystem=fs)
             names = ct.column("column").to_pylist()
             row_of = {name: i for i, name in enumerate(names)}
             have = set(ct.schema.names)
@@ -473,7 +428,6 @@ def encode_fused(
                 if len(keep) >= len(mins):
                     keep = None  # nothing pruned — take the fast whole-chunk path
 
-            _t = time.time()
             payload_of = {
                 name: p
                 for name, p in zip(names, ct.column("payload").to_pylist())
@@ -508,8 +462,6 @@ def encode_fused(
                     a = a.cast(expected_pa[c])
                 cols.append(a)
             t = pa.table(dict(zip(columns, cols)))
-            _ph["decode"] += time.time() - _t
-            _t = time.time()
             if lo is not None or hi is not None:
                 v = _cmp_space(t.column(primary))
                 mask = None
@@ -524,7 +476,6 @@ def encode_fused(
                     t = t.filter(mask)
             if t.num_rows:
                 runs.append(t)
-            _ph["filter"] += time.time() - _t
         if not runs:
             # plan overlap with zero surviving rows: the shuffle path
             # would simply not produce this partition — emit no chunk
@@ -545,20 +496,10 @@ def encode_fused(
             c: (hll.merge(sketches[c]) if c not in sketch_miss else None)
             for c in columns
         }
-        _t = time.time()
-        out = _encode_partition_arrow(
+        return _encode_partition_arrow(
             merged, cfg, snapshot_dir, columns, target_schema,
             presorted=True, ndv_override=ndv_override,
         )
-        if _dbg:
-            import json as _j
-            _os.makedirs(_dbg, exist_ok=True)
-            with open(f"{_dbg}/bucket-{b}.json", "w") as fh:
-                _j.dump({"bucket": b, "task_start": _t00, **{k: round(v, 2) for k, v in _ph.items()},
-                         "sort_s": round(_t - _t00 - sum(_ph.values()), 2),
-                         "encode_s": round(time.time() - _t, 2),
-                         "total_s": round(time.time() - _t00, 2)}, fh)
-        return out
 
     # NOT groupBy().applyInArrow: the plan rows are a few KB, so AQE
     # coalesces the groupBy's shuffle to ONE partition (advisory size is
@@ -587,9 +528,22 @@ def encode_fused(
     if keep_df is not None:
         # keeper buckets ride the SAME single action: their copy tasks
         # and the merge tasks are partitions of one metric-row frame,
-        # so commit/lineage semantics are identical to the pure plan
+        # so commit/lineage semantics are identical to the pure plan. A
+        # keeper takes its bucket id, the id the fused path would write.
+        keepers = keep_df.select(
+            F.col("snap").alias("src_snap"),
+            F.col("part_id").alias("src_pid"),
+            F.col("bucket").cast("long").alias("new_pid"),
+            F.to_json(
+                F.struct(
+                    F.concat_ws("#", "snap", F.col("part_id").cast("string")).alias(
+                        "layout_copied_from"
+                    )
+                )
+            ).alias("marker"),
+        )
         metrics_df = metrics_df.unionByName(
-            copy_keepers_metrics(keep_df, snapshot_dir, cfg)
+            snapshot.copy_keepers(keepers, snapshot_dir, filesystem)
         )
     return commit_metrics_action(
         spark, metrics_df, snapshot_dir, cfg, columns, empty_df, n_parts, t0,

@@ -587,7 +587,7 @@ def _local_merge_compact(
     from pyspark.sql import functions as F
 
     from . import decode_job, merge_compact
-    from .encode_job import committed_parts
+    from .snapshot import committed_parts
 
     if cfg.bloom_columns:
         # bloom bits are built from JVM xxhash64 of the row values —

@@ -239,3 +239,22 @@ def test_decode_chunk_chunked_zero_copy_assembly():
     # single page stays a plain Array (no pointless wrapper)
     one, _ = blob.encode_chunk([arr])
     assert isinstance(blob.decode_chunk(one, combine=False), pa.Array)
+
+
+def test_encode_page_fills_caller_reuse_dict():
+    # a dict passed in with codec=None comes back holding the measured
+    # candidate bytes (page rows <= sample_values: the full-sample case)
+    langs = ["en", "de", "fr", "pt", "zh"]
+    arr = pa.array([langs[int(i)] for i in RNG.integers(0, 5, size=600)])
+    st = stats_mod.compute(arr, full=True)
+    code = blob.type_code_of(arr.type)
+    kind = blob.TYPES[code][2]
+    candidates = sel.shortlist(st, kind, False, sel.DEFAULT)
+    assert len(candidates) > 1
+    reuse: dict = {}
+    blob.encode_page(arr, sel.DEFAULT, _reuse=reuse)
+    assert reuse
+    assert set(reuse) <= set(candidates) - {blob.FSST}
+    for c, (enc, _z, outer, level) in reuse.items():
+        assert enc == blob._encode_values(code, kind, arr, c, cfg=sel.DEFAULT)
+        assert (outer, level) == (sel.DEFAULT.outer, sel.DEFAULT.outer_level)

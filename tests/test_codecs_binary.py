@@ -190,6 +190,40 @@ def test_fsst_table_reuse_and_decode_vectorized():
     assert len(payload) < len(sample) * 0.5
 
 
+def _web_like_sample(n: int) -> bytes:
+    hosts = [b"example.com", b"news.site.org", b"shop.co.uk", b"wiki.net"]
+    paths = [b"/index.html", b"/a/b?q=1", b"/search?page=", b"/2024/05/article-"]
+    parts = []
+    for i in range(n):
+        parts.append(
+            b"https://" + hosts[int(RNG.integers(0, 4))]
+            + paths[int(RNG.integers(0, 4))] + str(int(RNG.integers(0, 10**6))).encode()
+        )
+    return b"\n".join(parts)
+
+
+@pytest.mark.parametrize("kind", ["random", "web"])
+def test_fsst_native_matches_numpy(kind):
+    """The two greedy encoders (C kernel, numpy) are byte-identical."""
+    from parquet2_spark.codecs import native
+
+    if native.get() is None:
+        pytest.skip("native accelerator not built")
+    for seed in range(4):
+        rng = np.random.default_rng(seed)
+        if kind == "random":
+            sample = bytes(rng.integers(0, 256, size=20_000, dtype=np.uint8))
+            data = bytes(rng.integers(0, 256, size=5_000, dtype=np.uint8))
+        else:
+            sample = _web_like_sample(2_000)
+            data = _web_like_sample(500)
+        table = fsst.train(sample)
+        for buf in (data, sample[:4_096], b"\xff" * 9, b"x"):
+            assert native.fsst_encode(buf, table.symbols) == fsst.encode_with_table_numpy(
+                buf, table
+            ), (kind, seed, len(buf))
+
+
 # ---------------------------------------------------------------- block
 @pytest.mark.parametrize("name", [None, "snappy", "gzip", "zstd", "lz4", "brotli"])
 def test_block_roundtrip(name):
