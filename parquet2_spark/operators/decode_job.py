@@ -133,6 +133,47 @@ def _page_keep_for_range(mins: list, maxs: list, lo, hi, order: str | None) -> s
     return keep
 
 
+def _snapshot_reads(
+    snapshot_dir: str,
+    as_of: int | None = None,
+    since: int | None = None,
+    filesystem=None,
+) -> list[tuple[int | None, str, None]]:
+    """The read list behind ``chunks_df``, resolved from the manifest
+    once: ``(sid, snapshot dir, None)`` per committed snapshot of a table
+    dir in ``(since, as_of]``, or ``[(None, snapshot_dir, None)]`` for a
+    single snapshot dir. The trailing ``None`` means every chunk file."""
+    from . import table as table_mod
+
+    if not table_mod.is_table(snapshot_dir, filesystem):
+        return [(None, snapshot_dir, None)]
+    snaps = table_mod.snapshot_dirs(snapshot_dir, as_of, filesystem, since)
+    if not snaps and since is None:
+        raise FileNotFoundError(f"table {snapshot_dir} has no committed snapshots")
+    # an empty incremental window (nothing new since the caller's
+    # checkpoint) reads as a zero-row chunks frame, not an error
+    return [(sid, sdir, None) for sid, sdir in snaps]
+
+
+def _narrow_reads(reads: list, part_ids) -> list:
+    """``reads`` cut down to the chunk files of ``part_ids``, numbered as
+    ``chunks_df`` numbers them (namespaced by snapshot id on a table)."""
+    from . import table as table_mod
+
+    mask = (1 << table_mod.SNAP_SHIFT) - 1
+    by_sid: dict = {}
+    for p in part_ids:
+        by_sid.setdefault(int(p) >> table_mod.SNAP_SHIFT, set()).add(int(p) & mask)
+    out = []
+    for sid, sdir, pids in reads:
+        keep = {int(p) for p in part_ids} if sid is None else by_sid.get(sid, set())
+        if pids is not None:
+            keep &= set(pids)
+        if keep:
+            out.append((sid, sdir, sorted(keep)))
+    return out
+
+
 def chunks_df(
     spark: SparkSession,
     snapshot_dir: str,
@@ -140,12 +181,21 @@ def chunks_df(
     since: int | None = None,
     filesystem=None,
     _per_snapshot_filter=None,
+    _reads: list | None = None,
 ) -> DataFrame:
     """The chunks table (metadata + payload). Stats queries should select
     only metadata columns — parquet column pruning then never touches the
     payload bytes. A multi-snapshot table dir unions every committed
     snapshot's chunks with the part_id namespaced by snapshot id, so ids
     never collide across snapshots.
+
+    ``_reads`` (internal: a ``_snapshot_reads`` list, possibly narrowed
+    to a prune's survivors) replaces the manifest read, so two frames
+    built from one list see the same snapshots even if a commit or a
+    compaction swaps the manifest in between. An entry ``(sid, dir, part_ids)`` with a list
+    of ids reads exactly those chunk files by path: other files are never
+    listed, opened or footer-read, and a listed file that is gone raises.
+    An empty list gives a typed zero-row frame.
 
     ``_per_snapshot_filter`` (internal, binpack compaction): a callable
     ``sid -> Column | None`` applied to each snapshot's frame BEFORE the
@@ -158,43 +208,32 @@ def chunks_df(
     from the callable keeps the whole snapshot."""
     from . import table as table_mod
 
+    if _reads is None:
+        _reads = _snapshot_reads(snapshot_dir, as_of, since, filesystem)
     # manifest reads go through pyarrow.fs; the chunk parquet itself is
     # read by Spark's own scan, so for a non-local filesystem the
     # snapshot paths must also be Spark-readable URIs (S3A/HDFS)
-    if table_mod.is_table(snapshot_dir, filesystem):
-        parts = []
-        for sid, sdir in table_mod.snapshot_dirs(snapshot_dir, as_of, filesystem, since):
+    parts = []
+    for sid, sdir, pids in _reads:
+        if pids is None:
             d = spark.read.parquet(snapshot.chunks_dir(sdir))
-            if _per_snapshot_filter is not None:
-                cond = _per_snapshot_filter(sid)
-                if cond is not None:
-                    d = d.filter(cond)
-            parts.append(
-                d.withColumn(
-                    "part_id",
-                    (F.lit(sid).cast("long") * F.lit(1 << table_mod.SNAP_SHIFT))
-                    + _filename_part_id(),
-                )
-            )
-        if not parts:
-            if since is not None:
-                # empty incremental window (nothing new since the caller's
-                # checkpoint) — a zero-row chunks frame, not an error
-                return spark.createDataFrame([], _CHUNKS_DDL)
-            raise FileNotFoundError(f"table {snapshot_dir} has no committed snapshots")
-        out = parts[0]
-        for p in parts[1:]:
-            # allowMissingColumns: snapshots written before a metadata
-            # column existed (e.g. bloom) union with nulls there
-            out = out.unionByName(p, allowMissingColumns=True)
-        return out
-    out = spark.read.parquet(snapshot.chunks_dir(snapshot_dir)).withColumn(
-        "part_id", _filename_part_id()
-    )
-    if _per_snapshot_filter is not None:
-        cond = _per_snapshot_filter(0)
-        if cond is not None:
-            out = out.filter(cond)
+        else:
+            d = spark.read.parquet(*[snapshot.chunk_path(sdir, p) for p in pids])
+        if _per_snapshot_filter is not None:
+            cond = _per_snapshot_filter(0 if sid is None else sid)
+            if cond is not None:
+                d = d.filter(cond)
+        pid_col = _filename_part_id()
+        if sid is not None:
+            pid_col = F.lit(sid).cast("long") * F.lit(1 << table_mod.SNAP_SHIFT) + pid_col
+        parts.append(d.withColumn("part_id", pid_col))
+    if not parts:
+        return spark.createDataFrame([], _CHUNKS_DDL)
+    out = parts[0]
+    for p in parts[1:]:
+        # allowMissingColumns: snapshots written before a metadata
+        # column existed (e.g. bloom) union with nulls there
+        out = out.unionByName(p, allowMissingColumns=True)
     return out
 
 
@@ -708,6 +747,25 @@ def check_integrity(
         )
 
 
+def _lookup_survivors(df: DataFrame, ranges: list, probes: dict) -> set[int]:
+    """Phase 1 of a point lookup: one pass over the key columns' chunk
+    rows of ``df`` (a chunks frame) applies each ``(column, lo, hi)``
+    zone-map range in ``ranges`` and each ``{column: bloom test}`` probe
+    in ``probes``, and collects the part ids whose every key column
+    passes — O(survivors) rows to the driver."""
+    need = {c for c, _, _ in ranges} | set(probes)
+    keyed = df.filter(F.col("column").isin(sorted(need)))
+    for c, lo, hi in ranges:
+        keyed = prune_by_range(keyed, c, lo, hi)
+    if "bloom" in keyed.columns:
+        for c, probe in probes.items():
+            keyed = keyed.filter((F.col("column") != c) | probe)
+    hits: dict[int, set] = {}
+    for pid, c in keyed.select("part_id", "column").collect():
+        hits.setdefault(pid, set()).add(c)
+    return {p for p, cs in hits.items() if cs == need}
+
+
 def decode(
     spark: SparkSession,
     snapshot_dir: str,
@@ -733,10 +791,23 @@ def decode(
     *pages* inside surviving chunks via the page index.
 
     ``key_eq=(column, value)`` is the bloom-assisted point lookup (the
-    reference's index-assisted read, SURVEY §3.3): partitions whose stored
-    split-block bloom (see ``EncodeConfig.bloom_columns``) rules the value
-    out are dropped before any payload is read; never a false negative.
-    The residual equality filter is applied to the decoded rows.
+    reference's index-assisted read, SURVEY §3.3). It reads in two
+    phases. (1) Prune: one Spark job over the key column's chunk rows
+    applies the zone map as the range ``[value, value]`` and probes the
+    stored split-block bloom (see ``EncodeConfig.bloom_columns``) with
+    ``plans.bloom.might_contain_col``, a Catalyst expression over the
+    constant-folded ``xxhash64`` of the value, so pruning never leaves the
+    JVM. The surviving part ids are collected to the driver: O(survivors)
+    rows. A null bloom (a snapshot encoded without one) keeps its
+    partition; never a false negative. (2) Read: the decode scan lists
+    only the survivors' chunk files, by explicit path, so pruned files
+    are never opened; no survivors gives a typed zero-row frame. The
+    residual equality filter is applied to the decoded rows.
+
+    ``key_in=(column, values)`` is the batch lookup with the same two
+    phases: phase 1 applies the ``[min, max]`` envelope of the values
+    and keeps a chunk whose bloom may hold ANY of their hashes (a numpy
+    probe in a pandas UDF); the residual keeps only the listed values.
 
     The returned frame carries ``df.p2s_decode_metrics`` — a dict of
     ``pages_read``/``pages_skipped`` SparkContext accumulators populated
@@ -781,6 +852,23 @@ def decode(
         if c not in base_cols:
             base_cols.append(c)
     cols = base_cols
+
+    # every projected and predicate column must exist, checked before any
+    # job runs (row_range and the lookup prune both collect)
+    nn_cols = [not_null] if isinstance(not_null, str) else sorted(not_null or [])
+    isnull_cols = [is_null] if isinstance(is_null, str) else sorted(is_null or [])
+    preds = list(key_ranges or [])
+    if key_range:
+        preds.append(key_range)
+    pred_cols = (
+        [p[0] for p in preds]
+        + [k[0] for k in (key_eq, key_in) if k is not None]
+        + nn_cols
+        + isnull_cols
+    )
+    unknown = [c for c in dict.fromkeys(cols + pred_cols) if c not in schema_map]
+    if unknown:
+        raise KeyError(f"columns not in snapshot schema: {unknown} (have {sorted(schema_map)})")
 
     # ``row_range=(start, stop)`` — the §3.3 row-interval read (reference
     # compute_rows/select_pages/SliceFilteredIter): partitions outside the
@@ -863,36 +951,13 @@ def decode(
                     hi = min(stop - base, prows)
                     if lo < hi:
                         row_spans[pid] = (lo, hi)
-    unknown = [c for c in cols if c not in schema_map]
-    if unknown:
-        raise KeyError(f"columns not in snapshot schema: {unknown} (have {sorted(schema_map)})")
 
-    df = chunks_df(
-        spark, snapshot_dir, as_of, since, filesystem,
-        _per_snapshot_filter=_chunk_filter,
-    )
-    if row_spans is not None:
-        if not row_spans:
-            df = df.filter(F.lit(False))
-        else:
-            # surviving partitions as an EXPLICIT file list — stronger
-            # than the old pushed IN(part_id) filter: non-surviving
-            # files are never listed, opened, or footer-read, and the
-            # embedded part_id (stale in verbatim-copied keepers) plays
-            # no part. row_range is single-snapshot by contract, so the
-            # chunks frame is exactly these files.
-            df = spark.read.parquet(*[
-                snapshot.chunk_path(snapshot_dir, pid)
-                for pid in sorted(row_spans)
-            ]).withColumn("part_id", _filename_part_id())
-    # key_range (single) and key_ranges (multi, AND-combined) normalize to
-    # one predicate list; each predicate prunes partitions independently
-    # (intersection via chained broadcast semijoins), pages inside
-    # surviving chunks are pruned per column, residual filters make every
-    # predicate exact
-    preds = list(key_ranges or [])
-    if key_range:
-        preds.append(key_range)
+    # key_range (single) and key_ranges (multi, AND-combined) prune
+    # partitions through chained broadcast semijoins; the point lookups'
+    # ranges below prune in the lookup's own driver-side pass. All of
+    # them prune pages inside surviving chunks per column, and residual
+    # filters make every predicate exact.
+    range_preds, lookup_ranges = list(preds), []
     if key_eq is not None:
         # zone maps prune equality as the degenerate range [v, v]: a
         # sorted or range-partitioned key prunes partitions AND pages
@@ -904,50 +969,30 @@ def decode(
 
         eqc, eqv = key_eq
         if eqv is not None and not (isinstance(eqv, float) and _math.isnan(eqv)):
-            preds.append((eqc, eqv, eqv))
+            lookup_ranges.append((eqc, eqv, eqv))
     if key_in is not None and key_in[1]:
         # coarse [min, max] zone-map envelope over the IN-list (exact
         # membership still enforced by bloom + residual): a clustered id
         # batch-fetch touches only the overlapping key range
         try:
-            preds.append((key_in[0], min(key_in[1]), max(key_in[1])))
+            lookup_ranges.append((key_in[0], min(key_in[1]), max(key_in[1])))
         except TypeError:
             pass  # unorderable/mixed values — bloom + residual only
-    key_cols = [p[0] for p in preds]
-    key_col = key_cols[0] if key_cols else None
-    for pcol, lo, hi in preds:
-        keyed = prune_by_range(df.filter(F.col("column") == pcol), pcol, lo, hi)
-        surviving = keyed.select("part_id").distinct()
-        df = df.join(F.broadcast(surviving), "part_id")
+    preds = range_preds + lookup_ranges
+
+    # bloom probes per lookup column: a chunk row whose bloom rules the
+    # value out is dropped; a null bloom (column or snapshot encoded
+    # without one) is kept
+    from ..plans import bloom as bloom_mod
+
+    probes = {}
     if key_eq is not None:
-        eq_col, eq_val = key_eq
-        # the value's hash, computed by the SAME JVM function that hashed
-        # the column at encode time; _typed_lit keeps datetime probes
-        # session-timezone-independent (UTC instants, like the stored data)
-        hv = int(
-            spark.range(1)
-            .select(F.xxhash64(_typed_lit(eq_val, schema_map[eq_col])))
-            .first()[0]
-        )
-
-        from ..plans import bloom as bloom_mod
-
-        @F.pandas_udf("boolean")
-        def might(b: pd.Series) -> pd.Series:
-            probe = np.array([hv], dtype=np.int64).view(np.uint64)
-            return pd.Series(
-                [
-                    True if bs is None else bool(bloom_mod.might_contain(bs, probe)[0])
-                    for bs in b
-                ]
-            )
-
-        if "bloom" in df.columns:
-            keyed = df.filter(F.col("column") == eq_col).filter(might(F.col("bloom")))
-            df = df.join(F.broadcast(keyed.select("part_id").distinct()), "part_id")
-        # snapshots written without bloom filters fall through to the
-        # residual equality filter (full scan, still correct)
-
+        # the value's hash, by the SAME JVM function that hashed the column
+        # at encode time, constant-folded into the probe expression;
+        # _typed_lit keeps datetime probes session-timezone-independent
+        # (UTC instants, like the stored data)
+        eq_hash = F.xxhash64(_typed_lit(key_eq[1], schema_map[key_eq[0]]))
+        probes[key_eq[0]] = bloom_mod.might_contain_col("bloom", "__p2s_eq_h")
     if key_in is not None:
         # IN-list point lookup: one bloom pass with ALL the probe hashes —
         # a partition survives if ANY key might be present; the residual
@@ -962,33 +1007,45 @@ def decode(
         hv_rows = in_probe_frame.select(
             F.xxhash64(F.col("__p2s_probe")).alias("h")
         ).collect()
-        hashes = [r["h"] for r in hv_rows]
-        probes = np.array(hashes, dtype=np.int64).view(np.uint64)
-
-        from ..plans import bloom as bloom_mod
+        in_hashes = np.array([r["h"] for r in hv_rows], dtype=np.int64).view(np.uint64)
 
         @F.pandas_udf("boolean")
         def might_any(b: pd.Series) -> pd.Series:
             return pd.Series(
                 [
-                    True if bs is None else bool(bloom_mod.might_contain(bs, probes).any())
+                    True if bs is None else bool(bloom_mod.might_contain(bs, in_hashes).any())
                     for bs in b
                 ]
             )
 
-        if "bloom" in df.columns:
-            keyed = df.filter(F.col("column") == in_col).filter(might_any(F.col("bloom")))
-            df = df.join(F.broadcast(keyed.select("part_id").distinct()), "part_id")
+        in_probe = might_any(F.col("bloom"))
+        probes[in_col] = in_probe if in_col not in probes else probes[in_col] & in_probe
+
+    # the snapshot list is read from the manifest once: the prune and
+    # the scan below see the same snapshots even if a commit or a
+    # compaction swaps the manifest in between
+    reads = _snapshot_reads(snapshot_dir, as_of, since, filesystem)
+    if row_spans is not None:
+        reads = _narrow_reads(reads, row_spans)
+    if probes and reads:
+        # point lookups read in two phases: (1) one pass over the key
+        # columns' chunk rows collects the surviving part ids, (2) the
+        # scan below lists only their chunk files
+        keyed = chunks_df(spark, snapshot_dir, _per_snapshot_filter=_chunk_filter, _reads=reads)
+        if key_eq is not None:
+            keyed = keyed.withColumn("__p2s_eq_h", eq_hash)
+        reads = _narrow_reads(reads, _lookup_survivors(keyed, lookup_ranges, probes))
+    df = chunks_df(spark, snapshot_dir, _per_snapshot_filter=_chunk_filter, _reads=reads)
+    key_cols = [p[0] for p in preds]
+    for pcol, lo, hi in range_preds:
+        keyed = prune_by_range(df.filter(F.col("column") == pcol), pcol, lo, hi)
+        surviving = keyed.select("part_id").distinct()
+        df = df.join(F.broadcast(surviving), "part_id")
 
     # validity predicates (IS NOT NULL / IS NULL): chunk-level skip from
     # the per-chunk null_count, page-level skip from the page_nulls index
     # (reference PageIndex null_count, src/indexes/index.rs:74-135),
     # residual filters keep the result exact
-    nn_cols = [not_null] if isinstance(not_null, str) else sorted(not_null or [])
-    isnull_cols = [is_null] if isinstance(is_null, str) else sorted(is_null or [])
-    for c in nn_cols + isnull_cols:
-        if c not in schema_map:
-            raise KeyError(f"column {c} not in snapshot schema")
     for c in nn_cols:
         # positive evidence required: a partition survives only when the
         # column's chunk exists with at least one non-null row — this also

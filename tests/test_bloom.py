@@ -65,3 +65,48 @@ def test_bloom_build_tree_merge_matches_flat(spark):
     probes = spark.createDataFrame([("k17",), ("absent-key",)], "key string")
     got = {r["key"]: r["might_contain"] for r in bloom_probe(spark, probes, "key", tree).collect()}
     assert got["k17"] is True
+
+
+def test_catalyst_probe_matches_numpy(spark):
+    """``might_contain_col`` (the JVM-side probe behind key_eq) agrees
+    with the numpy ``might_contain`` on random blooms from one block to
+    thousands, at three fpp settings, for member hashes, random
+    non-members and the int64 edge values — under ANSI arithmetic, where
+    any long overflow in the probe would raise instead of wrapping."""
+    rng = np.random.default_rng(20261017)
+    edges = np.array([0, -1, -(1 << 63), (1 << 63) - 1, 1, -2], dtype=np.int64)
+    blooms, probes = [], []
+    cases = [(ndv, fpp, None) for ndv in (1, 40, 2500, 60000) for fpp in (0.01, 0.1, 0.3)]
+    cases += [(30, 0.01, 1), (300, 0.01, 5000)]  # explicit block counts
+    for case, (ndv, fpp, n_blocks) in enumerate(cases):
+        keys = rng.integers(-(1 << 63), (1 << 63) - 1, size=ndv, dtype=np.int64, endpoint=True)
+        if case % 2:
+            keys = np.concatenate([keys, edges[:3]])  # edge values as members
+        bits = bloom.build(keys.view(np.uint64), n_blocks=n_blocks, fpp=fpp)
+        others = rng.integers(-(1 << 63), (1 << 63) - 1, size=300, dtype=np.int64, endpoint=True)
+        h = np.concatenate([rng.choice(keys, size=min(len(keys), 200), replace=False),
+                            others, edges])
+        want = bloom.might_contain(bits, h.view(np.uint64))
+        blooms.append((case, bits))
+        probes += [(case, int(x), bool(w)) for x, w in zip(h, want)]
+    # a null bloom keeps every probe
+    blooms.append((-1, None))
+    probes += [(-1, int(x), True) for x in edges]
+
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        b = spark.createDataFrame(blooms, "case int, bloom binary")
+        p = spark.createDataFrame(probes, "case int, h long, want boolean")
+        got = (
+            p.join(F.broadcast(b), "case")
+            .select("want", bloom.might_contain_col("bloom", "h").alias("got"))
+            .groupBy("want", "got").count().collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    counts = {(r["want"], r["got"]): r["count"] for r in got}
+    assert sum(counts.values()) == len(probes)
+    assert counts.get((True, False), 0) == 0 and counts.get((False, True), 0) == 0, counts
+    # both outcomes are exercised: members and some definite misses
+    assert counts.get((True, True), 0) > 0 and counts.get((False, False), 0) > 0
