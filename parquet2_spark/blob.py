@@ -598,16 +598,12 @@ def encode_page(
             # CHILD pages of nested chunks (flat chunks fix their winner
             # once at chunk level and clear the candidate list) — so the
             # speed profile covers the whole type lattice
-            sizes = {
+            zs = {
                 name: block.compress(enc, name, cfg.outer_level if name == "zstd" else None)
                 for name in cfg.outer_candidates
             }
-            best = min(len(z) for z in sizes.values())
-            chosen = min(
-                (n for n, z in sizes.items() if len(z) <= best * (1 + cfg.outer_slack)),
-                key=lambda n: (sel.OUTER_COST_RANK.get(n, 9), len(sizes[n])),
-            )
-            compressed, outer_name = sizes[chosen], chosen
+            outer_name = sel.pick_outer({n: len(z) for n, z in zs.items()}, cfg)
+            compressed = zs[outer_name]
         elif cached_z is not None:
             compressed, outer_name = cached_z, cfg.outer
         else:
@@ -879,11 +875,7 @@ def encode_chunk(
                     )
                     for name in cfg.outer_candidates
                 }
-                best = min(sizes.values())
-                chosen = min(
-                    (n for n in sizes if sizes[n] <= best * (1 + cfg.outer_slack)),
-                    key=lambda n: (sel.OUTER_COST_RANK.get(n, 9), sizes[n]),
-                )
+                chosen = sel.pick_outer(sizes, cfg)
                 from dataclasses import replace as _replace
 
                 # fix the winner for every page of this flat chunk (and

@@ -178,3 +178,14 @@ def pick_by_measure(sizes: dict[int, int], cfg: SelectorConfig = DEFAULT) -> int
     cutoff = best_size * (1.0 + cfg.speed_slack)
     near = {c: s for c, s in sizes.items() if s <= cutoff}
     return min(near.items(), key=lambda kv: (ENCODE_COST_RANK.get(kv[0], 9), kv[1], kv[0]))[0]
+
+
+def pick_outer(sizes: dict[str, int], cfg: SelectorConfig = DEFAULT) -> str:
+    """Cost-aware outer codec: the cheapest (``OUTER_COST_RANK``) of the
+    measured codecs within ``cfg.outer_slack`` of the smallest size; ties
+    break toward the smaller, then the first measured."""
+    cutoff = min(sizes.values()) * (1 + cfg.outer_slack)
+    return min(
+        (n for n in sizes if sizes[n] <= cutoff),
+        key=lambda n: (OUTER_COST_RANK.get(n, 9), sizes[n]),
+    )

@@ -133,6 +133,136 @@ def _page_keep_for_range(mins: list, maxs: list, lo, hi, order: str | None) -> s
     return keep
 
 
+# The partition reader shared by decode and the fused compaction
+# (merge_compact.encode_fused): one chunk-table group in, page-pruned,
+# decoded, schema-filled and typed columns out.
+
+
+def _page_space(v):
+    """Range bound → page zone-map (``encode_job._jstat``) space:
+    datetime/date → micros/days, bytes → utf-8 text. Valid utf-8 compares
+    identically as text (code-point order == byte order); bytes that are
+    NOT valid utf-8 (a prefix cut mid-codepoint) have no order-faithful
+    text form, so that side of the range is left open (None) rather than
+    risk skipping a page that holds matching rows."""
+    v = _zone_bound(v)
+    if isinstance(v, (bytes, bytearray)):
+        try:
+            return bytes(v).decode("utf-8")
+        except UnicodeDecodeError:
+            return None
+    if isinstance(v, np.integer):
+        return int(v)
+    return v
+
+
+def _page_keep(tbl: pa.Table, ranges: list, not_null: list, is_null: list) -> set | None:
+    """Page indexes of one partition that may hold rows matching every
+    predicate — the select_pages analog over the chunk table's page zone
+    maps and null index. ``ranges`` are ``(column, lo, hi)`` (None = open
+    side); ``not_null`` skips all-null pages, ``is_null`` null-free ones.
+    A predicate column absent from the partition (an older snapshot), or
+    without page stats, prunes nothing. None when every page survives.
+    Pages are row-aligned across a partition's columns, so one keep-set
+    serves every column."""
+    names = tbl.column("column").to_pylist()
+    row_of = {name: i for i, name in enumerate(names)}
+    have = set(tbl.schema.names)
+    keep = None
+    for col, lo, hi in ranges:
+        i = row_of.get(col)
+        if i is None:
+            continue
+        k = _page_keep_for_range(
+            json.loads(tbl.column("page_mins")[i].as_py()),
+            json.loads(tbl.column("page_maxs")[i].as_py()),
+            _page_space(lo),
+            _page_space(hi),
+            tbl.column("bounds_order")[i].as_py() if "bounds_order" in have else None,
+        )
+        keep = k if keep is None else keep & k
+    # pre-r4 snapshots carry no page_nulls: the chunk-level prune and the
+    # residual filters stay correct without it
+    for col in (*not_null, *is_null) if "page_nulls" in have else ():
+        i = row_of.get(col)
+        pn_raw = None if i is None else tbl.column("page_nulls")[i].as_py()
+        if pn_raw is None:
+            continue
+        pn = json.loads(pn_raw)
+        if col in not_null:
+            pr = json.loads(tbl.column("page_rows")[i].as_py())
+            k = {j for j, (nulls, rows) in enumerate(zip(pn, pr)) if nulls < rows}
+        else:
+            k = {j for j, nulls in enumerate(pn) if nulls > 0}
+        keep = k if keep is None else keep & k
+    if keep is None:
+        return None
+    n_pages = len(json.loads(tbl.column("page_rows")[0].as_py()))
+    return None if keep >= set(range(n_pages)) else keep
+
+
+def _decode_part(
+    tbl: pa.Table,
+    columns: list[str],
+    expected_pa: dict,
+    keep: set | None = None,
+    field_sel: dict | None = None,
+    row_span: tuple | None = None,
+) -> pa.Table | None:
+    """Decode one partition's chunk rows into a table of ``columns``
+    typed as ``expected_pa``. ``keep`` (from ``_page_keep``) decodes only
+    those pages, ``row_span=(start, stop)`` only those rows (the page
+    offset index picks the pages; it takes precedence over ``keep``),
+    ``field_sel`` prunes struct fields per column. A column the partition
+    lacks (added by a later snapshot) reads as all-null. None when every
+    page is pruned."""
+    payload_of = dict(
+        zip(tbl.column("column").to_pylist(), tbl.column("payload").to_pylist())
+    )
+    arrays = {}
+    for c in columns:
+        p = payload_of.get(c)
+        if p is None:
+            continue
+        ff = (field_sel or {}).get(c)
+        if row_span is not None:
+            arrays[c] = blob.decode_chunk_rows(
+                p, row_span[0], row_span[1] - row_span[0], field_filter=ff,
+                combine=False,
+            )
+        elif keep is None:
+            arrays[c] = blob.decode_chunk(p, field_filter=ff, combine=False)
+        else:
+            parts = [
+                a
+                for _, a in blob.iter_chunk_pages(
+                    p, page_filter=lambda i, fr: i in keep, field_filter=ff
+                )
+                if a is not None
+            ]
+            if not parts:
+                return None
+            arrays[c] = blob.chunk_pages(parts)
+    n = len(next(iter(arrays.values()))) if arrays else 0
+    cols = []
+    for c in columns:
+        a = arrays.get(c)
+        if a is None:
+            a = pa.nulls(n, expected_pa[c])
+        elif len(a) != n:
+            raise ValueError(f"column {c} row mismatch {len(a)} != {n}")
+        elif not a.type.equals(expected_pa[c]):
+            # recursive, storage-preserving: naive→tz-aware timestamps
+            # (assumed UTC, matching blob's epoch-micros storage),
+            # large_string→string, nested children included
+            a = a.cast(expected_pa[c])
+        # pages stay CHUNKED end-to-end: pa.table accepts per-column chunk
+        # layouts and the Arrow IPC exchange back to Spark slices record
+        # batches at chunk boundaries zero-copy
+        cols.append(a)
+    return pa.table(dict(zip(columns, cols)))
+
+
 def _snapshot_reads(
     snapshot_dir: str,
     as_of: int | None = None,
@@ -520,9 +650,10 @@ def _committed_partition_count(snapshot_dir: str, filesystem=None) -> int | None
 
 
 def _zone_bound(v):
-    """Normalize a user-supplied range bound to the zone map's storage
-    unit (mirrors encode_job._stat_cols.as_num): datetime → micros,
-    date → days-since-epoch; everything else passes through.
+    """Normalize a value to the zone map's storage unit: datetime →
+    micros, date → days-since-epoch; everything else passes through. The
+    one copy of the conversion: range bounds here, and the chunk and page
+    zone maps the encoder writes (``encode_job._stat_cols``/``_jstat``).
 
     tz-aware datetimes convert via ``astimezone(utc)`` + exact timedelta
     integer division — NOT ``datetime(1970,1,1, tzinfo=v.tzinfo)``, whose
@@ -1140,13 +1271,6 @@ def decode(
         stype = T.StructType(pruned)
     out_schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in stype.fields)
     expected_pa = {f.name: spark_type_to_pa(f.dataType, ts_tz=session_tz) for f in stype.fields}
-    # page zone maps store _jstat units (micros/days; bytes as utf-8 text)
-    # — normalize the bounds once so the page compare is unit-correct
-    def _page_bound(v):
-        v = _zone_bound(v)
-        return v.decode("utf-8", "replace") if isinstance(v, (bytes, bytearray)) else v
-
-    krs = [(p[0], _page_bound(p[1]), _page_bound(p[2])) for p in preds]
     # decode metrics (read back after an action via df.p2s_decode_metrics):
     # pages decoded vs pages skipped by the page-level indexes — the
     # observable evidence that pruning is physical, not just a row filter
@@ -1154,112 +1278,19 @@ def decode(
     acc_pages_skipped = spark.sparkContext.accumulator(0)
 
     def rebuild(tbl: pa.Table) -> pa.Table:
-        import pyarrow.compute as pc
+        # page zone maps and the null index skip whole pages inside
+        # surviving chunks — the IndexedPageReader/select_pages analog
+        page_keep = _page_keep(tbl, preds, nn_cols, isnull_cols)
+        n_pages = len(json.loads(tbl.column("page_rows")[0].as_py()))
+        kept = n_pages if page_keep is None else len(page_keep)
+        acc_pages_read.add(kept)
+        acc_pages_skipped.add(n_pages - kept)
 
-        names = tbl.column("column").to_pylist()
-        payloads = tbl.column("payload").to_pylist()
-
-        # page-level zone maps: inside surviving chunks, skip whole pages
-        # whose [min,max] misses the key range (pages are row-aligned
-        # across a partition's columns, so the same subset keeps columns
-        # consistent) — the IndexedPageReader/select_pages analog.
-        page_keep = None
-        has_order = "bounds_order" in tbl.schema.names
-        for kcol, lo, hi in krs:
-            if kcol not in names:
-                continue  # column absent in this (older) partition
-            idx = names.index(kcol)
-            mins = json.loads(tbl.column("page_mins")[idx].as_py())
-            maxs = json.loads(tbl.column("page_maxs")[idx].as_py())
-            order = tbl.column("bounds_order")[idx].as_py() if has_order else None
-            keep = _page_keep_for_range(mins, maxs, lo, hi, order)
-            # AND across predicates: a page must survive every range
-            page_keep = keep if page_keep is None else (page_keep & keep)
-
-        # page-level null index: an IS NOT NULL predicate skips all-null
-        # pages, IS NULL skips null-free pages (pre-r4 snapshots carry no
-        # page_nulls — chunk-level prune + residual stay correct)
-        if "page_nulls" in tbl.schema.names and (nn_cols or isnull_cols):
-            for c in nn_cols + isnull_cols:
-                if c not in names:
-                    continue
-                idx = names.index(c)
-                pn_raw = tbl.column("page_nulls")[idx].as_py()
-                if pn_raw is None:
-                    continue  # chunk written before the null index existed
-                pn = json.loads(pn_raw)
-                pr = json.loads(tbl.column("page_rows")[idx].as_py())
-                if c in nn_cols:
-                    keep = {i for i, (k, r) in enumerate(zip(pn, pr)) if k < r}
-                else:
-                    keep = {i for i, k in enumerate(pn) if k > 0}
-                page_keep = keep if page_keep is None else (page_keep & keep)
-
-        n_pages_part = 0
-        if names:
-            n_pages_part = len(json.loads(tbl.column("page_rows")[0].as_py()))
-        if page_keep is None:
-            acc_pages_read.add(n_pages_part)
-        else:
-            kept = len(page_keep & set(range(n_pages_part)))
-            acc_pages_read.add(kept)
-            acc_pages_skipped.add(n_pages_part - kept)
-
-        span = None
-        if row_spans is not None:
-            pid = int(tbl.column("part_id")[0].as_py())
-            span = row_spans[pid]
-
-        arrays = {}
-        for name, payload in zip(names, payloads):
-            ff = field_sel.get(name)
-            if span is not None:
-                # page offset index selects overlapping pages; residual
-                # slice applied per page — never decodes outside the span
-                arrays[name] = blob.decode_chunk_rows(
-                    payload, span[0], span[1] - span[0], field_filter=ff,
-                    combine=False,
-                )
-            elif page_keep is None:
-                arrays[name] = blob.decode_chunk(
-                    payload, field_filter=ff, combine=False
-                )
-            else:
-                parts = [
-                    a
-                    for _, a in blob.iter_chunk_pages(
-                        payload, page_filter=lambda i, fr: i in page_keep, field_filter=ff
-                    )
-                    if a is not None
-                ]
-                if not parts:
-                    arrays[name] = None
-                else:
-                    arrays[name] = blob.chunk_pages(parts)
-        if any(a is None for a in arrays.values()):
-            # all pages pruned → typed 0-row table
-            arrays = {c: pa.array([], type=expected_pa[c]) for c in need}
-        n = len(next(iter(arrays.values()))) if arrays else 0
-        cols = []
-        for c in need:
-            if c not in arrays:
-                # column added by a later snapshot (additive schema
-                # evolution): this older partition reads it as all-null
-                arrays[c] = pa.nulls(n, expected_pa[c])
-            a = arrays[c]
-            # pages stay CHUNKED end-to-end: pa.table accepts per-column
-            # chunk layouts and the Arrow IPC exchange back to Spark
-            # slices record batches at chunk boundaries zero-copy — the
-            # old combine_chunks() here re-copied every decoded byte
-            if len(a) != n:
-                raise ValueError(f"column {c} row mismatch {len(a)} != {n}")
-            if not a.type.equals(expected_pa[c]):
-                # recursive, storage-preserving: naive→tz-aware timestamps
-                # (assumed UTC, matching blob's epoch-micros storage),
-                # large_string→string, nested children included
-                a = a.cast(expected_pa[c])
-            cols.append(a)
-        return pa.table(dict(zip(need, cols)))
+        span = None if row_spans is None else row_spans[int(tbl.column("part_id")[0].as_py())]
+        out = _decode_part(tbl, need, expected_pa, page_keep, field_sel, span)
+        if out is None:  # all pages pruned → typed 0-row table
+            return pa.table({c: pa.array([], type=expected_pa[c]) for c in need})
+        return out
 
     # EXCHANGE-FREE rebuild: every chunk file is one partition's rows
     # and one parquet row group (writers emit ≤ ~30 rows/file), so a
@@ -1278,6 +1309,9 @@ def decode(
         for tbl in snapshot.split_runs(batches, "part_id"):
             yield from rebuild(tbl).to_batches()
 
+    import datetime as _dt
+    import operator
+
     out = df.mapInArrow(rebuild_runs, out_schema)
     # the key column rides along for pruning; drop it unless requested.
     # Residual equality filters go through _typed_lit for the same
@@ -1285,8 +1319,6 @@ def decode(
     if key_eq is not None:
         out = out.filter(F.col(key_eq[0]) == _typed_lit(key_eq[1], schema_map[key_eq[0]]))
     if key_in is not None:
-        import datetime as _dt
-
         in_col, in_vals = key_in
         in_ddl = schema_map[in_col]
         if in_ddl.startswith("timestamp") or in_ddl == "date" or any(
@@ -1306,34 +1338,20 @@ def decode(
             out = out.filter(F.col(in_col).isin(list(in_vals)))
     for pcol, lo, hi in preds:
         # residual row filters: zone maps prune at chunk/page granularity,
-        # these make every range exact (not a page-aligned superset)
+        # these make every range exact (not a page-aligned superset).
+        # Datetimes/dates, and ints against temporal columns (epoch
+        # micros/days, the zone-map units), take the session-tz-safe typed
+        # literal; any other value stays a plain literal, so a float bound
+        # on an integer column is never truncated.
         ddl = schema_map[pcol]
-
-        def _bound(v, ddl=ddl):
-            # ints against timestamp/date columns mean micros/days (the
-            # zone-map storage units) — type the literal to match. Naive
-            # datetimes are UTC instants everywhere in this engine (the
-            # zone maps store UTC micros); F.lit(naive_datetime) would be
-            # read in the SESSION timezone instead, silently shifting the
-            # residual window — route through the same micros conversion.
-            import datetime as _dt
-
-            if isinstance(v, (_dt.date, _dt.datetime)):
-                return _typed_lit(v, ddl)
-            if isinstance(v, bool) or not isinstance(v, int):
-                return F.lit(v)
-            if ddl == "timestamp":
-                return F.timestamp_micros(F.lit(v))
-            if ddl == "timestamp_ntz":
-                return _ntz_lit(v)
-            if ddl == "date":
-                return F.date_from_unix_date(F.lit(v))
-            return F.lit(v)
-
-        if lo is not None:
-            out = out.filter(F.col(pcol) >= _bound(lo))
-        if hi is not None:
-            out = out.filter(F.col(pcol) <= _bound(hi))
+        temporal = ddl.startswith("timestamp") or ddl == "date"
+        for v, cmp in ((lo, operator.ge), (hi, operator.le)):
+            if v is None:
+                continue
+            typed = isinstance(v, (_dt.date, _dt.datetime)) or (
+                temporal and isinstance(v, int) and not isinstance(v, bool)
+            )
+            out = out.filter(cmp(F.col(pcol), _typed_lit(v, ddl) if typed else F.lit(v)))
     for c in nn_cols:
         out = out.filter(F.col(c).isNotNull())
     for c in isnull_cols:

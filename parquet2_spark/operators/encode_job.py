@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from .. import blob, fsio
 from ..functions.selector import SelectorConfig
 from . import snapshot
+from .decode_job import _zone_bound
 from .snapshot import committed_parts
 
 CHUNK_SCHEMA = (
@@ -367,25 +368,9 @@ def _stat_cols(meta: blob.ChunkMeta):
         lo = math.nextafter(float(mn), -math.inf) if mn is not None else None
         hi = math.nextafter(float(mx), math.inf) if mx is not None else None
         return None, None, None, None, lo, hi
-    def as_num(v):
-        if v is None:
-            return None
-        import datetime as _dt
+    def as_num(v):  # datetime → micros, date → days (the zone-map unit)
+        return None if v is None else int(_zone_bound(v))
 
-        if isinstance(v, _dt.datetime):  # datetime → micros (aware → exact
-            # UTC conversion; a tzinfo-carrying epoch would skew pytz LMT)
-            if v.tzinfo is not None:
-                v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-            return (v - _dt.datetime(1970, 1, 1)) // _dt.timedelta(microseconds=1)
-        if isinstance(v, _dt.date):  # date → days since epoch (blob stores date32)
-            return (v - _dt.date(1970, 1, 1)).days
-        if isinstance(v, float):
-            return None  # float stats go to the dbl zone map, not num
-        import decimal as _decimal
-
-        if isinstance(v, _decimal.Decimal):
-            return None  # unscaled compare needs scale context — skip
-        return int(v)
     return None, None, as_num(mn), as_num(mx), None, None
 
 
@@ -543,25 +528,17 @@ def _jstat(v, round_up: bool = False):
     become CONSERVATIVE floats — mins rounded one ulp down
     (``round_up=False``), maxs one ulp up — so page pruning only ever
     widens the range (same rule as the chunk-level dbl zone map)."""
-    import datetime as _dt
+    import decimal as _decimal
 
-    if isinstance(v, _dt.datetime):
-        if v.tzinfo is not None:  # exact UTC micros (pytz LMT-safe)
-            v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-        return (v - _dt.datetime(1970, 1, 1)) // _dt.timedelta(microseconds=1)
-    if isinstance(v, _dt.date):
-        return (v - _dt.date(1970, 1, 1)).days
     if isinstance(v, (bytes, bytearray)):
         return v.decode("utf-8", "replace")
     if isinstance(v, (np.integer,)):
         return int(v)
-    import decimal as _decimal
-
     if isinstance(v, _decimal.Decimal):
         import math
 
         return math.nextafter(float(v), math.inf if round_up else -math.inf)
-    return v
+    return _zone_bound(v)
 
 
 def encode(

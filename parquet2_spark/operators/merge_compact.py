@@ -13,7 +13,9 @@ This module plans ``bucket ← overlapping input chunk files`` from CHUNK
 ZONE MAPS ONLY (stats columns of the chunks parquet — no payload bytes
 are read during planning), then runs ONE FUSED Arrow task per output
 bucket that reads just its overlapping chunk files directly from the
-store, prunes to the bucket's pages via the PAGE INDEX (inputs are
+store through decode's partition reader (``decode_job._page_keep`` and
+``_decode_part``, the same page pruning and chunk decode ``decode()``
+runs): it prunes to the bucket's pages via the PAGE INDEX (inputs are
 key-sorted, so a bucket's rows are a contiguous page span — pages
 outside it are never decoded), merges + sorts, and ENCODES the output
 partition in the same task via ``_encode_partition_arrow``. The
@@ -45,7 +47,7 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .. import blob, fsio
+from .. import fsio
 from . import snapshot
 
 # fall back to the shuffle path when the average input file overlaps
@@ -282,26 +284,6 @@ def split_keepers(plan_df: DataFrame, eligible_snaps: list[str]):
     )
 
 
-_LOSSY = object()  # sentinel: a bound that cannot enter page-stat space
-
-
-def _page_space(v):
-    """Zone-space bound → page-index (``_jstat``) space: binary bounds
-    are compared against page stats stored as utf-8 TEXT. Valid utf-8
-    compares identically in str space (code-point order == byte order);
-    a bound that is NOT valid utf-8 (a truncated grid prefix cut
-    mid-codepoint) has no order-faithful text form, so the caller widens
-    that side to open rather than risk pruning a live page."""
-    if isinstance(v, (bytes, bytearray)):
-        try:
-            return bytes(v).decode("utf-8")
-        except UnicodeDecodeError:
-            return _LOSSY
-    if isinstance(v, np.integer):
-        return int(v)
-    return v
-
-
 def encode_fused(
     spark: SparkSession,
     plan_df: DataFrame,
@@ -318,16 +300,16 @@ def encode_fused(
 ) -> dict:
     """Run the fused per-bucket merge+encode job and finalize lineage.
 
-    One ``applyInArrow`` group per bucket: read overlapping chunk files,
-    page-prune to the bucket's key span, residual-filter exactly, merge,
-    sort, and encode via the SAME partition encoder the shuffle path
-    uses — chunk bytes and commit markers are written as side effects;
-    only metric rows return to Spark."""
-    import json as _json
-
+    One ``applyInArrow`` group per bucket: read overlapping chunk files
+    through decode's partition reader (page-pruned to the bucket's key
+    span, decoded, schema-filled and typed exactly as ``decode()`` reads
+    them), residual-filter exactly, merge, sort, and encode via the SAME
+    partition encoder the shuffle path uses — chunk bytes and commit
+    markers are written as side effects; only metric rows return to
+    Spark."""
     from ..plans import hll
     from ..schema import df_to_pa_schema, spark_type_to_pa
-    from .decode_job import _page_keep_for_range
+    from .decode_job import _decode_part, _page_keep
     from .encode_job import CHUNK_SCHEMA, _encode_partition_arrow, commit_metrics_action
 
     t0 = time.time()
@@ -362,7 +344,6 @@ def encode_fused(
         b = int(tbl.column("bucket")[0].as_py())
         lo = bounds[b - 1] if b > 0 else None
         hi = bounds[b] if b < len(bounds) else None
-        lo_pb, hi_pb = _page_space(lo), _page_space(hi)
         runs = []
         sketches: dict[str, list] = {c: [] for c in columns}
         sketch_miss: set[str] = set()
@@ -390,78 +371,20 @@ def encode_fused(
                 ):
                     sketch_miss.add(c)
 
-            # page keep-set from the PRIMARY column's page index: inputs
-            # are primary-sorted, so the bucket's rows form one
-            # contiguous page run — everything outside is never decoded
+            # bucket b > 0 is the range (lo, hi] plus not-null on the
+            # primary: inputs are primary-sorted, so its rows form one
+            # contiguous page run and everything outside is never decoded.
+            # Bucket 0 with nulls present reads the whole chunk: null rows
+            # sort LAST, and head value-pages plus a tail null-run is not
+            # one interval.
             pi = row_of.get(primary)
-            keep = None
-            prim_nulls = (
-                int(ct.column("null_count")[pi].as_py() or 0) if pi is not None else 1
-            )
-            if pi is not None and not (b == 0 and prim_nulls > 0) and (
-                lo_pb is not None or hi_pb is not None
-            ):
-                # (bucket 0 with nulls present: null rows sort LAST —
-                # head value-pages plus a tail null-run is NOT one
-                # interval, so read the whole chunk there)
-                mins = _json.loads(ct.column("page_mins")[pi].as_py())
-                maxs = _json.loads(ct.column("page_maxs")[pi].as_py())
-                order = (
-                    ct.column("bounds_order")[pi].as_py()
-                    if "bounds_order" in have
-                    else None
-                )
-                keep = _page_keep_for_range(
-                    mins, maxs,
-                    None if lo_pb is _LOSSY else lo_pb,
-                    None if hi_pb is _LOSSY else hi_pb,
-                    order,
-                )
-                if b > 0 and "page_nulls" in have:
-                    pn_raw = ct.column("page_nulls")[pi].as_py()
-                    pr = _json.loads(ct.column("page_rows")[pi].as_py())
-                    if pn_raw is not None:
-                        pn = _json.loads(pn_raw)
-                        keep -= {
-                            i for i, (k, r) in enumerate(zip(pn, pr)) if k >= r > 0
-                        }
-                if len(keep) >= len(mins):
-                    keep = None  # nothing pruned — take the fast whole-chunk path
-
-            payload_of = {
-                name: p
-                for name, p in zip(names, ct.column("payload").to_pylist())
-            }
-            arrays = {}
-            for c in columns:
-                p = payload_of.get(c)
-                if p is None:
-                    continue
-                if keep is None:
-                    arrays[c] = blob.decode_chunk(p, combine=False)
-                else:
-                    parts = [
-                        a
-                        for _, a in blob.iter_chunk_pages(
-                            p, page_filter=lambda i, fr: i in keep
-                        )
-                        if a is not None
-                    ]
-                    arrays[c] = blob.chunk_pages(parts) if parts else None
-            if any(a is None for a in arrays.values()) or not arrays:
+            if b == 0 and (pi is None or int(ct.column("null_count")[pi].as_py() or 0)):
+                keep = None
+            else:
+                keep = _page_keep(ct, [(primary, lo, hi)], [primary] if b > 0 else [], [])
+            t = _decode_part(ct, columns, expected_pa, keep)
+            if t is None:
                 continue  # every page pruned — no rows from this file
-            n = len(next(iter(arrays.values())))
-            cols = []
-            for c in columns:
-                a = arrays.get(c)
-                if a is None:
-                    # additive schema evolution: older partition reads
-                    # a later-added column as all-null
-                    a = pa.nulls(n, expected_pa[c])
-                elif not a.type.equals(expected_pa[c]):
-                    a = a.cast(expected_pa[c])
-                cols.append(a)
-            t = pa.table(dict(zip(columns, cols)))
             if lo is not None or hi is not None:
                 v = _cmp_space(t.column(primary))
                 mask = None
