@@ -5,8 +5,10 @@ DataFrame *is* the metadata+data layer; Catalyst provides projection
 pruning (only requested columns' chunk rows are read — the parquet scan
 of the chunks table pushes ``column IN (...)``) and zone-map predicate
 pruning (plain filters on min/max stat columns ≙ ``filter_row_groups``,
-reference src/read/mod.rs:32-45). Page-level pruning happens inside the
-UDF via the chunk's page index (≙ IndexedPageReader).
+reference src/read/mod.rs:32-45). ``decode`` prunes partitions for every
+predicate in one metadata pass (``_lookup_survivors``), then lists only
+the surviving chunk files; page-level pruning happens inside the UDF via
+the chunk's page index (≙ IndexedPageReader).
 """
 
 from __future__ import annotations
@@ -483,8 +485,9 @@ def quantiles(
 ) -> list[float]:
     """Table-level quantile estimates for a numeric/temporal column from
     the per-chunk quantile grids (zone-map units: micros for timestamps,
-    days for dates) — no data scan, metadata only. Rank error ≤ N/K
-    (K=128 cells/chunk, ≤0.8%); see plans/quantile.py.
+    days for dates) — no data scan, metadata only. Rank error ≤ N/K + m/2
+    values over m chunks (K=128 cells/chunk: ≤0.8% + ½ value per chunk);
+    see plans/quantile.py.
 
     Scale shape mirrors the HLL NDV merge: small tables (≤2000 chunks by
     lineage metadata) collect their ~1 KB grids directly; larger ones run
@@ -878,23 +881,47 @@ def check_integrity(
         )
 
 
-def _lookup_survivors(df: DataFrame, ranges: list, probes: dict) -> set[int]:
-    """Phase 1 of a point lookup: one pass over the key columns' chunk
-    rows of ``df`` (a chunks frame) applies each ``(column, lo, hi)``
-    zone-map range in ``ranges`` and each ``{column: bloom test}`` probe
-    in ``probes``, and collects the part ids whose every key column
-    passes — O(survivors) rows to the driver."""
-    need = {c for c, _, _ in ranges} | set(probes)
-    keyed = df.filter(F.col("column").isin(sorted(need)))
+def _lookup_survivors(
+    df: DataFrame, ranges: list, probes: dict, not_null=(), is_null=(), anchor=None
+) -> set[int]:
+    """Phase 1 of every predicate read: one pass over the predicate
+    columns' chunk rows of ``df`` (a chunks frame) collects the part ids
+    that may match. Each column of a ``(column, lo, hi)`` zone-map range
+    (``prune_by_range``), a ``{column: bloom test}`` probe or ``not_null``
+    needs a chunk row passing all its tests (``null_count < n_rows`` for
+    ``not_null``); an ``is_null`` column drops only partitions whose chunk
+    proves it null-free. A partition written before a column existed has
+    no chunk row for it: kept by ``is_null``, dropped by the rest. With no
+    positive test, the ``anchor`` column's rows (every partition has one)
+    enumerate the partitions."""
+    need = {c for c, _, _ in ranges} | set(probes) | set(not_null)
+    if need or not is_null:
+        anchor = None
+    keyed = df.filter(F.col("column").isin(sorted(need | set(is_null) | {anchor} - {None})))
     for c, lo, hi in ranges:
         keyed = prune_by_range(keyed, c, lo, hi)
     if "bloom" in keyed.columns:
         for c, probe in probes.items():
             keyed = keyed.filter((F.col("column") != c) | probe)
+    for c in not_null:
+        keyed = keyed.filter((F.col("column") != c) | (F.col("null_count") < F.col("n_rows")))
+    for c in sorted(set(is_null) - need - {anchor}):
+        # a column only is_null reads returns just its null-free proofs
+        keyed = keyed.filter((F.col("column") != c) | (F.col("null_count") == 0))
+    free = (F.col("column").isin(sorted(is_null)) & (F.col("null_count") == 0)).alias("free")
     hits: dict[int, set] = {}
-    for pid, c in keyed.select("part_id", "column").collect():
-        hits.setdefault(pid, set()).add(c)
-    return {p for p, cs in hits.items() if cs == need}
+    seen, dropped = set(), set()
+    for r in keyed.select("part_id", "column", *([free] if is_null else [])).collect():
+        pid, c = r[0], r[1]
+        if c in need:
+            hits.setdefault(pid, set()).add(c)
+        if c == anchor:
+            seen.add(pid)
+        if is_null and r[2]:
+            dropped.add(pid)
+    if need:
+        seen = {p for p, cs in hits.items() if cs == need}
+    return seen - dropped
 
 
 def decode(
@@ -916,29 +943,29 @@ def decode(
     """Reassemble original rows from a snapshot — or a multi-snapshot
     table dir (``as_of`` time-travels to that snapshot id).
 
-    ``key_range=(column, lo, hi)`` prunes whole *partitions* via zone maps
-    before any payload is read (all of a partition's chunk rows are
-    dropped when the keyed chunk falls outside the range), then prunes
-    *pages* inside surviving chunks via the page index.
+    Every predicate reads in two phases. (1) Prune: one Spark job over
+    the predicate columns' chunk rows (``_lookup_survivors``) collects the
+    part ids that may match. (2) Read: the scan lists only the survivors'
+    chunk files by path, so pruned files are never opened (no survivors: a
+    typed zero-row frame). The page index then skips pages inside them,
+    and residual row filters make every predicate exact.
+
+    ``key_range=(column, lo, hi)`` (``key_ranges``: a list, AND-combined)
+    keeps a partition whose chunk zone map may meet the range.
+    ``not_null`` needs positive evidence (``null_count < n_rows``);
+    ``is_null`` drops only chunks proven null-free, so partitions written
+    before the column existed (all-null there) are kept.
 
     ``key_eq=(column, value)`` is the bloom-assisted point lookup (the
-    reference's index-assisted read, SURVEY §3.3). It reads in two
-    phases. (1) Prune: one Spark job over the key column's chunk rows
-    applies the zone map as the range ``[value, value]`` and probes the
-    stored split-block bloom (see ``EncodeConfig.bloom_columns``) with
-    ``plans.bloom.might_contain_col``, a Catalyst expression over the
-    constant-folded ``xxhash64`` of the value, so pruning never leaves the
-    JVM. The surviving part ids are collected to the driver: O(survivors)
-    rows. A null bloom (a snapshot encoded without one) keeps its
-    partition; never a false negative. (2) Read: the decode scan lists
-    only the survivors' chunk files, by explicit path, so pruned files
-    are never opened; no survivors gives a typed zero-row frame. The
-    residual equality filter is applied to the decoded rows.
+    reference's index-assisted read, SURVEY §3.3): the zone map prunes
+    the range ``[value, value]`` and ``plans.bloom.might_contain_col``
+    probes the stored split-block bloom (``EncodeConfig.bloom_columns``)
+    with the constant-folded ``xxhash64`` of the value, so pruning never
+    leaves the JVM. A null bloom keeps its partition.
 
-    ``key_in=(column, values)`` is the batch lookup with the same two
-    phases: phase 1 applies the ``[min, max]`` envelope of the values
-    and keeps a chunk whose bloom may hold ANY of their hashes (a numpy
-    probe in a pandas UDF); the residual keeps only the listed values.
+    ``key_in=(column, values)`` is the batch lookup: the ``[min, max]``
+    envelope of the values, and a bloom that may hold ANY of their hashes
+    (a numpy probe in a pandas UDF); the residual keeps the listed values.
 
     The returned frame carries ``df.p2s_decode_metrics`` — a dict of
     ``pages_read``/``pages_skipped`` SparkContext accumulators populated
@@ -1083,12 +1110,7 @@ def decode(
                     if lo < hi:
                         row_spans[pid] = (lo, hi)
 
-    # key_range (single) and key_ranges (multi, AND-combined) prune
-    # partitions through chained broadcast semijoins; the point lookups'
-    # ranges below prune in the lookup's own driver-side pass. All of
-    # them prune pages inside surviving chunks per column, and residual
-    # filters make every predicate exact.
-    range_preds, lookup_ranges = list(preds), []
+    # key_range(s) AND-combine with the point lookups' ranges below
     if key_eq is not None:
         # zone maps prune equality as the degenerate range [v, v]: a
         # sorted or range-partitioned key prunes partitions AND pages
@@ -1100,16 +1122,15 @@ def decode(
 
         eqc, eqv = key_eq
         if eqv is not None and not (isinstance(eqv, float) and _math.isnan(eqv)):
-            lookup_ranges.append((eqc, eqv, eqv))
+            preds.append((eqc, eqv, eqv))
     if key_in is not None and key_in[1]:
         # coarse [min, max] zone-map envelope over the IN-list (exact
         # membership still enforced by bloom + residual): a clustered id
         # batch-fetch touches only the overlapping key range
         try:
-            lookup_ranges.append((key_in[0], min(key_in[1]), max(key_in[1])))
+            preds.append((key_in[0], min(key_in[1]), max(key_in[1])))
         except TypeError:
             pass  # unorderable/mixed values — bloom + residual only
-    preds = range_preds + lookup_ranges
 
     # bloom probes per lookup column: a chunk row whose bloom rules the
     # value out is dropped; a null bloom (column or snapshot encoded
@@ -1158,48 +1179,20 @@ def decode(
     reads = _snapshot_reads(snapshot_dir, as_of, since, filesystem)
     if row_spans is not None:
         reads = _narrow_reads(reads, row_spans)
-    if probes and reads:
-        # point lookups read in two phases: (1) one pass over the key
-        # columns' chunk rows collects the surviving part ids, (2) the
-        # scan below lists only their chunk files
+    if (preds or probes or nn_cols or isnull_cols) and reads:
+        # the two-phase read; the anchor is the oldest snapshot's first column
         keyed = chunks_df(spark, snapshot_dir, _per_snapshot_filter=_chunk_filter, _reads=reads)
         if key_eq is not None:
             keyed = keyed.withColumn("__p2s_eq_h", eq_hash)
-        reads = _narrow_reads(reads, _lookup_survivors(keyed, lookup_ranges, probes))
+        survivors = _lookup_survivors(
+            keyed, preds, probes, nn_cols, isnull_cols, lin["columns"][0]
+        )
+        reads = _narrow_reads(reads, survivors)
     df = chunks_df(spark, snapshot_dir, _per_snapshot_filter=_chunk_filter, _reads=reads)
-    key_cols = [p[0] for p in preds]
-    for pcol, lo, hi in range_preds:
-        keyed = prune_by_range(df.filter(F.col("column") == pcol), pcol, lo, hi)
-        surviving = keyed.select("part_id").distinct()
-        df = df.join(F.broadcast(surviving), "part_id")
-
-    # validity predicates (IS NOT NULL / IS NULL): chunk-level skip from
-    # the per-chunk null_count, page-level skip from the page_nulls index
-    # (reference PageIndex null_count, src/indexes/index.rs:74-135),
-    # residual filters keep the result exact
-    for c in nn_cols:
-        # positive evidence required: a partition survives only when the
-        # column's chunk exists with at least one non-null row — this also
-        # prunes older partitions that predate the column (all-null there)
-        keep = (
-            df.filter((F.col("column") == c) & (F.col("null_count") < F.col("n_rows")))
-            .select("part_id")
-            .distinct()
-        )
-        df = df.join(F.broadcast(keep), "part_id")
-    for c in isnull_cols:
-        # negative evidence prunes: drop partitions PROVEN null-free;
-        # partitions that predate the column keep flowing (all-null there)
-        no_null = (
-            df.filter((F.col("column") == c) & (F.col("null_count") == 0))
-            .select("part_id")
-            .distinct()
-        )
-        df = df.join(F.broadcast(no_null), "part_id", "left_anti")
 
     need = sorted(
         set(cols)
-        | set(key_cols)
+        | {p[0] for p in preds}
         | ({key_eq[0]} if key_eq is not None else set())
         | ({key_in[0]} if key_in is not None else set())
         | set(nn_cols)
@@ -1295,9 +1288,9 @@ def decode(
     # EXCHANGE-FREE rebuild: every chunk file is one partition's rows
     # and one parquet row group (writers emit ≤ ~30 rows/file), so a
     # file can never split across scan tasks and a partition's chunk
-    # rows arrive CONTIGUOUS in the scan stream — the pruning joins are
-    # all broadcast (stream-side order preserved) and part_id is
-    # constant per file. Splitting the stream at part_id
+    # rows arrive CONTIGUOUS in the scan stream — partitions are pruned
+    # by listing only the survivors' files (no join reorders the stream)
+    # and part_id is constant per file. Splitting the stream at part_id
     # boundaries therefore feeds rebuild() exactly the groups a
     # groupBy(part_id) exchange would build, without shuffling the
     # payload bytes at all (measured: the groupBy plan shuffled every

@@ -347,9 +347,11 @@ def encode_fused(
         runs = []
         sketches: dict[str, list] = {c: [] for c in columns}
         sketch_miss: set[str] = set()
-        for snap, pid in zip(
+        # plan rows arrive in shuffle order: reading them sorted fixes the
+        # order of tied rows (bucket 0's nulls), so the bytes are stable
+        for snap, pid in sorted(zip(
             tbl.column("snap").to_pylist(), tbl.column("part_id").to_pylist()
-        ):
+        )):
             fs, root = fsio.resolve(snap, filesystem)
             ct = pq.read_table(snapshot.chunk_path(root, pid), filesystem=fs)
             names = ct.column("column").to_pylist()

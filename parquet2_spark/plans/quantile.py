@@ -5,12 +5,15 @@ The reference's statistics carry min/max only
 encode needs more: ``repartitionByRange`` split points, skew detection,
 and salting thresholds all want table-level quantiles of the key column
 WITHOUT a sampling scan. Each chunk stores a K-cell quantile grid —
-K+1 order statistics at ranks ``i*n/K`` of the chunk's non-null values,
-in zone-map units (micros/days for temporal) — ~1 KB of metadata per
-chunk. Grids merge by weighted rank interpolation: grid point ``i`` of a
-chunk with ``n`` values testifies that exactly ``i*n/K`` values lie at
-or below it, so the merged rank error is bounded by ``max_i(n_i)/K``
-per chunk, i.e. ≤ ``N/K`` overall (≤0.8% at the default K=128).
+K+1 order statistics of the chunk's non-null values, in zone-map units
+(micros/days for temporal) — ~1 KB of metadata per chunk. Grids merge
+by weighted rank interpolation: grid point ``i`` of a chunk with ``n``
+values is credited with ``i*n/K`` values at or below it. The point is
+stored at sorted index ``round(i*(n-1)/K)``, so at least ``i*n/K - ½``
+values lie at or below it and at most ``i*n/K + ½`` lie below it: each
+chunk adds at most one cell (``n/K``) plus ½ value of rank error, i.e.
+≤ ``N/K + m/2`` values over ``m`` chunks (≤0.8% + ½ value per chunk at
+the default K=128).
 
 Merging is associative and deterministic (pure order statistics, no
 random bits), so the same two-stage Spark shape as the HLL NDV merge
@@ -174,7 +177,7 @@ def cdf(grids: list, weights: list | None, xs: list) -> list[float]:
     of ``estimate``: where estimate maps rank→value, this maps
     value→rank, which is what bucket-weight prediction needs (mass of
     bucket (lo, hi] = cdf(hi) − cdf(lo)). Same rank algebra and error
-    bound (≤ N/K per grid) as estimate."""
+    bound (≤ n/K + ½ value per grid) as estimate."""
     v, w = _points(grids, weights)
     if len(v) == 0:
         return [float("nan")] * len(xs)

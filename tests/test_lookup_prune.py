@@ -49,16 +49,22 @@ def _key_rows(snap_dir: str, col: str):
                 yield path, r
 
 
-def _survivors(snap_dir: str, col: str, lo: str, hi: str, hashes) -> set[str]:
-    """Files whose ``col`` chunk may hold a value in [lo, hi] hashing to
-    one of ``hashes``: zone map first, then the bloom (null = keep)."""
+def _survivors(snap_dir: str, col: str, lo=None, hi=None, hashes=None, test=None) -> set[str]:
+    """Files whose ``col`` chunk may hold a value in [lo, hi] (None = open
+    side; str/bytes bounds against the binary zone map, ints against the
+    numeric one) hashing to one of ``hashes`` and passing ``test(row)``:
+    zone map first, then the bloom (null = keep)."""
+    lo, hi = (v.encode() if isinstance(v, str) else v for v in (lo, hi))
+    stat = "bin" if isinstance(lo, bytes) or isinstance(hi, bytes) else "num"
     out = set()
     for path, r in _key_rows(snap_dir, col):
-        if r["max_bin"] is not None and r["max_bin"] < lo.encode():
+        if lo is not None and r[f"max_{stat}"] is not None and r[f"max_{stat}"] < lo:
             continue
-        if r["min_bin"] is not None and r["min_bin"] > hi.encode():
+        if hi is not None and r[f"min_{stat}"] is not None and r[f"min_{stat}"] > hi:
             continue
-        if r["bloom"] is not None and not bloom.might_contain(r["bloom"], hashes).any():
+        if hashes is not None and r["bloom"] is not None and not bloom.might_contain(r["bloom"], hashes).any():
+            continue
+        if test is not None and not test(r):
             continue
         out.add(path)
     return out
@@ -272,3 +278,213 @@ def test_key_in_with_row_range_reads_the_intersection(spark, snap, urls):
     df = decode_job.decode(spark, snap, row_range=(600, 2100), key_in=("url", vals))
     assert _files(df) <= _files(window)
     assert sorted(r["url"] for r in df.collect()) == sorted(vals[:2])
+
+
+# Range and null predicates read in the same two phases: the exact file
+# set on snapshots laid out by range, where zone maps rule partitions out.
+
+LAID = 4096
+
+
+def _micros(ts) -> int:
+    return int(np.datetime64(ts, "us").astype(np.int64))
+
+
+@pytest.fixture(scope="module")
+def src():
+    """The laid-out snapshots' rows, sorted by url; ``opt`` is null on
+    the lower part of the url space."""
+    pdf = webgen.generate_pandas(np.arange(LAID, dtype=np.uint64)).sort_values("url")
+    cut = pdf["url"].iloc[1500]
+    pdf["opt"] = pdf["lang"].where(pdf["url"] >= cut, None)
+    return pdf.reset_index(drop=True), cut
+
+
+def _laid_out(spark, d: str, col: str, cut: str) -> str:
+    df = webgen.webpages_df(spark, LAID, partitions=4).withColumn(
+        "opt", F.when(F.col("url") >= F.lit(cut), F.col("lang"))
+    )
+    encode(spark, df.repartitionByRange(16, col), d,
+           EncodeConfig(shuffle=False, page_rows=256, bloom_columns=("url",)))
+    return d
+
+
+@pytest.fixture(scope="module")
+def url_snap(spark, tmp_path_factory, src):
+    return _laid_out(spark, str(tmp_path_factory.mktemp("url_laid")), "url", src[1])
+
+
+@pytest.fixture(scope="module")
+def ts_snap(spark, tmp_path_factory, src):
+    return _laid_out(spark, str(tmp_path_factory.mktemp("ts_laid")), "warc_ts", src[1])
+
+
+def _all_files(snap_dir: str) -> set[str]:
+    return _survivors(snap_dir, "url")
+
+
+@pytest.mark.parametrize("as_bytes", [False, True], ids=["str", "bytes"])
+def test_key_range_url_lists_only_survivors(spark, url_snap, src, as_bytes):
+    urls = src[0]["url"].tolist()
+    lo, hi = urls[1000], urls[1015]
+    want = _survivors(url_snap, "url", lo, hi)
+    assert want and len(want) < len(_all_files(url_snap))
+    if as_bytes:
+        lo, hi = lo.encode(), hi.encode()
+    df = decode_job.decode(spark, url_snap, key_range=("url", lo, hi))
+    assert _files(df) == want
+    assert sorted(r["url"] for r in df.collect()) == urls[1000:1016]
+
+
+@pytest.mark.parametrize("as_int", [False, True], ids=["datetime", "int_micros"])
+def test_key_range_ts_lists_only_survivors(spark, ts_snap, src, as_int):
+    ts = np.sort(src[0]["warc_ts"].to_numpy().astype("datetime64[us]"))
+    t_lo, t_hi = _micros(ts[2000]), _micros(ts[2300])
+    want = _survivors(ts_snap, "warc_ts", t_lo, t_hi)
+    assert want and len(want) < len(_all_files(ts_snap))
+    lo, hi = (t_lo, t_hi) if as_int else (ts[2000].item(), ts[2300].item())
+    df = decode_job.decode(spark, ts_snap, key_range=("warc_ts", lo, hi))
+    assert _files(df) == want
+    assert len(df.collect()) == ((ts >= ts[2000]) & (ts <= ts[2300])).sum()
+
+
+def test_key_ranges_list_the_intersection(spark, url_snap, src):
+    pdf = src[0]
+    urls = pdf["url"].tolist()
+    t_lo = _micros(np.sort(pdf["warc_ts"].to_numpy())[2000])
+    ranges = [("url", urls[500], urls[2500]), ("warc_ts", t_lo, None)]
+    want = _survivors(url_snap, "url", urls[500], urls[2500]) & _survivors(url_snap, "warc_ts", t_lo)
+    df = decode_job.decode(spark, url_snap, key_ranges=ranges)
+    assert _files(df) == want
+    sel = pdf.iloc[500:2501]
+    assert sorted(r["url"] for r in df.collect()) == sorted(
+        sel["url"][sel["warc_ts"].to_numpy().astype("datetime64[us]").astype(np.int64) >= t_lo]
+    )
+
+
+def test_not_null_lists_only_partitions_with_values(spark, url_snap, src):
+    want = _survivors(url_snap, "opt", test=lambda r: r["null_count"] < r["n_rows"])
+    assert want and len(want) < len(_all_files(url_snap))
+    df = decode_job.decode(spark, url_snap, columns=["url"], not_null="opt")
+    assert _files(df) == want
+    assert sorted(r["url"] for r in df.collect()) == src[0]["url"].tolist()[1500:]
+
+
+def test_is_null_drops_only_null_free_partitions(spark, url_snap, src):
+    want = _all_files(url_snap) - _survivors(url_snap, "opt", test=lambda r: r["null_count"] == 0)
+    assert want and len(want) < len(_all_files(url_snap))
+    df = decode_job.decode(spark, url_snap, columns=["url", "opt"], is_null="opt")
+    assert _files(df) == want
+    rows = df.collect()
+    assert sorted(r["url"] for r in rows) == src[0]["url"].tolist()[:1500]
+    assert all(r["opt"] is None for r in rows)
+
+
+def test_table_key_range_as_of_and_since(spark, lookup_table):
+    tdir, sdirs, urls = lookup_table
+    ts = webgen.generate_pandas(np.arange(0, 4500, dtype=np.uint64))["warc_ts"].to_numpy()
+    ts = ts.astype("datetime64[us]").astype(np.int64)
+    t_lo, t_hi = int(ts[1600]), int(ts[1700])  # inside snapshot 2
+    for kw, sids in (({"as_of": 2}, [1, 2]), ({"since": 1}, [2, 3])):
+        window = set().union(*(_survivors(sdirs[sid], "url") for sid in sids))
+        want = set().union(*(_survivors(sdirs[sid], "warc_ts", t_lo, t_hi) for sid in sids))
+        assert want and want < window
+        df = decode_job.decode(spark, tdir, key_range=("warc_ts", t_lo, t_hi), **kw)
+        assert _files(df) == want
+        lo_id = 0 if "as_of" in kw else 1500
+        exp = [u for u, t in zip(urls[lo_id:lo_id + 3000], ts[lo_id:lo_id + 3000]) if t_lo <= t <= t_hi]
+        assert sorted(r["url"] for r in df.collect()) == sorted(exp)
+
+
+@pytest.fixture(scope="module")
+def evolved(spark, tmp_path_factory):
+    """Snapshot 1 predates column ``extra``; snapshot 2 adds it with
+    nulls, snapshot 3 without any."""
+    tdir = str(tmp_path_factory.mktemp("evolved") / "t")
+    frames = [
+        webgen.webpages_range_df(spark, 0, 1000, partitions=2),
+        webgen.webpages_range_df(spark, 1000, 2000, partitions=2).withColumn(
+            "extra", F.when(F.length("url") % 2 == 1, F.length("url"))
+        ),
+        webgen.webpages_range_df(spark, 2000, 3000, partitions=2).withColumn(
+            "extra", F.length("url")
+        ),
+    ]
+    for df in frames:
+        table.append(spark, df, tdir, _cfg(()))
+    src = frames[0].withColumn("extra", F.lit(None).cast("int"))
+    src = src.unionByName(frames[1]).unionByName(frames[2])
+    return tdir, dict(table.snapshot_dirs(tdir)), src.select("url", "extra").collect()
+
+
+def test_evolved_is_null_keeps_partitions_older_than_the_column(spark, evolved):
+    tdir, sdirs, src = evolved
+    old = _survivors(sdirs[1], "url")
+    want = old | _survivors(sdirs[2], "extra", test=lambda r: r["null_count"] != 0)
+    assert not want & _survivors(sdirs[3], "url")  # snapshot 3 is null-free
+    df = decode_job.decode(spark, tdir, columns=["url", "extra"], is_null="extra")
+    assert _files(df) == want
+    rows = df.collect()
+    assert sorted(r["url"] for r in rows) == sorted(r["url"] for r in src if r["extra"] is None)
+    assert {r["url"] for r in rows} >= set(_urls(0, 1000))
+
+
+@pytest.mark.parametrize("pred", ["not_null", "key_range"])
+def test_evolved_positive_predicates_drop_older_partitions(spark, evolved, pred):
+    tdir, sdirs, src = evolved
+    if pred == "not_null":
+        kw = {"not_null": "extra"}
+        test, keep = (lambda r: r["null_count"] < r["n_rows"]), (lambda v: v is not None)
+        want = set().union(*(_survivors(sdirs[s], "extra", test=test) for s in (2, 3)))
+    else:
+        kw = {"key_range": ("extra", 0, 50)}
+        keep = lambda v: v is not None and v <= 50  # noqa: E731
+        want = set().union(*(_survivors(sdirs[s], "extra", 0, 50) for s in (2, 3)))
+    df = decode_job.decode(spark, tdir, columns=["url", "extra"], **kw)
+    assert _files(df) == want
+    assert not want & _survivors(sdirs[1], "url")
+    assert sorted(r["url"] for r in df.collect()) == sorted(r["url"] for r in src if keep(r["extra"]))
+
+
+def _read_kwargs(src, kind: str) -> dict:
+    urls = src[0]["url"].tolist()
+    return {
+        "full": {},
+        "key_eq": {"key_eq": ("url", urls[7])},
+        "key_in": {"key_in": ("url", urls[5:8])},
+        "key_range": {"key_range": ("url", urls[1000], urls[1015])},
+        "key_ranges": {"key_ranges": [("url", urls[1000], urls[2000]), ("opt", "a", None)]},
+        "not_null": {"not_null": "opt"},
+        "is_null": {"is_null": "opt"},
+        "row_range": {"row_range": (100, 300)},
+    }[kind]
+
+
+@pytest.mark.parametrize("kind", ["key_range", "key_ranges", "not_null", "is_null"])
+def test_range_and_null_decode_plans_have_no_join(spark, url_snap, src, kind):
+    assert "Join" not in _explain(decode_job.decode(spark, url_snap, **_read_kwargs(src, kind)))
+
+
+# Spark jobs started by decode(...) plus collect(), per predicate kind:
+# one schema inference per chunk-file read, the phase-1 prune collect and
+# the decode action; key_in adds its probe-hash collect and row_range the
+# jobs of its prefix-sum pass
+JOBS_PER_READ = {
+    "full": 2, "key_eq": 4, "key_in": 5, "key_range": 4, "key_ranges": 4,
+    "not_null": 4, "is_null": 4, "row_range": 8,
+}
+
+
+@pytest.mark.parametrize("kind", sorted(JOBS_PER_READ))
+def test_jobs_per_read(spark, url_snap, src, kind):
+    kw = _read_kwargs(src, kind)
+    sc = spark.sparkContext
+    group = f"p2s-jobs-per-read-{kind}"
+    sc.setJobGroup(group, f"decode {kind}")
+    try:
+        decode_job.decode(spark, url_snap, **kw).collect()
+        n = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert n == JOBS_PER_READ[kind]

@@ -179,3 +179,39 @@ class TestLocalMergeCompaction:
         spans = sorted((r["min_num"], r["max_num"]) for r in ch.collect())
         for (_, ahi), (blo, _) in zip(spans, spans[1:]):
             assert ahi < blo
+
+    def test_null_key_merge_ignores_plan_row_order(self, spark, tmp_path):
+        """Plan rows reach a bucket in shuffle order. Bucket 0's null keys
+        tie under a sort on the nullable key alone, so their order must not
+        follow the arrival order: the same plan in two row orders writes
+        byte-identical chunk files."""
+        from pathlib import Path
+
+        from parquet2_spark.operators import merge_compact, snapshot
+
+        td = str(tmp_path / "t")
+        for i in range(3):
+            b = _corpus(spark, 2000, voff=2000 * i).withColumn(
+                "url", F.when(F.col("v") % 17 == 0, F.lit(None))
+                        .otherwise(F.col("url")))
+            table.append(spark, b, td, _cfg(),
+                         **({"range_layout_on": "url"} if i else {}))
+        lin = decode_job.lineage(td)
+        bounds = decode_job.range_bounds(spark, td, "url", 3)
+        plan_df = merge_compact.plan(spark, table.snapshot_dirs(td), "url", bounds).drop("w")
+        rows = sorted(plan_df.collect())
+        assert len({(r["snap"], r["part_id"]) for r in rows if r["bucket"] == 0}) > 1
+        out = {}
+        for name, order in (("fwd", rows), ("rev", rows[::-1])):
+            d = str(tmp_path / name)
+            # one input partition: the repartition by bucket keeps this order
+            ordered = spark.createDataFrame(order, plan_df.schema).coalesce(1)
+            merge_compact.encode_fused(
+                spark, ordered, "url", bounds, ["url"], len(bounds) + 1,
+                lin["schema"], lin["columns"], _cfg(), d,
+            )
+            out[name] = {
+                f.name: f.read_bytes()
+                for f in sorted(Path(snapshot.chunks_dir(d)).glob("*.parquet"))
+            }
+        assert out["fwd"] and out["fwd"] == out["rev"]

@@ -6,8 +6,11 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import re
+from urllib.parse import urlparse
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -59,13 +62,34 @@ def test_decode_projection_pushes_column_filter(spark, snap):
     assert "bloom" not in rs and "min_bin" not in rs
 
 
+def _executions(spark) -> list:
+    """Executed SQL queries (works with the UI disabled)."""
+    xs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return [xs.apply(i) for i in range(xs.size())]
+
+
 def test_key_range_pushes_zone_map_filters_to_scan(spark, snap):
-    plan = _explain(
-        decode_job.decode(spark, snap, key_range=("url", "https://host001", "https://host004"))
-    )
-    pushed = " ".join(re.findall(r"PushedFilters: \[[^\]]*\]", plan))
-    assert "max_bin" in pushed and "min_bin" in pushed  # zone maps AT the scan
-    assert "BroadcastHashJoin" in plan  # surviving part_ids broadcast
+    lo, hi = "https://host001", "https://host004"
+    before = {e.executionId() for e in _executions(spark)}
+    df = decode_job.decode(spark, snap, key_range=("url", lo, hi))
+    # phase 1, the prune query: zone maps AT the scan, no payload read
+    (prune,) = [e.physicalPlanDescription() for e in _executions(spark)
+                if e.executionId() not in before]
+    pushed = " ".join(re.findall(r"PushedFilters: \[[^\]]*\]", prune))
+    assert "max_bin" in pushed and "min_bin" in pushed
+    assert "payload" not in re.search(r"ReadSchema: [^\n]*", prune).group(0)
+    # phase 2, the decode: no join, only the survivors' files listed
+    assert "Join" not in _explain(df)
+    cdir = os.path.join(snap, "chunks")
+    want = set()
+    for f in os.listdir(cdir):
+        if not f.endswith(".parquet"):
+            continue
+        path = os.path.realpath(os.path.join(cdir, f))
+        for r in pq.read_table(path, columns=["column", "min_bin", "max_bin"]).to_pylist():
+            if r["column"] == "url" and r["max_bin"] >= lo.encode() and r["min_bin"] <= hi.encode():
+                want.add(path)
+    assert {os.path.realpath(urlparse(f).path) for f in df.inputFiles()} == want
 
 
 def test_lsh_census_broadcast_and_smj_candidates(spark):

@@ -205,11 +205,12 @@ class TestQuantilePlannedLayout:
 class TestQuantileProperties:
     def test_rank_error_bound_hypothesis(self):
         """Property: for ANY partition of ANY data into chunks, every
-        estimate's rank error is within the theoretical bound
-        (sum of per-chunk cell masses / N) plus discretization slack."""
-        from hypothesis import given, settings, strategies as st
+        estimate's rank error is within the theoretical bound: the sum of
+        per-chunk cell masses plus ½ value per chunk, over N."""
+        from hypothesis import example, given, settings, strategies as st
 
         @settings(max_examples=40, deadline=None)
+        @example([[-1, 0, 0, 0]] * 8, 0.17)  # ties: the ½-value slack binds
         @given(
             st.lists(
                 st.lists(st.integers(-10**12, 10**12), min_size=1, max_size=400),
@@ -226,7 +227,8 @@ class TestQuantileProperties:
             N = len(allv)
             lo = np.searchsorted(allv, est, side="left") / N
             hi = np.searchsorted(allv, est, side="right") / N
-            bound = sum(max(1, len(c)) / q_mod.K for c in chunks) / N + 2 / N
+            # one cell plus ½ value per chunk (see plans/quantile.py)
+            bound = sum(max(1, len(c)) / q_mod.K for c in chunks) / N + len(chunks) / (2 * N)
             assert lo - bound <= q <= hi + bound, (q, lo, hi, bound)
 
         check()
