@@ -74,18 +74,6 @@ def lineage(snapshot_dir: str, as_of: int | None = None, filesystem=None, since:
 # window parallelizes across groups instead of one global-order task
 _RR_GROUP = 4096
 
-# the chunk parquet schema as Spark DDL (kept in sync with
-# encode_job.CHUNK_PA_SCHEMA) — used to type a zero-row chunks frame
-_CHUNKS_DDL = (
-    "part_id long, column string, type_code int, n_rows long, null_count long, "
-    "n_pages int, codecs string, outers string, raw_bytes long, enc_bytes long, "
-    "min_bin binary, max_bin binary, min_num long, max_num long, "
-    "min_dbl double, max_dbl double, ndv long, "
-    "page_rows string, page_mins string, page_maxs string, page_nulls string, "
-    "qgrid string, bounds_order string, bloom binary, ndv_hll binary, payload binary"
-)
-
-
 def _page_keep_for_range(mins: list, maxs: list, lo, hi, order: str | None) -> set:
     """Page indexes whose [min,max] may intersect [lo,hi] (None bound =
     open side). When the chunk's zone maps are boundary-ordered
@@ -158,6 +146,16 @@ def _page_space(v):
     return v
 
 
+def _text_stats(raw: str) -> list:
+    """A page min/max list from the chunk table. A text stat holding
+    U+FFFD is read as missing: older encoders stored bytes that are not
+    valid utf-8 with the replacement character, whose order says nothing
+    about the bytes' order."""
+    return [
+        None if isinstance(v, str) and "\ufffd" in v else v for v in json.loads(raw)
+    ]
+
+
 def _page_keep(tbl: pa.Table, ranges: list, not_null: list, is_null: list) -> set | None:
     """Page indexes of one partition that may hold rows matching every
     predicate — the select_pages analog over the chunk table's page zone
@@ -169,23 +167,20 @@ def _page_keep(tbl: pa.Table, ranges: list, not_null: list, is_null: list) -> se
     serves every column."""
     names = tbl.column("column").to_pylist()
     row_of = {name: i for i, name in enumerate(names)}
-    have = set(tbl.schema.names)
     keep = None
     for col, lo, hi in ranges:
         i = row_of.get(col)
         if i is None:
             continue
         k = _page_keep_for_range(
-            json.loads(tbl.column("page_mins")[i].as_py()),
-            json.loads(tbl.column("page_maxs")[i].as_py()),
+            _text_stats(tbl.column("page_mins")[i].as_py()),
+            _text_stats(tbl.column("page_maxs")[i].as_py()),
             _page_space(lo),
             _page_space(hi),
-            tbl.column("bounds_order")[i].as_py() if "bounds_order" in have else None,
+            tbl.column("bounds_order")[i].as_py(),
         )
         keep = k if keep is None else keep & k
-    # pre-r4 snapshots carry no page_nulls: the chunk-level prune and the
-    # residual filters stay correct without it
-    for col in (*not_null, *is_null) if "page_nulls" in have else ():
+    for col in (*not_null, *is_null):
         i = row_of.get(col)
         pn_raw = None if i is None else tbl.column("page_nulls")[i].as_py()
         if pn_raw is None:
@@ -315,7 +310,8 @@ def chunks_df(
     _per_snapshot_filter=None,
     _reads: list | None = None,
 ) -> DataFrame:
-    """The chunks table (metadata + payload). Stats queries should select
+    """The chunks table (metadata + payload), read typed by
+    ``snapshot.chunk_frame``. Stats queries should select
     only metadata columns — parquet column pruning then never touches the
     payload bytes. A multi-snapshot table dir unions every committed
     snapshot's chunks with the part_id namespaced by snapshot id, so ids
@@ -331,13 +327,12 @@ def chunks_df(
 
     ``_per_snapshot_filter`` (internal, binpack compaction): a callable
     ``sid -> Column | None`` applied to each snapshot's frame BEFORE the
-    part_id namespacing and the union — so a predicate over raw chunk
-    columns (``n_rows`` et al; NOT ``part_id``, whose embedded value is
-    stale in verbatim-copied files — identity is the filename) PUSHES
-    DOWN into that snapshot's parquet scan. Every chunk file holds one partition
-    (constant ``n_rows``/``part_id`` per file ⇒ min==max row-group
-    stats), so pruned partitions' payload bytes are never read. ``None``
-    from the callable keeps the whole snapshot."""
+    part_id namespacing and the union — so a predicate over chunk
+    columns (``n_rows`` et al) PUSHES DOWN into that snapshot's parquet
+    scan. Every chunk file holds one partition (constant ``n_rows`` per
+    file ⇒ min==max row-group stats), so pruned partitions' payload
+    bytes are never read. ``None`` from the callable keeps the whole
+    snapshot."""
     from . import table as table_mod
 
     if _reads is None:
@@ -345,48 +340,23 @@ def chunks_df(
     # manifest reads go through pyarrow.fs; the chunk parquet itself is
     # read by Spark's own scan, so for a non-local filesystem the
     # snapshot paths must also be Spark-readable URIs (S3A/HDFS)
-    parts = []
+    out = None
     for sid, sdir, pids in _reads:
         if pids is None:
-            d = spark.read.parquet(snapshot.chunks_dir(sdir))
+            d = snapshot.chunk_frame(spark, [snapshot.chunks_dir(sdir)])
         else:
-            d = spark.read.parquet(*[snapshot.chunk_path(sdir, p) for p in pids])
+            d = snapshot.chunk_frame(spark, [snapshot.chunk_path(sdir, p) for p in pids])
         if _per_snapshot_filter is not None:
             cond = _per_snapshot_filter(0 if sid is None else sid)
             if cond is not None:
                 d = d.filter(cond)
-        pid_col = _filename_part_id()
         if sid is not None:
-            pid_col = F.lit(sid).cast("long") * F.lit(1 << table_mod.SNAP_SHIFT) + pid_col
-        parts.append(d.withColumn("part_id", pid_col))
-    if not parts:
-        return spark.createDataFrame([], _CHUNKS_DDL)
-    out = parts[0]
-    for p in parts[1:]:
-        # allowMissingColumns: snapshots written before a metadata
-        # column existed (e.g. bloom) union with nulls there
-        out = out.unionByName(p, allowMissingColumns=True)
-    return out
-
-
-def _filename_part_id():
-    """``part_id`` derived from the chunk FILENAME (``part-NNNNNN``) —
-    the authoritative partition identity. Verbatim-copied chunk files
-    (binpack keepers, incremental re-layout keepers) keep their OLD
-    embedded ``part_id`` column untouched: the rename IS the renumber,
-    which is what lets maintenance carry partitions by server-side copy
-    on object stores instead of rewriting parquet. The embedded column
-    still rides in every file (writers emit it; it equals the filename
-    for freshly-encoded partitions) but no reader trusts it.
-
-    Uses the ``_metadata.file_name`` hidden column, NOT
-    ``input_file_name()``: the latter is nondeterministic, and Catalyst
-    refuses to push ANY filter through a nondeterministic Project —
-    zone-map and column predicates would stop reaching the parquet scan
-    (caught by tests/test_plans_audit.py)."""
-    return F.regexp_extract(
-        F.col("_metadata.file_name"), r"part-(\d+)\.parquet", 1
-    ).cast("long")
+            d = d.withColumn(
+                "part_id",
+                F.lit(sid).cast("long") * F.lit(1 << table_mod.SNAP_SHIFT) + F.col("part_id"),
+            )
+        out = d if out is None else out.unionByName(d)
+    return snapshot.chunk_frame(spark, []) if out is None else out
 
 
 def stats(spark: SparkSession, snapshot_dir: str) -> DataFrame:
@@ -402,75 +372,71 @@ def stats(spark: SparkSession, snapshot_dir: str) -> DataFrame:
         F.max("max_num").alias("max_num"),
         F.min("min_bin").alias("min_bin"),
         F.max("max_bin").alias("max_bin"),
+        F.min("min_dbl").alias("min_dbl"),
+        F.max("max_dbl").alias("max_dbl"),
+        F.max("ndv").alias("ndv_hint"),
     ]
-    # stat columns added after round 1 — aggregate only what this
-    # snapshot's chunk parquet actually has, so old snapshots keep working
-    if "min_dbl" in df.columns:
-        aggs += [F.min("min_dbl").alias("min_dbl"), F.max("max_dbl").alias("max_dbl")]
-    if "ndv" in df.columns:
-        aggs.append(F.max("ndv").alias("ndv_hint"))
     out = df.groupBy("column", "codecs").agg(*aggs)
-    if "ndv_hll" in df.columns:
-        # table-level NDV from the per-chunk HLL register files, fused
-        # into TWO pandas stages over one extra scan (was: premerge +
-        # grouped-agg UDAF + estimate UDF + a separate coverage groupBy +
-        # two joins). Stage 1 (mapInPandas) emits one partial row per
-        # column per Arrow batch — a million-chunk column never ships a
-        # million 64 KB sketches to one task — carrying both the merged
-        # sketch and the coverage-miss flag (a non-empty chunk without a
-        # sketch means the merge cannot see the whole column, so the
-        # estimate must be withheld rather than silently undercount).
-        # Stage 2 (applyInPandas, keyed by column ONLY — NDV is a
-        # table-level property; chunks that picked different codecs still
-        # merge) folds partials straight to the final estimate.
-        from ..plans import hll as hll_mod
+    # table-level NDV from the per-chunk HLL register files, fused
+    # into TWO pandas stages over one extra scan (was: premerge +
+    # grouped-agg UDAF + estimate UDF + a separate coverage groupBy +
+    # two joins). Stage 1 (mapInPandas) emits one partial row per
+    # column per Arrow batch — a million-chunk column never ships a
+    # million 64 KB sketches to one task — carrying both the merged
+    # sketch and the coverage-miss flag (a non-empty chunk without a
+    # sketch means the merge cannot see the whole column, so the
+    # estimate must be withheld rather than silently undercount).
+    # Stage 2 (applyInPandas, keyed by column ONLY — NDV is a
+    # table-level property; chunks that picked different codecs still
+    # merge) folds partials straight to the final estimate.
+    from ..plans import hll as hll_mod
 
-        def premerge(pdfs):
-            import pandas as pd
+    def premerge(pdfs):
+        import pandas as pd
 
-            for pdf in pdfs:
-                rows = []
-                for col, g in pdf.groupby("column"):
-                    miss = bool(((g["n_rows"] > 0) & g["ndv_hll"].isna()).any())
-                    sk = None if miss else hll_mod.merge(g["ndv_hll"])
-                    rows.append((col, sk, miss))
-                yield pd.DataFrame(rows, columns=["column", "ndv_hll", "miss"])
+        for pdf in pdfs:
+            rows = []
+            for col, g in pdf.groupby("column"):
+                miss = bool(((g["n_rows"] > 0) & g["ndv_hll"].isna()).any())
+                sk = None if miss else hll_mod.merge(g["ndv_hll"])
+                rows.append((col, sk, miss))
+            yield pd.DataFrame(rows, columns=["column", "ndv_hll", "miss"])
 
-        def final(pdf):
-            import pandas as pd
+    def final(pdf):
+        import pandas as pd
 
-            sk = None if pdf["miss"].any() else hll_mod.merge(pdf["ndv_hll"])
-            est = None if sk is None else hll_mod.estimate(sk)
-            return pd.DataFrame(
-                {
-                    "column": [pdf["column"].iloc[0]],
-                    "ndv_est": pd.array([est], dtype="Int64"),
-                }
-            )
-
-        # two-stage merge UNCONDITIONALLY (r6): the per-batch premerge
-        # reduces each scan task's sketches to one partial row per
-        # column BEFORE the exchange, so the shuffle carries
-        # #tasks × #columns small rows instead of #chunks × 64 KB dense
-        # sketches. Round 5 gated this behind a 2000-chunk threshold
-        # ("premerge is pure overhead for small tables") — re-measured
-        # at 118 chunks the premerge path is FASTER (0.9-1.4 s vs
-        # 1.3-3.5 s best-of-3: the 40 MB sketch shuffle cost more than
-        # the extra map stage saves), and at a million chunks it is the
-        # only shape that bounds what any single task receives.
-        partials = df.select("column", "n_rows", "ndv_hll").mapInPandas(
-            premerge, "column string, ndv_hll binary, miss boolean"
+        sk = None if pdf["miss"].any() else hll_mod.merge(pdf["ndv_hll"])
+        est = None if sk is None else hll_mod.estimate(sk)
+        return pd.DataFrame(
+            {
+                "column": [pdf["column"].iloc[0]],
+                "ndv_est": pd.array([est], dtype="Int64"),
+            }
         )
-        # hash-partition the (few, small) partial rows by column so
-        # the applyInPandas sees its clustering requirement already
-        # met — an 8-task exchange instead of
-        # spark.sql.shuffle.partitions mostly-empty ones
-        sk = (
-            partials.repartition(8, "column")
-            .groupBy("column")
-            .applyInPandas(final, "column string, ndv_est long")
-        )
-        out = out.join(F.broadcast(sk), ["column"], "left")
+
+    # two-stage merge UNCONDITIONALLY (r6): the per-batch premerge
+    # reduces each scan task's sketches to one partial row per
+    # column BEFORE the exchange, so the shuffle carries
+    # #tasks × #columns small rows instead of #chunks × 64 KB dense
+    # sketches. Round 5 gated this behind a 2000-chunk threshold
+    # ("premerge is pure overhead for small tables") — re-measured
+    # at 118 chunks the premerge path is FASTER (0.9-1.4 s vs
+    # 1.3-3.5 s best-of-3: the 40 MB sketch shuffle cost more than
+    # the extra map stage saves), and at a million chunks it is the
+    # only shape that bounds what any single task receives.
+    partials = df.select("column", "n_rows", "ndv_hll").mapInPandas(
+        premerge, "column string, ndv_hll binary, miss boolean"
+    )
+    # hash-partition the (few, small) partial rows by column so
+    # the applyInPandas sees its clustering requirement already
+    # met — an 8-task exchange instead of
+    # spark.sql.shuffle.partitions mostly-empty ones
+    sk = (
+        partials.repartition(8, "column")
+        .groupBy("column")
+        .applyInPandas(final, "column string, ndv_est long")
+    )
+    out = out.join(F.broadcast(sk), ["column"], "left")
     return out.orderBy("column", "codecs")
 
 
@@ -545,8 +511,6 @@ def _gather_grids(
     df = chunks_df(spark, snapshot_dir, as_of, since, filesystem).filter(
         F.col("column") == column
     )
-    if "qgrid" not in df.columns:
-        raise ValueError(f"snapshot {snapshot_dir} predates quantile grids")
     sel = df.select(
         "qgrid", (F.col("n_rows") - F.coalesce(F.col("null_count"), F.lit(0))).alias("w")
     )
@@ -834,19 +798,14 @@ def prune_by_range(df: DataFrame, column: str, lo=None, hi=None) -> DataFrame:
             lo = math.nextafter(float(lo), -math.inf)
         if isinstance(hi, _decimal.Decimal):
             hi = math.nextafter(float(hi), math.inf)
-        has_dbl = "max_dbl" in out.columns
 
         def _keep(stat_num, stat_dbl, op):
-            num = op(F.col(stat_num))
-            if has_dbl:
-                # snapshots written before the NaN fix store inverted
-                # +inf/-inf bounds for all-NaN chunks — treat as no-stat
-                dbl = F.when(F.col("min_dbl") > F.col("max_dbl"), F.lit(True)).otherwise(
-                    op(F.col(stat_dbl))
-                )
-            else:
-                dbl = F.lit(None).cast("boolean")
-            return F.coalesce(num, dbl, F.lit(True))
+            # snapshots written before the NaN fix store inverted
+            # +inf/-inf bounds for all-NaN chunks — treat as no-stat
+            dbl = F.when(F.col("min_dbl") > F.col("max_dbl"), F.lit(True)).otherwise(
+                op(F.col(stat_dbl))
+            )
+            return F.coalesce(op(F.col(stat_num)), dbl, F.lit(True))
 
         if lo is not None:
             out = out.filter(
@@ -900,9 +859,8 @@ def _lookup_survivors(
     keyed = df.filter(F.col("column").isin(sorted(need | set(is_null) | {anchor} - {None})))
     for c, lo, hi in ranges:
         keyed = prune_by_range(keyed, c, lo, hi)
-    if "bloom" in keyed.columns:
-        for c, probe in probes.items():
-            keyed = keyed.filter((F.col("column") != c) | probe)
+    for c, probe in probes.items():
+        keyed = keyed.filter((F.col("column") != c) | probe)
     for c in not_null:
         keyed = keyed.filter((F.col("column") != c) | (F.col("null_count") < F.col("n_rows")))
     for c in sorted(set(is_null) - need - {anchor}):
@@ -1030,7 +988,7 @@ def decode(
 
     # ``row_range=(start, stop)`` — the §3.3 row-interval read (reference
     # compute_rows/select_pages/SliceFilteredIter): partitions outside the
-    # interval are pruned driver-side from lineage row counts (metadata
+    # interval are pruned from the chunk rows' row counts (metadata
     # only), surviving partitions decode just their overlapping pages
     # executor-side via the page offset index. Row position is defined by
     # (part_id asc, row-in-partition) — the encode job's write order.
@@ -1041,74 +999,63 @@ def decode(
         if "snapshots" in lin or "table" in lin:
             raise ValueError("row_range requires a single-snapshot dir (not a table)")
         start, stop = int(row_range[0]), int(row_range[1])
-        if "partitions" in lin:  # legacy snapshots embedded the list
-            row_spans = {}
-            base = 0
-            for p in sorted(lin["partitions"], key=lambda x: x["part_id"]):
-                pid, prows = int(p["part_id"]), int(p["rows"])
+        # partition row counts from the chunk parquet, cumulated
+        # SPARK-SIDE so the driver collects only the partitions
+        # whose row interval overlaps — O(surviving), never
+        # O(#partitions). Row position is defined by global part_id
+        # order; the prefix sum runs in TWO bounded passes instead
+        # of one unpartitioned window (which serialized the whole
+        # plan into a single task at ~10^6 partitions): (1) per
+        # part_id-GROUP row sums (groups of _RR_GROUP consecutive
+        # ids — #parts/_RR_GROUP scalars to the driver), prefixed
+        # driver-side and re-broadcast; (2) a window PARTITIONED by
+        # group (parallel across groups) adds the within-group
+        # cumsum to its group's offset.
+        from pyspark.sql import Window
+
+        first = lin["columns"][0]
+        meta = (
+            chunks_df(spark, snapshot_dir, as_of, since, filesystem)
+            .filter(F.col("column") == first)
+            .select("part_id", "n_rows")
+            .withColumn("_grp", F.floor(F.col("part_id") / F.lit(_RR_GROUP)))
+        )
+        grp = sorted(
+            (int(r["_grp"]), int(r["rows"]))
+            for r in meta.groupBy("_grp").agg(F.sum("n_rows").alias("rows")).collect()
+        )
+        offs, acc = [], 0
+        for g, rows_g in grp:
+            # group-level prune: only groups overlapping the row
+            # interval enter the per-part window at all
+            if acc < stop and acc + rows_g > start:
+                offs.append((g, acc))
+            acc += rows_g
+        row_spans = {}
+        if offs:
+            off_df = spark.createDataFrame(offs, "`_grp` long, `_goff` long")
+            w = Window.partitionBy("_grp").orderBy("part_id").rowsBetween(
+                Window.unboundedPreceding, -1
+            )
+            surv = (
+                meta.join(F.broadcast(off_df), "_grp")
+                .withColumn(
+                    "base",
+                    F.col("_goff")
+                    + F.coalesce(F.sum("n_rows").over(w), F.lit(0)),
+                )
+                .filter(
+                    (F.col("base") < stop)
+                    & (F.col("base") + F.col("n_rows") > start)
+                )
+                .collect()
+            )
+            for r in surv:
+                pid, prows, base = int(r["part_id"]), int(r["n_rows"]), int(r["base"])
                 lo = max(start - base, 0)
                 hi = min(stop - base, prows)
                 if lo < hi:
                     row_spans[pid] = (lo, hi)
-                base += prows
-        else:
-            # partition row counts from the chunk parquet, cumulated
-            # SPARK-SIDE so the driver collects only the partitions
-            # whose row interval overlaps — O(surviving), never
-            # O(#partitions). Row position is defined by global part_id
-            # order; the prefix sum runs in TWO bounded passes instead
-            # of one unpartitioned window (which serialized the whole
-            # plan into a single task at ~10^6 partitions): (1) per
-            # part_id-GROUP row sums (groups of _RR_GROUP consecutive
-            # ids — #parts/_RR_GROUP scalars to the driver), prefixed
-            # driver-side and re-broadcast; (2) a window PARTITIONED by
-            # group (parallel across groups) adds the within-group
-            # cumsum to its group's offset.
-            from pyspark.sql import Window
-
-            first = lin["columns"][0]
-            meta = (
-                chunks_df(spark, snapshot_dir, as_of, since, filesystem)
-                .filter(F.col("column") == first)
-                .select("part_id", "n_rows")
-                .withColumn("_grp", F.floor(F.col("part_id") / F.lit(_RR_GROUP)))
-            )
-            grp = sorted(
-                (int(r["_grp"]), int(r["rows"]))
-                for r in meta.groupBy("_grp").agg(F.sum("n_rows").alias("rows")).collect()
-            )
-            offs, acc = [], 0
-            for g, rows_g in grp:
-                # group-level prune: only groups overlapping the row
-                # interval enter the per-part window at all
-                if acc < stop and acc + rows_g > start:
-                    offs.append((g, acc))
-                acc += rows_g
-            row_spans = {}
-            if offs:
-                off_df = spark.createDataFrame(offs, "`_grp` long, `_goff` long")
-                w = Window.partitionBy("_grp").orderBy("part_id").rowsBetween(
-                    Window.unboundedPreceding, -1
-                )
-                surv = (
-                    meta.join(F.broadcast(off_df), "_grp")
-                    .withColumn(
-                        "base",
-                        F.col("_goff")
-                        + F.coalesce(F.sum("n_rows").over(w), F.lit(0)),
-                    )
-                    .filter(
-                        (F.col("base") < stop)
-                        & (F.col("base") + F.col("n_rows") > start)
-                    )
-                    .collect()
-                )
-                for r in surv:
-                    pid, prows, base = int(r["part_id"]), int(r["n_rows"]), int(r["base"])
-                    lo = max(start - base, 0)
-                    hi = min(stop - base, prows)
-                    if lo < hi:
-                        row_spans[pid] = (lo, hi)
 
     # key_range(s) AND-combine with the point lookups' ranges below
     if key_eq is not None:
@@ -1204,12 +1151,10 @@ def decode(
         # column still produce their rows (as nulls) when only new
         # columns are projected
         need = sorted(set(need) | {lin["columns"][0]})
-    meta_cols = ["part_id", "column", "payload", "page_mins", "page_maxs", "page_rows"]
-    if "bounds_order" in df.columns:  # absent in pre-r3 snapshots
-        meta_cols.append("bounds_order")
-    if "page_nulls" in df.columns:  # absent in pre-r4 snapshots
-        meta_cols.append("page_nulls")
-    df = df.filter(F.col("column").isin(need)).select(*meta_cols)
+    df = df.filter(F.col("column").isin(need)).select(
+        "part_id", "column", "payload", "page_mins", "page_maxs", "page_rows",
+        "bounds_order", "page_nulls",
+    )
 
     # the exact arrow types Spark expects back — Spark's Arrow exchange
     # carries TimestampType as tz-aware UTC regardless of

@@ -37,7 +37,6 @@ from typing import Any
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,77 +46,6 @@ from ..functions.selector import SelectorConfig
 from . import snapshot
 from .decode_job import _zone_bound
 from .snapshot import committed_parts
-
-CHUNK_SCHEMA = (
-    "part_id long, column string, type_code int, n_rows long, null_count long, "
-    "n_pages int, codecs string, outers string, raw_bytes long, enc_bytes long, "
-    "min_bin binary, max_bin binary, min_num long, max_num long, "
-    "min_dbl double, max_dbl double, ndv long, "
-    "page_rows string, wall_s double"
-)
-
-METRICS_PA_SCHEMA = pa.schema(
-    [
-        ("part_id", pa.int64()),
-        ("column", pa.string()),
-        ("type_code", pa.int32()),
-        ("n_rows", pa.int64()),
-        ("null_count", pa.int64()),
-        ("n_pages", pa.int32()),
-        ("codecs", pa.string()),
-        ("outers", pa.string()),
-        ("raw_bytes", pa.int64()),
-        ("enc_bytes", pa.int64()),
-        ("min_bin", pa.binary()),
-        ("max_bin", pa.binary()),
-        ("min_num", pa.int64()),
-        ("max_num", pa.int64()),
-        ("min_dbl", pa.float64()),
-        ("max_dbl", pa.float64()),
-        ("ndv", pa.int64()),
-        ("page_rows", pa.string()),
-        ("wall_s", pa.float64()),
-    ]
-)
-
-CHUNK_PA_SCHEMA = pa.schema(
-    [
-        ("part_id", pa.int64()),
-        ("column", pa.string()),
-        ("type_code", pa.int32()),
-        ("n_rows", pa.int64()),
-        ("null_count", pa.int64()),
-        ("n_pages", pa.int32()),
-        ("codecs", pa.string()),
-        ("outers", pa.string()),
-        ("raw_bytes", pa.int64()),
-        ("enc_bytes", pa.int64()),
-        ("min_bin", pa.binary()),
-        ("max_bin", pa.binary()),
-        ("min_num", pa.int64()),
-        ("max_num", pa.int64()),
-        # float zone maps (reference keeps PrimitiveStatistics<f32/f64>,
-        # src/statistics/primitive.rs:11-17) + persisted distinct-count
-        # hint (reference statistics carry it, src/statistics/mod.rs:20-26)
-        ("min_dbl", pa.float64()),
-        ("max_dbl", pa.float64()),
-        ("ndv", pa.int64()),
-        ("page_rows", pa.string()),
-        ("page_mins", pa.string()),
-        ("page_maxs", pa.string()),
-        # per-page null counts (PageIndex null_count analog,
-        # reference/src/indexes/index.rs:74-135) for IS [NOT] NULL skip
-        ("page_nulls", pa.string()),
-        # mergeable K-cell quantile grid (numeric/temporal columns, zone-map
-        # units) — table-level quantiles / repartitionByRange planning
-        # without a sampling scan (plans/quantile.py)
-        ("qgrid", pa.string()),
-        ("bounds_order", pa.string()),
-        ("bloom", pa.binary()),
-        ("ndv_hll", pa.binary()),
-        ("payload", pa.binary()),
-    ]
-)
 
 
 @dataclass
@@ -500,7 +428,7 @@ def _encode_partition_arrow(
             }
         )
 
-    out = pa.Table.from_pylist(rows, schema=CHUNK_PA_SCHEMA)
+    out = pa.Table.from_pylist(rows, schema=snapshot.CHUNK_PA_SCHEMA)
     # metadata-plane IO through pyarrow.fs (the filesystem object pickled
     # in via cfg); per-chunk metric detail lives in the chunk parquet
     # itself and the _metrics sidecar, the marker stays a slim ledger
@@ -508,18 +436,8 @@ def _encode_partition_arrow(
         part_id, out, n, t0, c0
     )
 
-    metric_rows = [
-        {
-            **{
-                k: v
-                for k, v in r.items()
-                if k not in ("payload", "bloom", "ndv_hll", "page_mins", "page_maxs", "page_nulls", "qgrid")
-            },
-            "wall_s": wall,
-        }
-        for r in rows
-    ]
-    return pa.Table.from_pylist(metric_rows, schema=METRICS_PA_SCHEMA)
+    metrics = out.select(snapshot.METRICS_PA_SCHEMA.names[:-1])
+    return metrics.append_column("wall_s", pa.array([wall] * len(rows), pa.float64()))
 
 
 def _jstat(v, round_up: bool = False):
@@ -527,11 +445,17 @@ def _jstat(v, round_up: bool = False):
     numeric key ranges), bytes as utf-8 text, numbers as-is. Decimals
     become CONSERVATIVE floats — mins rounded one ulp down
     (``round_up=False``), maxs one ulp up — so page pruning only ever
-    widens the range (same rule as the chunk-level dbl zone map)."""
+    widens the range (same rule as the chunk-level dbl zone map). Bytes
+    that are not valid utf-8 have no order-faithful text form (U+FFFD
+    would sort below 4-byte code points, byte 0xF5 sorts above 0xF0), so
+    they store no stat: the page is never pruned on it."""
     import decimal as _decimal
 
     if isinstance(v, (bytes, bytearray)):
-        return v.decode("utf-8", "replace")
+        try:
+            return bytes(v).decode("utf-8")
+        except UnicodeDecodeError:
+            return None
     if isinstance(v, (np.integer,)):
         return int(v)
     if isinstance(v, _decimal.Decimal):
@@ -625,7 +549,7 @@ def encode(
                 presorted=cfg.shuffle,
             ).to_batches()
 
-    metrics_df = planned.mapInArrow(run, CHUNK_SCHEMA)
+    metrics_df = planned.mapInArrow(run, snapshot.METRICS_DDL)
 
     return commit_metrics_action(
         spark, metrics_df, snapshot_dir, cfg, columns, df, n_parts, t0,
@@ -788,7 +712,7 @@ def finalize(
         # committed-partition count is the FILE count (the embedded
         # part_id column is stale in verbatim-copied keepers)
         n_committed = len(chunk_files)
-        ch = spark.read.parquet(snapshot.chunks_dir(snapshot_dir)).select(
+        ch = snapshot.chunk_frame(spark, [snapshot.chunks_dir(snapshot_dir)]).select(
             "column", "codecs", "raw_bytes", "enc_bytes", "n_rows"
         )
         agg_rows = (
@@ -817,10 +741,8 @@ def finalize(
         # path, so prune to the metric columns (parquet columnar —
         # payload bytes are never read) and reduce through pyarrow
         n_committed = len(chunk_files)
-        tbl = pq.read_table(
-            chunks_dir,
-            filesystem=fs,
-            columns=["column", "codecs", "raw_bytes", "enc_bytes", "n_rows"],
+        tbl = snapshot.read_chunk_file(
+            fs, chunks_dir, ["column", "codecs", "raw_bytes", "enc_bytes", "n_rows"]
         )
         g = tbl.group_by("column").aggregate(
             [

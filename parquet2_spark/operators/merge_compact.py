@@ -184,15 +184,12 @@ def plan(
             e = e + (stat > lt).cast("int")
         return F.coalesce(e, F.lit(0))
 
-    from .decode_job import _filename_part_id
-
     frames = []
     for _sid, sdir in snaps:
         meta = (
-            spark.read.parquet(snapshot.chunks_dir(sdir))
-            # identity from the FILENAME: copied keepers carry a stale
+            # part_id from the FILENAME: copied keepers carry a stale
             # embedded part_id, and this pid names the file we re-open
-            .withColumn("part_id", _filename_part_id())
+            snapshot.chunk_frame(spark, [snapshot.chunks_dir(sdir)])
             .select("part_id", "column", "min_bin", "max_bin", "min_num",
                     "max_num", "min_dbl", "max_dbl", "null_count", "n_rows")
         )
@@ -310,7 +307,7 @@ def encode_fused(
     from ..plans import hll
     from ..schema import df_to_pa_schema, spark_type_to_pa
     from .decode_job import _decode_part, _page_keep
-    from .encode_job import CHUNK_SCHEMA, _encode_partition_arrow, commit_metrics_action
+    from .encode_job import _encode_partition_arrow, commit_metrics_action
 
     t0 = time.time()
     ddl = ", ".join(f"`{c}` {schema_map[c]}" for c in columns)
@@ -339,7 +336,6 @@ def encode_fused(
 
     def merge_encode(tbl: pa.Table) -> pa.Table:
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
         b = int(tbl.column("bucket")[0].as_py())
         lo = bounds[b - 1] if b > 0 else None
@@ -353,10 +349,9 @@ def encode_fused(
             tbl.column("snap").to_pylist(), tbl.column("part_id").to_pylist()
         )):
             fs, root = fsio.resolve(snap, filesystem)
-            ct = pq.read_table(snapshot.chunk_path(root, pid), filesystem=fs)
+            ct = snapshot.read_chunk_file(fs, snapshot.chunk_path(root, pid))
             names = ct.column("column").to_pylist()
             row_of = {name: i for i, name in enumerate(names)}
-            have = set(ct.schema.names)
 
             # input NDV sketches (merged below; see module doc): a chunk
             # with non-null values but no sketch poisons the column — the
@@ -365,7 +360,7 @@ def encode_fused(
                 i = row_of.get(c)
                 if i is None:
                     continue  # older snapshot: column decodes all-null
-                s = ct.column("ndv_hll")[i].as_py() if "ndv_hll" in have else None
+                s = ct.column("ndv_hll")[i].as_py()
                 if s is not None:
                     sketches[c].append(s)
                 elif int(ct.column("null_count")[i].as_py() or 0) < int(
@@ -404,7 +399,7 @@ def encode_fused(
         if not runs:
             # plan overlap with zero surviving rows: the shuffle path
             # would simply not produce this partition — emit no chunk
-            return pa.Table.from_pylist([], schema=_metrics_schema())
+            return snapshot.METRICS_PA_SCHEMA.empty_table()
         merged = pa.concat_tables(runs, promote_options="none")
         keys = [c for c in sort_cols if c in merged.schema.names]
         if keys:
@@ -449,7 +444,7 @@ def encode_fused(
             if out.num_rows:
                 yield from out.to_batches()
 
-    metrics_df = arranged.mapInArrow(run_buckets, CHUNK_SCHEMA)
+    metrics_df = arranged.mapInArrow(run_buckets, snapshot.METRICS_DDL)
     if keep_df is not None:
         # keeper buckets ride the SAME single action: their copy tasks
         # and the merge tasks are partitions of one metric-row frame,
@@ -474,9 +469,3 @@ def encode_fused(
         spark, metrics_df, snapshot_dir, cfg, columns, empty_df, n_parts, t0,
         n_resumed,
     )
-
-
-def _metrics_schema():
-    from .encode_job import METRICS_PA_SCHEMA
-
-    return METRICS_PA_SCHEMA

@@ -16,13 +16,33 @@ renamed into ``chunks/``), then a slim commit marker. A marker therefore
 always has its data file; the markers are the resume ledger
 (``committed_parts``) and the torn-snapshot check (``torn_parts``).
 
-Part identity lives in the chunk FILENAME (``decode_job.chunks_df``
-derives ``part_id`` from it), which is what lets a keeper be carried
-into a new snapshot as a byte-verbatim file copy.
+Part identity lives in the chunk FILENAME (``chunk_frame`` derives
+``part_id`` from it), which is what lets a keeper be carried into a new
+snapshot as a byte-verbatim file copy.
 
 Marker fields: ``part_id``, ``file``, ``rows``, ``wall_s``, plus
 ``cpu_s`` for encoded partitions or the copy's provenance
 (``binpack_copied_from`` / ``layout_copied_from``) for keepers.
+
+A chunk file holds one row per column of its partition, typed by
+``CHUNK_PA_SCHEMA`` (the one declaration of the format):
+    part_id, column, type_code, n_rows, null_count, n_pages,
+    codecs, outers                       codec mix, comma-joined
+    raw_bytes, enc_bytes
+    min_bin/max_bin, min_num/max_num,
+    min_dbl/max_dbl                      chunk zone maps
+    ndv                                  distinct-count hint
+    page_rows, page_mins, page_maxs,
+    page_nulls, bounds_order             page index (json text)
+    qgrid                                quantile grid (json text)
+    bloom, ndv_hll                       bloom filter, NDV sketch
+    payload                              the encoded chunk
+Every chunk read goes through ``chunk_frame`` (Spark) or
+``read_chunk_file`` (pyarrow), both typed by that schema: a field
+missing from an older file reads as null, so no reader asks which
+fields a file has. The metric rows the writers return are the chunk
+rows without ``payload``, ``bloom``, ``ndv_hll``, ``qgrid``,
+``bounds_order`` and the page min/max/null lists, plus ``wall_s``.
 """
 
 from __future__ import annotations
@@ -35,12 +55,74 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from .. import fsio
 
 CHUNKS = "chunks"
 COMMITS = "_commits"
 TMP = "_tmp"
+
+CHUNK_PA_SCHEMA = pa.schema(
+    [
+        ("part_id", pa.int64()),
+        ("column", pa.string()),
+        ("type_code", pa.int32()),
+        ("n_rows", pa.int64()),
+        ("null_count", pa.int64()),
+        ("n_pages", pa.int32()),
+        ("codecs", pa.string()),
+        ("outers", pa.string()),
+        ("raw_bytes", pa.int64()),
+        ("enc_bytes", pa.int64()),
+        ("min_bin", pa.binary()),
+        ("max_bin", pa.binary()),
+        ("min_num", pa.int64()),
+        ("max_num", pa.int64()),
+        # float zone maps (reference keeps PrimitiveStatistics<f32/f64>,
+        # src/statistics/primitive.rs:11-17) + persisted distinct-count
+        # hint (reference statistics carry it, src/statistics/mod.rs:20-26)
+        ("min_dbl", pa.float64()),
+        ("max_dbl", pa.float64()),
+        ("ndv", pa.int64()),
+        ("page_rows", pa.string()),
+        ("page_mins", pa.string()),
+        ("page_maxs", pa.string()),
+        # per-page null counts (PageIndex null_count analog,
+        # reference/src/indexes/index.rs:74-135) for IS [NOT] NULL skip
+        ("page_nulls", pa.string()),
+        # mergeable K-cell quantile grid (numeric/temporal columns, zone-map
+        # units) — table-level quantiles / repartitionByRange planning
+        # without a sampling scan (plans/quantile.py)
+        ("qgrid", pa.string()),
+        ("bounds_order", pa.string()),
+        ("bloom", pa.binary()),
+        ("ndv_hll", pa.binary()),
+        ("payload", pa.binary()),
+    ]
+)
+
+_NOT_METRIC = {
+    "page_mins", "page_maxs", "page_nulls", "qgrid", "bounds_order",
+    "bloom", "ndv_hll", "payload",
+}
+METRICS_PA_SCHEMA = pa.schema(
+    [f for f in CHUNK_PA_SCHEMA if f.name not in _NOT_METRIC]
+    + [pa.field("wall_s", pa.float64())]
+)
+
+_DDL_TYPE = {
+    pa.int32(): "int", pa.int64(): "long", pa.float64(): "double",
+    pa.string(): "string", pa.binary(): "binary",
+}
+
+
+def _ddl(schema: pa.Schema) -> str:
+    return ", ".join(f"`{f.name}` {_DDL_TYPE[f.type]}" for f in schema)
+
+
+CHUNK_DDL = _ddl(CHUNK_PA_SCHEMA)
+METRICS_DDL = _ddl(METRICS_PA_SCHEMA)
 
 
 def chunk_name(part_id: int) -> str:
@@ -53,6 +135,46 @@ def chunks_dir(snapshot_root: str) -> str:
 
 def chunk_path(snapshot_root: str, part_id: int) -> str:
     return fsio.join(snapshot_root, CHUNKS, chunk_name(part_id))
+
+
+def _filename_part_id():
+    """``part_id`` derived from the chunk FILENAME (``part-NNNNNN``) —
+    the authoritative partition identity. Verbatim-copied chunk files
+    (binpack keepers, incremental re-layout keepers) keep their OLD
+    embedded ``part_id`` column untouched: the rename IS the renumber,
+    which is what lets maintenance carry partitions by server-side copy
+    on object stores instead of rewriting parquet. The embedded column
+    still rides in every file (writers emit it; it equals the filename
+    for freshly-encoded partitions) but no reader trusts it.
+
+    Uses the ``_metadata.file_name`` hidden column, NOT
+    ``input_file_name()``: the latter is nondeterministic, and Catalyst
+    refuses to push ANY filter through a nondeterministic Project —
+    zone-map and column predicates would stop reaching the parquet scan
+    (caught by tests/test_plans_audit.py)."""
+    return F.regexp_extract(
+        F.col("_metadata.file_name"), r"part-(\d+)\.parquet", 1
+    ).cast("long")
+
+
+def chunk_frame(spark, paths: list[str]) -> DataFrame:
+    """The chunk rows of the chunk files (or ``chunks/`` dirs) at
+    ``paths``, typed by ``CHUNK_PA_SCHEMA`` — no schema-inference job,
+    and a field an older file lacks reads as null — with ``part_id``
+    taken from the filename. No paths: a typed zero-row frame."""
+    if not paths:
+        return spark.createDataFrame([], CHUNK_DDL)
+    return (
+        spark.read.schema(CHUNK_DDL)
+        .parquet(*paths)
+        .withColumn("part_id", _filename_part_id())
+    )
+
+
+def read_chunk_file(fs, path: str, columns: list[str] | None = None) -> pa.Table:
+    """A chunk file (or a ``chunks/`` dir) read through pyarrow, typed
+    by ``CHUNK_PA_SCHEMA``: a field the file lacks reads as null."""
+    return pq.read_table(path, filesystem=fs, columns=columns, schema=CHUNK_PA_SCHEMA)
 
 
 def _marker_ids(fs, root: str) -> list[int]:
@@ -154,31 +276,17 @@ def copy_chunk_file(
     with ``part_id`` patched to ``npid`` in the METRIC stream only.
     Returns the metric record batch, or None when the marker already
     exists (resume)."""
-    from .encode_job import METRICS_PA_SCHEMA
-
     t0 = time.time()
     if writer.is_committed(npid):
         return None  # resume: this keeper already carried over
-    stat_fields = [f for f in METRICS_PA_SCHEMA if f.name != "wall_s"]
-    with src_fs.open_input_file(src_path) as fh:
-        pf = pq.ParquetFile(fh)
-        have = pf.schema_arrow.names
-        mt = pf.read(columns=[fld.name for fld in stat_fields if fld.name in have])
+    mt = read_chunk_file(src_fs, src_path, METRICS_PA_SCHEMA.names[:-1])
     n = mt.num_rows
-    arrs = []
-    for fld in stat_fields:
-        if fld.name == "part_id":
-            arr = pa.array(np.full(n, npid, dtype=np.int64))
-        elif fld.name in mt.schema.names:
-            arr = mt.column(fld.name).combine_chunks().cast(fld.type)
-        else:  # chunk file from before this stat column existed
-            arr = pa.nulls(n, fld.type)
-        if fld.name == "n_rows":
-            rows = int(pc.max(arr).as_py() or 0)
-        arrs.append(arr)
+    pid_at = mt.schema.get_field_index("part_id")
+    mt = mt.set_column(pid_at, "part_id", pa.array(np.full(n, npid, dtype=np.int64)))
+    rows = int(pc.max(mt.column("n_rows")).as_py() or 0)
     wall = writer.commit_copy(npid, src_fs, src_path, rows, t0, marker_extra)
-    arrs.append(pa.array([wall] * n, pa.float64()))
-    return pa.record_batch(arrs, schema=METRICS_PA_SCHEMA)
+    mt = mt.append_column("wall_s", pa.array([wall] * n, pa.float64()))
+    return mt.combine_chunks().to_batches()[0]
 
 
 def copy_keepers(plan: DataFrame, snapshot_dir: str, filesystem=None) -> DataFrame:
@@ -189,8 +297,6 @@ def copy_keepers(plan: DataFrame, snapshot_dir: str, filesystem=None) -> DataFra
     provenance fields for the commit marker). Tasks are spread by
     ``new_pid``; each skips keepers already committed, so a crashed copy
     retried into the same dir finishes exactly once."""
-    from .encode_job import CHUNK_SCHEMA
-
     def copy_tasks(batches):
         writer = PartWriter(snapshot_dir, filesystem)
         for rb in batches:
@@ -209,7 +315,7 @@ def copy_keepers(plan: DataFrame, snapshot_dir: str, filesystem=None) -> DataFra
     return (
         plan.select("src_snap", "src_pid", "new_pid", "marker")
         .repartition("new_pid")
-        .mapInArrow(copy_tasks, CHUNK_SCHEMA)
+        .mapInArrow(copy_tasks, METRICS_DDL)
     )
 
 

@@ -131,9 +131,6 @@ def _acquire_manifest_lock(fs, root: str, wait_s: float = LOCK_WAIT_S) -> dict:
 def _release_manifest_lock(fs, lock) -> None:
     """Token-verified release: a holder whose critical section outlived
     LOCK_STALE_S must not delete the lock a stealer now owns."""
-    if isinstance(lock, str):  # legacy path-only handle
-        fsio.delete_file(fs, lock)
-        return
     try:
         if fsio.read_json(fs, lock["path"]).get("token") != lock["token"]:
             return

@@ -83,7 +83,7 @@ class TestPruneNullSafety:
         ]
         df = spark.createDataFrame(
             rows, "column string, min_bin binary, max_bin binary, min_num long, max_num long"
-        )
+        ).selectExpr("*", "CAST(NULL AS DOUBLE) AS min_dbl", "CAST(NULL AS DOUBLE) AS max_dbl")
         from parquet2_spark.operators.decode_job import prune_by_range
 
         kept = prune_by_range(df, "value", lo=50, hi=60).collect()

@@ -466,12 +466,12 @@ def test_range_and_null_decode_plans_have_no_join(spark, url_snap, src, kind):
 
 
 # Spark jobs started by decode(...) plus collect(), per predicate kind:
-# one schema inference per chunk-file read, the phase-1 prune collect and
-# the decode action; key_in adds its probe-hash collect and row_range the
-# jobs of its prefix-sum pass
+# the phase-1 prune collect and the decode action (chunk reads are typed,
+# so no schema-inference job); key_in adds its probe-hash collect and
+# row_range the jobs of its prefix-sum pass
 JOBS_PER_READ = {
-    "full": 2, "key_eq": 4, "key_in": 5, "key_range": 4, "key_ranges": 4,
-    "not_null": 4, "is_null": 4, "row_range": 8,
+    "full": 1, "key_eq": 2, "key_in": 3, "key_range": 2, "key_ranges": 2,
+    "not_null": 2, "is_null": 2, "row_range": 6,
 }
 
 
@@ -488,3 +488,38 @@ def test_jobs_per_read(spark, url_snap, src, kind):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert n == JOBS_PER_READ[kind]
+
+
+def _jobs(spark, name: str, fn) -> int:
+    """Spark jobs started while ``fn()`` runs."""
+    sc = spark.sparkContext
+    group = f"p2s-jobs-{name}"
+    sc.setJobGroup(group, name)
+    try:
+        fn()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_metadata_reads_start_no_inference_jobs(spark, lookup_table):
+    """stats(), quantiles() and the compaction plan over a 3-snapshot
+    table read the chunk files typed: no job per snapshot for schema
+    inference (untyped reads started 9, 4 and 17 jobs here)."""
+    from parquet2_spark.operators import merge_compact
+
+    tdir, sdirs, urls = lookup_table
+    snaps = sorted(sdirs.items())
+    bounds = [urls[1000].encode(), urls[3000].encode()]
+    got = {
+        "stats": _jobs(spark, "stats", lambda: decode_job.stats(spark, tdir).collect()),
+        "quantiles": _jobs(
+            spark, "quantiles", lambda: decode_job.quantiles(spark, tdir, "warc_ts", [0.5])
+        ),
+        "plan": _jobs(
+            spark, "plan",
+            lambda: merge_compact.plan(spark, snaps, "url", bounds).collect(),
+        ),
+    }
+    assert got == {"stats": 6, "quantiles": 1, "plan": 14}

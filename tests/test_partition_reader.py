@@ -150,6 +150,29 @@ def test_str_bound_still_prunes_pages(spark, utf8_snap):
     assert (read, skipped) == (4, 4)
 
 
+def test_non_utf8_page_stats_do_not_prune_matching_pages(spark, tmp_path):
+    """Bytes that are not valid utf-8 store no page stat: written with
+    U+FFFD, the ``\\xf5`` pages sorted below a 4-byte code point and a
+    range above it skipped every page holding its rows."""
+    rows = [(b"a%03d" % i,) for i in range(100)] + [(b"\xf5%03d" % i,) for i in range(100)]
+    df = spark.createDataFrame(rows, "b binary").coalesce(1)
+    snap = str(tmp_path / "snap")
+    encode(spark, df, snap, EncodeConfig(sort_by="b", page_rows=50, shuffle=False))
+    out = decode_job.decode(spark, snap, key_range=("b", "😀".encode(), None))
+    got = sorted(bytes(r["b"]) for r in out.collect())
+    assert got == sorted(b for (b,) in rows if b >= "😀".encode())
+    assert len(got) == 100
+    assert out.p2s_decode_metrics["pages_skipped"].value == 2
+
+
+def test_replacement_char_page_stat_reads_as_missing():
+    """Snapshots already on disk hold the U+FFFD stat: it prunes nothing."""
+    t = _index_table(["a0", "a5", "\ufffd0", "\ufffd5"], ["a4", "a9", "\ufffd4", "\ufffd9"],
+                     [5, 5, 5, 5], [0, 0, 0, 0])
+    assert decode_job._page_keep(t, [("k", "😀", None)], [], []) == {2, 3}
+    assert decode_job._page_keep(t, [("k", None, "a4")], [], []) == {0, 2, 3}
+
+
 def test_page_prune_and_chunk_decode_live_in_decode_job():
     """One partition reader: outside blob.py, only decode_job.py calls
     the chunk-decode functions or the page-range prune."""

@@ -167,11 +167,36 @@ def _package_sources():
                     yield os.path.relpath(p, pkg), fh.read()
 
 
+def _call_args(src: str, start: int) -> str:
+    """The source text of the call whose ``(`` is at ``start``."""
+    depth = 0
+    for i in range(start, len(src)):
+        depth += {"(": 1, ")": -1}.get(src[i], 0)
+        if depth == 0:
+            return src[start:i + 1]
+    return src[start:]
+
+
 def test_layout_literals_live_in_snapshot_module():
     owners = {
         name for name, src in _package_sources() if '"_commits"' in src or "part-{" in src
     }
     assert owners == {"operators/snapshot.py"}
+    # the chunk-file schema and every chunk-file read live there too
+    reads = re.compile(r"read\.parquet\(|pq\.read_table\(|ParquetFile\(")
+    readers = {
+        name for name, src in _package_sources()
+        if name.startswith("operators/") and reads.search(src)
+    }
+    schemas = {
+        name for name, src in _package_sources()
+        if name.startswith("operators/") and any(
+            '"payload"' in _call_args(src, m.end() - 1)
+            for m in re.finditer(r"pa\.schema\(", src)
+        )
+    }
+    assert readers == {"operators/snapshot.py"}
+    assert schemas == {"operators/snapshot.py"}
 
 
 def test_package_reads_no_environment_variables():
