@@ -6,7 +6,10 @@ spark-submit analog over our snapshots, plus the engine's own
 encode / decode / validate entry points (the north star's deliverable
 queries).
 
-Usage (via spark-submit --py-files parquet2_spark.zip):
+Usage (the session takes ``conf.RECOMMENDED``, whose worker daemon the
+executors' Python imports before any ``--py-files`` arrive: run from the
+repo root, install the package, or spark-submit with
+``PYTHONPATH=parquet2_spark.zip`` as well as ``--py-files parquet2_spark.zip``):
     python -m parquet2_spark.cli meta     <snapshot_dir>
     python -m parquet2_spark.cli rowcount <snapshot_dir>
     python -m parquet2_spark.cli stats    <snapshot_dir>
@@ -23,14 +26,10 @@ import json
 import sys
 
 
-def _spark(cores: str = "*"):
-    from pyspark.sql import SparkSession
+def _spark():
+    from . import conf
 
-    s = (
-        SparkSession.builder.appName("parquet2-spark-cli")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
+    s = conf.session("parquet2-spark-cli")
     s.sparkContext.setLogLevel("ERROR")
     return s
 

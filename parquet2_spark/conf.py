@@ -20,6 +20,16 @@ RECOMMENDED: dict[str, str] = {
     # Python workers are reused across tasks — imports and the C codec
     # .so load are paid once per executor core.
     "spark.python.worker.reuse": "true",
+    # Workers fork from parquet2_spark.daemon, which stops pyspark's
+    # per-task importlib.invalidate_caches() from re-reading pyspark.zip,
+    # py4j and the spark-core jar unless one changed on disk (measured:
+    # a noop mapInArrow task on local[4] costs 0.02 worker CPU-s, against
+    # 0.20-0.25 under pyspark.daemon). The executors' interpreter must
+    # import the module before any task runs; files from addPyFile arrive
+    # too late, so a cluster needs the package installed or on
+    # spark.executorEnv.PYTHONPATH. If it cannot be imported, the first
+    # Python task fails at once (ModuleNotFoundError naming the module).
+    "spark.python.daemon.module": "parquet2_spark.daemon",
     # one scan task ≈ one comfortable in-memory page run; chunks-table
     # payload rows are MB-scale, so the default 128 MB is right.
     "spark.sql.files.maxPartitionBytes": "134217728",
@@ -44,13 +54,20 @@ RECOMMENDED: dict[str, str] = {
 
 def apply(builder):
     for k, v in RECOMMENDED.items():
-        builder = builder.config(k, v)
+        if k not in builder._options:
+            builder = builder.config(k, v)
     return builder
 
 
 def session(app_name: str = "parquet2-spark", master: str | None = None):
+    """A new session with the recommended settings. A session already
+    active in this process is returned as it is: its settings are the
+    operator's, and ``getOrCreate`` would overwrite them."""
     from pyspark.sql import SparkSession
 
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     b = SparkSession.builder.appName(app_name)
     if master:
         b = b.master(master)

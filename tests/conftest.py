@@ -15,6 +15,9 @@ def spark():
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1000")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # workers fork from the engine's daemon (the one conf.RECOMMENDED
+        # key this fixture takes), so tests/test_daemon.py runs under it
+        .config("spark.python.daemon.module", "parquet2_spark.daemon")
         .getOrCreate()
     )
     s.sparkContext.setLogLevel("ERROR")

@@ -506,7 +506,10 @@ def _jobs(spark, name: str, fn) -> int:
 def test_metadata_reads_start_no_inference_jobs(spark, lookup_table):
     """stats(), quantiles() and the compaction plan over a 3-snapshot
     table read the chunk files typed: no job per snapshot for schema
-    inference (untyped reads started 9, 4 and 17 jobs here)."""
+    inference (untyped reads started 9, 4 and 17 jobs here). The plan's
+    counts over the first 1, 2 and 3 snapshots are the baseline for
+    cutting the range compaction's plan cost: 2 jobs plus 4 per
+    snapshot."""
     from parquet2_spark.operators import merge_compact
 
     tdir, sdirs, urls = lookup_table
@@ -517,9 +520,12 @@ def test_metadata_reads_start_no_inference_jobs(spark, lookup_table):
         "quantiles": _jobs(
             spark, "quantiles", lambda: decode_job.quantiles(spark, tdir, "warc_ts", [0.5])
         ),
-        "plan": _jobs(
-            spark, "plan",
-            lambda: merge_compact.plan(spark, snaps, "url", bounds).collect(),
-        ),
+        **{
+            f"plan{n}": _jobs(
+                spark, f"plan{n}",
+                lambda n=n: merge_compact.plan(spark, snaps[:n], "url", bounds).collect(),
+            )
+            for n in (1, 2, 3)
+        },
     }
-    assert got == {"stats": 6, "quantiles": 1, "plan": 14}
+    assert got == {"stats": 6, "quantiles": 1, "plan1": 6, "plan2": 10, "plan3": 14}
