@@ -31,6 +31,7 @@ import json
 import posixpath
 import uuid
 
+import pyarrow as pa
 from pyarrow import fs as pafs
 
 
@@ -41,7 +42,15 @@ def resolve(path: str, filesystem=None) -> tuple[pafs.FileSystem, str]:
     if filesystem is not None:
         return filesystem, path
     if "://" in path:
-        return pafs.FileSystem.from_uri(path)
+        try:
+            return pafs.FileSystem.from_uri(path)
+        except pa.ArrowInvalid as e:
+            # a Hadoop-only scheme (s3a://, abfs://, ...): Spark may read
+            # it, the metadata plane and the decoder cannot
+            raise ValueError(
+                f"pyarrow cannot open {path!r} ({e}); pass filesystem= a "
+                "pyarrow.fs.FileSystem for it"
+            ) from e
     return pafs.LocalFileSystem(), path
 
 

@@ -5,15 +5,17 @@ DataFrame *is* the metadata+data layer; Catalyst provides projection
 pruning (only requested columns' chunk rows are read — the parquet scan
 of the chunks table pushes ``column IN (...)``) and zone-map predicate
 pruning (plain filters on min/max stat columns ≙ ``filter_row_groups``,
-reference src/read/mod.rs:32-45). ``decode`` prunes partitions for every
-predicate in one metadata pass (``_lookup_survivors``), then lists only
-the surviving chunk files; page-level pruning happens inside the UDF via
-the chunk's page index (≙ IndexedPageReader).
+reference src/read/mod.rs:32-45). ``decode`` runs every read as one
+Spark job: a metadata scan prunes partitions and streams the survivors'
+chunk rows into a decoder that reads their chunk files itself, skips
+pages by the chunk's page index (≙ IndexedPageReader) and decodes.
 """
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 
 import numpy as np
 import pandas as pd
@@ -33,15 +35,21 @@ from . import snapshot
 # with struct-field pruning for dotted projections).
 
 
-def lineage(snapshot_dir: str, as_of: int | None = None, filesystem=None, since: int | None = None) -> dict:
+def lineage(
+    snapshot_dir: str, as_of: int | None = None, filesystem=None, since: int | None = None,
+    _snaps: list | None = None,
+) -> dict:
     """Lineage of a snapshot dir — or the merged lineage of a multi-
-    snapshot table dir (see operators.table)."""
+    snapshot table dir (see operators.table). ``_snaps`` (internal): the
+    table's ``(sid, dir)`` list, already read from its manifest."""
     from . import table as table_mod
 
-    if table_mod.is_table(snapshot_dir, filesystem):
+    if _snaps is not None or table_mod.is_table(snapshot_dir, filesystem):
         merged: dict = {"table": snapshot_dir, "snapshots": [], "rows": 0,
                         "raw_bytes": 0, "enc_bytes": 0, "per_column": {}}
-        for sid, sdir in table_mod.snapshot_dirs(snapshot_dir, as_of, filesystem, since):
+        if _snaps is None:
+            _snaps = table_mod.snapshot_dirs(snapshot_dir, as_of, filesystem, since)
+        for sid, sdir in _snaps:
             lin = lineage(sdir, filesystem=filesystem)
             merged["snapshots"].append({"id": sid, "dir": sdir, "rows": lin["rows"]})
             merged["rows"] += lin["rows"]
@@ -126,6 +134,11 @@ def _page_keep_for_range(mins: list, maxs: list, lo, hi, order: str | None) -> s
 # The partition reader shared by decode and the fused compaction
 # (merge_compact.encode_fused): one chunk-table group in, page-pruned,
 # decoded, schema-filled and typed columns out.
+
+# the chunk-file fields the partition reader uses
+_PART_FIELDS = [
+    "column", "payload", "page_mins", "page_maxs", "page_rows", "bounds_order", "page_nulls",
+]
 
 
 def _page_space(v):
@@ -282,25 +295,6 @@ def _snapshot_reads(
     return [(sid, sdir, None) for sid, sdir in snaps]
 
 
-def _narrow_reads(reads: list, part_ids) -> list:
-    """``reads`` cut down to the chunk files of ``part_ids``, numbered as
-    ``chunks_df`` numbers them (namespaced by snapshot id on a table)."""
-    from . import table as table_mod
-
-    mask = (1 << table_mod.SNAP_SHIFT) - 1
-    by_sid: dict = {}
-    for p in part_ids:
-        by_sid.setdefault(int(p) >> table_mod.SNAP_SHIFT, set()).add(int(p) & mask)
-    out = []
-    for sid, sdir, pids in reads:
-        keep = {int(p) for p in part_ids} if sid is None else by_sid.get(sid, set())
-        if pids is not None:
-            keep &= set(pids)
-        if keep:
-            out.append((sid, sdir, sorted(keep)))
-    return out
-
-
 def chunks_df(
     spark: SparkSession,
     snapshot_dir: str,
@@ -318,7 +312,7 @@ def chunks_df(
     never collide across snapshots.
 
     ``_reads`` (internal: a ``_snapshot_reads`` list, possibly narrowed
-    to a prune's survivors) replaces the manifest read, so two frames
+    to a row range's partitions) replaces the manifest read, so two frames
     built from one list see the same snapshots even if a commit or a
     compaction swaps the manifest in between. An entry ``(sid, dir, part_ids)`` with a list
     of ids reads exactly those chunk files by path: other files are never
@@ -689,6 +683,21 @@ def _typed_lit(v, ddl: str):
     return F.lit(v).cast(ddl)
 
 
+def _local(spark: SparkSession, vals: list, ddl: str) -> DataFrame:
+    """One-column frame ``m`` of ``vals`` typed as ``ddl``, over a local
+    Arrow relation: collecting it, or a projection of it, runs on the
+    driver and starts no Spark job."""
+    return spark.createDataFrame(pa.table({"m": vals}), f"`m` {ddl}")
+
+
+def _hashes(df: DataFrame, col) -> np.ndarray:
+    """``F.xxhash64(col)`` over a local frame, as the uint64 keys the
+    stored blooms hold: the same JVM function that hashed the column at
+    encode time, collected with no Spark job."""
+    rows = df.select(F.xxhash64(col)).collect()
+    return np.array([r[0] for r in rows], dtype=np.int64).view(np.uint64)
+
+
 def _probe_frame(spark: SparkSession, vals: list, ddl: str) -> DataFrame:
     """One-column DataFrame (``__p2s_probe``) of probe values typed as
     ``ddl`` — the DataFrame-scale analog of ``_typed_lit`` for IN-lists
@@ -697,7 +706,8 @@ def _probe_frame(spark: SparkSession, vals: list, ddl: str) -> DataFrame:
     travel as epoch ints (wall-clock strings for ``timestamp_ntz``) and
     convert through session-timezone-independent functions; a date probe
     against a timestamp column is promoted to midnight UTC python-side
-    (this engine defines naive instants as UTC)."""
+    (this engine defines naive instants as UTC). Built on ``_local``, so
+    hashing it starts no job."""
     import datetime as _dt
 
     n_temporal = sum(isinstance(v, (_dt.date, _dt.datetime)) for v in vals)
@@ -707,23 +717,18 @@ def _probe_frame(spark: SparkSession, vals: list, ddl: str) -> DataFrame:
         ):
             # ints against temporal columns mean epoch micros / days (the
             # zone-map storage unit, same convention as the residual
-            # _bound and the CLI's --key-in typing); createDataFrame
-            # would reject raw ints for these types outright
-            raw = spark.createDataFrame([(int(v),) for v in vals], "`m` long")
+            # _bound and the CLI's --key-in typing); a typed frame would
+            # reject raw ints for these types outright
             if ddl == "date":
-                return raw.select(
-                    F.date_from_unix_date(F.col("m").cast("int")).alias("__p2s_probe")
-                )
-            if ddl == "timestamp_ntz":
-                walls = [_wall_str(v) for v in vals]
-                raw = spark.createDataFrame([(w,) for w in walls], "`m` string")
-                return raw.select(
+                m = F.date_from_unix_date(F.col("m").cast("int"))
+            elif ddl == "timestamp_ntz":
+                return _local(spark, [_wall_str(v) for v in vals], "string").select(
                     F.col("m").cast("timestamp_ntz").alias("__p2s_probe")
                 )
-            return raw.select(
-                F.timestamp_micros(F.col("m")).cast(ddl).alias("__p2s_probe")
-            )
-        return spark.createDataFrame([(v,) for v in vals], f"`__p2s_probe` {ddl}")
+            else:
+                m = F.timestamp_micros(F.col("m")).cast(ddl)
+            return _local(spark, [int(v) for v in vals], "long").select(m.alias("__p2s_probe"))
+        return _local(spark, list(vals), ddl).withColumnRenamed("m", "__p2s_probe")
     if n_temporal != len(vals):
         raise TypeError(
             "key_in mixes datetime/date probes with other value types — "
@@ -747,8 +752,7 @@ def _probe_frame(spark: SparkSession, vals: list, ddl: str) -> DataFrame:
             )
             for v in vals
         ]
-        raw = spark.createDataFrame([(d,) for d in days], "`m` long")
-        return raw.select(
+        return _local(spark, days, "long").select(
             F.date_from_unix_date(F.col("m").cast("int")).alias("__p2s_probe")
         )
     # every other target type: promote plain dates to midnight-UTC
@@ -761,30 +765,37 @@ def _probe_frame(spark: SparkSession, vals: list, ddl: str) -> DataFrame:
     ]
     if ddl == "timestamp_ntz":
         walls = [_wall_str(_zone_bound(v)) for v in vals]
-        raw = spark.createDataFrame([(w,) for w in walls], "`m` string")
-        return raw.select(F.col("m").cast("timestamp_ntz").alias("__p2s_probe"))
-    raw = spark.createDataFrame([(int(_zone_bound(v)),) for v in vals], "`m` long")
-    return raw.select(F.timestamp_micros(F.col("m")).cast(ddl).alias("__p2s_probe"))
+        return _local(spark, walls, "string").select(
+            F.col("m").cast("timestamp_ntz").alias("__p2s_probe")
+        )
+    return _local(spark, [int(_zone_bound(v)) for v in vals], "long").select(
+        F.timestamp_micros(F.col("m")).cast(ddl).alias("__p2s_probe")
+    )
 
 
 def prune_by_range(df: DataFrame, column: str, lo=None, hi=None) -> DataFrame:
     """Zone-map chunk pruning for a decode of ``column`` restricted to
     [lo, hi] — ordinary Catalyst filters over stat columns."""
-    lo, hi = _zone_bound(lo), _zone_bound(hi)
-    out = df
+    keep = _zone_keep(column, lo, hi)
+    return df if keep is None else df.filter(keep)
+
+
+def _zone_keep(column: str, lo=None, hi=None):
+    """The ``prune_by_range`` test as one Column (None: no bound): true
+    for every chunk row of another column, and for a ``column`` row whose
+    zone map may meet [lo, hi]."""
+    # a boolean chunk's zone map holds 0/1 in the int stats
+    lo, hi = (int(v) if isinstance(v, bool) else v for v in (_zone_bound(lo), _zone_bound(hi)))
     # Chunks with missing zone-map stats must be KEPT (pruning is only
     # sound when the stat proves disjointness) — same polarity as the
     # page-level prune. Float columns store no num stats, so without the
     # isNull() branch a float key_range would silently prune everything.
+    tests = []
     if isinstance(lo, (bytes, str)) or isinstance(hi, (bytes, str)):
         if lo is not None:
-            out = out.filter(
-                (F.col("column") != column) | F.col("max_bin").isNull() | (F.col("max_bin") >= F.lit(lo))
-            )
+            tests.append(F.col("max_bin").isNull() | (F.col("max_bin") >= F.lit(lo)))
         if hi is not None:
-            out = out.filter(
-                (F.col("column") != column) | F.col("min_bin").isNull() | (F.col("min_bin") <= F.lit(hi))
-            )
+            tests.append(F.col("min_bin").isNull() | (F.col("min_bin") <= F.lit(hi)))
     else:
         # numeric: consult the int zone map AND the float zone map
         # (coalesce: first stat that exists decides; neither → keep).
@@ -808,28 +819,27 @@ def prune_by_range(df: DataFrame, column: str, lo=None, hi=None) -> DataFrame:
             return F.coalesce(op(F.col(stat_num)), dbl, F.lit(True))
 
         if lo is not None:
-            out = out.filter(
-                (F.col("column") != column)
-                | _keep("max_num", "max_dbl", lambda c: c >= F.lit(lo))
-            )
+            tests.append(_keep("max_num", "max_dbl", lambda c: c >= F.lit(lo)))
         if hi is not None:
-            out = out.filter(
-                (F.col("column") != column)
-                | _keep("min_num", "min_dbl", lambda c: c <= F.lit(hi))
-            )
-    return out
+            tests.append(_keep("min_num", "min_dbl", lambda c: c <= F.lit(hi)))
+    if not tests:
+        return None
+    return (F.col("column") != column) | functools.reduce(operator.and_, tests)
 
 
 def check_integrity(
-    snapshot_dir: str, as_of: int | None = None, filesystem=None, since: int | None = None
+    snapshot_dir: str, as_of: int | None = None, filesystem=None, since: int | None = None,
+    _snaps: list | None = None,
 ) -> None:
     """Every commit marker must have its data file (a marker without its
     file means a torn snapshot — fail loudly instead of decoding a
-    silently-partial table)."""
+    silently-partial table). ``_snaps`` as in ``lineage``."""
     from . import table as table_mod
 
-    if table_mod.is_table(snapshot_dir, filesystem):
-        for _, sdir in table_mod.snapshot_dirs(snapshot_dir, as_of, filesystem, since):
+    if _snaps is not None or table_mod.is_table(snapshot_dir, filesystem):
+        if _snaps is None:
+            _snaps = table_mod.snapshot_dirs(snapshot_dir, as_of, filesystem, since)
+        for _, sdir in _snaps:
             check_integrity(sdir, filesystem=filesystem)
         return
     missing = snapshot.torn_parts(snapshot_dir, filesystem)
@@ -838,48 +848,6 @@ def check_integrity(
             f"snapshot {snapshot_dir} is torn: committed partitions missing "
             f"data files: {missing[:10]}{'...' if len(missing) > 10 else ''}"
         )
-
-
-def _lookup_survivors(
-    df: DataFrame, ranges: list, probes: dict, not_null=(), is_null=(), anchor=None
-) -> set[int]:
-    """Phase 1 of every predicate read: one pass over the predicate
-    columns' chunk rows of ``df`` (a chunks frame) collects the part ids
-    that may match. Each column of a ``(column, lo, hi)`` zone-map range
-    (``prune_by_range``), a ``{column: bloom test}`` probe or ``not_null``
-    needs a chunk row passing all its tests (``null_count < n_rows`` for
-    ``not_null``); an ``is_null`` column drops only partitions whose chunk
-    proves it null-free. A partition written before a column existed has
-    no chunk row for it: kept by ``is_null``, dropped by the rest. With no
-    positive test, the ``anchor`` column's rows (every partition has one)
-    enumerate the partitions."""
-    need = {c for c, _, _ in ranges} | set(probes) | set(not_null)
-    if need or not is_null:
-        anchor = None
-    keyed = df.filter(F.col("column").isin(sorted(need | set(is_null) | {anchor} - {None})))
-    for c, lo, hi in ranges:
-        keyed = prune_by_range(keyed, c, lo, hi)
-    for c, probe in probes.items():
-        keyed = keyed.filter((F.col("column") != c) | probe)
-    for c in not_null:
-        keyed = keyed.filter((F.col("column") != c) | (F.col("null_count") < F.col("n_rows")))
-    for c in sorted(set(is_null) - need - {anchor}):
-        # a column only is_null reads returns just its null-free proofs
-        keyed = keyed.filter((F.col("column") != c) | (F.col("null_count") == 0))
-    free = (F.col("column").isin(sorted(is_null)) & (F.col("null_count") == 0)).alias("free")
-    hits: dict[int, set] = {}
-    seen, dropped = set(), set()
-    for r in keyed.select("part_id", "column", *([free] if is_null else [])).collect():
-        pid, c = r[0], r[1]
-        if c in need:
-            hits.setdefault(pid, set()).add(c)
-        if c == anchor:
-            seen.add(pid)
-        if is_null and r[2]:
-            dropped.add(pid)
-    if need:
-        seen = {p for p, cs in hits.items() if cs == need}
-    return seen - dropped
 
 
 def decode(
@@ -901,12 +869,24 @@ def decode(
     """Reassemble original rows from a snapshot — or a multi-snapshot
     table dir (``as_of`` time-travels to that snapshot id).
 
-    Every predicate reads in two phases. (1) Prune: one Spark job over
-    the predicate columns' chunk rows (``_lookup_survivors``) collects the
-    part ids that may match. (2) Read: the scan lists only the survivors'
-    chunk files by path, so pruned files are never opened (no survivors: a
-    typed zero-row frame). The page index then skips pages inside them,
-    and residual row filters make every predicate exact.
+    Every read is one Spark job. A metadata scan of the chunk files
+    (no ``payload`` in its ReadSchema) prunes partitions with Catalyst
+    filters on the chunk zone maps and null counts, and streams the
+    surviving chunk rows straight into one ``mapInArrow`` decoder. Per
+    partition, the decoder finishes the survival test (every predicate
+    column present, the bloom probe, ``is_null``'s null-free proof),
+    reads only the survivors' chunk files itself, skips pages by the page
+    index, and decodes. Residual row filters make every predicate exact.
+
+    Two readers see ``snapshot_dir``: Spark's metadata scan, and pyarrow
+    (``fsio.resolve``, or the ``filesystem=`` object) for the manifest,
+    lineage and integrity check on the driver and for the chunk files in
+    the executors' Python. The path must name the same files for both,
+    and the filesystem must open them from the executors too: a
+    ``filesystem=`` object is pickled to them, and a URI's credentials
+    or native client (libhdfs) must be there. A URI that pyarrow cannot
+    open (a Hadoop-only scheme such as ``s3a://``) raises ``ValueError``
+    here, before any job.
 
     ``key_range=(column, lo, hi)`` (``key_ranges``: a list, AND-combined)
     keeps a partition whose chunk zone map may meet the range.
@@ -916,39 +896,54 @@ def decode(
 
     ``key_eq=(column, value)`` is the bloom-assisted point lookup (the
     reference's index-assisted read, SURVEY §3.3): the zone map prunes
-    the range ``[value, value]`` and ``plans.bloom.might_contain_col``
-    probes the stored split-block bloom (``EncodeConfig.bloom_columns``)
-    with the constant-folded ``xxhash64`` of the value, so pruning never
-    leaves the JVM. A null bloom keeps its partition.
+    the range ``[value, value]`` and the decoder probes the stored
+    split-block bloom (``EncodeConfig.bloom_columns``) with the value's
+    ``xxhash64``, hashed by the JVM function that hashed the column at
+    encode time over a local relation (no job, and a plan that does not
+    depend on the value). A null bloom keeps its partition.
 
     ``key_in=(column, values)`` is the batch lookup: the ``[min, max]``
-    envelope of the values, and a bloom that may hold ANY of their hashes
-    (a numpy probe in a pandas UDF); the residual keeps the listed values.
+    envelope of the values, and a bloom that may hold ANY of their
+    hashes; the residual keeps the listed values.
 
     The returned frame carries ``df.p2s_decode_metrics`` — a dict of
-    ``pages_read``/``pages_skipped`` SparkContext accumulators populated
-    once an action runs. Two caveats, by construction: (1) it is a plain
-    Python attribute on THIS DataFrame object — any further transform
-    (``select``/``filter``/``cache``) returns a new object without it, so
-    read it from the frame decode() returned; (2) accumulator updates are
-    not transactional across task retries/speculation, so the counts are
-    best-effort telemetry (may over-count under retry) — use them for
-    skip-evidence assertions and profiling, never for correctness.
+    ``pages_read``/``pages_skipped``/``parts_read`` SparkContext
+    accumulators populated once an action runs (``parts_read`` counts the
+    chunk files the decoder opened). Two caveats, by construction: (1) it
+    is a plain Python attribute on THIS DataFrame object — any further
+    transform (``select``/``filter``/``cache``) returns a new object
+    without it, so read it from the frame decode() returned; (2)
+    accumulator updates are not transactional across task
+    retries/speculation, so the counts are best-effort telemetry (may
+    over-count under retry) — use them for skip-evidence assertions and
+    profiling, never for correctness.
     """
-    # metadata plane (markers/sidecars) through pyarrow.fs; the data
-    # plane (chunks parquet) stays on Spark's own scan — pass a URI
-    # Spark's Hadoop FS understands for non-local snapshots
+    from . import table as table_mod
+
+    # metadata plane (manifest/markers/sidecars) and the decoder's chunk
+    # reads through pyarrow.fs; the metadata scan is Spark's own (see the
+    # docstring).
     # ``since=k`` (table dirs): incremental read of snapshots (k, as_of]
     # only — the CDC-style consumption a periodically-retrained pipeline
-    # uses; zero bytes of already-processed snapshots are touched
-    check_integrity(snapshot_dir, as_of, filesystem, since)
-    lin = lineage(snapshot_dir, as_of, filesystem, since)
-    if since is not None:
-        if "snapshots" not in lin:
-            raise ValueError("since= requires a multi-snapshot table dir")
-        if not lin["snapshots"]:
-            # empty window: schema comes from the full table, zero rows read
-            lin = lineage(snapshot_dir, as_of, filesystem)
+    # uses; zero bytes of already-processed snapshots are touched.
+    # The manifest is read once: the integrity check, the lineage and the
+    # scan see the same snapshots even if a commit or a compaction swaps
+    # the manifest in between.
+    every = snaps = None
+    if table_mod.is_table(snapshot_dir, filesystem):
+        every = table_mod.snapshot_dirs(snapshot_dir, as_of, filesystem)
+        snaps = [(sid, d) for sid, d in every if since is None or sid > since]
+        if not every:
+            raise FileNotFoundError(f"table {snapshot_dir} has no committed snapshots")
+    elif since is not None:
+        raise ValueError("since= requires a multi-snapshot table dir")
+    check_integrity(snapshot_dir, as_of, filesystem, since, _snaps=snaps)
+    # an empty since= window takes its schema from the whole table and
+    # reads zero rows
+    lin = lineage(snapshot_dir, as_of, filesystem, since, _snaps=snaps or every)
+    reads = (
+        [(None, snapshot_dir, None)] if snaps is None else [(sid, d, None) for sid, d in snaps]
+    )
     cols = columns or lin["columns"]
     schema_map = lin["schema"]
 
@@ -1008,14 +1003,14 @@ def decode(
         # plan into a single task at ~10^6 partitions): (1) per
         # part_id-GROUP row sums (groups of _RR_GROUP consecutive
         # ids — #parts/_RR_GROUP scalars to the driver), prefixed
-        # driver-side and re-broadcast; (2) a window PARTITIONED by
-        # group (parallel across groups) adds the within-group
-        # cumsum to its group's offset.
+        # driver-side and sent back as a map literal; (2) a window
+        # PARTITIONED by group (parallel across groups) adds the
+        # within-group cumsum to its group's offset.
         from pyspark.sql import Window
 
         first = lin["columns"][0]
         meta = (
-            chunks_df(spark, snapshot_dir, as_of, since, filesystem)
+            chunks_df(spark, snapshot_dir, _reads=reads)
             .filter(F.col("column") == first)
             .select("part_id", "n_rows")
             .withColumn("_grp", F.floor(F.col("part_id") / F.lit(_RR_GROUP)))
@@ -1033,15 +1028,17 @@ def decode(
             acc += rows_g
         row_spans = {}
         if offs:
-            off_df = spark.createDataFrame(offs, "`_grp` long, `_goff` long")
+            # the overlapping groups' offsets ride in the plan as one map
+            # literal (≤ ~256 entries): no broadcast, so no extra job
+            goff = F.create_map(*[F.lit(x) for g, o in offs for x in (g, o)])
             w = Window.partitionBy("_grp").orderBy("part_id").rowsBetween(
                 Window.unboundedPreceding, -1
             )
             surv = (
-                meta.join(F.broadcast(off_df), "_grp")
+                meta.filter(F.col("_grp").isin([g for g, _ in offs]))
                 .withColumn(
                     "base",
-                    F.col("_goff")
+                    F.element_at(goff, F.col("_grp"))
                     + F.coalesce(F.sum("n_rows").over(w), F.lit(0)),
                 )
                 .filter(
@@ -1079,69 +1076,27 @@ def decode(
         except TypeError:
             pass  # unorderable/mixed values — bloom + residual only
 
-    # bloom probes per lookup column: a chunk row whose bloom rules the
-    # value out is dropped; a null bloom (column or snapshot encoded
-    # without one) is kept
-    from ..plans import bloom as bloom_mod
-
-    probes = {}
+    # bloom probe hashes per lookup column: a partition survives if its
+    # bloom may hold one of each list's hashes; a null bloom (column or
+    # snapshot encoded without one) keeps it. Hashes are collected from
+    # local relations (no job); _typed_lit keeps datetime probes
+    # session-timezone-independent (UTC instants, like the stored data)
+    probes: dict[str, list] = {}
     if key_eq is not None:
-        # the value's hash, by the SAME JVM function that hashed the column
-        # at encode time, constant-folded into the probe expression;
-        # _typed_lit keeps datetime probes session-timezone-independent
-        # (UTC instants, like the stored data)
-        eq_hash = F.xxhash64(_typed_lit(key_eq[1], schema_map[key_eq[0]]))
-        probes[key_eq[0]] = bloom_mod.might_contain_col("bloom", "__p2s_eq_h")
+        eq_lit = _typed_lit(key_eq[1], schema_map[key_eq[0]])
+        probes[key_eq[0]] = [_hashes(_local(spark, [0], "int"), eq_lit)]
     if key_in is not None:
-        # IN-list point lookup: one bloom pass with ALL the probe hashes —
-        # a partition survives if ANY key might be present; the residual
-        # isin filter keeps the result exact. The batch-fetch path a
-        # training pipeline uses to pull N documents by id.
+        # IN-list point lookup: the batch-fetch path a training pipeline
+        # uses to pull N documents by id. The typed probe frame is
+        # reused by the residual semi-join below
         in_col, in_vals = key_in
-        # probe hashes via a typed probe FRAME (session-tz-independent for
-        # datetime/date values, and one bounded job for any list size —
-        # per-value literal columns would hit the codegen method limit);
-        # the frame is reused by the residual semi-join below
         in_probe_frame = _probe_frame(spark, list(in_vals), schema_map[in_col])
-        hv_rows = in_probe_frame.select(
-            F.xxhash64(F.col("__p2s_probe")).alias("h")
-        ).collect()
-        in_hashes = np.array([r["h"] for r in hv_rows], dtype=np.int64).view(np.uint64)
-
-        @F.pandas_udf("boolean")
-        def might_any(b: pd.Series) -> pd.Series:
-            return pd.Series(
-                [
-                    True if bs is None else bool(bloom_mod.might_contain(bs, in_hashes).any())
-                    for bs in b
-                ]
-            )
-
-        in_probe = might_any(F.col("bloom"))
-        probes[in_col] = in_probe if in_col not in probes else probes[in_col] & in_probe
-
-    # the snapshot list is read from the manifest once: the prune and
-    # the scan below see the same snapshots even if a commit or a
-    # compaction swaps the manifest in between
-    reads = _snapshot_reads(snapshot_dir, as_of, since, filesystem)
-    if row_spans is not None:
-        reads = _narrow_reads(reads, row_spans)
-    if (preds or probes or nn_cols or isnull_cols) and reads:
-        # the two-phase read; the anchor is the oldest snapshot's first column
-        keyed = chunks_df(spark, snapshot_dir, _per_snapshot_filter=_chunk_filter, _reads=reads)
-        if key_eq is not None:
-            keyed = keyed.withColumn("__p2s_eq_h", eq_hash)
-        survivors = _lookup_survivors(
-            keyed, preds, probes, nn_cols, isnull_cols, lin["columns"][0]
-        )
-        reads = _narrow_reads(reads, survivors)
-    df = chunks_df(spark, snapshot_dir, _per_snapshot_filter=_chunk_filter, _reads=reads)
+        probes.setdefault(in_col, []).append(_hashes(in_probe_frame, F.col("__p2s_probe")))
 
     need = sorted(
         set(cols)
         | {p[0] for p in preds}
-        | ({key_eq[0]} if key_eq is not None else set())
-        | ({key_in[0]} if key_in is not None else set())
+        | set(probes)
         | set(nn_cols)
         | set(isnull_cols)
     )
@@ -1151,10 +1106,33 @@ def decode(
         # column still produce their rows (as nulls) when only new
         # columns are projected
         need = sorted(set(need) | {lin["columns"][0]})
-    df = df.filter(F.col("column").isin(need)).select(
-        "part_id", "column", "payload", "page_mins", "page_maxs", "page_rows",
-        "bounds_order", "page_nulls",
+
+    # the metadata scan: chunk rows of the needed columns, pruned by the
+    # zone maps and null counts at the parquet scan. A predicate column's
+    # row that fails its test is dropped, and the decoder then drops the
+    # partition, which lacks that row. A partition written before a
+    # column existed has no row for it: dropped by a positive test on the
+    # column, kept by is_null.
+    if row_spans is not None:
+        # a single snapshot dir: list only the row interval's chunk files
+        reads = [(None, snapshot_dir, sorted(row_spans))] if row_spans else []
+    # one filter and one select: every DataFrame step re-analyzes the plan
+    keep = [F.col("column").isin(need)]
+    keep += [k for k in (_zone_keep(*p) for p in preds) if k is not None]
+    keep += [(F.col("column") != c) | (F.col("null_count") < F.col("n_rows")) for c in nn_cols]
+    fields = [F.col("part_id"), F.col("column")]
+    if isnull_cols:
+        fields.append(
+            (F.col("column").isin(isnull_cols) & (F.col("null_count") == 0)).alias("free")
+        )
+    if probes:
+        fields.append(F.when(F.col("column").isin(sorted(probes)), F.col("bloom")).alias("bloom"))
+    meta = (
+        chunks_df(spark, snapshot_dir, _per_snapshot_filter=_chunk_filter, _reads=reads)
+        .filter(functools.reduce(operator.and_, keep))
+        .select(*fields)
     )
+    positive = {p[0] for p in preds} | set(probes) | set(nn_cols)
 
     # the exact arrow types Spark expects back — Spark's Arrow exchange
     # carries TimestampType as tz-aware UTC regardless of
@@ -1165,11 +1143,10 @@ def decode(
     session_tz = "UTC"
     from ..schema import spark_type_to_pa
 
-    ddl_full = ", ".join(f"`{c}` {schema_map[c]}" for c in need)
-    stype = spark.createDataFrame([], ddl_full).schema
-    if field_sel:
-        from pyspark.sql import types as T
+    from pyspark.sql import types as T
 
+    stype = T.DataType.fromDDL(", ".join(f"`{c}` {schema_map[c]}" for c in need))
+    if field_sel:
         def _prune_struct(st: "T.StructType", sel: set) -> "T.StructType":
             have = {sf.name for sf in st.fields}
             missing = sel - have
@@ -1210,52 +1187,83 @@ def decode(
     out_schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in stype.fields)
     expected_pa = {f.name: spark_type_to_pa(f.dataType, ts_tz=session_tz) for f in stype.fields}
     # decode metrics (read back after an action via df.p2s_decode_metrics):
-    # pages decoded vs pages skipped by the page-level indexes — the
-    # observable evidence that pruning is physical, not just a row filter
+    # pages decoded vs pages skipped by the page-level indexes, and chunk
+    # files opened — the observable evidence that pruning is physical,
+    # not just a row filter
     acc_pages_read = spark.sparkContext.accumulator(0)
     acc_pages_skipped = spark.sparkContext.accumulator(0)
+    acc_parts_read = spark.sparkContext.accumulator(0)
+    from ..plans import bloom as bloom_mod
 
-    def rebuild(tbl: pa.Table) -> pa.Table:
+    dirs = {sid: sdir for sid, sdir, _ in reads}
+    shift = table_mod.SNAP_SHIFT
+    need_arr = pa.array(need, pa.string())
+
+    def survives(g: pa.Table) -> bool:
+        names = g.column("column").to_pylist()
+        if not positive <= set(names):
+            return False
+        if isnull_cols and any(g.column("free").to_pylist()):
+            return False
+        for c, bs in zip(names, g.column("bloom").to_pylist() if probes else ()):
+            if bs is not None and not all(
+                bloom_mod.might_contain(bs, h).any() for h in probes[c]
+            ):
+                return False
+        return True
+
+    def rebuild(ct: pa.Table, pid: int) -> pa.Table:
         # page zone maps and the null index skip whole pages inside
         # surviving chunks — the IndexedPageReader/select_pages analog
-        page_keep = _page_keep(tbl, preds, nn_cols, isnull_cols)
-        n_pages = len(json.loads(tbl.column("page_rows")[0].as_py()))
+        page_keep = _page_keep(ct, preds, nn_cols, isnull_cols)
+        n_pages = len(json.loads(ct.column("page_rows")[0].as_py()))
         kept = n_pages if page_keep is None else len(page_keep)
         acc_pages_read.add(kept)
         acc_pages_skipped.add(n_pages - kept)
 
-        span = None if row_spans is None else row_spans[int(tbl.column("part_id")[0].as_py())]
-        out = _decode_part(tbl, need, expected_pa, page_keep, field_sel, span)
+        span = None if row_spans is None else row_spans[pid]
+        out = _decode_part(ct, need, expected_pa, page_keep, field_sel, span)
         if out is None:  # all pages pruned → typed 0-row table
             return pa.table({c: pa.array([], type=expected_pa[c]) for c in need})
         return out
 
-    # EXCHANGE-FREE rebuild: every chunk file is one partition's rows
-    # and one parquet row group (writers emit ≤ ~30 rows/file), so a
-    # file can never split across scan tasks and a partition's chunk
-    # rows arrive CONTIGUOUS in the scan stream — partitions are pruned
-    # by listing only the survivors' files (no join reorders the stream)
-    # and part_id is constant per file. Splitting the stream at part_id
-    # boundaries therefore feeds rebuild() exactly the groups a
-    # groupBy(part_id) exchange would build, without shuffling the
-    # payload bytes at all (measured: the groupBy plan shuffled every
-    # surviving payload byte once and AQE then coalesced the
-    # tiny-by-bytes exchange to 1-3 tasks, serializing the decode UDF
-    # behind it). split_runs raises if that contiguity ever breaks,
-    # instead of decoding half a partition with its columns all-null.
+    # EXCHANGE-FREE decode: every chunk file is one partition's rows and
+    # one parquet row group, so a file never splits across scan tasks
+    # and a partition's metadata rows arrive CONTIGUOUS in the scan
+    # stream, with part_id constant per file. split_runs hands each
+    # partition's rows to survives() and raises if that contiguity ever
+    # breaks. A survivor's chunk file is read here, typed and projected
+    # to the page index and payload, so payload bytes never pass through
+    # the JVM and a pruned partition's payload is never read at all.
     def rebuild_runs(batches):
-        for tbl in snapshot.split_runs(batches, "part_id"):
-            yield from rebuild(tbl).to_batches()
+        import pyarrow.compute as pc
+
+        roots: dict = {}
+        for g in snapshot.split_runs(batches, "part_id"):
+            if not survives(g):
+                continue
+            pid = int(g.column("part_id")[0].as_py())
+            sid = None if None in dirs else pid >> shift
+            if sid not in roots:
+                roots[sid] = fsio.resolve(dirs[sid], filesystem)
+            fs, root = roots[sid]
+            local = pid if sid is None else pid - (sid << shift)
+            ct = snapshot.read_chunk_file(fs, snapshot.chunk_path(root, local), _PART_FIELDS)
+            acc_parts_read.add(1)
+            ct = ct.filter(pc.is_in(ct.column("column"), value_set=need_arr))
+            yield from rebuild(ct, pid).to_batches()
 
     import datetime as _dt
-    import operator
 
-    out = df.mapInArrow(rebuild_runs, out_schema)
-    # the key column rides along for pruning; drop it unless requested.
+    out = meta.mapInArrow(rebuild_runs, out_schema)
+    # residual row filters, as one filter: zone maps prune at chunk/page
+    # granularity, these make every predicate exact. The key column rides
+    # along for pruning; the final select drops it unless requested.
     # Residual equality filters go through _typed_lit for the same
-    # session-tz reason as the bloom probes above.
+    # session-tz reason as the bloom probe hashes above.
+    exact = []
     if key_eq is not None:
-        out = out.filter(F.col(key_eq[0]) == _typed_lit(key_eq[1], schema_map[key_eq[0]]))
+        exact.append(F.col(key_eq[0]) == _typed_lit(key_eq[1], schema_map[key_eq[0]]))
     if key_in is not None:
         in_col, in_vals = key_in
         in_ddl = schema_map[in_col]
@@ -1263,7 +1271,7 @@ def decode(
             isinstance(v, (_dt.date, _dt.datetime)) for v in in_vals
         ):
             # residual via broadcast semi-join on the SAME typed probe
-            # frame the bloom pass hashed — session-tz-safe like
+            # frame the bloom probe hashed — session-tz-safe like
             # _typed_lit, O(1) expression depth (an N-deep Or tree of
             # typed literals fails codegen for large batch-fetch lists),
             # and unit-correct for epoch-int probes (isin would read an
@@ -1273,10 +1281,8 @@ def decode(
                 F.broadcast(pf), out[in_col] == pf["__p2s_probe"], "left_semi"
             )
         else:
-            out = out.filter(F.col(in_col).isin(list(in_vals)))
+            exact.append(F.col(in_col).isin(list(in_vals)))
     for pcol, lo, hi in preds:
-        # residual row filters: zone maps prune at chunk/page granularity,
-        # these make every range exact (not a page-aligned superset).
         # Datetimes/dates, and ints against temporal columns (epoch
         # micros/days, the zone-map units), take the session-tz-safe typed
         # literal; any other value stays a plain literal, so a float bound
@@ -1289,16 +1295,18 @@ def decode(
             typed = isinstance(v, (_dt.date, _dt.datetime)) or (
                 temporal and isinstance(v, int) and not isinstance(v, bool)
             )
-            out = out.filter(cmp(F.col(pcol), _typed_lit(v, ddl) if typed else F.lit(v)))
-    for c in nn_cols:
-        out = out.filter(F.col(c).isNotNull())
-    for c in isnull_cols:
-        out = out.filter(F.col(c).isNull())
+            exact.append(cmp(F.col(pcol), _typed_lit(v, ddl) if typed else F.lit(v)))
+    exact += [F.col(c).isNotNull() for c in nn_cols]
+    exact += [F.col(c).isNull() for c in isnull_cols]
+    if exact:
+        out = out.filter(functools.reduce(operator.and_, exact))
     out = out.select(*cols)
     # decode metrics ride on the result (read after an action):
-    # {"pages_read": acc, "pages_skipped": acc} — accumulator .value
+    # {"pages_read": acc, "pages_skipped": acc, "parts_read": acc} —
+    # accumulator .value
     out.p2s_decode_metrics = {
         "pages_read": acc_pages_read,
         "pages_skipped": acc_pages_skipped,
+        "parts_read": acc_parts_read,
     }
     return out

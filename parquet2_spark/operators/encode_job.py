@@ -741,8 +741,10 @@ def finalize(
         # path, so prune to the metric columns (parquet columnar —
         # payload bytes are never read) and reduce through pyarrow
         n_committed = len(chunk_files)
-        tbl = snapshot.read_chunk_file(
-            fs, chunks_dir, ["column", "codecs", "raw_bytes", "enc_bytes", "n_rows"]
+        stat_cols = ["column", "codecs", "raw_bytes", "enc_bytes", "n_rows"]
+        tbl = pa.concat_tables(
+            snapshot.read_chunk_file(fs, fsio.join(chunks_dir, f), stat_cols)
+            for f in chunk_files
         )
         g = tbl.group_by("column").aggregate(
             [

@@ -53,6 +53,7 @@ import time
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -172,9 +173,30 @@ def chunk_frame(spark, paths: list[str]) -> DataFrame:
 
 
 def read_chunk_file(fs, path: str, columns: list[str] | None = None) -> pa.Table:
-    """A chunk file (or a ``chunks/`` dir) read through pyarrow, typed
-    by ``CHUNK_PA_SCHEMA``: a field the file lacks reads as null."""
-    return pq.read_table(path, filesystem=fs, columns=columns, schema=CHUNK_PA_SCHEMA)
+    """A chunk file read through pyarrow, typed by ``CHUNK_PA_SCHEMA``:
+    a field the file lacks reads as null.
+
+    The file is read by ``pq.ParquetFile`` on the calling thread. The
+    dataset reader behind ``pq.read_table`` would cost every fresh
+    Python worker about 0.26 CPU-s to import, and a thread pool, to read
+    what is one row group."""
+    fs = fs or pafs.LocalFileSystem()
+    want = CHUNK_PA_SCHEMA if columns is None else pa.schema(
+        [CHUNK_PA_SCHEMA.field(c) for c in columns]
+    )
+    with fs.open_input_file(path) as f:
+        pf = pq.ParquetFile(f)
+        have = set(pf.schema_arrow.names)
+        t = pf.read(columns=[c for c in want.names if c in have], use_threads=False)
+        n = pf.metadata.num_rows
+    return pa.table(
+        [
+            t.column(fld.name).cast(fld.type) if fld.name in have
+            else pa.nulls(n, fld.type)
+            for fld in want
+        ],
+        schema=want,
+    )
 
 
 def _marker_ids(fs, root: str) -> list[int]:

@@ -65,31 +65,3 @@ def might_contain(bitset: bytes, hashes: np.ndarray) -> np.ndarray:
     masks = _masks(h)
     got = words[bi]  # (n, 8)
     return ((got & masks) == masks).all(axis=1)
-
-
-def might_contain_col(bloom: str, h: str):
-    """``might_contain`` as a Catalyst expression: ``bloom`` names a
-    binary bitset column, ``h`` a long hash column (``F.xxhash64``
-    output, read as its uint64 bits); both are SQL expressions. A null
-    bloom is kept. Spark's longs are signed and overflow raises under
-    ANSI, so the uint64/uint32 arithmetic is rebuilt from non-negative
-    pieces: the block index multiplies the upper 32 hash bits by the
-    block count (< 2^26 for any binary value), and each salt product is
-    split into 16-bit halves so no product exceeds 2^48. Bit ``s`` of a
-    little-endian word lives in byte ``s >> 3``, so each salt reads one
-    byte, never a whole word. The probe is one SQL string, so building
-    it is one call into the JVM."""
-    from pyspark.sql import functions as F
-
-    # 32-byte blocks; the block index is (h >> 32) * n_blocks >> 32
-    block = f"shiftrightunsigned(shiftrightunsigned({h}, 32) * shiftright(length({bloom}), 5), 32)"
-    lo16 = f"({h} & 65535)"
-    hi16 = f"(shiftrightunsigned({h}, 16) & 65535)"
-    terms = []
-    for w, salt in enumerate(SALT.tolist()):
-        # (h32 * salt) mod 2^32 >> 27 — the bit index within word w
-        bit = f"shiftright(({lo16} * {salt} + shiftleft(({hi16} * {salt}) & 65535, 16)) & 4294967295, 27)"
-        pos = f"CAST({block} * 32 + {w * 4} + shiftright({bit}, 3) + 1 AS INT)"
-        byte = f"CAST(conv(hex(substr({bloom}, {pos}, 1)), 16, 10) AS BIGINT)"
-        terms.append(f"getbit({byte}, CAST(({bit}) & 7 AS INT)) = 1")
-    return F.expr(f"{bloom} IS NULL OR ({' AND '.join(terms)})")

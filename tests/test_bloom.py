@@ -2,9 +2,15 @@
 
 from __future__ import annotations
 
+import datetime as dt
+from decimal import Decimal
+
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
+from parquet2_spark.operators import decode_job
+from parquet2_spark.operators.encode_job import EncodeConfig, encode
 from parquet2_spark.plans import bloom
 
 RNG = np.random.default_rng(11)
@@ -67,46 +73,82 @@ def test_bloom_build_tree_merge_matches_flat(spark):
     assert got["k17"] is True
 
 
-def test_catalyst_probe_matches_numpy(spark):
-    """``might_contain_col`` (the JVM-side probe behind key_eq) agrees
-    with the numpy ``might_contain`` on random blooms from one block to
-    thousands, at three fpp settings, for member hashes, random
-    non-members and the int64 edge values — under ANSI arithmetic, where
-    any long overflow in the probe would raise instead of wrapping."""
-    rng = np.random.default_rng(20261017)
-    edges = np.array([0, -1, -(1 << 63), (1 << 63) - 1, 1, -2], dtype=np.int64)
-    blooms, probes = [], []
-    cases = [(ndv, fpp, None) for ndv in (1, 40, 2500, 60000) for fpp in (0.01, 0.1, 0.3)]
-    cases += [(30, 0.01, 1), (300, 0.01, 5000)]  # explicit block counts
-    for case, (ndv, fpp, n_blocks) in enumerate(cases):
-        keys = rng.integers(-(1 << 63), (1 << 63) - 1, size=ndv, dtype=np.int64, endpoint=True)
-        if case % 2:
-            keys = np.concatenate([keys, edges[:3]])  # edge values as members
-        bits = bloom.build(keys.view(np.uint64), n_blocks=n_blocks, fpp=fpp)
-        others = rng.integers(-(1 << 63), (1 << 63) - 1, size=300, dtype=np.int64, endpoint=True)
-        h = np.concatenate([rng.choice(keys, size=min(len(keys), 200), replace=False),
-                            others, edges])
-        want = bloom.might_contain(bits, h.view(np.uint64))
-        blooms.append((case, bits))
-        probes += [(case, int(x), bool(w)) for x, w in zip(h, want)]
-    # a null bloom keeps every probe
-    blooms.append((-1, None))
-    probes += [(-1, int(x), True) for x in edges]
+# (ddl, encode-side values, probe values): a probe value means what the
+# engine's lookups take it to mean — naive datetimes are UTC instants,
+# and the encode side holds those instants as tz-aware values
+_UTC = dt.timezone.utc
+PROBE_TYPES = [
+    ("string", ["a", "", "ünïcödé"], None),
+    ("binary", [b"\x00\xff", b"", b"abc"], None),
+    ("int", [0, -5, 2**31 - 1], None),
+    ("bigint", [0, -1, 2**62], None),
+    ("double", [0.0, -0.0, float("nan"), 1.5, -2.25e300], None),
+    ("decimal(12,2)", [Decimal("1.50"), Decimal("-3.25"), Decimal("9999999999.99")], None),
+    ("boolean", [True, False], None),
+    ("date", [dt.date(2020, 1, 1), dt.date(1969, 12, 31)], None),
+    (
+        "timestamp",
+        [dt.datetime(2020, 3, 8, 7, 30, tzinfo=_UTC), dt.datetime(1969, 12, 31, 23, 59, 59, 999999, tzinfo=_UTC)],
+        [dt.datetime(2020, 3, 8, 7, 30), dt.datetime(1969, 12, 31, 23, 59, 59, 999999)],
+    ),
+    ("timestamp_ntz", [dt.datetime(2020, 3, 8, 2, 30), dt.datetime(1999, 1, 1, 0, 0, 0, 1)], None),
+]
 
-    prev = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
+
+@pytest.fixture
+def new_york(spark):
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    yield
+    spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def _u64(xs) -> list[int]:
+    return np.array(list(xs), dtype=np.int64).view(np.uint64).tolist()
+
+
+@pytest.mark.parametrize("ddl,stored,probe", PROBE_TYPES, ids=[t[0] for t in PROBE_TYPES])
+def test_probe_hash_matches_stored_hash(spark, new_york, ddl, stored, probe):
+    """decode's probe hashes (key_eq: a typed literal, key_in: the typed
+    probe frame, both over local relations) equal the encode-side
+    ``F.xxhash64`` of the column holding the same values, and hashing
+    starts no Spark job."""
+    probe = stored if probe is None else probe
+    col = spark.createDataFrame([(v,) for v in stored], f"x {ddl}")
+    want = _u64(r[0] for r in col.select(F.xxhash64("x")).collect())
+    sc = spark.sparkContext
+    group = f"p2s-probe-hash-{ddl}"
+    sc.setJobGroup(group, "probe hashes")
     try:
-        b = spark.createDataFrame(blooms, "case int, bloom binary")
-        p = spark.createDataFrame(probes, "case int, h long, want boolean")
-        got = (
-            p.join(F.broadcast(b), "case")
-            .select("want", bloom.might_contain_col("bloom", "h").alias("got"))
-            .groupBy("want", "got").count().collect()
-        )
+        one = decode_job._local(spark, [0], "int")
+        eq = [int(decode_job._hashes(one, decode_job._typed_lit(v, ddl))[0]) for v in probe]
+        frame = decode_job._probe_frame(spark, probe, ddl)
+        inn = decode_job._hashes(frame, F.col("__p2s_probe")).tolist()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     finally:
-        spark.conf.set("spark.sql.ansi.enabled", prev)
-    counts = {(r["want"], r["got"]): r["count"] for r in got}
-    assert sum(counts.values()) == len(probes)
-    assert counts.get((True, False), 0) == 0 and counts.get((False, True), 0) == 0, counts
-    # both outcomes are exercised: members and some definite misses
-    assert counts.get((True, True), 0) > 0 and counts.get((False, False), 0) > 0
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert eq == want
+    assert inn == want
+
+
+def test_lookups_find_rows_of_every_probe_type(spark, new_york, tmp_path):
+    """key_eq and key_in on a bloom column of each type find their rows."""
+    n = 40
+    ddl = ", ".join(f"`c{i}` {t[0]}" for i, t in enumerate(PROBE_TYPES))
+    vals = [[t[1][r % len(t[1])] for t in PROBE_TYPES] for r in range(n)]
+    rows = [tuple([r] + v) for r, v in enumerate(vals)]
+    df = spark.createDataFrame(rows, f"id bigint, {ddl}")
+    cols = tuple(f"c{i}" for i in range(len(PROBE_TYPES)))
+    snap = str(tmp_path / "snap")
+    encode(spark, df, snap, EncodeConfig(shuffle=False, sort_by=None, page_rows=8, bloom_columns=cols))
+    for i, (ddl_i, stored, probe) in enumerate(PROBE_TYPES):
+        probe = stored if probe is None else probe
+        ks = [0, len(stored) - 1]
+        for k in ks:
+            got = sorted(r["id"] for r in decode_job.decode(
+                spark, snap, columns=["id"], key_eq=(f"c{i}", probe[k])).collect())
+            assert got == [r for r in range(n) if vals[r][i] == stored[k]], (ddl_i, k)
+        got = sorted(r["id"] for r in decode_job.decode(
+            spark, snap, columns=["id"], key_in=(f"c{i}", [probe[k] for k in ks])).collect())
+        assert got == [r for r in range(n) if any(vals[r][i] == stored[k] for k in ks)], ddl_i

@@ -147,3 +147,39 @@ def test_worker_imports_files_added_mid_session(spark, tmp_path):
     _write_zip(zp, {"p2s_added_zip": "VALUE = 'zip'\n"})
     sc.addPyFile(str(zp))
     assert set(probe("p2s_added_zip")) == {("parquet2_spark.daemon", "__main__", "zip")}
+
+
+def test_preload_skips_a_missing_module_and_freezes(monkeypatch):
+    """``preload`` imports what it can and freezes the heap it leaves."""
+    import gc
+
+    monkeypatch.setattr(daemon, "PRELOAD", ("p2s_no_such_module", "json"))
+    try:
+        daemon.preload()
+        assert gc.get_freeze_count() > 0
+        assert "p2s_no_such_module" not in sys.modules
+    finally:
+        gc.unfreeze()
+
+
+def test_workers_inherit_a_frozen_preloaded_heap(spark):
+    """A worker finds the preloaded modules imported and the daemon's
+    heap frozen: its per-task ``gc.collect()`` scans only the objects the
+    worker made, fewer than the frozen ones."""
+    preload = daemon.PRELOAD
+
+    def run(_):
+        import gc
+        import sys
+
+        gc.collect()
+        return (
+            all(m in sys.modules for m in preload),
+            gc.get_freeze_count(),
+            len(gc.get_objects()),
+        )
+
+    got = spark.sparkContext.parallelize(range(4), 4).map(run).collect()
+    for imported, frozen, tracked in got:
+        assert imported
+        assert frozen > tracked

@@ -1,7 +1,8 @@
-"""Point lookups prune in one pass, then scan only the surviving chunk
-files: ``decode(key_eq=…)`` / ``decode(key_in=…)`` list exactly the files
+"""Every predicate read is one pass that opens only the surviving chunk
+files: ``decode(key_eq=…)`` / ``decode(key_in=…)`` read exactly the files
 whose key chunk passes the zone map and the bloom probe, computed here
-independently from the chunk parquet with pyarrow and the numpy bloom."""
+independently from the chunk parquet with pyarrow and the numpy bloom,
+and counted by the decoder's ``parts_read`` accumulator."""
 
 from __future__ import annotations
 
@@ -9,14 +10,15 @@ import contextlib
 import io
 import json
 import os
-from urllib.parse import urlparse
+import re
 
 import numpy as np
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from parquet2_spark.operators import decode_job, snapshot, table
+from parquet2_spark.operators import decode_job, table
 from parquet2_spark.operators.encode_job import EncodeConfig, encode
 from parquet2_spark.plans import bloom
 from parquet2_spark.sources import webgen
@@ -70,8 +72,10 @@ def _survivors(snap_dir: str, col: str, lo=None, hi=None, hashes=None, test=None
     return out
 
 
-def _files(df) -> set[str]:
-    return {os.path.realpath(urlparse(f).path) for f in df.inputFiles()}
+def _read(df) -> tuple[list, int]:
+    """A decode frame's rows, and the chunk files its decoder opened."""
+    rows = df.collect()
+    return rows, df.p2s_decode_metrics["parts_read"].value
 
 
 def _explain(df) -> str:
@@ -98,9 +102,8 @@ def test_key_eq_hit_lists_only_survivors(spark, snap, urls):
     want = _survivors(snap, "url", hit, hit, _hashes(spark, [hit]))
     n_files = len(os.listdir(os.path.join(snap, "chunks")))
     assert want and len(want) < n_files
-    df = decode_job.decode(spark, snap, key_eq=("url", hit))
-    assert _files(df) == want
-    rows = df.collect()
+    rows, parts = _read(decode_job.decode(spark, snap, key_eq=("url", hit)))
+    assert parts == len(want)
     assert [r["url"] for r in rows] == [hit]
 
 
@@ -114,17 +117,16 @@ def test_key_eq_miss_lists_no_files_and_stays_typed(spark, snap, urls):
     else:
         pytest.fail("no probe value is ruled out by every bloom")
     df = decode_job.decode(spark, snap, key_eq=("url", miss))
-    assert df.inputFiles() == []
-    assert df.collect() == []
+    assert _read(df) == ([], 0)
     assert df.schema == decode_job.decode(spark, snap).schema
 
 
 def test_key_in_lists_only_survivors(spark, snap, urls):
     vals = [urls[5], urls[2100], urls[3999], "https://absent.example/x"]
     want = _survivors(snap, "url", min(vals), max(vals), _hashes(spark, vals))
-    df = decode_job.decode(spark, snap, key_in=("url", vals))
-    assert _files(df) == want
-    assert sorted(r["url"] for r in df.collect()) == sorted(vals[:3])
+    rows, parts = _read(decode_job.decode(spark, snap, key_in=("url", vals)))
+    assert parts == len(want)
+    assert sorted(r["url"] for r in rows) == sorted(vals[:3])
 
 
 def test_key_eq_plan_has_no_python_eval(spark, snap, urls):
@@ -179,33 +181,33 @@ def test_table_key_eq_as_of_keeps_null_bloom_partitions(spark, lookup_table):
     hit = urls[2000]  # lives in snapshot 2, which has no blooms
     want = _table_survivors(spark, sdirs, [1, 2], [hit])
     assert any(p.startswith(os.path.realpath(sdirs[2])) for p in want)
-    df = decode_job.decode(spark, tdir, key_eq=("url", hit), as_of=2)
-    assert _files(df) == want
-    assert [r["url"] for r in df.collect()] == [hit]
+    rows, parts = _read(decode_job.decode(spark, tdir, key_eq=("url", hit), as_of=2))
+    assert parts == len(want)
+    assert [r["url"] for r in rows] == [hit]
 
 
 def test_table_key_eq_since(spark, lookup_table):
     tdir, sdirs, urls = lookup_table
     hit = urls[4000]
     want = _table_survivors(spark, sdirs, [2, 3], [hit])
-    df = decode_job.decode(spark, tdir, key_eq=("url", hit), since=1)
-    assert _files(df) == want
-    assert [r["url"] for r in df.collect()] == [hit]
+    rows, parts = _read(decode_job.decode(spark, tdir, key_eq=("url", hit), since=1))
+    assert parts == len(want)
+    assert [r["url"] for r in rows] == [hit]
     # a value from snapshot 1 is outside the window: no snapshot-1 file
-    # is listed and no row comes back
+    # is read and no row comes back
     old = urls[10]
-    df = decode_job.decode(spark, tdir, key_eq=("url", old), since=1)
-    assert _files(df) == _table_survivors(spark, sdirs, [2, 3], [old])
-    assert df.collect() == []
+    rows, parts = _read(decode_job.decode(spark, tdir, key_eq=("url", old), since=1))
+    assert parts == len(_table_survivors(spark, sdirs, [2, 3], [old]))
+    assert rows == []
 
 
 def test_table_key_in_as_of(spark, lookup_table):
     tdir, sdirs, urls = lookup_table
     vals = [urls[3], urls[1600], urls[4400]]  # the last is past as_of=2
     want = _table_survivors(spark, sdirs, [1, 2], vals)
-    df = decode_job.decode(spark, tdir, key_in=("url", vals), as_of=2)
-    assert _files(df) == want
-    assert sorted(r["url"] for r in df.collect()) == sorted(vals[:2])
+    rows, parts = _read(decode_job.decode(spark, tdir, key_in=("url", vals), as_of=2))
+    assert parts == len(want)
+    assert sorted(r["url"] for r in rows) == sorted(vals[:2])
 
 
 @pytest.mark.parametrize(
@@ -234,54 +236,74 @@ def test_unknown_predicate_column_fails_before_any_job(spark, snap, kwargs):
 
 
 def test_table_lookup_lists_snapshots_once(spark, lookup_table, monkeypatch):
-    """A manifest swap between the prune and the scan (a compaction
-    commits one new snapshot id) must not turn a hit into a miss: both
-    phases read the snapshot list resolved once."""
+    """A manifest swap while decode() builds its read (a compaction
+    commits one new snapshot id) must not turn a hit into a miss: the
+    integrity check, the lineage and the scan share the snapshot list
+    resolved once."""
     tdir, sdirs, urls = lookup_table
     hit = urls[3300]
-    real = decode_job._lookup_survivors
+    real = decode_job.check_integrity
 
-    def prune_then_swap(*args):
-        out = real(*args)
+    def check_then_swap(*args, **kwargs):
+        real(*args, **kwargs)
         monkeypatch.setattr(table, "snapshot_dirs", lambda *a, **k: [])
-        return out
+        monkeypatch.setattr(table, "read_manifest", lambda *a, **k: {"snapshots": []})
 
-    monkeypatch.setattr(decode_job, "_lookup_survivors", prune_then_swap)
+    monkeypatch.setattr(decode_job, "check_integrity", check_then_swap)
     df = decode_job.decode(spark, tdir, key_eq=("url", hit), as_of=3)
     assert [r["url"] for r in df.collect()] == [hit]
 
 
-def test_survivor_file_gone_between_phases_raises(spark, snap, urls, tmp_path, monkeypatch):
-    """A surviving chunk file deleted after the prune raises instead of
-    reading as zero rows."""
+@pytest.mark.parametrize(
+    "window", [{"as_of": 3}, {"as_of": 2, "since": 1}, {"since": 3}],
+    ids=["as_of", "since", "empty_since"],
+)
+def test_decode_reads_the_manifest_once(spark, lookup_table, monkeypatch, window):
+    tdir, sdirs, urls = lookup_table
+    calls = []
+    real = table.read_manifest
+
+    def counted(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(table, "read_manifest", counted)
+    df = decode_job.decode(spark, tdir, key_eq=("url", urls[1600]), **window)
+    assert len(calls) == 1
+    want = [] if window.get("since") == 3 else [urls[1600]]
+    assert [r["url"] for r in df.collect()] == want
+    assert len(calls) == 1
+
+
+def test_survivor_file_gone_between_phases_raises(spark, snap, urls, tmp_path):
+    """A surviving chunk file deleted after decode() returns its frame
+    raises at collect instead of reading as zero rows."""
     import shutil
 
     d = str(tmp_path / "snap")
     shutil.copytree(snap, d)
-    real = decode_job._lookup_survivors
-
-    def prune_then_delete(*args):
-        out = real(*args)
-        for pid in out:
-            os.remove(snapshot.chunk_path(d, pid))
-        return out
-
-    monkeypatch.setattr(decode_job, "_lookup_survivors", prune_then_delete)
-    with pytest.raises(Exception, match="PATH_NOT_FOUND|does not exist"):
-        decode_job.decode(spark, d, key_eq=("url", urls[1234])).collect()
+    hit = urls[1234]
+    df = decode_job.decode(spark, d, key_eq=("url", hit))
+    gone = _survivors(d, "url", hit, hit, _hashes(spark, [hit]))
+    assert gone
+    for path in gone:
+        os.remove(path)
+    with pytest.raises(Exception, match="PATH_NOT_FOUND|FILE_NOT_EXIST|does not exist"):
+        df.collect()
 
 
 def test_key_in_with_row_range_reads_the_intersection(spark, snap, urls):
-    window = decode_job.decode(spark, snap, row_range=(600, 2100))
-    inside = {r["url"] for r in window.collect()}
+    rows, window_parts = _read(decode_job.decode(spark, snap, row_range=(600, 2100)))
+    inside = {r["url"] for r in rows}
     vals = sorted(inside)[:2] + [u for u in urls if u not in inside][:2]
     df = decode_job.decode(spark, snap, row_range=(600, 2100), key_in=("url", vals))
-    assert _files(df) <= _files(window)
-    assert sorted(r["url"] for r in df.collect()) == sorted(vals[:2])
+    rows, parts = _read(df)
+    assert 1 <= parts <= window_parts
+    assert sorted(r["url"] for r in rows) == sorted(vals[:2])
 
 
-# Range and null predicates read in the same two phases: the exact file
-# set on snapshots laid out by range, where zone maps rule partitions out.
+# Range and null predicates read in the same one pass: the exact file
+# count on snapshots laid out by range, where zone maps rule partitions out.
 
 LAID = 4096
 
@@ -331,9 +353,9 @@ def test_key_range_url_lists_only_survivors(spark, url_snap, src, as_bytes):
     assert want and len(want) < len(_all_files(url_snap))
     if as_bytes:
         lo, hi = lo.encode(), hi.encode()
-    df = decode_job.decode(spark, url_snap, key_range=("url", lo, hi))
-    assert _files(df) == want
-    assert sorted(r["url"] for r in df.collect()) == urls[1000:1016]
+    rows, parts = _read(decode_job.decode(spark, url_snap, key_range=("url", lo, hi)))
+    assert parts == len(want)
+    assert sorted(r["url"] for r in rows) == urls[1000:1016]
 
 
 @pytest.mark.parametrize("as_int", [False, True], ids=["datetime", "int_micros"])
@@ -343,9 +365,9 @@ def test_key_range_ts_lists_only_survivors(spark, ts_snap, src, as_int):
     want = _survivors(ts_snap, "warc_ts", t_lo, t_hi)
     assert want and len(want) < len(_all_files(ts_snap))
     lo, hi = (t_lo, t_hi) if as_int else (ts[2000].item(), ts[2300].item())
-    df = decode_job.decode(spark, ts_snap, key_range=("warc_ts", lo, hi))
-    assert _files(df) == want
-    assert len(df.collect()) == ((ts >= ts[2000]) & (ts <= ts[2300])).sum()
+    rows, parts = _read(decode_job.decode(spark, ts_snap, key_range=("warc_ts", lo, hi)))
+    assert parts == len(want)
+    assert len(rows) == ((ts >= ts[2000]) & (ts <= ts[2300])).sum()
 
 
 def test_key_ranges_list_the_intersection(spark, url_snap, src):
@@ -354,10 +376,10 @@ def test_key_ranges_list_the_intersection(spark, url_snap, src):
     t_lo = _micros(np.sort(pdf["warc_ts"].to_numpy())[2000])
     ranges = [("url", urls[500], urls[2500]), ("warc_ts", t_lo, None)]
     want = _survivors(url_snap, "url", urls[500], urls[2500]) & _survivors(url_snap, "warc_ts", t_lo)
-    df = decode_job.decode(spark, url_snap, key_ranges=ranges)
-    assert _files(df) == want
+    rows, parts = _read(decode_job.decode(spark, url_snap, key_ranges=ranges))
+    assert parts == len(want)
     sel = pdf.iloc[500:2501]
-    assert sorted(r["url"] for r in df.collect()) == sorted(
+    assert sorted(r["url"] for r in rows) == sorted(
         sel["url"][sel["warc_ts"].to_numpy().astype("datetime64[us]").astype(np.int64) >= t_lo]
     )
 
@@ -365,17 +387,16 @@ def test_key_ranges_list_the_intersection(spark, url_snap, src):
 def test_not_null_lists_only_partitions_with_values(spark, url_snap, src):
     want = _survivors(url_snap, "opt", test=lambda r: r["null_count"] < r["n_rows"])
     assert want and len(want) < len(_all_files(url_snap))
-    df = decode_job.decode(spark, url_snap, columns=["url"], not_null="opt")
-    assert _files(df) == want
-    assert sorted(r["url"] for r in df.collect()) == src[0]["url"].tolist()[1500:]
+    rows, parts = _read(decode_job.decode(spark, url_snap, columns=["url"], not_null="opt"))
+    assert parts == len(want)
+    assert sorted(r["url"] for r in rows) == src[0]["url"].tolist()[1500:]
 
 
 def test_is_null_drops_only_null_free_partitions(spark, url_snap, src):
     want = _all_files(url_snap) - _survivors(url_snap, "opt", test=lambda r: r["null_count"] == 0)
     assert want and len(want) < len(_all_files(url_snap))
-    df = decode_job.decode(spark, url_snap, columns=["url", "opt"], is_null="opt")
-    assert _files(df) == want
-    rows = df.collect()
+    rows, parts = _read(decode_job.decode(spark, url_snap, columns=["url", "opt"], is_null="opt"))
+    assert parts == len(want)
     assert sorted(r["url"] for r in rows) == src[0]["url"].tolist()[:1500]
     assert all(r["opt"] is None for r in rows)
 
@@ -389,11 +410,11 @@ def test_table_key_range_as_of_and_since(spark, lookup_table):
         window = set().union(*(_survivors(sdirs[sid], "url") for sid in sids))
         want = set().union(*(_survivors(sdirs[sid], "warc_ts", t_lo, t_hi) for sid in sids))
         assert want and want < window
-        df = decode_job.decode(spark, tdir, key_range=("warc_ts", t_lo, t_hi), **kw)
-        assert _files(df) == want
+        rows, parts = _read(decode_job.decode(spark, tdir, key_range=("warc_ts", t_lo, t_hi), **kw))
+        assert parts == len(want)
         lo_id = 0 if "as_of" in kw else 1500
         exp = [u for u, t in zip(urls[lo_id:lo_id + 3000], ts[lo_id:lo_id + 3000]) if t_lo <= t <= t_hi]
-        assert sorted(r["url"] for r in df.collect()) == sorted(exp)
+        assert sorted(r["url"] for r in rows) == sorted(exp)
 
 
 @pytest.fixture(scope="module")
@@ -422,9 +443,8 @@ def test_evolved_is_null_keeps_partitions_older_than_the_column(spark, evolved):
     old = _survivors(sdirs[1], "url")
     want = old | _survivors(sdirs[2], "extra", test=lambda r: r["null_count"] != 0)
     assert not want & _survivors(sdirs[3], "url")  # snapshot 3 is null-free
-    df = decode_job.decode(spark, tdir, columns=["url", "extra"], is_null="extra")
-    assert _files(df) == want
-    rows = df.collect()
+    rows, parts = _read(decode_job.decode(spark, tdir, columns=["url", "extra"], is_null="extra"))
+    assert parts == len(want)
     assert sorted(r["url"] for r in rows) == sorted(r["url"] for r in src if r["extra"] is None)
     assert {r["url"] for r in rows} >= set(_urls(0, 1000))
 
@@ -440,10 +460,10 @@ def test_evolved_positive_predicates_drop_older_partitions(spark, evolved, pred)
         kw = {"key_range": ("extra", 0, 50)}
         keep = lambda v: v is not None and v <= 50  # noqa: E731
         want = set().union(*(_survivors(sdirs[s], "extra", 0, 50) for s in (2, 3)))
-    df = decode_job.decode(spark, tdir, columns=["url", "extra"], **kw)
-    assert _files(df) == want
+    rows, parts = _read(decode_job.decode(spark, tdir, columns=["url", "extra"], **kw))
+    assert parts == len(want)
     assert not want & _survivors(sdirs[1], "url")
-    assert sorted(r["url"] for r in df.collect()) == sorted(r["url"] for r in src if keep(r["extra"]))
+    assert sorted(r["url"] for r in rows) == sorted(r["url"] for r in src if keep(r["extra"]))
 
 
 def _read_kwargs(src, kind: str) -> dict:
@@ -466,12 +486,12 @@ def test_range_and_null_decode_plans_have_no_join(spark, url_snap, src, kind):
 
 
 # Spark jobs started by decode(...) plus collect(), per predicate kind:
-# the phase-1 prune collect and the decode action (chunk reads are typed,
-# so no schema-inference job); key_in adds its probe-hash collect and
-# row_range the jobs of its prefix-sum pass
+# the one decode action (chunk reads are typed, so no schema-inference
+# job, and probe hashes come from local relations, so no hash job);
+# row_range adds the jobs of its prefix-sum pass
 JOBS_PER_READ = {
-    "full": 1, "key_eq": 2, "key_in": 3, "key_range": 2, "key_ranges": 2,
-    "not_null": 2, "is_null": 2, "row_range": 6,
+    "full": 1, "key_eq": 1, "key_in": 1, "key_range": 1, "key_ranges": 1,
+    "not_null": 1, "is_null": 1, "row_range": 5,
 }
 
 
@@ -529,3 +549,132 @@ def test_metadata_reads_start_no_inference_jobs(spark, lookup_table):
         },
     }
     assert got == {"stats": 6, "quantiles": 1, "plan1": 6, "plan2": 10, "plan3": 14}
+
+
+def _executions(spark) -> list:
+    """Executed SQL queries (works with the UI disabled)."""
+    xs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return [xs.apply(i) for i in range(xs.size())]
+
+
+@pytest.mark.parametrize("kind", sorted(JOBS_PER_READ))
+def test_no_decode_query_reads_payload(spark, url_snap, src, kind):
+    """The JVM never reads a payload: every query a read runs scans
+    metadata only, and the decoder reads the survivors' chunk files."""
+    before = {e.executionId() for e in _executions(spark)}
+    decode_job.decode(spark, url_snap, **_read_kwargs(src, kind)).collect()
+    plans = [e.physicalPlanDescription() for e in _executions(spark)
+             if e.executionId() not in before]
+    schemas = [m for p in plans for m in re.findall(r"ReadSchema: [^\n]*", p)]
+    assert schemas and not [m for m in schemas if "payload" in m]
+
+
+def _part_rows(snap_dir: str) -> list[tuple[str, int]]:
+    """(chunk file, rows) per partition, in part id order."""
+    return [(path, r["n_rows"]) for path, r in _key_rows(snap_dir, "url")]
+
+
+def _read_survivors(spark, snap_dir: str, src, kind: str) -> set[str]:
+    """The chunk files a read of ``kind`` must open, recomputed here."""
+    urls = src[0]["url"].tolist()
+    if kind == "full":
+        return _all_files(snap_dir)
+    if kind == "key_eq":
+        return _survivors(snap_dir, "url", urls[7], urls[7], _hashes(spark, [urls[7]]))
+    if kind == "key_in":
+        vals = urls[5:8]
+        return _survivors(snap_dir, "url", min(vals), max(vals), _hashes(spark, vals))
+    if kind == "key_range":
+        return _survivors(snap_dir, "url", urls[1000], urls[1015])
+    if kind == "key_ranges":
+        return _survivors(snap_dir, "url", urls[1000], urls[2000]) & _survivors(snap_dir, "opt", "a")
+    if kind == "not_null":
+        return _survivors(snap_dir, "opt", test=lambda r: r["null_count"] < r["n_rows"])
+    if kind == "is_null":
+        return _all_files(snap_dir) - _survivors(snap_dir, "opt", test=lambda r: r["null_count"] == 0)
+    base, out = 0, set()  # row_range (100, 300)
+    for path, n in _part_rows(snap_dir):
+        if base < 300 and base + n > 100:
+            out.add(path)
+        base += n
+    return out
+
+
+@pytest.mark.parametrize("kind", sorted(JOBS_PER_READ))
+def test_pruned_payloads_are_never_read(spark, url_snap, src, kind, tmp_path):
+    """Every chunk file a read prunes gets a garbage payload (its
+    metadata rows intact): decoding one would raise, yet every predicate
+    kind returns the rows of the intact snapshot and opens exactly the
+    survivors."""
+    import shutil
+
+    d = str(tmp_path / "snap")
+    shutil.copytree(url_snap, d)
+    keep = _read_survivors(spark, d, src, kind)
+    pruned = _all_files(d) - keep
+    assert keep and (pruned or kind == "full")
+    for path in pruned:
+        t = pq.read_table(path)
+        junk = pa.array([b"\x00garbage"] * t.num_rows, pa.binary())
+        t = t.set_column(t.schema.get_field_index("payload"), "payload", junk)
+        pq.write_table(t, path, compression="none")
+    kw = _read_kwargs(src, kind)
+    want = sorted(map(tuple, decode_job.decode(spark, url_snap, **kw).collect()))
+    rows, parts = _read(decode_job.decode(spark, d, **kw))
+    assert want and sorted(map(tuple, rows)) == want
+    assert parts == len(keep)
+
+
+def test_key_eq_compiles_no_code_after_warm_up(spark, url_snap, src):
+    """The read plan does not depend on the probed value: after one
+    warm-up lookup, lookups of five other values compile no new code."""
+    urls = src[0]["url"].tolist()
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    assert len(decode_job.decode(spark, url_snap, key_eq=("url", urls[3])).collect()) == 1
+    before = codegen.METRIC_COMPILATION_TIME().getCount()
+    for u in urls[500:3000:500]:
+        assert [r["url"] for r in decode_job.decode(spark, url_snap, key_eq=("url", u)).collect()] == [u]
+    assert codegen.METRIC_COMPILATION_TIME().getCount() == before
+
+
+
+@pytest.mark.parametrize("kind", ["full", "key_eq", "key_range"])
+def test_decoder_reads_through_the_given_filesystem(spark, url_snap, src, kind, tmp_path):
+    """A ``filesystem=`` object travels to the executors, and the decoder
+    opens the survivors' chunk files through it. Spark's metadata scan
+    reads a copy whose payloads are garbage; the filesystem sees an
+    intact copy at the same path, so a chunk read that bypassed it
+    would raise."""
+    import shutil
+
+    from pyarrow import fs as pafs
+
+    spark_dir = str(tmp_path / "snap")
+    shutil.copytree(url_snap, spark_dir)
+    for path in _all_files(spark_dir):
+        t = pq.read_table(path)
+        junk = pa.array([b"\x00garbage"] * t.num_rows, pa.binary())
+        t = t.set_column(t.schema.get_field_index("payload"), "payload", junk)
+        pq.write_table(t, path, compression="none")
+    base = str(tmp_path / "fs_view")
+    shutil.copytree(url_snap, base + spark_dir)
+    fs = pafs.SubTreeFileSystem(base, pafs.LocalFileSystem())
+    kw = _read_kwargs(src, kind)
+    want = sorted(map(tuple, decode_job.decode(spark, url_snap, **kw).collect()))
+    rows, parts = _read(decode_job.decode(spark, spark_dir, filesystem=fs, **kw))
+    assert want and sorted(map(tuple, rows)) == want
+    assert parts == len(_read_survivors(spark, url_snap, src, kind))
+
+
+def test_scheme_pyarrow_cannot_open_fails_at_decode(spark):
+    """A Hadoop-only URI fails when decode() is called, on the driver,
+    with a message naming ``filesystem=``; no job starts."""
+    sc = spark.sparkContext
+    sc.setJobGroup("p2s-s3a", "s3a")
+    try:
+        with pytest.raises(ValueError, match="filesystem="):
+            decode_job.decode(spark, "s3a://bucket/snap")
+        assert len(sc.statusTracker().getJobIdsForGroup("p2s-s3a")) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
