@@ -21,8 +21,6 @@ Blob layout: [uleb n_symbols][u8 len × n_symbols][symbol bytes]
 
 from __future__ import annotations
 
-from collections import Counter
-
 import numpy as np
 
 from .varint import uleb128_decode, uleb128_encode
@@ -84,50 +82,68 @@ def _token_entries(codes: np.ndarray, n_symbols: int) -> np.ndarray:
     return np.where(is_literal[token_pos], entries + 256, entries)
 
 
+def _entry_keys(table: SymbolTable) -> tuple[np.ndarray, np.ndarray]:
+    """(value, length) of every token entry (``_token_entries``
+    numbering): an entry's bytes packed big-endian into a zero-padded
+    uint64. Ordering by (value, length) is ordering by the bytes."""
+    val = np.zeros(512, dtype=np.uint64)
+    ln = np.zeros(512, dtype=np.int64)
+    for e, s in enumerate(table.symbols):
+        val[e] = int.from_bytes(s.ljust(8, b"\0"), "big")
+        ln[e] = len(s)
+    val[256:] = np.arange(256, dtype=np.uint64) << np.uint64(56)
+    ln[256:] = 1
+    return val, ln
+
+
 def train(sample: bytes, generations: int = GENERATIONS) -> SymbolTable:
     """Build a symbol table on a sample (paper §3.3 bottom-up style:
     iterate tokenize → count symbols & adjacent-pair concatenations →
-    keep top candidates by gain). Counting is vectorized: the sample is
-    encoded with the current table (C/numpy greedy), unique tokens and
-    unique adjacent pairs come from np.unique over the code stream, so
-    Python only ever loops over *distinct* candidates."""
+    keep top candidates by gain).
+
+    Each generation encodes the sample with the current table (C/numpy
+    greedy) and counts in numpy only: every candidate is a (big-endian
+    zero-padded uint64, length) pair, equal candidates from single tokens
+    and from pairs merge by ``lexsort`` + ``reduceat``, and the table is
+    the top ``MAX_SYMBOLS`` by (gain, bytes), largest first. Gain is the
+    bytes a symbol saves per occurrence: len-1 for a multi-byte symbol,
+    1 for a single byte (it avoids the escape byte)."""
     sample = sample[:DEFAULT_SAMPLE]
     table = SymbolTable([])
     if not sample:
         return table
     for _ in range(generations):
         payload = encode_with_table(sample, table)
-        codes = np.frombuffer(payload, dtype=np.uint8)
-        entries = _token_entries(codes, len(table.symbols))
-        lit_bytes = [bytes([b]) for b in range(256)]
-
-        def entry_bytes(e: int) -> bytes:
-            return table.symbols[e] if e < 256 else lit_bytes[e - 256]
-
-        counts: Counter[bytes] = Counter()
-        uniq, cnt = np.unique(entries, return_counts=True)
-        for e, c in zip(uniq.tolist(), cnt.tolist()):
-            counts[entry_bytes(e)] += c
+        entries = _token_entries(np.frombuffer(payload, dtype=np.uint8), len(table.symbols))
+        ent_val, ent_len = _entry_keys(table)
+        cnt = np.bincount(entries, minlength=512)
+        single = np.flatnonzero(cnt)
+        vals, lens, counts = [ent_val[single]], [ent_len[single]], [cnt[single]]
         if len(entries) > 1:
-            pair_keys = entries[:-1] * 1024 + entries[1:]
-            pu, pc_ = np.unique(pair_keys, return_counts=True)
-            # rare pairs can never earn a code slot — drop them before the
-            # python loop (diverse text has 10k+ singleton pairs)
-            keep = pc_ >= 4
-            for pk, c in zip(pu[keep].tolist(), pc_[keep].tolist()):
-                cat = entry_bytes(pk // 1024) + entry_bytes(pk % 1024)
-                if len(cat) <= MAX_SYMBOL_LEN:
-                    counts[cat] += c
-        # gain: bytes saved per occurrence (multi-byte symbol: len-1;
-        # single byte: avoids the escape byte: 1)
-        import heapq
-
-        scored = heapq.nlargest(
-            MAX_SYMBOLS,
-            counts.items(),
-            key=lambda kv: (kv[1] * (len(kv[0]) - 1) if len(kv[0]) > 1 else kv[1], kv[0]),
+            pair_cnt = np.bincount(entries[:-1] * 512 + entries[1:])
+            # rare pairs can never earn a code slot (diverse text has 10k+
+            # singleton pairs)
+            pk = np.flatnonzero(pair_cnt >= 4)
+            a, b = pk >> 9, pk & 511
+            la, lb = ent_len[a], ent_len[b]
+            fit = la + lb <= MAX_SYMBOL_LEN
+            a, b, la, lb, pk = a[fit], b[fit], la[fit], lb[fit], pk[fit]
+            vals.append(ent_val[a] | (ent_val[b] >> (np.uint64(8) * la.astype(np.uint64))))
+            lens.append(la + lb)
+            counts.append(pair_cnt[pk])
+        val, ln, c = np.concatenate(vals), np.concatenate(lens), np.concatenate(counts)
+        order = np.lexsort((ln, val))
+        val, ln, c = val[order], ln[order], c[order]
+        starts = np.flatnonzero(
+            np.concatenate(([True], (val[1:] != val[:-1]) | (ln[1:] != ln[:-1])))
         )
-        table = SymbolTable([s for s, _ in scored])
+        val, ln, c = val[starts], ln[starts], np.add.reduceat(c, starts)
+        gain = np.where(ln > 1, c * (ln - 1), c)
+        top = np.lexsort((ln, val, gain))[::-1][:MAX_SYMBOLS]
+        packed = val[top].astype(">u8").tobytes()
+        table = SymbolTable(
+            [packed[8 * i : 8 * i + k] for i, k in enumerate(ln[top].tolist())]
+        )
     return table
 
 

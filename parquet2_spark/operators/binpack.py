@@ -178,12 +178,13 @@ def binpack_compact(
             "marker"
         ),
     )
-    metrics_df = snapshot.copy_keepers(plan, snap_dir, cfg.filesystem)
+    job = snapshot.metrics_job()
+    metrics_df = snapshot.copy_keepers(plan, snap_dir, cfg.filesystem, job)
     # dtypes-only frame for lineage schema (never executed)
     full = decode_job.decode(spark, table_dir, filesystem=cfg.filesystem)
     lin = commit_metrics_action(
         spark, metrics_df, snap_dir, cfg, union_cols, full,
-        k + m_keep, t0, n_resumed=1,
+        k + m_keep, t0, 1, job,
     )
     lin["binpack_kept"] = m_keep
     return lin

@@ -16,11 +16,14 @@ reference src/write/file.rs:61-75). Spark specifics:
   first (tmp + atomic rename), then a slim commit marker (the resume
   ledger). A resumed job lists commit markers and encodes only missing
   partitions.
-- **Per-partition lineage**: per-chunk codec/size/wall metric rows
-  stream from the executors into the ``_metrics`` parquet sidecar (a
-  Spark write — the job's action); ``finalize`` reduces the chunk
-  parquet Spark-side to the O(#columns) ``_lineage.json`` summary.
-  Nothing O(#partitions) ever passes through the driver.
+- **Per-partition lineage**: each encode task writes its per-chunk
+  codec/size/wall metric rows to the ``_metrics`` parquet sidecar
+  itself, and the job's one action is a discard (``noop``) sink that
+  carries the lineage aggregates as observed metrics; ``finalize``
+  writes the O(#columns) ``_lineage.json`` summary. Nothing
+  O(#partitions) ever passes through the driver.
+- **One planning query**: the hot-host table and the exact row count
+  (an observed metric of the same scan) come from one collect.
 
 The snapshot layout and the chunk-then-marker commit live in
 ``operators/snapshot.py``.
@@ -29,9 +32,7 @@ The snapshot layout and the chunk-then-marker commit live in
 from __future__ import annotations
 
 import json
-import os
 import time
-import uuid
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -98,9 +99,10 @@ def _host_col(key: str):
 def plan_partitions(df: DataFrame, cfg: EncodeConfig) -> tuple[DataFrame, int]:
     """Assign a deterministic ``_part_id`` with salting for hot hosts.
 
-    Two light aggregation passes (host counts; total), both map-side
-    combinable — at 100 TB these reduce to one small shuffle each, and the
-    hot-host table is broadcast, never shuffled with the data.
+    One light aggregation query, map-side combinable — at 100 TB it
+    reduces to one small shuffle: the per-host counts, with the exact row
+    count observed on the same scan. The hot-host table is broadcast,
+    never shuffled with the data.
 
     ``cfg.shuffle=False`` keeps the input partitioning verbatim (zero
     extra passes): the caller already laid the data out — e.g.
@@ -120,14 +122,21 @@ def plan_partitions(df: DataFrame, cfg: EncodeConfig) -> tuple[DataFrame, int]:
         n_parts = df.rdd.getNumPartitions()
         return df.withColumn("_part_id", F.spark_partition_id().cast("long")), n_parts
 
+    from pyspark.sql import Observation
+
     host = _host_col(cfg.key) if cfg.host_from_key else F.col(cfg.key)
     with_host = df.withColumn("_host", host)
 
+    # the exact row count rides the planning scan as an observed metric,
+    # taken BEFORE the sample: n_parts must come from the exact count (a
+    # scaled sample count would move chunk boundaries)
+    seen = Observation()
+    observed = with_host.observe(seen, F.count(F.lit(1)).alias("rows"))
     # hot-host detection on a sample: at 100 TB a full per-host count is an
     # extra full scan; a seeded sample finds every host hot enough to need
     # salting (hot ⇒ frequent ⇒ sampled), scaled back up by 1/fraction
     frac = cfg.host_sample_fraction
-    sampled = with_host.sample(fraction=frac, seed=42) if frac < 1.0 else with_host
+    sampled = observed.sample(fraction=frac, seed=42) if frac < 1.0 else observed
     counts = sampled.groupBy("_host").count().withColumn(
         "count", (F.col("count") / F.lit(frac)).cast("long")
     )
@@ -135,22 +144,18 @@ def plan_partitions(df: DataFrame, cfg: EncodeConfig) -> tuple[DataFrame, int]:
         "_salt_k", F.ceil(F.col("count") / cfg.target_rows).cast("int")
     )
     hot_sel = hot.select("_host", "_salt_k")
-    # The two planning scans are independent — run them CONCURRENTLY
-    # from driver threads so the second is free wall-clock (guide §2.6),
-    # and materialize the hot-host table NOW: left lazy, the broadcast
+    # Materialize the hot-host table NOW: left lazy, the broadcast
     # subquery (sample scan + groupBy) would re-execute inside the main
     # job's critical path (~1.3 s/action measured at sf0.1). The hot
     # table is small by construction (hosts with > target_rows rows —
     # ≤ #partitions rows), and the lazy F.broadcast(hot) collected the
-    # same rows to the driver anyway. The exact row count comes from the
-    # scan's metadata (parquet footers): cheaper AND exact, vs summing
-    # the (possibly sampled) host counts.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_hot = pool.submit(hot_sel.collect)
-        total_rows = df.count()
-        hot_rows = f_hot.result()
+    # same rows to the driver anyway. The row count is observed on this
+    # same query: a df.count() of its own is two more Spark jobs under AQE.
+    hot_rows = hot_sel.collect()
+    # AQE drops a planning stage that came out empty (an empty input, or
+    # an empty sample of a small one) from the final plan, and its
+    # observed count with it: count the rows directly then
+    total_rows = int(seen.get["rows"]) if seen._jo.getRow().size() else df.count()
     n_parts = cfg.num_partitions or max(1, int(np.ceil(total_rows / cfg.target_rows)))
 
     if hot_rows:
@@ -329,6 +334,7 @@ def _encode_partition_arrow(
     snapshot_dir: str,
     columns: list[str],
     target_schema: pa.Schema,
+    n_parts: int,
     presorted: bool = False,
     ndv_override: dict | None = None,
 ) -> pa.Table:
@@ -433,7 +439,7 @@ def _encode_partition_arrow(
     # in via cfg); per-chunk metric detail lives in the chunk parquet
     # itself and the _metrics sidecar, the marker stays a slim ledger
     wall = snapshot.PartWriter(snapshot_dir, cfg.filesystem).commit_table(
-        part_id, out, n, t0, c0
+        part_id, out, n, t0, c0, n_parts
     )
 
     metrics = out.select(snapshot.METRICS_PA_SCHEMA.names[:-1])
@@ -492,11 +498,13 @@ def encode(
         # Arrow-side drop_null() actually drops the null rows.
         return F.when(F.col(c).isNotNull(), F.xxhash64(expr))
 
+    # the hash columns, JVM-side and vectorized, in ONE projection
+    hashes = {}
     for c in cfg.bloom_columns:
         if c not in columns:
             raise KeyError(f"bloom column {c} not in frame (have {columns})")
-        # JVM-side, vectorized — probe-time uses the same F.xxhash64
-        planned = planned.withColumn(f"_bh_{c}", _null_safe_hash(c, F.col(c)))
+        # probe-time uses the same F.xxhash64
+        hashes[f"_bh_{c}"] = _null_safe_hash(c, F.col(c))
     if cfg.ndv_sketch:
         dtypes = dict(df.dtypes)
         for c in columns:
@@ -508,10 +516,22 @@ def encode(
             # deterministic map construction; a small over-count for
             # re-ordered equal maps is acceptable for a ~1% estimator)
             expr = F.to_json(F.col(c)) if "map<" in dtypes[c] else F.col(c)
-            planned = planned.withColumn(f"_nh_{c}", _null_safe_hash(c, expr))
+            hashes[f"_nh_{c}"] = _null_safe_hash(c, expr)
+    if hashes:
+        planned = planned.withColumns(hashes)
 
     already = committed_parts(snapshot_dir, cfg.filesystem) if resume else set()
     if already:
+        # the committed parts belong to the partition mapping their
+        # writer planned: resuming under another one would lose or
+        # duplicate rows (a changed input, or a planning count a
+        # shuffle-stage retry inflated)
+        held = snapshot.planned_parts(snapshot_dir, already, cfg.filesystem)
+        if held is not None and held != n_parts:
+            raise ValueError(
+                f"cannot resume {snapshot_dir}: its committed partitions were "
+                f"planned as {held} partitions, this input plans {n_parts}"
+            )
         planned = planned.filter(~F.col("_part_id").isin([int(p) for p in already]))
 
     if cfg.shuffle:
@@ -542,18 +562,25 @@ def encode(
     # partition — and mapInArrow keeps that plan exchange-free. Either
     # way each task sees its partitions as contiguous runs of _part_id.
 
+    job = snapshot.metrics_job()
+
     def run(batches):
-        for tbl in snapshot.split_runs(batches, "_part_id"):
-            yield from _encode_partition_arrow(
-                tbl, cfg, snapshot_dir, columns, target_schema,
-                presorted=cfg.shuffle,
-            ).to_batches()
+        return snapshot.metric_task(
+            snapshot_dir, cfg.filesystem, job,
+            (
+                _encode_partition_arrow(
+                    tbl, cfg, snapshot_dir, columns, target_schema, n_parts,
+                    presorted=cfg.shuffle,
+                )
+                for tbl in snapshot.split_runs(batches, "_part_id")
+            ),
+        )
 
     metrics_df = planned.mapInArrow(run, snapshot.METRICS_DDL)
 
     return commit_metrics_action(
         spark, metrics_df, snapshot_dir, cfg, columns, df, n_parts, t0,
-        len(already),
+        len(already), job,
     )
 
 
@@ -567,12 +594,14 @@ def commit_metrics_action(
     n_parts: int,
     t0: float,
     n_resumed: int,
+    job: str,
 ) -> dict:
     """Run the encode job's ONE action over its metric-row frame (the
-    partition encoders write chunk parquet + commit markers as side
-    effects inside the UDF) and finalize lineage. Shared by the shuffle
-    encode path and the fused merge-compaction path
-    (operators/merge_compact.py), so both commit identically. ``df`` is
+    partition encoders write chunk parquet, commit markers and their
+    ``_metrics/<job>/`` rows as side effects inside the UDF) and finalize
+    lineage. Shared by the shuffle encode path, the keeper copies
+    (operators/binpack.py) and the fused merge-compaction path
+    (operators/merge_compact.py), so all commit identically. ``df`` is
     only consulted for dtypes (lineage schema)."""
     # When THIS job's metric rows provably cover the whole snapshot
     # (fresh dir, nothing resumed), the lineage aggregates ride the job's
@@ -622,26 +651,17 @@ def commit_metrics_action(
             )
         metrics_df = metrics_df.observe(obs, *aggs)
 
-    # The job's one action STREAMS the per-partition metrics rows to a
-    # parquet sidecar next to the snapshot — nothing O(#partitions) ever
-    # passes through the driver (at 10^6 partitions a toPandas() here
-    # would be a multi-GB driver collect). Each attempt writes its own
-    # job-<uuid> subdir so a resumed run never collides with a crashed
-    # attempt's staging files; the sidecar is job telemetry (per-chunk
+    # The job's one action is a discard sink: the tasks already wrote
+    # their metric rows to the job's own _metrics/<job> dir (so a resumed
+    # run never collides with a crashed attempt's files), and the
+    # observations above reduce them map-side — nothing O(#partitions)
+    # passes through the driver, and no Spark file writer or commit
+    # protocol runs. The sidecar is job telemetry (per-chunk
     # codec/size/wall rows for THIS attempt's partitions) — the
     # authoritative snapshot-wide metrics live in the chunk parquet
     # itself.
-    if cfg.filesystem is None:
-        # local path or Spark-readable URI (s3a://, hdfs://)
-        metrics_df.write.mode("overwrite").parquet(
-            os.path.join(snapshot_dir, "_metrics", f"job-{uuid.uuid4().hex[:8]}")
-        )
-    else:
-        # custom metadata-plane filesystem (e.g. a subtree or an
-        # object-store adapter): the path is only addressable through the
-        # pyarrow fs object, which Spark's JVM writers cannot use — run
-        # the job with a discard action; metrics stay in the chunk files
-        metrics_df.write.format("noop").mode("overwrite").save()
+    metrics_df.write.format("noop").mode("overwrite").save()
+    snapshot.seal_metrics_job(snapshot_dir, cfg.filesystem, job)
 
     precomputed = None
     if obs is not None:
@@ -691,7 +711,7 @@ def finalize(
     implementation looped over every ``_commits/*.json`` marker
     driver-side — O(#partitions) metadata reads that would take hours at
     10^6 partitions. Per-partition detail rows (wall, codec mix per
-    chunk) live in the Spark-written ``_metrics`` parquet sidecar; the
+    chunk) live in the task-written ``_metrics`` parquet sidecar; the
     commit markers stay as the slim resume ledger only.
     """
     fs, root = fsio.resolve(snapshot_dir, cfg.filesystem)
@@ -788,7 +808,7 @@ def finalize(
         # per-partition detail rows (file, rows, wall_s, per-chunk codec
         # mix) are in the _metrics parquet — O(#partitions) data stays
         # out of this JSON by design
-        "metrics": "_metrics",
+        "metrics": snapshot.METRICS,
     }
     fsio.mkdirs(fs, root)
     fsio.write_json_atomic(fs, fsio.join(root, "_lineage.json"), lineage, indent=1)

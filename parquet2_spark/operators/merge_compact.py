@@ -301,9 +301,9 @@ def encode_fused(
     through decode's partition reader (page-pruned to the bucket's key
     span, decoded, schema-filled and typed exactly as ``decode()`` reads
     them), residual-filter exactly, merge, sort, and encode via the SAME
-    partition encoder the shuffle path uses — chunk bytes and commit
-    markers are written as side effects; only metric rows return to
-    Spark."""
+    partition encoder the shuffle path uses — chunk bytes, commit markers
+    and each task's ``_metrics`` rows are written as side effects; only
+    metric rows return to Spark."""
     from ..plans import hll
     from ..schema import df_to_pa_schema, spark_type_to_pa
     from .decode_job import _decode_part, _page_keep
@@ -418,7 +418,7 @@ def encode_fused(
         }
         return _encode_partition_arrow(
             merged, cfg, snapshot_dir, columns, target_schema,
-            presorted=True, ndv_override=ndv_override,
+            n_parts, presorted=True, ndv_override=ndv_override,
         )
 
     # NOT groupBy().applyInArrow: the plan rows are a few KB, so AQE
@@ -431,8 +431,9 @@ def encode_fused(
     # schedule 4M near-empty tasks.
     k = min(4 * max(1, n_parts), max(n_parts, 4096))
     arranged = plan_df.repartition(k, F.col("bucket"))
+    job = snapshot.metrics_job()
 
-    def run_buckets(batches):
+    def buckets(batches):
         import pyarrow.compute as pc
 
         bl = [rb for rb in batches if rb.num_rows]
@@ -440,9 +441,10 @@ def encode_fused(
             return
         t = pa.Table.from_batches(bl)
         for b in sorted(set(t.column("bucket").to_pylist())):
-            out = merge_encode(t.filter(pc.equal(t.column("bucket"), b)))
-            if out.num_rows:
-                yield from out.to_batches()
+            yield merge_encode(t.filter(pc.equal(t.column("bucket"), b)))
+
+    def run_buckets(batches):
+        return snapshot.metric_task(snapshot_dir, filesystem, job, buckets(batches))
 
     metrics_df = arranged.mapInArrow(run_buckets, snapshot.METRICS_DDL)
     if keep_df is not None:
@@ -463,9 +465,9 @@ def encode_fused(
             ).alias("marker"),
         )
         metrics_df = metrics_df.unionByName(
-            snapshot.copy_keepers(keepers, snapshot_dir, filesystem)
+            snapshot.copy_keepers(keepers, snapshot_dir, filesystem, job)
         )
     return commit_metrics_action(
         spark, metrics_df, snapshot_dir, cfg, columns, empty_df, n_parts, t0,
-        n_resumed,
+        n_resumed, job,
     )

@@ -5,7 +5,7 @@ Snapshot layout (Iceberg-style: immutable data files + manifest):
     <snapshot>/chunks/part-<part_id>.parquet
     <snapshot>/_commits/<part_id>.json
     <snapshot>/_tmp/                       (staging for atomic writes)
-    <snapshot>/_metrics/job-<uuid>/*.parquet
+    <snapshot>/_metrics/job-<id>/part-<task>.parquet
     <snapshot>/_lineage.json
 
 Every Spark partition task of a writer (encode job, fused merge
@@ -21,8 +21,15 @@ Part identity lives in the chunk FILENAME (``chunk_frame`` derives
 snapshot as a byte-verbatim file copy.
 
 Marker fields: ``part_id``, ``file``, ``rows``, ``wall_s``, plus
-``cpu_s`` for encoded partitions or the copy's provenance
-(``binpack_copied_from`` / ``layout_copied_from``) for keepers.
+``cpu_s`` and the writer's planned partition count ``n_parts`` for
+encoded partitions, or the copy's provenance (``binpack_copied_from`` /
+``layout_copied_from``) for keepers.
+
+Every writer task also writes its partitions' metric rows (below) as one
+parquet file under ``_metrics/job-<id>/``, staged in ``_tmp/``
+(``metric_task``). The writer's action is then a discard (``noop``) sink:
+no Spark file writer, no commit protocol, nothing O(#partitions) through
+the driver.
 
 A chunk file holds one row per column of its partition, typed by
 ``CHUNK_PA_SCHEMA`` (the one declaration of the format):
@@ -49,12 +56,14 @@ from __future__ import annotations
 
 import json
 import time
+import uuid
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.fs as pafs
 import pyarrow.parquet as pq
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -63,6 +72,7 @@ from .. import fsio
 CHUNKS = "chunks"
 COMMITS = "_commits"
 TMP = "_tmp"
+METRICS = "_metrics"
 
 CHUNK_PA_SCHEMA = pa.schema(
     [
@@ -216,6 +226,17 @@ def committed_parts(snapshot_dir: str, filesystem=None) -> set[int]:
     return set(_marker_ids(fs, root))
 
 
+def planned_parts(snapshot_dir: str, parts: set[int], filesystem=None) -> int | None:
+    """The partition count the writer of the committed ``parts`` planned,
+    from the marker of the lowest of them (one read: every encoded marker
+    of one snapshot holds the same count, and keeper copies take ids
+    above the encoded ones). None when that marker predates the field or
+    is a keeper's."""
+    fs, root = fsio.resolve(snapshot_dir, filesystem)
+    marker = fsio.read_json(fs, fsio.join(root, COMMITS, f"{min(parts)}.json"))
+    return marker.get("n_parts")
+
+
 def torn_parts(snapshot_dir: str, filesystem=None) -> list[int]:
     """Part ids with a commit marker but no chunk file, sorted."""
     fs, root = fsio.resolve(snapshot_dir, filesystem)
@@ -256,17 +277,22 @@ class PartWriter:
         )
 
     def commit_table(
-        self, part_id: int, table: pa.Table, rows: int, t0: float, c0: float
+        self, part_id: int, table: pa.Table, rows: int, t0: float, c0: float,
+        n_parts: int,
     ) -> float:
         """Write ``table`` as the partition's chunk file (payloads are
         already compressed — stored raw), then its marker with the task's
-        wall and cpu seconds since ``t0``/``c0``. Returns the wall."""
+        wall and cpu seconds since ``t0``/``c0`` and the writer's planned
+        partition count. Returns the wall."""
         fsio.write_parquet_atomic(
             self.fs, chunk_path(self.root, part_id), table,
             tmp_dir=self.tmp_dir, compression="none",
         )
         wall = time.time() - t0
-        self._mark(part_id, rows, wall, {"cpu_s": time.process_time() - c0})
+        self._mark(
+            part_id, rows, wall,
+            {"cpu_s": time.process_time() - c0, "n_parts": int(n_parts)},
+        )
         return wall
 
     def commit_copy(
@@ -284,9 +310,52 @@ class PartWriter:
         return wall
 
 
+def metrics_job() -> str:
+    """A fresh ``_metrics`` job dir name, one per writer action: a retried
+    action never mixes its rows with a crashed attempt's."""
+    return f"job-{uuid.uuid4().hex[:8]}"
+
+
+def _write_metrics(snapshot_dir: str, filesystem, job: str, name: str, rows: pa.Table) -> None:
+    fs, root = fsio.resolve(snapshot_dir, filesystem)
+    job_dir, tmp_dir = fsio.join(root, METRICS, job), fsio.join(root, TMP)
+    for d in (job_dir, tmp_dir):
+        fsio.mkdirs(fs, d)
+    fsio.write_parquet_atomic(fs, fsio.join(job_dir, name), rows, tmp_dir=tmp_dir)
+
+
+def metric_task(snapshot_dir: str, filesystem, job: str, tables):
+    """Finish one writer task: drain ``tables`` (the metric rows of the
+    partitions it committed), write them as the task's one parquet file
+    under ``_metrics/<job>/`` (staged in ``_tmp/``, named by the task's
+    partition index so a retried task replaces its earlier attempt's
+    file), then yield them as record batches for the action's
+    observations. A task that committed nothing writes nothing."""
+    out = [t for t in tables if t.num_rows]
+    if not out:
+        return
+    rows = pa.concat_tables(out)
+    ctx = TaskContext.get()
+    name = f"part-{ctx.partitionId():05d}" if ctx else f"part-{uuid.uuid4().hex[:8]}"
+    _write_metrics(snapshot_dir, filesystem, job, f"{name}.parquet", rows)
+    yield from rows.to_batches()
+
+
+def seal_metrics_job(snapshot_dir: str, filesystem, job: str) -> None:
+    """After a writer action: a job none of whose tasks committed a
+    partition (empty input, everything resumed) leaves one empty file,
+    so ``_metrics`` always reads as a parquet dataset."""
+    fs, root = fsio.resolve(snapshot_dir, filesystem)
+    if not fsio.is_dir(fs, fsio.join(root, METRICS, job)):
+        _write_metrics(
+            snapshot_dir, filesystem, job, "part-empty.parquet",
+            METRICS_PA_SCHEMA.empty_table(),
+        )
+
+
 def copy_chunk_file(
     writer: PartWriter, src_fs, src_path: str, npid: int, marker_extra: dict
-) -> pa.RecordBatch | None:
+) -> pa.Table | None:
     """Carry one partition's chunk parquet into the writer's snapshot as
     partition ``npid``: a BYTE-VERBATIM copy plus its commit marker.
     Part identity lives in the filename, so the embedded ``part_id`` is
@@ -296,8 +365,8 @@ def copy_chunk_file(
     bytes through the worker. Metric rows come from a column-projected
     read of the slim stat columns (payload chunks are never fetched),
     with ``part_id`` patched to ``npid`` in the METRIC stream only.
-    Returns the metric record batch, or None when the marker already
-    exists (resume)."""
+    Returns the metric rows, or None when the marker already exists
+    (resume)."""
     t0 = time.time()
     if writer.is_committed(npid):
         return None  # resume: this keeper already carried over
@@ -307,19 +376,21 @@ def copy_chunk_file(
     mt = mt.set_column(pid_at, "part_id", pa.array(np.full(n, npid, dtype=np.int64)))
     rows = int(pc.max(mt.column("n_rows")).as_py() or 0)
     wall = writer.commit_copy(npid, src_fs, src_path, rows, t0, marker_extra)
-    mt = mt.append_column("wall_s", pa.array([wall] * n, pa.float64()))
-    return mt.combine_chunks().to_batches()[0]
+    return mt.append_column("wall_s", pa.array([wall] * n, pa.float64()))
 
 
-def copy_keepers(plan: DataFrame, snapshot_dir: str, filesystem=None) -> DataFrame:
+def copy_keepers(
+    plan: DataFrame, snapshot_dir: str, filesystem, job: str
+) -> DataFrame:
     """Metric-row frame of the verbatim keeper copies into
-    ``snapshot_dir``. ``plan`` has one row per keeper: ``src_snap`` (the
+    ``snapshot_dir``, whose tasks write their rows under ``_metrics/<job>/``.
+    ``plan`` has one row per keeper: ``src_snap`` (the
     source snapshot dir), ``src_pid`` (its part id there), ``new_pid``
     (its part id in the new snapshot) and ``marker`` (a JSON object of
     provenance fields for the commit marker). Tasks are spread by
     ``new_pid``; each skips keepers already committed, so a crashed copy
     retried into the same dir finishes exactly once."""
-    def copy_tasks(batches):
+    def copies(batches):
         writer = PartWriter(snapshot_dir, filesystem)
         for rb in batches:
             cols = rb.to_pydict()
@@ -333,6 +404,9 @@ def copy_keepers(plan: DataFrame, snapshot_dir: str, filesystem=None) -> DataFra
                 )
                 if out is not None:
                     yield out
+
+    def copy_tasks(batches):
+        return metric_task(snapshot_dir, filesystem, job, copies(batches))
 
     return (
         plan.select("src_snap", "src_pid", "new_pid", "marker")

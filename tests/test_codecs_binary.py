@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pytest
 from hypothesis import given, settings
@@ -222,6 +224,67 @@ def test_fsst_native_matches_numpy(kind):
             assert native.fsst_encode(buf, table.symbols) == fsst.encode_with_table_numpy(
                 buf, table
             ), (kind, seed, len(buf))
+
+
+# sha256 of fsst.train(...).serialize() per input, recorded from the
+# Counter/heapq trainer the vectorized one replaced: same symbols, same
+# order
+TRAIN_DIGESTS = {
+    "web-url-8192-g3": "afd9109a876799d7dcaa773925b85befcd66cd756bfadc162255409d1189d508",
+    "web-url-8192-g4": "7e8727649981d9d1d9ad38cd208ed83fc474c6f3c92a612b2a6587e8d78960df",
+    "web-url-32768-g3": "344e3505ae298f4e6466224714a0aa23d8884d76632dcce9c4a70c5d105fb8bd",
+    "web-url-32768-g4": "0cf4f67cfc8861b14cca426b03d0c15fe846e5c77d472198346e1245fb5db2fc",
+    "web-html-8192-g3": "cf31438e8f3dc9baced5b591c05655cff02d3ede8d61fb9f3efc60fc10794c68",
+    "web-html-8192-g4": "67b55b86d6a3de2bae944d27cdfb6b86cdebe0c1e8bcee17c4136352a30fd766",
+    "web-html-32768-g3": "020c59897c83fba6be85792bdea2dbb2f4a73a68709128e3248ba9f397a90117",
+    "web-html-32768-g4": "850dcbc2675062604e55ea7c8534c2fc483d044dfac18decbcd545367be2d4fe",
+    "web-text-8192-g3": "ed40aa8fa78aef39b6ef9199d92c27de7d5ccaa63fff4c7f36bb021188cec8de",
+    "web-text-8192-g4": "597bfcf28abaa913b4bef9b2697e69b6ad650c915d12f495a29e352ef82fe41c",
+    "web-text-32768-g3": "479503af7892aa8c1bb845417f2d11683dbc8e9d604a41a572756db31ac042e2",
+    "web-text-32768-g4": "7d9b89b5675fb6229f85e325377568a7338b497c479646ef2db289e4236059ae",
+    "random": "c891e6a4f994da00bb320084150a523618580a0b7c850e9f38a436e8d54649bb",
+    "abc": "88699d8d2980045f975ec5a0f7a598142bb2eb077b0735159d576fd6d788a7f9",
+    "ff": "b40da4d316831532a6c2515b5eed34ba71a3a5b9f068f700327841c10cedb533",
+    "zero": "6fc8c6364b779b2776c0f1fe2ace1fea0d28dbe15c0b05635abdb2b9a9b4160a",
+    "ab": "5ac3f035b57ec2cd12fa2c520ab62b4fa7482ae8118421bf0c3db4a80f81d636",
+}
+
+
+def _train_cases():
+    from parquet2_spark.sources import webgen
+
+    b = webgen.generate_batch(np.arange(2000), seed=7)
+    for col in ("url", "html", "text"):
+        arr = b.column(b.schema.get_field_index(col)).drop_null()
+        data = bytes(barray.from_arrow(arr)[1])
+        for cap in (8192, 32768):
+            for gens in (3, 4):
+                yield f"web-{col}-{cap}-g{gens}", data[:cap], gens
+    rng = np.random.default_rng(11)
+    yield "random", bytes(rng.integers(0, 256, 20000, dtype=np.uint8)), 4
+    yield "abc", bytes(rng.choice(np.frombuffer(b"abc", np.uint8), 20000)), 4
+    yield "ff", b"\xff" * 5000, 4
+    yield "zero", b"\x00" * 5000, 4
+    yield "ab", b"ab" * 3000, 4
+
+
+@pytest.mark.parametrize("accelerated", [True, False])
+def test_fsst_train_golden(accelerated, monkeypatch):
+    """The trainer's symbol tables are pinned byte for byte, with the C
+    encoder and with its numpy fallback (``train`` encodes the sample
+    every generation)."""
+    from parquet2_spark.codecs import native
+
+    if not accelerated:
+        monkeypatch.setattr(native, "_TRIED", True)
+        monkeypatch.setattr(native, "_LIB", None)
+    elif native.get() is None:
+        pytest.skip("native accelerator not built")
+    got = {
+        name: hashlib.sha256(fsst.train(data, generations=g).serialize()).hexdigest()
+        for name, data, g in _train_cases()
+    }
+    assert got == TRAIN_DIGESTS
 
 
 # ---------------------------------------------------------------- block

@@ -11,6 +11,7 @@ import io
 import json
 import os
 import re
+import uuid
 
 import numpy as np
 import pyarrow as pa
@@ -495,32 +496,47 @@ JOBS_PER_READ = {
 }
 
 
-@pytest.mark.parametrize("kind", sorted(JOBS_PER_READ))
-def test_jobs_per_read(spark, url_snap, src, kind):
-    kw = _read_kwargs(src, kind)
+def _marker_job(spark, name: str) -> int:
+    """Id of a one-task job run in a job group of its own."""
     sc = spark.sparkContext
-    group = f"p2s-jobs-per-read-{kind}"
-    sc.setJobGroup(group, f"decode {kind}")
+    group = f"p2s-jobs-marker-{name}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, name)
     try:
-        decode_job.decode(spark, url_snap, **kw).collect()
-        n = len(sc.statusTracker().getJobIdsForGroup(group))
+        sc.parallelize([0], 1).count()
+        (job_id,) = sc.statusTracker().getJobIdsForGroup(group)
+        return job_id
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert n == JOBS_PER_READ[kind]
 
 
 def _jobs(spark, name: str, fn) -> int:
-    """Spark jobs started while ``fn()`` runs."""
-    sc = spark.sparkContext
-    group = f"p2s-jobs-{name}"
-    sc.setJobGroup(group, name)
-    try:
-        fn()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    """Spark jobs started while ``fn()`` runs, on any thread: the gap
+    between the ids of two marker jobs that bracket the call (a job
+    group would miss the jobs of threads the call starts itself)."""
+    before = _marker_job(spark, f"{name}-before")
+    fn()
+    return _marker_job(spark, f"{name}-after") - before - 1
+
+
+@pytest.mark.parametrize("kind", sorted(JOBS_PER_READ))
+def test_jobs_per_read(spark, url_snap, src, kind):
+    kw = _read_kwargs(src, kind)
+    n = _jobs(spark, f"read-{kind}", lambda: decode_job.decode(spark, url_snap, **kw).collect())
+    assert n == JOBS_PER_READ[kind]
+
+
+def test_jobs_per_write(spark, tmp_path):
+    """An encode is one planning query (the hot-host counts, with the row
+    count observed on the same scan) and one action (a discard sink: the
+    tasks write their own ``_metrics``); under AQE each query is a map
+    stage job plus a result job. ``table.append`` adds no job."""
+    df = webgen.webpages_df(spark, N, partitions=4)
+    got = {
+        "encode": _jobs(spark, "encode", lambda: encode(spark, df, str(tmp_path / "snap"), _cfg())),
+        "append": _jobs(spark, "append", lambda: table.append(spark, df, str(tmp_path / "t"), _cfg())),
+    }
+    assert got == {"encode": 4, "append": 4}
 
 
 def test_metadata_reads_start_no_inference_jobs(spark, lookup_table):

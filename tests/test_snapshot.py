@@ -90,9 +90,13 @@ class TestCommitOrder:
         seen = self._check_marker_after_chunk(monkeypatch)
         w = snapshot.PartWriter(str(tmp_path / "snap"))
         t = pa.table({"n_rows": [3, 3]})
-        wall = w.commit_table(7, t, 3, 0.0, 0.0)
-        assert [sorted(m) for m in seen] == [["cpu_s", "file", "part_id", "rows", "wall_s"]]
+        wall = w.commit_table(7, t, 3, 0.0, 0.0, 12)
+        assert [sorted(m) for m in seen] == [
+            ["cpu_s", "file", "n_parts", "part_id", "rows", "wall_s"]
+        ]
         assert seen[0]["file"] == "part-000007.parquet" and seen[0]["wall_s"] == wall
+        assert seen[0]["n_parts"] == 12
+        assert snapshot.planned_parts(str(tmp_path / "snap"), {7}) == 12
         assert snapshot.committed_parts(str(tmp_path / "snap")) == {7}
         assert snapshot.torn_parts(str(tmp_path / "snap")) == []
 
