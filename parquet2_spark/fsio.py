@@ -2,9 +2,10 @@
 
 The engine has two IO planes:
 
-- **data plane**: the chunks parquet files, read by Spark's own scan
-  (S3A/HDFS/local through Hadoop) — always addressed by URI, never
-  touched here;
+- **data plane**: the chunk files. ``decode`` lists them on the driver
+  and reads them in the executors' Python through this module's
+  filesystem (``snapshot.ChunkFile``); the stats queries read them with
+  Spark's own scan (S3A/HDFS/local through Hadoop), addressed by URI;
 - **metadata plane**: commit markers, lineage sidecars, table manifests,
   and the executor-side chunk-file writes. These previously used
   ``os.*``/``open`` and silently assumed a shared POSIX filesystem; this

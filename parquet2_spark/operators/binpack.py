@@ -30,8 +30,8 @@ per-partition row counts, snapshot ids — entirely Spark-side: the
 driver never materializes a partition list (the keeper→new-id mapping
 is a per-snapshot window over metadata rows with O(#snapshots) offsets
 collected, and the small-partition selection reaches decode() as a
-pushed-down per-snapshot predicate on the chunk scan — keeper payload
-bytes are never read). Both halves are resumable: the encode job skips
+predicate its decoder tests on each chunk file's metadata rows — keeper
+payload bytes are never read). Both halves are resumable: the encode job skips
 committed partitions via its ``_commits`` markers, and the copy task
 skips keeper ids whose marker exists, so a crashed compaction retried
 under the same ``compact:`` staging key finishes exactly once.
@@ -125,17 +125,16 @@ def binpack_compact(
     n_tail = sum(int(r["total"]) for r in census) - m_keep
     k = 0
     if n_tail:
-        # the tail selection reaches decode as a PER-SNAPSHOT predicate
-        # over raw chunk columns, applied before the union inside
-        # chunks_df — it pushes down into each snapshot's parquet scan,
-        # and with one partition per chunk file (min==max row-group
-        # stats on n_rows) the keepers' payload bytes are never read.
-        # A semijoin frame here measured 90 s on a 2M-row table where
-        # this form pays only the surviving tail's IO.
-        def tail_filter(sid):
+        # the tail selection reaches decode as a predicate over each
+        # chunk file's metadata rows (one partition per file, so one
+        # n_rows): the decoder tests it before it reads a payload, so
+        # the keepers' payload bytes are never read. A semijoin frame
+        # here measured 90 s on a 2M-row table where this form pays only
+        # the surviving tail's IO.
+        def tail_filter(sid, meta):
             if sid not in elig_set:
-                return None  # narrow snapshot: every partition re-encodes
-            return (F.col("n_rows") < lo_rows) | (F.col("n_rows") > hi_rows)
+                return True  # narrow snapshot: every partition re-encodes
+            return not lo_rows <= meta.column("n_rows")[0].as_py() <= hi_rows
 
         sub = decode_job.decode(
             spark, table_dir, filesystem=cfg.filesystem, _chunk_filter=tail_filter

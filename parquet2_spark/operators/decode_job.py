@@ -1,14 +1,16 @@
 """Decode / stats queries over an encoded snapshot.
 
-Read-path parity with the reference (SURVEY §3.1/§3.3): the chunks
-DataFrame *is* the metadata+data layer; Catalyst provides projection
-pruning (only requested columns' chunk rows are read — the parquet scan
-of the chunks table pushes ``column IN (...)``) and zone-map predicate
-pruning (plain filters on min/max stat columns ≙ ``filter_row_groups``,
-reference src/read/mod.rs:32-45). ``decode`` runs every read as one
-Spark job: a metadata scan prunes partitions and streams the survivors'
-chunk rows into a decoder that reads their chunk files itself, skips
-pages by the chunk's page index (≙ IndexedPageReader) and decodes.
+Read-path parity with the reference (SURVEY §3.1/§3.3): the reference
+reads a file's footer once, prunes row groups on their statistics
+(``filter_row_groups``, reference src/read/mod.rs:32-45) and only then
+iterates the surviving chunks' pages. ``decode`` does the same per chunk
+file, in one Spark job: the driver lists each snapshot's chunk files
+once, and one ``mapInArrow`` decoder opens each listed file once, tests
+its metadata rows (zone maps, null counts, blooms), and reads, page-
+prunes (≙ IndexedPageReader) and decodes the payload of a survivor from
+the same open file. The stats queries (``stats``, ``quantiles``) read
+the chunks table as a Spark frame (``chunks_df``), where Catalyst prunes
+the payload out of the scan.
 """
 
 from __future__ import annotations
@@ -20,6 +22,7 @@ import operator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -218,14 +221,16 @@ def _decode_part(
     keep: set | None = None,
     field_sel: dict | None = None,
     row_span: tuple | None = None,
+    n_rows: int = 0,
 ) -> pa.Table | None:
     """Decode one partition's chunk rows into a table of ``columns``
     typed as ``expected_pa``. ``keep`` (from ``_page_keep``) decodes only
     those pages, ``row_span=(start, stop)`` only those rows (the page
     offset index picks the pages; it takes precedence over ``keep``),
     ``field_sel`` prunes struct fields per column. A column the partition
-    lacks (added by a later snapshot) reads as all-null. None when every
-    page is pruned."""
+    lacks (added by a later snapshot) reads as all-null; when it lacks
+    every one of ``columns``, the table has ``n_rows`` rows of nulls.
+    None when every page is pruned."""
     payload_of = dict(
         zip(tbl.column("column").to_pylist(), tbl.column("payload").to_pylist())
     )
@@ -253,7 +258,7 @@ def _decode_part(
             if not parts:
                 return None
             arrays[c] = blob.chunk_pages(parts)
-    n = len(next(iter(arrays.values()))) if arrays else 0
+    n = len(next(iter(arrays.values()))) if arrays else n_rows
     cols = []
     for c in columns:
         a = arrays.get(c)
@@ -278,21 +283,21 @@ def _snapshot_reads(
     as_of: int | None = None,
     since: int | None = None,
     filesystem=None,
-) -> list[tuple[int | None, str, None]]:
-    """The read list behind ``chunks_df``, resolved from the manifest
-    once: ``(sid, snapshot dir, None)`` per committed snapshot of a table
-    dir in ``(since, as_of]``, or ``[(None, snapshot_dir, None)]`` for a
-    single snapshot dir. The trailing ``None`` means every chunk file."""
+) -> list[tuple[int | None, str]]:
+    """The snapshots behind ``chunks_df``, resolved from the manifest
+    once: ``(sid, snapshot dir)`` per committed snapshot of a table dir
+    in ``(since, as_of]``, or ``[(None, snapshot_dir)]`` for a single
+    snapshot dir."""
     from . import table as table_mod
 
     if not table_mod.is_table(snapshot_dir, filesystem):
-        return [(None, snapshot_dir, None)]
+        return [(None, snapshot_dir)]
     snaps = table_mod.snapshot_dirs(snapshot_dir, as_of, filesystem, since)
     if not snaps and since is None:
         raise FileNotFoundError(f"table {snapshot_dir} has no committed snapshots")
     # an empty incremental window (nothing new since the caller's
     # checkpoint) reads as a zero-row chunks frame, not an error
-    return [(sid, sdir, None) for sid, sdir in snaps]
+    return snaps
 
 
 def chunks_df(
@@ -301,49 +306,23 @@ def chunks_df(
     as_of: int | None = None,
     since: int | None = None,
     filesystem=None,
-    _per_snapshot_filter=None,
-    _reads: list | None = None,
 ) -> DataFrame:
     """The chunks table (metadata + payload), read typed by
     ``snapshot.chunk_frame``. Stats queries should select
     only metadata columns — parquet column pruning then never touches the
     payload bytes. A multi-snapshot table dir unions every committed
     snapshot's chunks with the part_id namespaced by snapshot id, so ids
-    never collide across snapshots.
+    never collide across snapshots. An empty ``since`` window gives a
+    typed zero-row frame.
 
-    ``_reads`` (internal: a ``_snapshot_reads`` list, possibly narrowed
-    to a row range's partitions) replaces the manifest read, so two frames
-    built from one list see the same snapshots even if a commit or a
-    compaction swaps the manifest in between. An entry ``(sid, dir, part_ids)`` with a list
-    of ids reads exactly those chunk files by path: other files are never
-    listed, opened or footer-read, and a listed file that is gone raises.
-    An empty list gives a typed zero-row frame.
-
-    ``_per_snapshot_filter`` (internal, binpack compaction): a callable
-    ``sid -> Column | None`` applied to each snapshot's frame BEFORE the
-    part_id namespacing and the union — so a predicate over chunk
-    columns (``n_rows`` et al) PUSHES DOWN into that snapshot's parquet
-    scan. Every chunk file holds one partition (constant ``n_rows`` per
-    file ⇒ min==max row-group stats), so pruned partitions' payload
-    bytes are never read. ``None`` from the callable keeps the whole
-    snapshot."""
+    Spark reads the chunk files here, so for a non-local filesystem the
+    snapshot paths must also be Spark-readable URIs (S3A/HDFS).
+    ``decode`` reads it only for ``row_range``'s prefix sums."""
     from . import table as table_mod
 
-    if _reads is None:
-        _reads = _snapshot_reads(snapshot_dir, as_of, since, filesystem)
-    # manifest reads go through pyarrow.fs; the chunk parquet itself is
-    # read by Spark's own scan, so for a non-local filesystem the
-    # snapshot paths must also be Spark-readable URIs (S3A/HDFS)
     out = None
-    for sid, sdir, pids in _reads:
-        if pids is None:
-            d = snapshot.chunk_frame(spark, [snapshot.chunks_dir(sdir)])
-        else:
-            d = snapshot.chunk_frame(spark, [snapshot.chunk_path(sdir, p) for p in pids])
-        if _per_snapshot_filter is not None:
-            cond = _per_snapshot_filter(0 if sid is None else sid)
-            if cond is not None:
-                d = d.filter(cond)
+    for sid, sdir in _snapshot_reads(snapshot_dir, as_of, since, filesystem):
+        d = snapshot.chunk_frame(spark, [snapshot.chunks_dir(sdir)])
         if sid is not None:
             d = d.withColumn(
                 "part_id",
@@ -827,27 +806,120 @@ def _zone_keep(column: str, lo=None, hi=None):
     return (F.col("column") != column) | functools.reduce(operator.and_, tests)
 
 
+def _spark_le(a, b) -> bool:
+    """``a <= b`` as Spark compares two numbers: a long against a double
+    compares as doubles, and NaN sorts above every other value."""
+    if isinstance(a, (float, np.floating)) or isinstance(b, (float, np.floating)):
+        a, b = float(a), float(b)
+        if b != b:
+            return True
+        if a != a:
+            return False
+    return a <= b
+
+
+def _zone_test(lo=None, hi=None):
+    """``_zone_keep``'s test in Python, for the decoder: a predicate over
+    one chunk row (a dict of its stat fields), true when the row's zone
+    map may meet [lo, hi]. None when there is no bound. The same
+    semantics, rule for rule: a missing stat keeps the chunk; the num stat
+    decides when present, else the dbl stat, and an inverted (all-NaN)
+    dbl zone map keeps it; decimal bounds widen outward; bools compare as
+    0/1; bytes and str bounds test the bin stats (a str as its utf-8
+    bytes, which is how Spark compares a string with a binary)."""
+    lo, hi = (int(v) if isinstance(v, bool) else v for v in (_zone_bound(lo), _zone_bound(hi)))
+    if lo is None and hi is None:
+        return None
+    if isinstance(lo, (bytes, str)) or isinstance(hi, (bytes, str)):
+        lo, hi = (v.encode("utf-8") if isinstance(v, str) else v for v in (lo, hi))
+
+        def test_bin(r: dict) -> bool:
+            return (lo is None or r["max_bin"] is None or r["max_bin"] >= lo) and (
+                hi is None or r["min_bin"] is None or r["min_bin"] <= hi
+            )
+
+        return test_bin
+    import decimal as _decimal
+    import math
+
+    if isinstance(lo, _decimal.Decimal):
+        lo = math.nextafter(float(lo), -math.inf)
+    if isinstance(hi, _decimal.Decimal):
+        hi = math.nextafter(float(hi), math.inf)
+
+    def keep(r: dict, num: str, dbl: str, ok) -> bool:
+        if r[num] is not None:
+            return ok(r[num])
+        mn, mx = r["min_dbl"], r["max_dbl"]
+        if mn is not None and mx is not None and not _spark_le(mn, mx):
+            return True
+        return r[dbl] is None or ok(r[dbl])
+
+    def test_num(r: dict) -> bool:
+        return (lo is None or keep(r, "max_num", "max_dbl", lambda v: _spark_le(lo, v))) and (
+            hi is None or keep(r, "min_num", "min_dbl", lambda v: _spark_le(v, hi))
+        )
+
+    return test_num
+
+
 def check_integrity(
     snapshot_dir: str, as_of: int | None = None, filesystem=None, since: int | None = None,
     _snaps: list | None = None,
-) -> None:
+) -> list[tuple[int | None, str, np.ndarray, np.ndarray]]:
     """Every commit marker must have its data file (a marker without its
     file means a torn snapshot — fail loudly instead of decoding a
-    silently-partial table). ``_snaps`` as in ``lineage``."""
+    silently-partial table). ``_snaps`` as in ``lineage``.
+
+    Returns the chunk listing the check was made on, one entry per
+    snapshot: ``(sid, snapshot dir, part ids, file sizes)``, with ``sid``
+    None for a single snapshot dir. ``decode`` reads exactly these files,
+    so the check and the read see the same ones."""
     from . import table as table_mod
 
     if _snaps is not None or table_mod.is_table(snapshot_dir, filesystem):
         if _snaps is None:
             _snaps = table_mod.snapshot_dirs(snapshot_dir, as_of, filesystem, since)
-        for _, sdir in _snaps:
-            check_integrity(sdir, filesystem=filesystem)
-        return
-    missing = snapshot.torn_parts(snapshot_dir, filesystem)
+        return [
+            (sid, *check_integrity(sdir, filesystem=filesystem)[0][1:]) for sid, sdir in _snaps
+        ]
+    ids, sizes, missing = snapshot.chunk_listing(snapshot_dir, filesystem)
     if missing:
         raise FileNotFoundError(
             f"snapshot {snapshot_dir} is torn: committed partitions missing "
             f"data files: {missing[:10]}{'...' if len(missing) > 10 else ''}"
         )
+    return [(None, snapshot_dir, ids, sizes)]
+
+
+def _read_tasks(spark: SparkSession, sizes: np.ndarray) -> int:
+    """Tasks for reading files of ``sizes`` bytes, by Spark's own
+    file-split rule (``FilePartition.maxSplitBytes`` and
+    ``getFilePartitions``): a decode has as many tasks as a parquet scan
+    of its chunk files would have."""
+    if not len(sizes):
+        return 1
+    jss = spark._jsparkSession
+    conf = jss.sessionState().conf()
+    max_bytes, open_cost = conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes()
+    min_parts = conf.filesMinPartitionNum()
+    min_parts = min_parts.get() if min_parts.isDefined() else jss.leafNodeDefaultParallelism()
+    per_core = (int(sizes.sum()) + open_cost * len(sizes)) // min_parts
+    split = min(max_bytes, max(open_cost, per_core))
+    # a file larger than a split reads as several splits, then the splits
+    # pack largest first, each costing its length plus the open cost
+    full, rest = np.divmod(sizes, split)
+    splits = np.concatenate([np.full(int(full.sum()), split), rest[rest > 0]])
+    tasks, cur = 0, 0
+    for n in np.sort(splits)[::-1].tolist():
+        if cur and cur + n > split:
+            tasks, cur = tasks + 1, 0
+        cur += n + open_cost
+    tasks += cur > 0
+    max_parts = conf.filesMaxPartitionNum()
+    if max_parts.isDefined():
+        tasks = min(tasks, max_parts.get())
+    return max(1, min(tasks, len(sizes)))
 
 
 def decode(
@@ -869,30 +941,38 @@ def decode(
     """Reassemble original rows from a snapshot — or a multi-snapshot
     table dir (``as_of`` time-travels to that snapshot id).
 
-    Every read is one Spark job. A metadata scan of the chunk files
-    (no ``payload`` in its ReadSchema) prunes partitions with Catalyst
-    filters on the chunk zone maps and null counts, and streams the
-    surviving chunk rows straight into one ``mapInArrow`` decoder. Per
-    partition, the decoder finishes the survival test (every predicate
-    column present, the bloom probe, ``is_null``'s null-free proof),
-    reads only the survivors' chunk files itself, skips pages by the page
-    index, and decodes. Residual row filters make every predicate exact.
+    Every read is one Spark job. The driver lists each snapshot's
+    ``chunks/`` once (the same listing the integrity check tests), and
+    the listed part ids are the input of one ``mapInArrow`` decoder, in
+    as many tasks as Spark's file-split rule gives a scan of those files.
+    The decoder opens each chunk file once and reads its small metadata
+    fields, then runs the survival test in Python: every positive
+    predicate column present, its zone map (``_zone_test``, the rules of
+    ``prune_by_range``), ``not_null``'s null count, ``is_null``'s
+    null-free proof, and the bloom probe. For a survivor it reads the
+    payload and the page index from the same open file, skips pages by
+    the page index, and decodes. Residual row filters make every
+    predicate exact. ``row_range`` alone runs Spark queries over the
+    chunk files: the prefix sums over their row counts, which read no
+    payload.
 
-    Two readers see ``snapshot_dir``: Spark's metadata scan, and pyarrow
-    (``fsio.resolve``, or the ``filesystem=`` object) for the manifest,
-    lineage and integrity check on the driver and for the chunk files in
-    the executors' Python. The path must name the same files for both,
-    and the filesystem must open them from the executors too: a
-    ``filesystem=`` object is pickled to them, and a URI's credentials
-    or native client (libhdfs) must be there. A URI that pyarrow cannot
-    open (a Hadoop-only scheme such as ``s3a://``) raises ``ValueError``
-    here, before any job.
+    One reader sees ``snapshot_dir``: pyarrow (``fsio.resolve``, or the
+    ``filesystem=`` object), for the manifest, lineage and listing on the
+    driver and for the chunk files in the executors' Python. The
+    filesystem must open them from the executors too: a ``filesystem=``
+    object is pickled to them, and a URI's credentials or native client
+    (libhdfs) must be there. A URI that pyarrow cannot open (a
+    Hadoop-only scheme such as ``s3a://``) raises ``ValueError`` here,
+    before any job. ``row_range``'s prefix sums are Spark queries, so for
+    a row range the path must also name the same files to Spark.
 
     ``key_range=(column, lo, hi)`` (``key_ranges``: a list, AND-combined)
     keeps a partition whose chunk zone map may meet the range.
     ``not_null`` needs positive evidence (``null_count < n_rows``);
     ``is_null`` drops only chunks proven null-free, so partitions written
-    before the column existed (all-null there) are kept.
+    before the column existed (all-null there) are kept. A partition
+    that lacks every projected column (it predates them all) reads as
+    rows of nulls.
 
     ``key_eq=(column, value)`` is the bloom-assisted point lookup (the
     reference's index-assisted read, SURVEY §3.3): the zone map prunes
@@ -906,10 +986,16 @@ def decode(
     envelope of the values, and a bloom that may hold ANY of their
     hashes; the residual keeps the listed values.
 
+    ``_chunk_filter`` (internal, bin-pack compaction): a callable
+    ``(sid, metadata rows) -> bool`` over a listed chunk file's
+    ``column``/``n_rows``/``null_count`` rows; a file it rejects is not
+    decoded and its payload is never read.
+
     The returned frame carries ``df.p2s_decode_metrics`` — a dict of
     ``pages_read``/``pages_skipped``/``parts_read`` SparkContext
     accumulators populated once an action runs (``parts_read`` counts the
-    chunk files the decoder opened). Two caveats, by construction: (1) it
+    chunk payloads the decoder read: the surviving partitions). Two
+    caveats, by construction: (1) it
     is a plain Python attribute on THIS DataFrame object — any further
     transform (``select``/``filter``/``cache``) returns a new object
     without it, so read it from the frame decode() returned; (2)
@@ -920,15 +1006,13 @@ def decode(
     """
     from . import table as table_mod
 
-    # metadata plane (manifest/markers/sidecars) and the decoder's chunk
-    # reads through pyarrow.fs; the metadata scan is Spark's own (see the
-    # docstring).
+    # every read goes through pyarrow.fs (see the docstring).
     # ``since=k`` (table dirs): incremental read of snapshots (k, as_of]
     # only — the CDC-style consumption a periodically-retrained pipeline
     # uses; zero bytes of already-processed snapshots are touched.
     # The manifest is read once: the integrity check, the lineage and the
-    # scan see the same snapshots even if a commit or a compaction swaps
-    # the manifest in between.
+    # decoder see the same snapshots even if a commit or a compaction
+    # swaps the manifest in between.
     every = snaps = None
     if table_mod.is_table(snapshot_dir, filesystem):
         every = table_mod.snapshot_dirs(snapshot_dir, as_of, filesystem)
@@ -937,13 +1021,10 @@ def decode(
             raise FileNotFoundError(f"table {snapshot_dir} has no committed snapshots")
     elif since is not None:
         raise ValueError("since= requires a multi-snapshot table dir")
-    check_integrity(snapshot_dir, as_of, filesystem, since, _snaps=snaps)
+    listing = check_integrity(snapshot_dir, as_of, filesystem, since, _snaps=snaps)
     # an empty since= window takes its schema from the whole table and
     # reads zero rows
     lin = lineage(snapshot_dir, as_of, filesystem, since, _snaps=snaps or every)
-    reads = (
-        [(None, snapshot_dir, None)] if snaps is None else [(sid, d, None) for sid, d in snaps]
-    )
     cols = columns or lin["columns"]
     schema_map = lin["schema"]
 
@@ -1010,7 +1091,7 @@ def decode(
 
         first = lin["columns"][0]
         meta = (
-            chunks_df(spark, snapshot_dir, _reads=reads)
+            chunks_df(spark, snapshot_dir, filesystem=filesystem)
             .filter(F.col("column") == first)
             .select("part_id", "n_rows")
             .withColumn("_grp", F.floor(F.col("part_id") / F.lit(_RR_GROUP)))
@@ -1100,39 +1181,29 @@ def decode(
         | set(nn_cols)
         | set(isnull_cols)
     )
-    if "snapshots" in lin and lin["columns"]:
-        # table with (possibly) evolved schema: anchor on the oldest
-        # snapshot's first column so partitions that predate a newly added
-        # column still produce their rows (as nulls) when only new
-        # columns are projected
-        need = sorted(set(need) | {lin["columns"][0]})
-
-    # the metadata scan: chunk rows of the needed columns, pruned by the
-    # zone maps and null counts at the parquet scan. A predicate column's
-    # row that fails its test is dropped, and the decoder then drops the
-    # partition, which lacks that row. A partition written before a
-    # column existed has no row for it: dropped by a positive test on the
-    # column, kept by is_null.
-    if row_spans is not None:
-        # a single snapshot dir: list only the row interval's chunk files
-        reads = [(None, snapshot_dir, sorted(row_spans))] if row_spans else []
-    # one filter and one select: every DataFrame step re-analyzes the plan
-    keep = [F.col("column").isin(need)]
-    keep += [k for k in (_zone_keep(*p) for p in preds) if k is not None]
-    keep += [(F.col("column") != c) | (F.col("null_count") < F.col("n_rows")) for c in nn_cols]
-    fields = [F.col("part_id"), F.col("column")]
-    if isnull_cols:
-        fields.append(
-            (F.col("column").isin(isnull_cols) & (F.col("null_count") == 0)).alias("free")
-        )
-    if probes:
-        fields.append(F.when(F.col("column").isin(sorted(probes)), F.col("bloom")).alias("bloom"))
-    meta = (
-        chunks_df(spark, snapshot_dir, _per_snapshot_filter=_chunk_filter, _reads=reads)
-        .filter(functools.reduce(operator.and_, keep))
-        .select(*fields)
+    # the decoder's task list: the listed chunk files (a row range's
+    # only), as global part ids in part id order
+    shift = table_mod.SNAP_SHIFT
+    dirs = {sid: sdir for sid, sdir, _, _ in listing}
+    ids = np.concatenate(
+        [np.empty(0, np.int64)]
+        + [lid if sid is None else lid + (sid << shift) for sid, _, lid, _ in listing]
     )
+    sizes = np.concatenate([np.empty(0, np.int64)] + [sz for _, _, _, sz in listing])
+    if row_spans is not None:
+        inside = np.isin(ids, np.fromiter(row_spans, np.int64, len(row_spans)))
+        ids, sizes = ids[inside], sizes[inside]
+    n_tasks = _read_tasks(spark, sizes)
+
+    # the survival test each listed file's metadata rows must pass
+    zone_tests = [(c, t) for c, t in ((p[0], _zone_test(p[1], p[2])) for p in preds) if t]
     positive = {p[0] for p in preds} | set(probes) | set(nn_cols)
+    tested = bool(positive or isnull_cols or _chunk_filter)
+    meta_fields = ["column", "n_rows", "null_count"]
+    if zone_tests:
+        meta_fields += ["min_num", "max_num", "min_dbl", "max_dbl", "min_bin", "max_bin"]
+    if probes:
+        meta_fields.append("bloom")
 
     # the exact arrow types Spark expects back — Spark's Arrow exchange
     # carries TimestampType as tz-aware UTC regardless of
@@ -1188,74 +1259,87 @@ def decode(
     expected_pa = {f.name: spark_type_to_pa(f.dataType, ts_tz=session_tz) for f in stype.fields}
     # decode metrics (read back after an action via df.p2s_decode_metrics):
     # pages decoded vs pages skipped by the page-level indexes, and chunk
-    # files opened — the observable evidence that pruning is physical,
+    # payloads read — the observable evidence that pruning is physical,
     # not just a row filter
     acc_pages_read = spark.sparkContext.accumulator(0)
     acc_pages_skipped = spark.sparkContext.accumulator(0)
     acc_parts_read = spark.sparkContext.accumulator(0)
     from ..plans import bloom as bloom_mod
 
-    dirs = {sid: sdir for sid, sdir, _ in reads}
-    shift = table_mod.SNAP_SHIFT
     need_arr = pa.array(need, pa.string())
 
-    def survives(g: pa.Table) -> bool:
-        names = g.column("column").to_pylist()
-        if not positive <= set(names):
+    def survives(meta: pa.Table, sid: int | None) -> bool:
+        if _chunk_filter is not None and not _chunk_filter(0 if sid is None else sid, meta):
             return False
-        if isnull_cols and any(g.column("free").to_pylist()):
+        cols = meta.to_pydict()
+        rows = {c: {k: v[i] for k, v in cols.items()} for i, c in enumerate(cols["column"])}
+        if not positive <= rows.keys():
             return False
-        for c, bs in zip(names, g.column("bloom").to_pylist() if probes else ()):
-            if bs is not None and not all(
-                bloom_mod.might_contain(bs, h).any() for h in probes[c]
-            ):
+        for c, test in zone_tests:
+            if not test(rows[c]):
+                return False
+        for c in nn_cols:
+            nulls, n = rows[c]["null_count"], rows[c]["n_rows"]
+            if nulls is None or n is None or nulls >= n:
+                return False
+        if any(c in rows and rows[c]["null_count"] == 0 for c in isnull_cols):
+            return False
+        for c, hs in probes.items():
+            bs = rows[c]["bloom"]
+            if bs is not None and not all(bloom_mod.might_contain(bs, h).any() for h in hs):
                 return False
         return True
 
     def rebuild(ct: pa.Table, pid: int) -> pa.Table:
+        # the page index of any column gives the partition's pages and
+        # rows (pages are row-aligned across its columns)
+        n_pages = len(json.loads(ct.column("page_rows")[0].as_py()))
+        n_rows = int(ct.column("n_rows")[0].as_py())
+        ct = ct.filter(pc.is_in(ct.column("column"), value_set=need_arr))
         # page zone maps and the null index skip whole pages inside
         # surviving chunks — the IndexedPageReader/select_pages analog
         page_keep = _page_keep(ct, preds, nn_cols, isnull_cols)
-        n_pages = len(json.loads(ct.column("page_rows")[0].as_py()))
         kept = n_pages if page_keep is None else len(page_keep)
         acc_pages_read.add(kept)
         acc_pages_skipped.add(n_pages - kept)
 
         span = None if row_spans is None else row_spans[pid]
-        out = _decode_part(ct, need, expected_pa, page_keep, field_sel, span)
+        out = _decode_part(ct, need, expected_pa, page_keep, field_sel, span, n_rows)
         if out is None:  # all pages pruned → typed 0-row table
             return pa.table({c: pa.array([], type=expected_pa[c]) for c in need})
         return out
 
-    # EXCHANGE-FREE decode: every chunk file is one partition's rows and
-    # one parquet row group, so a file never splits across scan tasks
-    # and a partition's metadata rows arrive CONTIGUOUS in the scan
-    # stream, with part_id constant per file. split_runs hands each
-    # partition's rows to survives() and raises if that contiguity ever
-    # breaks. A survivor's chunk file is read here, typed and projected
-    # to the page index and payload, so payload bytes never pass through
-    # the JVM and a pruned partition's payload is never read at all.
-    def rebuild_runs(batches):
-        import pyarrow.compute as pc
-
+    # Each task gets a range of positions in ``ids`` (the listing rides
+    # in this closure). Per file: one open and one footer parse, the
+    # metadata fields for the survival test, then the payload and page
+    # index of a survivor from the same open file. Payload bytes never
+    # pass through the JVM, and a pruned file's payload is never read.
+    def decode_parts(batches):
         roots: dict = {}
-        for g in snapshot.split_runs(batches, "part_id"):
-            if not survives(g):
-                continue
-            pid = int(g.column("part_id")[0].as_py())
-            sid = None if None in dirs else pid >> shift
-            if sid not in roots:
-                roots[sid] = fsio.resolve(dirs[sid], filesystem)
-            fs, root = roots[sid]
-            local = pid if sid is None else pid - (sid << shift)
-            ct = snapshot.read_chunk_file(fs, snapshot.chunk_path(root, local), _PART_FIELDS)
-            acc_parts_read.add(1)
-            ct = ct.filter(pc.is_in(ct.column("column"), value_set=need_arr))
-            yield from rebuild(ct, pid).to_batches()
+        for rb in batches:
+            for pos in rb.column(0).to_numpy().tolist():
+                pid = int(ids[pos])
+                sid = None if None in dirs else pid >> shift
+                if sid not in roots:
+                    roots[sid] = fsio.resolve(dirs[sid], filesystem)
+                fs, root = roots[sid]
+                path = snapshot.chunk_path(root, pid if sid is None else pid - (sid << shift))
+                try:
+                    f = snapshot.ChunkFile(fs, path)
+                except FileNotFoundError as e:
+                    raise FileNotFoundError(
+                        f"chunk file {path} does not exist; it was listed when the read was built"
+                    ) from e
+                with f:
+                    if tested and not survives(f.read(meta_fields), sid):
+                        continue
+                    ct = f.read([*_PART_FIELDS, "n_rows"])
+                acc_parts_read.add(1)
+                yield from rebuild(ct, pid).to_batches()
 
     import datetime as _dt
 
-    out = meta.mapInArrow(rebuild_runs, out_schema)
+    out = spark.range(len(ids), numPartitions=n_tasks).mapInArrow(decode_parts, out_schema)
     # residual row filters, as one filter: zone maps prune at chunk/page
     # granularity, these make every predicate exact. The key column rides
     # along for pruning; the final select drops it unless requested.

@@ -16,9 +16,9 @@ renamed into ``chunks/``), then a slim commit marker. A marker therefore
 always has its data file; the markers are the resume ledger
 (``committed_parts``) and the torn-snapshot check (``torn_parts``).
 
-Part identity lives in the chunk FILENAME (``chunk_frame`` derives
-``part_id`` from it), which is what lets a keeper be carried into a new
-snapshot as a byte-verbatim file copy.
+Part identity lives in the chunk FILENAME (``chunk_frame`` and
+``chunk_listing`` derive ``part_id`` from it), which is what lets a
+keeper be carried into a new snapshot as a byte-verbatim file copy.
 
 Marker fields: ``part_id``, ``file``, ``rows``, ``wall_s``, plus
 ``cpu_s`` and the writer's planned partition count ``n_parts`` for
@@ -44,9 +44,10 @@ A chunk file holds one row per column of its partition, typed by
     qgrid                                quantile grid (json text)
     bloom, ndv_hll                       bloom filter, NDV sketch
     payload                              the encoded chunk
-Every chunk read goes through ``chunk_frame`` (Spark) or
-``read_chunk_file`` (pyarrow), both typed by that schema: a field
-missing from an older file reads as null, so no reader asks which
+Every chunk read goes through ``chunk_frame`` (Spark) or ``ChunkFile``
+(pyarrow: one open and one footer parse, then any number of field reads;
+``read_chunk_file`` is its one-read form), all typed by that schema: a
+field missing from an older file reads as null, so no reader asks which
 fields a file has. The metric rows the writers return are the chunk
 rows without ``payload``, ``bloom``, ``ndv_hll``, ``qgrid``,
 ``bounds_order`` and the page min/max/null lists, plus ``wall_s``.
@@ -55,6 +56,7 @@ rows without ``payload``, ``bloom``, ``ndv_hll``, ``qgrid``,
 from __future__ import annotations
 
 import json
+import re
 import time
 import uuid
 
@@ -182,42 +184,86 @@ def chunk_frame(spark, paths: list[str]) -> DataFrame:
     )
 
 
-def read_chunk_file(fs, path: str, columns: list[str] | None = None) -> pa.Table:
-    """A chunk file read through pyarrow, typed by ``CHUNK_PA_SCHEMA``:
-    a field the file lacks reads as null.
+class ChunkFile:
+    """One chunk file, opened once through pyarrow: ``read`` any fields,
+    typed by ``CHUNK_PA_SCHEMA`` (a field the file lacks reads as null),
+    as often as needed, with the footer parsed once. The decoder reads
+    a file's metadata fields, tests them, and reads the payload of a
+    survivor from the same open file.
 
     The file is read by ``pq.ParquetFile`` on the calling thread. The
     dataset reader behind ``pq.read_table`` would cost every fresh
     Python worker about 0.26 CPU-s to import, and a thread pool, to read
     what is one row group."""
-    fs = fs or pafs.LocalFileSystem()
-    want = CHUNK_PA_SCHEMA if columns is None else pa.schema(
-        [CHUNK_PA_SCHEMA.field(c) for c in columns]
-    )
-    with fs.open_input_file(path) as f:
-        pf = pq.ParquetFile(f)
-        have = set(pf.schema_arrow.names)
-        t = pf.read(columns=[c for c in want.names if c in have], use_threads=False)
-        n = pf.metadata.num_rows
-    return pa.table(
-        [
-            t.column(fld.name).cast(fld.type) if fld.name in have
-            else pa.nulls(n, fld.type)
-            for fld in want
-        ],
-        schema=want,
-    )
+
+    def __init__(self, fs, path: str):
+        self._f = (fs or pafs.LocalFileSystem()).open_input_file(path)
+        try:
+            self._pf = pq.ParquetFile(self._f)
+        except BaseException:
+            self._f.close()
+            raise
+        self._have = set(self._pf.schema_arrow.names)
+
+    def read(self, columns: list[str] | None = None) -> pa.Table:
+        want = CHUNK_PA_SCHEMA if columns is None else pa.schema(
+            [CHUNK_PA_SCHEMA.field(c) for c in columns]
+        )
+        t = self._pf.read(columns=[c for c in want.names if c in self._have], use_threads=False)
+        n = self._pf.metadata.num_rows
+        return pa.table(
+            [
+                t.column(fld.name).cast(fld.type) if fld.name in self._have
+                else pa.nulls(n, fld.type)
+                for fld in want
+            ],
+            schema=want,
+        )
+
+    def close(self) -> None:
+        self._f.close()
+
+    def __enter__(self) -> "ChunkFile":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
+
+
+def read_chunk_file(fs, path: str, columns: list[str] | None = None) -> pa.Table:
+    """The ``columns`` of a chunk file (all by default), read once
+    through ``ChunkFile``."""
+    with ChunkFile(fs, path) as f:
+        return f.read(columns)
 
 
 def _marker_ids(fs, root: str) -> list[int]:
-    commits = fsio.join(root, COMMITS)
-    if not fsio.is_dir(fs, commits):
-        return []
     return [
         int(f.split(".")[0])
-        for f in fsio.listdir(fs, commits)
+        for f in fsio.listdir(fs, fsio.join(root, COMMITS))
         if f.endswith(".json") and f.split(".")[0].isdigit()
     ]
+
+
+_CHUNK_NAME = re.compile(r"part-(\d+)\.parquet")
+
+
+def chunk_listing(snapshot_dir: str, filesystem=None) -> tuple[np.ndarray, np.ndarray, list[int]]:
+    """One listing each of ``chunks/`` and ``_commits/``: the chunk
+    files' part ids and byte sizes (int64 arrays in part id order), and
+    the torn part ids (a commit marker without its chunk file), sorted.
+    No file is stat-ed on its own, so the cost is two listings at any
+    partition count."""
+    fs, root = fsio.resolve(snapshot_dir, filesystem)
+    infos = fs.get_file_info(pafs.FileSelector(chunks_dir(root), allow_not_found=True))
+    found = sorted(
+        (int(m.group(1)), i.size)
+        for i in infos
+        if i.is_file and (m := _CHUNK_NAME.fullmatch(i.base_name))
+    )
+    ids, sizes = np.array(found, dtype=np.int64).reshape(-1, 2).T.copy()
+    torn = sorted(set(_marker_ids(fs, root)).difference(ids.tolist()))
+    return ids, sizes, torn
 
 
 def committed_parts(snapshot_dir: str, filesystem=None) -> set[int]:
@@ -239,11 +285,7 @@ def planned_parts(snapshot_dir: str, parts: set[int], filesystem=None) -> int | 
 
 def torn_parts(snapshot_dir: str, filesystem=None) -> list[int]:
     """Part ids with a commit marker but no chunk file, sorted."""
-    fs, root = fsio.resolve(snapshot_dir, filesystem)
-    return sorted(
-        pid for pid in _marker_ids(fs, root)
-        if not fsio.exists(fs, chunk_path(root, pid))
-    )
+    return chunk_listing(snapshot_dir, filesystem)[2]
 
 
 class PartWriter:

@@ -246,9 +246,10 @@ def test_table_lookup_lists_snapshots_once(spark, lookup_table, monkeypatch):
     real = decode_job.check_integrity
 
     def check_then_swap(*args, **kwargs):
-        real(*args, **kwargs)
+        listing = real(*args, **kwargs)
         monkeypatch.setattr(table, "snapshot_dirs", lambda *a, **k: [])
         monkeypatch.setattr(table, "read_manifest", lambda *a, **k: {"snapshots": []})
+        return listing
 
     monkeypatch.setattr(decode_job, "check_integrity", check_then_swap)
     df = decode_job.decode(spark, tdir, key_eq=("url", hit), as_of=3)
@@ -573,16 +574,26 @@ def _executions(spark) -> list:
     return [xs.apply(i) for i in range(xs.size())]
 
 
-@pytest.mark.parametrize("kind", sorted(JOBS_PER_READ))
-def test_no_decode_query_reads_payload(spark, url_snap, src, kind):
-    """The JVM never reads a payload: every query a read runs scans
-    metadata only, and the decoder reads the survivors' chunk files."""
+def _decode_scans(spark, snap_dir: str, kw: dict) -> list[str]:
+    """The ReadSchema of every file scan in the queries a read runs."""
     before = {e.executionId() for e in _executions(spark)}
-    decode_job.decode(spark, url_snap, **_read_kwargs(src, kind)).collect()
+    decode_job.decode(spark, snap_dir, **kw).collect()
     plans = [e.physicalPlanDescription() for e in _executions(spark)
              if e.executionId() not in before]
-    schemas = [m for p in plans for m in re.findall(r"ReadSchema: [^\n]*", p)]
-    assert schemas and not [m for m in schemas if "payload" in m]
+    assert plans
+    return [m for p in plans for m in re.findall(r"ReadSchema: [^\n]*", p)]
+
+
+@pytest.mark.parametrize("kind", sorted(JOBS_PER_READ))
+def test_no_decode_query_reads_payload(spark, url_snap, src, kind):
+    """The JVM reads no chunk file: no decode query holds a file scan,
+    except row_range's prefix sums over the row counts, which read no
+    payload. The decoder reads every chunk file itself."""
+    schemas = _decode_scans(spark, url_snap, _read_kwargs(src, kind))
+    if kind == "row_range":
+        assert schemas and not [m for m in schemas if "payload" in m]
+    else:
+        assert schemas == []
 
 
 def _part_rows(snap_dir: str) -> list[tuple[str, int]]:
@@ -657,27 +668,18 @@ def test_key_eq_compiles_no_code_after_warm_up(spark, url_snap, src):
 @pytest.mark.parametrize("kind", ["full", "key_eq", "key_range"])
 def test_decoder_reads_through_the_given_filesystem(spark, url_snap, src, kind, tmp_path):
     """A ``filesystem=`` object travels to the executors, and the decoder
-    opens the survivors' chunk files through it. Spark's metadata scan
-    reads a copy whose payloads are garbage; the filesystem sees an
-    intact copy at the same path, so a chunk read that bypassed it
-    would raise."""
+    opens the survivors' chunk files through it. The snapshot exists only
+    under that filesystem, at a path that names nothing outside it."""
     import shutil
 
     from pyarrow import fs as pafs
 
-    spark_dir = str(tmp_path / "snap")
-    shutil.copytree(url_snap, spark_dir)
-    for path in _all_files(spark_dir):
-        t = pq.read_table(path)
-        junk = pa.array([b"\x00garbage"] * t.num_rows, pa.binary())
-        t = t.set_column(t.schema.get_field_index("payload"), "payload", junk)
-        pq.write_table(t, path, compression="none")
     base = str(tmp_path / "fs_view")
-    shutil.copytree(url_snap, base + spark_dir)
+    shutil.copytree(url_snap, os.path.join(base, "snap"))
     fs = pafs.SubTreeFileSystem(base, pafs.LocalFileSystem())
     kw = _read_kwargs(src, kind)
     want = sorted(map(tuple, decode_job.decode(spark, url_snap, **kw).collect()))
-    rows, parts = _read(decode_job.decode(spark, spark_dir, filesystem=fs, **kw))
+    rows, parts = _read(decode_job.decode(spark, "snap", filesystem=fs, **kw))
     assert want and sorted(map(tuple, rows)) == want
     assert parts == len(_read_survivors(spark, url_snap, src, kind))
 
@@ -694,3 +696,155 @@ def test_scheme_pyarrow_cannot_open_fails_at_decode(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+
+
+def test_integrity_check_lists_each_dir_once(spark, snap, urls, tmp_path, monkeypatch):
+    """The integrity check is the markers minus the listed chunk files: a
+    decode stats no chunk file or marker on its own, the listing it
+    returns is what the decoder reads, and a torn snapshot still raises."""
+    import shutil
+
+    from parquet2_spark import fsio
+
+    calls = []
+    real = fsio.exists
+
+    def counted(fs, path):
+        calls.append(path)
+        return real(fs, path)
+
+    monkeypatch.setattr(fsio, "exists", counted)
+    ((sid, sdir, ids, sizes),) = decode_job.check_integrity(snap)
+    files = sorted(os.listdir(os.path.join(snap, "chunks")))
+    assert (sid, sdir) == (None, snap)
+    assert [f"part-{p:06d}.parquet" for p in ids.tolist()] == files
+    assert sizes.tolist() == [os.path.getsize(os.path.join(snap, "chunks", f)) for f in files]
+    assert [r["url"] for r in decode_job.decode(spark, snap, key_eq=("url", urls[9])).collect()] == [urls[9]]
+    assert all(p.endswith(table.MANIFEST) for p in calls)
+
+    d = str(tmp_path / "snap")
+    shutil.copytree(snap, d)
+    os.remove(os.path.join(d, "chunks", files[2]))
+    with pytest.raises(FileNotFoundError, match=r"is torn: committed partitions missing data files: \[2\]"):
+        decode_job.decode(spark, d)
+
+
+def _logging_fs(log: str):
+    """A local filesystem that appends one line to ``log`` per file it
+    opens for random access and one per read of such a file. The
+    decoder's tasks run in other processes, so the log is a file."""
+    import io
+
+    from pyarrow import fs as pafs
+
+    def note(line: str) -> None:
+        with open(log, "a") as f:
+            f.write(line + "\n")
+
+    class LoggedFile(io.FileIO):
+        def read(self, n=-1):
+            at = self.tell()
+            b = super().read(n)
+            note(f"read\t{self.name}\t{at}\t{len(b)}")
+            return b
+
+    class Handler(pafs.FileSystemHandler):
+        def __init__(self):
+            self.local = pafs.LocalFileSystem()
+
+        def equals(self, other):
+            return isinstance(other, Handler)
+
+        def get_type_name(self):
+            return "logging"
+
+        def normalize_path(self, path):
+            return path
+
+        def get_file_info(self, paths):
+            return self.local.get_file_info(paths)
+
+        def get_file_info_selector(self, selector):
+            return self.local.get_file_info(selector)
+
+        def open_input_file(self, path):
+            note(f"open\t{path}")
+            return pa.PythonFile(LoggedFile(path, "r"), mode="r")
+
+        def open_input_stream(self, path):
+            return self.local.open_input_stream(path)
+
+        def create_dir(self, path, recursive):
+            self.local.create_dir(path, recursive=recursive)
+
+        def delete_dir(self, path):
+            self.local.delete_dir(path)
+
+        def delete_dir_contents(self, path, missing_dir_ok=False):
+            self.local.delete_dir_contents(path, missing_dir_ok=missing_dir_ok)
+
+        def delete_root_dir_contents(self):
+            raise NotImplementedError
+
+        def delete_file(self, path):
+            self.local.delete_file(path)
+
+        def move(self, src, dest):
+            self.local.move(src, dest)
+
+        def copy_file(self, src, dest):
+            self.local.copy_file(src, dest)
+
+        def open_output_stream(self, path, metadata):
+            return self.local.open_output_stream(path, metadata=metadata)
+
+        def open_append_stream(self, path, metadata):
+            return self.local.open_append_stream(path, metadata=metadata)
+
+    return pafs.PyFileSystem(Handler())
+
+
+def _payload_span(path: str) -> tuple[int, int]:
+    """Byte range of a chunk file's ``payload`` column chunk."""
+    rg = pq.ParquetFile(path).metadata.row_group(0)
+    (col,) = [rg.column(j) for j in range(rg.num_columns) if rg.column(j).path_in_schema == "payload"]
+    start = col.dictionary_page_offset if col.has_dictionary_page else col.data_page_offset
+    return start, start + col.total_compressed_size
+
+
+@pytest.mark.parametrize("kind", ["full", "key_eq"])
+def test_each_chunk_file_is_opened_once(spark, url_snap, src, kind, tmp_path):
+    """The decoder opens every listed chunk file exactly once, and reads
+    the payload of the survivors only. The footer read (the one that
+    ends at the end of the file) is not a payload read."""
+    log = str(tmp_path / "io.log")
+    df = decode_job.decode(spark, url_snap, filesystem=_logging_fs(log), **_read_kwargs(src, kind))
+    rows, parts = _read(df)
+    want = sorted(map(tuple, decode_job.decode(spark, url_snap, **_read_kwargs(src, kind)).collect()))
+    assert want and sorted(map(tuple, rows)) == want
+    lines = [ln.split("\t") for ln in open(log).read().splitlines()]
+    opened = [os.path.realpath(p) for op, p, *_ in lines if op == "open"]
+    files = _all_files(url_snap)
+    assert sorted(opened) == sorted(files)
+    payload_read = set()
+    for op, p, *at in lines:
+        p = os.path.realpath(p)
+        if op != "read" or p not in files:
+            continue
+        lo, hi = _payload_span(p)
+        off, n = int(at[0]), int(at[1])
+        if off < hi and off + n > lo and off + n < os.path.getsize(p):
+            payload_read.add(p)
+    assert payload_read == _read_survivors(spark, url_snap, src, kind)
+    assert parts == len(payload_read)
+
+
+@pytest.mark.parametrize("kind", ["full", "key_eq", "row_range"])
+def test_decode_tasks_follow_the_file_split_rule(spark, url_snap, src, kind):
+    """A read has as many tasks as Spark's parquet scan of the chunk files
+    it lists: all 16 files here (4 tasks), or a row range's files."""
+    listed = _read_survivors(spark, url_snap, src, kind) if kind == "row_range" else _all_files(url_snap)
+    scan = spark.read.parquet(*sorted(listed)).rdd.getNumPartitions()
+    tasks = decode_job.decode(spark, url_snap, **_read_kwargs(src, kind)).rdd.getNumPartitions()
+    assert tasks == scan
+    assert scan == (4 if kind != "row_range" else len(listed))

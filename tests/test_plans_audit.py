@@ -1,6 +1,6 @@
 """Physical-plan audit (PLANS.md): the scale-critical plan properties are
-asserted, not just claimed — pushdown at the scan, broadcast of small
-sides, no payload columns in projected ReadSchema."""
+asserted, not just claimed — broadcast of small sides, no join and no
+chunk-file scan in a decode plan (the decoder reads the chunk files)."""
 
 from __future__ import annotations
 
@@ -53,32 +53,48 @@ def test_encode_planner_broadcasts_hot_hosts(spark):
     assert "BroadcastHashJoin" in plan2 or "BroadcastNestedLoopJoin" in plan2
 
 
-def test_decode_projection_pushes_column_filter(spark, snap):
-    plan = _explain(decode_job.decode(spark, snap, columns=["url"]))
-    assert re.search(r"PushedFilters: \[[^\]]*EqualTo\(column,url\)", plan)
-    # stats/bloom columns pruned from the projected scan's ReadSchema
-    rs = re.search(r"ReadSchema: [^\n]*", plan).group(0)
-    assert "bloom" not in rs and "min_bin" not in rs
-
-
 def _executions(spark) -> list:
     """Executed SQL queries (works with the UI disabled)."""
     xs = spark._jsparkSession.sharedState().statusStore().executionsList()
     return [xs.apply(i) for i in range(xs.size())]
 
 
-def test_key_range_pushes_zone_map_filters_to_scan(spark, snap):
-    lo, hi = "https://host001", "https://host004"
+def _one_query(spark, df) -> str:
+    """The physical plan of the one query ``df.collect()`` runs."""
     before = {e.executionId() for e in _executions(spark)}
-    df = decode_job.decode(spark, snap, key_range=("url", lo, hi))
-    assert "Join" not in _explain(df)
     df.collect()
-    # the one query: zone maps AT the scan, no payload read by the JVM
     (query,) = [e.physicalPlanDescription() for e in _executions(spark)
                 if e.executionId() not in before]
-    pushed = " ".join(re.findall(r"PushedFilters: [^\n]*", query))
-    assert "max_bin" in pushed and "min_bin" in pushed
-    assert "payload" not in re.search(r"ReadSchema: [^\n]*", query).group(0)
+    return query
+
+
+def test_decode_projection_reads_no_chunk_file_in_the_jvm(spark, snap):
+    df = decode_job.decode(spark, snap, columns=["url"])
+    query = _one_query(spark, df)
+    assert "Join" not in query
+    # no file scan: the decoder opens every chunk file itself
+    assert not re.search(r"ReadSchema: ", query)
+    assert df.p2s_decode_metrics["parts_read"].value == len(os.listdir(os.path.join(snap, "chunks")))
+
+
+def test_chunk_frame_pushes_column_filter(spark, snap):
+    """The metadata queries (stats, quantiles, compaction plans) read the
+    chunks frame: a column filter reaches its parquet scan, and the
+    filename-derived part_id does not block the pushdown."""
+    df = decode_job.chunks_df(spark, snap).filter(F.col("column") == "url")
+    plan = _explain(df.select("part_id", "min_bin"))
+    assert re.search(r"PushedFilters: \[[^\]]*EqualTo\(column,url\)", plan)
+    rs = re.search(r"ReadSchema: [^\n]*", plan).group(0)
+    assert "payload" not in rs and "bloom" not in rs
+
+
+def test_key_range_prunes_in_the_decoder(spark, snap):
+    lo, hi = "https://host001", "https://host004"
+    df = decode_job.decode(spark, snap, key_range=("url", lo, hi))
+    assert "Join" not in _explain(df)
+    # the one query has no file scan: the zone maps are tested by the
+    # decoder on each chunk file's metadata rows
+    assert not re.search(r"ReadSchema: ", _one_query(spark, df))
     # the decoder opened only the files whose zone map meets the range
     cdir = os.path.join(snap, "chunks")
     want = 0

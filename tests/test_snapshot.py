@@ -119,9 +119,8 @@ def _web_rows(n):
 
 
 class TestSplitterPathsCheckContiguity:
-    """A repeated part_id reaching either the encode or the decode
-    partition task fails the job instead of writing or decoding one
-    partition as two."""
+    """A repeated part_id reaching the encode's partition task fails the
+    job instead of writing one partition as two."""
 
     def test_encode_path_raises(self, spark, tmp_path, monkeypatch):
         from pyspark.sql import functions as F
@@ -138,27 +137,6 @@ class TestSplitterPathsCheckContiguity:
         cfg = encode_job.EncodeConfig(shuffle=False, host_from_key=False)
         with pytest.raises(Exception, match="reappears"):
             encode_job.encode(spark, df, str(tmp_path / "snap"), cfg)
-
-    def test_decode_path_raises(self, spark, tmp_path, monkeypatch):
-        from parquet2_spark.operators import decode_job, encode_job
-
-        df = spark.createDataFrame(_web_rows(400), "url string, n int, text string")
-        snap = str(tmp_path / "snap")
-        encode_job.encode(
-            spark, df, snap, encode_job.EncodeConfig(target_rows=100, num_partitions=3)
-        )
-        assert decode_job.decode(spark, snap).count() == 400
-
-        real = decode_job.chunks_df
-
-        def by_column(*a, **k):
-            # one task, rows ordered by column: every part_id recurs once
-            # per column
-            return real(*a, **k).repartition(1).sortWithinPartitions("column", "part_id")
-
-        monkeypatch.setattr(decode_job, "chunks_df", by_column)
-        with pytest.raises(Exception, match="reappears"):
-            decode_job.decode(spark, snap).count()
 
 
 def _package_sources():
