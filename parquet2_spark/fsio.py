@@ -1,16 +1,14 @@
 """Filesystem-agnostic metadata/side-channel IO via ``pyarrow.fs``.
 
-The engine has two IO planes:
+Every file the engine reads or writes goes through one
+``pyarrow.fs.FileSystem`` (``resolve``, or an explicit ``filesystem=``),
+so the same code runs against local disk, HDFS, or S3:
 
-- **data plane**: the chunk files. ``decode`` lists them on the driver
-  and reads them in the executors' Python through this module's
-  filesystem (``snapshot.ChunkFile``); the stats queries read them with
-  Spark's own scan (S3A/HDFS/local through Hadoop), addressed by URI;
-- **metadata plane**: commit markers, lineage sidecars, table manifests,
-  and the executor-side chunk-file writes. These previously used
-  ``os.*``/``open`` and silently assumed a shared POSIX filesystem; this
-  module routes them through ``pyarrow.fs.FileSystem`` so the same code
-  runs against local disk, HDFS, or S3.
+- the chunk files: listed on the driver, then read in the executors'
+  Python (``snapshot.ChunkFile``), by ``decode`` and by the metadata
+  queries alike (``decode_job.chunks_frame``); Spark scans none of them;
+- commit markers, lineage sidecars, table manifests, ``_metrics`` and
+  the executor-side chunk-file writes.
 
 Atomicity model (the part rename-free object stores change):
 

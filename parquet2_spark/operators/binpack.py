@@ -25,7 +25,8 @@ strategy for our chunk-file layout:
   the normal encode job, which merges them into fresh target-size
   partitions 0..k-1. Keepers are then numbered k..k+m-1.
 
-Everything is planned from the chunks parquet's METADATA columns —
+Everything is planned from the chunk files' METADATA rows
+(``decode_job.chunks_df``, which never reads a payload) —
 per-partition row counts, snapshot ids — entirely Spark-side: the
 driver never materializes a partition list (the keeper→new-id mapping
 is a per-snapshot window over metadata rows with O(#snapshots) offsets
@@ -91,7 +92,9 @@ def binpack_compact(
 
     designated = union_cols[0]
     meta = (
-        decode_job.chunks_df(spark, table_dir, filesystem=cfg.filesystem)
+        decode_job.chunks_df(
+            spark, table_dir, filesystem=cfg.filesystem, fields=["column", "n_rows"]
+        )
         .filter(F.col("column") == designated)
         .select("part_id", "n_rows")
     )

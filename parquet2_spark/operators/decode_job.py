@@ -8,9 +8,13 @@ file, in one Spark job: the driver lists each snapshot's chunk files
 once, and one ``mapInArrow`` decoder opens each listed file once, tests
 its metadata rows (zone maps, null counts, blooms), and reads, page-
 prunes (≙ IndexedPageReader) and decodes the payload of a survivor from
-the same open file. The stats queries (``stats``, ``quantiles``) read
-the chunks table as a Spark frame (``chunks_df``), where Catalyst prunes
-the payload out of the scan.
+the same open file. The metadata queries (``stats``, ``quantiles``,
+``row_range``'s prefix sums, the compaction plans and lineage) read the
+same listing through the same reader: ``chunks_frame`` opens each listed
+file once in a ``mapInArrow`` task and reads only the metadata fields its
+caller names, never the payload, and Spark aggregates the rows. No query
+runs a Spark parquet scan of chunk files, so every read goes through
+one filesystem (``fsio.resolve`` or ``filesystem=``).
 """
 
 from __future__ import annotations
@@ -278,63 +282,39 @@ def _decode_part(
     return pa.table(dict(zip(columns, cols)))
 
 
-def _snapshot_reads(
-    snapshot_dir: str,
-    as_of: int | None = None,
-    since: int | None = None,
-    filesystem=None,
-) -> list[tuple[int | None, str]]:
-    """The snapshots behind ``chunks_df``, resolved from the manifest
-    once: ``(sid, snapshot dir)`` per committed snapshot of a table dir
-    in ``(since, as_of]``, or ``[(None, snapshot_dir)]`` for a single
-    snapshot dir."""
-    from . import table as table_mod
-
-    if not table_mod.is_table(snapshot_dir, filesystem):
-        return [(None, snapshot_dir)]
-    snaps = table_mod.snapshot_dirs(snapshot_dir, as_of, filesystem, since)
-    if not snaps and since is None:
-        raise FileNotFoundError(f"table {snapshot_dir} has no committed snapshots")
-    # an empty incremental window (nothing new since the caller's
-    # checkpoint) reads as a zero-row chunks frame, not an error
-    return snaps
-
-
 def chunks_df(
     spark: SparkSession,
     snapshot_dir: str,
     as_of: int | None = None,
     since: int | None = None,
     filesystem=None,
+    fields: list[str] | None = None,
 ) -> DataFrame:
-    """The chunks table (metadata + payload), read typed by
-    ``snapshot.chunk_frame``. Stats queries should select
-    only metadata columns — parquet column pruning then never touches the
-    payload bytes. A multi-snapshot table dir unions every committed
-    snapshot's chunks with the part_id namespaced by snapshot id, so ids
-    never collide across snapshots. An empty ``since`` window gives a
-    typed zero-row frame.
-
-    Spark reads the chunk files here, so for a non-local filesystem the
-    snapshot paths must also be Spark-readable URIs (S3A/HDFS).
-    ``decode`` reads it only for ``row_range``'s prefix sums."""
+    """The chunks table's metadata rows (``chunks_frame``) over the chunk
+    files of a snapshot dir, or of every committed snapshot of a table
+    dir in ``(since, as_of]``: ``part_id`` plus ``fields`` (every field
+    but ``payload`` by default). An empty ``since`` window gives a typed
+    zero-row frame; a table with no committed snapshot, or a torn
+    snapshot, raises."""
     from . import table as table_mod
 
-    out = None
-    for sid, sdir in _snapshot_reads(snapshot_dir, as_of, since, filesystem):
-        d = snapshot.chunk_frame(spark, [snapshot.chunks_dir(sdir)])
-        if sid is not None:
-            d = d.withColumn(
-                "part_id",
-                F.lit(sid).cast("long") * F.lit(1 << table_mod.SNAP_SHIFT) + F.col("part_id"),
-            )
-        out = d if out is None else out.unionByName(d)
-    return snapshot.chunk_frame(spark, []) if out is None else out
+    snaps = None
+    if table_mod.is_table(snapshot_dir, filesystem):
+        snaps = table_mod.snapshot_dirs(snapshot_dir, as_of, filesystem, since)
+        if not snaps and since is None:
+            raise FileNotFoundError(f"table {snapshot_dir} has no committed snapshots")
+    listing = check_integrity(snapshot_dir, filesystem=filesystem, _snaps=snaps)
+    return chunks_frame(spark, listing, fields, filesystem)
 
 
-def stats(spark: SparkSession, snapshot_dir: str) -> DataFrame:
+def stats(spark: SparkSession, snapshot_dir: str, filesystem=None) -> DataFrame:
     """Per (column, codec) aggregate — the `parquet-tools meta` analog."""
-    df = chunks_df(spark, snapshot_dir)
+    df = chunks_df(
+        spark, snapshot_dir, filesystem=filesystem,
+        fields=["column", "codecs", "n_rows", "null_count", "raw_bytes", "enc_bytes",
+                "min_num", "max_num", "min_bin", "max_bin", "min_dbl", "max_dbl", "ndv",
+                "ndv_hll"],
+    )
     aggs = [
         F.count("*").alias("n_chunks"),
         F.sum("n_rows").alias("rows"),
@@ -481,9 +461,10 @@ def _gather_grids(
     # as_of/since window over multi-snapshot tables: quantiles of the
     # table as of a snapshot, or of an incremental delta only — the
     # planner's view matches exactly what decode(as_of=/since=) reads
-    df = chunks_df(spark, snapshot_dir, as_of, since, filesystem).filter(
-        F.col("column") == column
-    )
+    df = chunks_df(
+        spark, snapshot_dir, as_of, since, filesystem,
+        fields=["column", "qgrid", "n_rows", "null_count"],
+    ).filter(F.col("column") == column)
     sel = df.select(
         "qgrid", (F.col("n_rows") - F.coalesce(F.col("null_count"), F.lit(0))).alias("w")
     )
@@ -922,6 +903,82 @@ def _read_tasks(spark: SparkSession, sizes: np.ndarray) -> int:
     return max(1, min(tasks, len(sizes)))
 
 
+def _task_list(listing: list) -> tuple[np.ndarray, np.ndarray, dict]:
+    """A read's task list from ``check_integrity``'s listing: the listed
+    chunk files as global part ids (a table's namespaced by snapshot id)
+    in part id order, their byte sizes, and each snapshot's dir by sid."""
+    from . import table as table_mod
+
+    shift = table_mod.SNAP_SHIFT
+    dirs = {sid: sdir for sid, sdir, _, _ in listing}
+    ids = np.concatenate(
+        [np.empty(0, np.int64)]
+        + [lid if sid is None else lid + (sid << shift) for sid, _, lid, _ in listing]
+    )
+    sizes = np.concatenate([np.empty(0, np.int64)] + [sz for _, _, _, sz in listing])
+    return ids, sizes, dirs
+
+
+def _open_listed(batches, ids: np.ndarray, dirs: dict, filesystem):
+    """Inside a read task: ``(part id, sid, ChunkFile)`` for each listing
+    position in ``batches`` (a ``spark.range`` over ``ids``), every file
+    opened once through ``filesystem``. A listed file gone at read time
+    raises ``FileNotFoundError``."""
+    from . import table as table_mod
+
+    shift = table_mod.SNAP_SHIFT
+    roots: dict = {}
+    for rb in batches:
+        for pos in rb.column(0).to_numpy().tolist():
+            pid = int(ids[pos])
+            sid = None if None in dirs else pid >> shift
+            if sid not in roots:
+                roots[sid] = fsio.resolve(dirs[sid], filesystem)
+            fs, root = roots[sid]
+            path = snapshot.chunk_path(root, pid if sid is None else pid - (sid << shift))
+            try:
+                f = snapshot.ChunkFile(fs, path)
+            except FileNotFoundError as e:
+                raise FileNotFoundError(
+                    f"chunk file {path} does not exist; it was listed when the read was built"
+                ) from e
+            yield pid, sid, f
+
+
+def chunks_frame(
+    spark: SparkSession, listing: list, fields: list[str] | None = None, filesystem=None
+) -> DataFrame:
+    """The metadata frame of the chunk files in ``listing``
+    (``check_integrity``'s): one row per column chunk, ``part_id`` from
+    the listing (namespaced by snapshot id in a table) plus ``fields``
+    typed by ``snapshot.CHUNK_PA_SCHEMA`` (every field but ``payload`` by
+    default). One ``mapInArrow`` over a ``spark.range`` of listing
+    positions, in as many tasks as ``decode`` reads the same files with:
+    each task opens its files through ``filesystem`` with ``ChunkFile``
+    and reads those fields only, so a payload byte is never read and the
+    JVM scans no chunk file."""
+    if fields is None:
+        fields = [f for f in snapshot.CHUNK_PA_SCHEMA.names if f != "payload"]
+    fields = [f for f in fields if f != "part_id"]
+    schema = pa.schema([snapshot.CHUNK_PA_SCHEMA.field(f) for f in ["part_id", *fields]])
+    ids, sizes, dirs = _task_list(listing)
+
+    def read_meta(batches):
+        # a task's files hold at most a file split of bytes (payload
+        # included), so their metadata rows fit in memory as one table
+        out = []
+        for pid, _, f in _open_listed(batches, ids, dirs, filesystem):
+            with f:
+                t = f.read(fields)
+            out.append(t.add_column(0, "part_id", pa.array(np.full(t.num_rows, pid, np.int64))))
+        if out:
+            yield from pa.concat_tables(out).to_batches()
+
+    return spark.range(len(ids), numPartitions=_read_tasks(spark, sizes)).mapInArrow(
+        read_meta, snapshot.ddl(schema)
+    )
+
+
 def decode(
     spark: SparkSession,
     snapshot_dir: str,
@@ -952,9 +1009,8 @@ def decode(
     null-free proof, and the bloom probe. For a survivor it reads the
     payload and the page index from the same open file, skips pages by
     the page index, and decodes. Residual row filters make every
-    predicate exact. ``row_range`` alone runs Spark queries over the
-    chunk files: the prefix sums over their row counts, which read no
-    payload.
+    predicate exact. ``row_range`` first runs its prefix sums over the
+    listed files' row counts (``chunks_frame``, no payload read).
 
     One reader sees ``snapshot_dir``: pyarrow (``fsio.resolve``, or the
     ``filesystem=`` object), for the manifest, lineage and listing on the
@@ -963,8 +1019,7 @@ def decode(
     object is pickled to them, and a URI's credentials or native client
     (libhdfs) must be there. A URI that pyarrow cannot open (a
     Hadoop-only scheme such as ``s3a://``) raises ``ValueError`` here,
-    before any job. ``row_range``'s prefix sums are Spark queries, so for
-    a row range the path must also name the same files to Spark.
+    before any job.
 
     ``key_range=(column, lo, hi)`` (``key_ranges``: a list, AND-combined)
     keeps a partition whose chunk zone map may meet the range.
@@ -1075,7 +1130,7 @@ def decode(
         if "snapshots" in lin or "table" in lin:
             raise ValueError("row_range requires a single-snapshot dir (not a table)")
         start, stop = int(row_range[0]), int(row_range[1])
-        # partition row counts from the chunk parquet, cumulated
+        # partition row counts from the listed chunk files, cumulated
         # SPARK-SIDE so the driver collects only the partitions
         # whose row interval overlaps — O(surviving), never
         # O(#partitions). Row position is defined by global part_id
@@ -1091,7 +1146,7 @@ def decode(
 
         first = lin["columns"][0]
         meta = (
-            chunks_df(spark, snapshot_dir, filesystem=filesystem)
+            chunks_frame(spark, listing, ["column", "n_rows"], filesystem)
             .filter(F.col("column") == first)
             .select("part_id", "n_rows")
             .withColumn("_grp", F.floor(F.col("part_id") / F.lit(_RR_GROUP)))
@@ -1183,13 +1238,7 @@ def decode(
     )
     # the decoder's task list: the listed chunk files (a row range's
     # only), as global part ids in part id order
-    shift = table_mod.SNAP_SHIFT
-    dirs = {sid: sdir for sid, sdir, _, _ in listing}
-    ids = np.concatenate(
-        [np.empty(0, np.int64)]
-        + [lid if sid is None else lid + (sid << shift) for sid, _, lid, _ in listing]
-    )
-    sizes = np.concatenate([np.empty(0, np.int64)] + [sz for _, _, _, sz in listing])
+    ids, sizes, dirs = _task_list(listing)
     if row_spans is not None:
         inside = np.isin(ids, np.fromiter(row_spans, np.int64, len(row_spans)))
         ids, sizes = ids[inside], sizes[inside]
@@ -1315,27 +1364,13 @@ def decode(
     # index of a survivor from the same open file. Payload bytes never
     # pass through the JVM, and a pruned file's payload is never read.
     def decode_parts(batches):
-        roots: dict = {}
-        for rb in batches:
-            for pos in rb.column(0).to_numpy().tolist():
-                pid = int(ids[pos])
-                sid = None if None in dirs else pid >> shift
-                if sid not in roots:
-                    roots[sid] = fsio.resolve(dirs[sid], filesystem)
-                fs, root = roots[sid]
-                path = snapshot.chunk_path(root, pid if sid is None else pid - (sid << shift))
-                try:
-                    f = snapshot.ChunkFile(fs, path)
-                except FileNotFoundError as e:
-                    raise FileNotFoundError(
-                        f"chunk file {path} does not exist; it was listed when the read was built"
-                    ) from e
-                with f:
-                    if tested and not survives(f.read(meta_fields), sid):
-                        continue
-                    ct = f.read([*_PART_FIELDS, "n_rows"])
-                acc_parts_read.add(1)
-                yield from rebuild(ct, pid).to_batches()
+        for pid, sid, f in _open_listed(batches, ids, dirs, filesystem):
+            with f:
+                if tested and not survives(f.read(meta_fields), sid):
+                    continue
+                ct = f.read([*_PART_FIELDS, "n_rows"])
+            acc_parts_read.add(1)
+            yield from rebuild(ct, pid).to_batches()
 
     import datetime as _dt
 

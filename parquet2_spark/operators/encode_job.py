@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from .. import blob, fsio
 from ..functions.selector import SelectorConfig
 from . import snapshot
-from .decode_job import _zone_bound
+from .decode_job import _zone_bound, chunks_frame
 from .snapshot import committed_parts
 
 
@@ -608,7 +608,7 @@ def commit_metrics_action(
     # own action as observed metrics — per-column conditional aggregates
     # reduced map-side, O(#columns) scalars to the driver, zero extra
     # jobs. A resumed or dirty snapshot falls back to finalize()'s scan
-    # of the chunk parquet (the authoritative store).
+    # of the chunk files' metadata (the authoritative store).
     fs0, root0 = fsio.resolve(snapshot_dir, cfg.filesystem)
     chunks0 = snapshot.chunks_dir(root0)
     fresh = not n_resumed and not (
@@ -703,11 +703,11 @@ def finalize(
 ) -> dict:
     """Write the snapshot-level ``_lineage.json`` sidecar.
 
-    The per-column aggregates come from ONE Spark job over the chunk
-    parquet with column pruning (``payload`` is never read — columnar
-    scan of a few metadata columns), reduced to O(#columns) rows on the
-    driver — or, for a fresh encode, arrive ``precomputed`` as observed
-    metrics of the encode job itself (zero extra jobs). The old
+    The per-column aggregates come from ONE Spark query over the chunk
+    files' metadata frame (``decode_job.chunks_frame``: a few metadata
+    fields per file, ``payload`` is never read), reduced to O(#columns)
+    rows on the driver — or, for a fresh encode, arrive ``precomputed``
+    as observed metrics of the encode job itself (zero extra jobs). The old
     implementation looped over every ``_commits/*.json`` marker
     driver-side — O(#partitions) metadata reads that would take hours at
     10^6 partitions. Per-partition detail rows (wall, codec mix per
@@ -715,27 +715,22 @@ def finalize(
     commit markers stay as the slim resume ledger only.
     """
     fs, root = fsio.resolve(snapshot_dir, cfg.filesystem)
-    chunks_dir = snapshot.chunks_dir(root)
-    chunk_files = (
-        [f for f in fsio.listdir(fs, chunks_dir) if f.endswith(".parquet")]
-        if fsio.is_dir(fs, chunks_dir)
-        else []
-    )
-    have_chunks = bool(chunk_files)
     per_col: dict[str, dict] = {}
     n_committed = 0
     max_part_rows = 0
     if precomputed is not None:
         per_col, n_committed, max_part_rows = precomputed
-    elif have_chunks and cfg.filesystem is None:
+    else:
         # one chunk file per partition, identity in the filename: the
         # committed-partition count is the FILE count (the embedded
         # part_id column is stale in verbatim-copied keepers)
-        n_committed = len(chunk_files)
-        ch = snapshot.chunk_frame(spark, [snapshot.chunks_dir(snapshot_dir)]).select(
-            "column", "codecs", "raw_bytes", "enc_bytes", "n_rows"
+        ids, sizes, _ = snapshot.chunk_listing(snapshot_dir, cfg.filesystem)
+        n_committed = len(ids)
+        ch = chunks_frame(
+            spark, [(None, snapshot_dir, ids, sizes)],
+            ["column", "codecs", "raw_bytes", "enc_bytes", "n_rows"], cfg.filesystem,
         )
-        agg_rows = (
+        agg_rows = [] if not n_committed else (
             ch.groupBy("column")
             .agg(
                 F.sum("raw_bytes").alias("raw_bytes"),
@@ -756,33 +751,6 @@ def finalize(
                 "codecs": sorted(set(r["codecs"])),
             }
             max_part_rows = max(max_part_rows, int(r["max_part_rows"] or 0))
-    elif have_chunks:
-        # custom metadata-plane filesystem: Spark cannot address the
-        # path, so prune to the metric columns (parquet columnar —
-        # payload bytes are never read) and reduce through pyarrow
-        n_committed = len(chunk_files)
-        stat_cols = ["column", "codecs", "raw_bytes", "enc_bytes", "n_rows"]
-        tbl = pa.concat_tables(
-            snapshot.read_chunk_file(fs, fsio.join(chunks_dir, f), stat_cols)
-            for f in chunk_files
-        )
-        g = tbl.group_by("column").aggregate(
-            [
-                ("raw_bytes", "sum"),
-                ("enc_bytes", "sum"),
-                ("n_rows", "sum"),
-                ("n_rows", "max"),
-                ("codecs", "distinct"),
-            ]
-        )
-        for r in g.to_pylist():
-            per_col[r["column"]] = {
-                "raw_bytes": int(r["raw_bytes_sum"]),
-                "enc_bytes": int(r["enc_bytes_sum"]),
-                "n_rows": int(r["n_rows_sum"]),
-                "codecs": sorted({c for s in r["codecs_distinct"] for c in s.split(",")}),
-            }
-            max_part_rows = max(max_part_rows, int(r["n_rows_max"] or 0))
 
     lineage = {
         "snapshot": snapshot_dir,

@@ -10,10 +10,11 @@ partition overlaps only a handful of output buckets, and compaction is
 really a per-bucket merge of a few sorted runs.
 
 This module plans ``bucket ← overlapping input chunk files`` from CHUNK
-ZONE MAPS ONLY (stats columns of the chunks parquet — no payload bytes
-are read during planning), then runs ONE FUSED Arrow task per output
-bucket that reads just its overlapping chunk files directly from the
-store through decode's partition reader (``decode_job._page_keep`` and
+ZONE MAPS ONLY (the metadata frame ``decode_job.chunks_frame`` over every
+snapshot's chunk files — no payload bytes are read during planning),
+then runs ONE FUSED Arrow task per output bucket that reads just its
+overlapping chunk files directly from the store through decode's
+partition reader (``decode_job._page_keep`` and
 ``_decode_part``, the same page pruning and chunk decode ``decode()``
 runs): it prunes to the bucket's pages via the PAGE INDEX (inputs are
 key-sorted, so a bucket's rows are a contiguous page span — pages
@@ -184,40 +185,40 @@ def plan(
             e = e + (stat > lt).cast("int")
         return F.coalesce(e, F.lit(0))
 
-    frames = []
-    for _sid, sdir in snaps:
-        meta = (
-            # part_id from the FILENAME: copied keepers carry a stale
-            # embedded part_id, and this pid names the file we re-open
-            snapshot.chunk_frame(spark, [snapshot.chunks_dir(sdir)])
-            .select("part_id", "column", "min_bin", "max_bin", "min_num",
-                    "max_num", "min_dbl", "max_dbl", "null_count", "n_rows")
-        )
-        parts = meta.select("part_id").distinct()
-        prim = meta.filter(F.col("column") == primary)
-        j = (
-            parts.join(prim, "part_id", "left")
-            .withColumn("b_lo", span(sc_min))
-            .withColumn("b_hi", span(sc_max))
-        )
-        w = F.coalesce(F.col("n_rows"), F.lit(1)).alias("w")
-        spanned = j.select(
-            F.explode(F.sequence(F.col("b_lo"), F.col("b_hi"))).alias("bucket"),
-            F.lit(sdir).alias("snap"),
-            "part_id",
-            w,
-        )
-        # a chunk whose values sit above bucket 0 but which CONTAINS
-        # nulls also feeds bucket 0 (zone maps cover non-null values
-        # only; null rows are bucket-0 rows)
-        null_extra = j.filter(
-            (F.coalesce(F.col("null_count"), F.lit(1)) > 0) & (F.col("b_lo") > 0)
-        ).select(F.lit(0).alias("bucket"), F.lit(sdir).alias("snap"), "part_id", w)
-        frames.append(spanned.unionByName(null_extra))
-    out = frames[0]
-    for fr in frames[1:]:
-        out = out.unionByName(fr)
-    return out.distinct()
+    from . import decode_job
+    from .table import SNAP_SHIFT
+
+    # one metadata frame over every snapshot's chunk files; its part ids
+    # are namespaced by snapshot id, so a partition is one part_id here
+    listing = decode_job.check_integrity(None, filesystem=filesystem, _snaps=snaps)
+    meta = decode_job.chunks_frame(
+        spark, listing,
+        ["column", "min_bin", "max_bin", "min_num", "max_num", "min_dbl", "max_dbl",
+         "null_count", "n_rows"],
+        filesystem,
+    )
+    parts = meta.select("part_id").distinct()
+    prim = meta.filter(F.col("column") == primary)
+    j = (
+        parts.join(prim, "part_id", "left")
+        .withColumn("b_lo", span(sc_min))
+        .withColumn("b_hi", span(sc_max))
+    )
+    # back to (snapshot dir, part id in it): the file a bucket task opens
+    snap_of = F.create_map(*[x for sid, sdir in snaps for x in (F.lit(int(sid)), F.lit(sdir))])
+    snap = F.element_at(snap_of, F.shiftrightunsigned("part_id", SNAP_SHIFT)).alias("snap")
+    pid = F.col("part_id").bitwiseAND(F.lit((1 << SNAP_SHIFT) - 1)).alias("part_id")
+    w = F.coalesce(F.col("n_rows"), F.lit(1)).alias("w")
+    spanned = j.select(
+        F.explode(F.sequence(F.col("b_lo"), F.col("b_hi"))).alias("bucket"), snap, pid, w,
+    )
+    # a chunk whose values sit above bucket 0 but which CONTAINS
+    # nulls also feeds bucket 0 (zone maps cover non-null values
+    # only; null rows are bucket-0 rows)
+    null_extra = j.filter(
+        (F.coalesce(F.col("null_count"), F.lit(1)) > 0) & (F.col("b_lo") > 0)
+    ).select(F.lit(0).alias("bucket"), snap, pid, w)
+    return spanned.unionByName(null_extra).distinct()
 
 
 def fanout(plan_df: DataFrame) -> float:

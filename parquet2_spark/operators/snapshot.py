@@ -16,9 +16,10 @@ renamed into ``chunks/``), then a slim commit marker. A marker therefore
 always has its data file; the markers are the resume ledger
 (``committed_parts``) and the torn-snapshot check (``torn_parts``).
 
-Part identity lives in the chunk FILENAME (``chunk_frame`` and
-``chunk_listing`` derive ``part_id`` from it), which is what lets a
-keeper be carried into a new snapshot as a byte-verbatim file copy.
+Part identity lives in the chunk FILENAME (``chunk_listing`` derives
+``part_id`` from it, and every reader takes it from the listing), which
+is what lets a keeper be carried into a new snapshot as a byte-verbatim
+file copy.
 
 Marker fields: ``part_id``, ``file``, ``rows``, ``wall_s``, plus
 ``cpu_s`` and the writer's planned partition count ``n_parts`` for
@@ -44,11 +45,11 @@ A chunk file holds one row per column of its partition, typed by
     qgrid                                quantile grid (json text)
     bloom, ndv_hll                       bloom filter, NDV sketch
     payload                              the encoded chunk
-Every chunk read goes through ``chunk_frame`` (Spark) or ``ChunkFile``
-(pyarrow: one open and one footer parse, then any number of field reads;
-``read_chunk_file`` is its one-read form), all typed by that schema: a
-field missing from an older file reads as null, so no reader asks which
-fields a file has. The metric rows the writers return are the chunk
+Every chunk read goes through ``ChunkFile`` (pyarrow: one open and one
+footer parse, then any number of field reads; ``read_chunk_file`` is its
+one-read form; ``decode_job.chunks_frame`` runs it in Spark tasks for
+the metadata queries), typed by that schema: a field missing from an
+older file reads as null, so no reader asks which fields a file has. The metric rows the writers return are the chunk
 rows without ``payload``, ``bloom``, ``ndv_hll``, ``qgrid``,
 ``bounds_order`` and the page min/max/null lists, plus ``wall_s``.
 """
@@ -67,7 +68,6 @@ import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .. import fsio
 
@@ -130,12 +130,12 @@ _DDL_TYPE = {
 }
 
 
-def _ddl(schema: pa.Schema) -> str:
+def ddl(schema: pa.Schema) -> str:
+    """Spark DDL of a schema of chunk-file fields."""
     return ", ".join(f"`{f.name}` {_DDL_TYPE[f.type]}" for f in schema)
 
 
-CHUNK_DDL = _ddl(CHUNK_PA_SCHEMA)
-METRICS_DDL = _ddl(METRICS_PA_SCHEMA)
+METRICS_DDL = ddl(METRICS_PA_SCHEMA)
 
 
 def chunk_name(part_id: int) -> str:
@@ -148,40 +148,6 @@ def chunks_dir(snapshot_root: str) -> str:
 
 def chunk_path(snapshot_root: str, part_id: int) -> str:
     return fsio.join(snapshot_root, CHUNKS, chunk_name(part_id))
-
-
-def _filename_part_id():
-    """``part_id`` derived from the chunk FILENAME (``part-NNNNNN``) —
-    the authoritative partition identity. Verbatim-copied chunk files
-    (binpack keepers, incremental re-layout keepers) keep their OLD
-    embedded ``part_id`` column untouched: the rename IS the renumber,
-    which is what lets maintenance carry partitions by server-side copy
-    on object stores instead of rewriting parquet. The embedded column
-    still rides in every file (writers emit it; it equals the filename
-    for freshly-encoded partitions) but no reader trusts it.
-
-    Uses the ``_metadata.file_name`` hidden column, NOT
-    ``input_file_name()``: the latter is nondeterministic, and Catalyst
-    refuses to push ANY filter through a nondeterministic Project —
-    zone-map and column predicates would stop reaching the parquet scan
-    (caught by tests/test_plans_audit.py)."""
-    return F.regexp_extract(
-        F.col("_metadata.file_name"), r"part-(\d+)\.parquet", 1
-    ).cast("long")
-
-
-def chunk_frame(spark, paths: list[str]) -> DataFrame:
-    """The chunk rows of the chunk files (or ``chunks/`` dirs) at
-    ``paths``, typed by ``CHUNK_PA_SCHEMA`` — no schema-inference job,
-    and a field an older file lacks reads as null — with ``part_id``
-    taken from the filename. No paths: a typed zero-row frame."""
-    if not paths:
-        return spark.createDataFrame([], CHUNK_DDL)
-    return (
-        spark.read.schema(CHUNK_DDL)
-        .parquet(*paths)
-        .withColumn("part_id", _filename_part_id())
-    )
 
 
 class ChunkFile:

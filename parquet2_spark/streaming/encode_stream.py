@@ -3,8 +3,8 @@ same snapshot layout, one micro-batch at a time.
 
 ``foreachBatch`` + the encode job's idempotent per-partition commits give
 exactly-once snapshot semantics on top of Spark's at-least-once batch
-replay: a replayed micro-batch re-derives the same deterministic part_ids
-(batch-scoped) and its commit markers overwrite byte-identical files.
+replay: a replayed micro-batch encodes into the same batch-scoped
+sub-snapshot and resumes there, skipping the partitions it committed.
 
 The reference has an async streaming sink (FileStreamer,
 src/write/stream.rs) — this is its Spark-native analog: watermark/state
@@ -17,7 +17,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.encode_job import EncodeConfig, encode
 
@@ -32,22 +31,18 @@ def encode_stream(
 ):
     """Start a streaming query that appends encoded chunks per micro-batch.
 
-    Each micro-batch becomes its own partition-id namespace
-    (``batch_id * 10**6 + part``) so chunk files never collide across
-    batches and a crashed batch resumes idempotently.
+    Each micro-batch encodes into its own sub-snapshot
+    ``batch=<batch_id>`` under ``snapshot_dir``, so chunk files never
+    collide across batches, and a replayed batch resumes idempotently
+    into the same dir.
     """
     cfg = cfg or EncodeConfig()
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        batch_cfg = EncodeConfig(**{**cfg.__dict__})
-        base = int(batch_id) * 1_000_000
-        # deterministic per-batch partition ids offset by the batch id
-        from pyspark.sql import functions as F  # local import for workers
-
         sub = os.path.join(snapshot_dir, f"batch={batch_id:06d}")
-        encode(batch_df.sparkSession, batch_df, sub, batch_cfg, resume=True)
+        encode(batch_df.sparkSession, batch_df, sub, cfg, resume=True)
 
     writer = (
         stream_df.writeStream.foreachBatch(sink)

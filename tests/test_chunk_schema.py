@@ -1,6 +1,7 @@
 """One chunk-file schema: ``snapshot.CHUNK_PA_SCHEMA`` types every chunk
-read, so a field an older chunk file lacks reads as null under both
-Spark and pyarrow, and readers need no per-field guards."""
+read, so a field an older chunk file lacks reads as null, in a decode
+and in the metadata frame (``decode_job.chunks_frame``), and readers need
+no per-field guards."""
 
 from __future__ import annotations
 
@@ -30,15 +31,17 @@ def test_metric_schema_is_derived_from_the_chunk_schema():
 
 
 def test_typed_readers_fill_missing_fields_with_null(spark, tmp_path):
-    path = str(tmp_path / snapshot.chunk_name(3))
+    snap = str(tmp_path / "snap")
+    os.makedirs(snapshot.chunks_dir(snap))
+    path = snapshot.chunk_path(snap, 3)
     pq.write_table(pa.table({"column": ["a"], "n_rows": [5]}), path)
     t = snapshot.read_chunk_file(None, path)
     assert t.schema == snapshot.CHUNK_PA_SCHEMA
     assert t.column("bloom").to_pylist() == [None]
-    row = snapshot.chunk_frame(spark, [path]).first()
+    row = decode_job.chunks_df(spark, snap).first()
     assert (row["part_id"], row["column"], row["n_rows"], row["qgrid"]) == (3, "a", 5, None)
-    empty = snapshot.chunk_frame(spark, [])
-    assert empty.count() == 0 and empty.schema == snapshot.chunk_frame(spark, [path]).schema
+    empty = decode_job.chunks_frame(spark, [])
+    assert empty.count() == 0 and empty.schema == decode_job.chunks_df(spark, snap).schema
 
 
 def _rows(lo: int) -> list[tuple]:

@@ -3,7 +3,7 @@
 Verbatim-copied chunk files (binpack keepers, incremental re-layout
 keepers) are byte-identical to their source — the rename IS the
 renumber, and every reader derives ``part_id`` from the filename
-(``snapshot._filename_part_id``) instead of the embedded column, whose
+(``snapshot.chunk_listing``) instead of the embedded column, whose
 value goes stale in copies. This is what lets an object-store deployment
 carry partitions by server-side copy (zero bytes through the worker);
 locally the copy streams at IO speed with no parquet parse.

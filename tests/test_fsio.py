@@ -121,6 +121,101 @@ class TestTableThroughFilesystem:
         assert out.count() == 200
 
 
+class TestMetadataQueriesThroughFilesystem:
+    """decode(row_range=...), stats, quantiles and the bin-pack and range
+    compactions read the chunk files' metadata through the filesystem
+    object: a path only it can resolve works, and gives what the same
+    call on the physical path gives."""
+
+    @pytest.fixture(scope="class")
+    def store(self, spark, tmp_path_factory):
+        from parquet2_spark.operators import table as table_mod
+
+        root = str(tmp_path_factory.mktemp("store"))
+        fs = pafs.SubTreeFileSystem(root, pafs.LocalFileSystem())
+        df = spark.range(3000).select(
+            F.col("id").alias("k"),
+            F.concat(F.lit("v"), (F.col("id") % 97).cast("string")).alias("s"),
+        )
+        cfg = EncodeConfig(
+            target_rows=400, page_rows=100, sort_by="k", key="k",
+            host_from_key=False, filesystem=fs,
+        )
+        encode(spark, df, "snap", cfg)
+        # two appends of well-sized partitions (bin-pack keepers) and a
+        # small one (the tail)
+        for lo, hi in ((0, 1400), (1400, 2800), (2800, 3000)):
+            table_mod.append(spark, df.filter((F.col("k") >= lo) & (F.col("k") < hi)), "tbl", cfg)
+        return fs, root, cfg
+
+    def test_row_range(self, spark, store):
+        fs, root, _ = store
+        via = decode_job.decode(spark, "snap", filesystem=fs, row_range=(390, 1210)).collect()
+        phys = decode_job.decode(spark, os.path.join(root, "snap"), row_range=(390, 1210)).collect()
+        assert len(via) == 820 and sorted(via) == sorted(phys)
+
+    def test_stats(self, spark, store):
+        fs, root, _ = store
+        for d in ("snap", "tbl"):
+            via = decode_job.stats(spark, d, filesystem=fs).collect()
+            assert via and via == decode_job.stats(spark, os.path.join(root, d)).collect()
+
+    def test_quantiles(self, spark, store):
+        fs, root, _ = store
+        for d in ("snap", "tbl"):
+            phys = os.path.join(root, d)
+            assert decode_job.quantiles(spark, d, "k", [0.1, 0.5, 0.9], filesystem=fs) == (
+                decode_job.quantiles(spark, phys, "k", [0.1, 0.5, 0.9])
+            )
+            assert decode_job.range_bounds(spark, d, "s", 4, filesystem=fs) == (
+                decode_job.range_bounds(spark, phys, "s", 4)
+            )
+
+    @pytest.mark.parametrize(
+        "kw, path",
+        [({}, "binpack"), ({"range_layout_on": "k", "local_merge": True}, "local_merge")],
+        ids=["binpack", "range"],
+    )
+    def test_compact(self, spark, store, kw, path):
+        import shutil
+        from dataclasses import replace
+
+        from parquet2_spark.operators import table as table_mod
+
+        fs, root, cfg = store
+        name = f"tbl_{path}"
+        phys = os.path.join(root, f"{name}_local")
+        shutil.copytree(os.path.join(root, "tbl"), os.path.join(root, name))
+        shutil.copytree(os.path.join(root, "tbl"), phys)
+        via = table_mod.compact(spark, name, cfg, **kw)
+        local = table_mod.compact(spark, phys, replace(cfg, filesystem=None), **kw)
+        assert via["compaction_path"] == local["compaction_path"] == path
+        skip = {"snapshot", "created_unix", "wall_s"}
+        assert {k: v for k, v in via.items() if k not in skip} == (
+            {k: v for k, v in local.items() if k not in skip}
+        )
+        assert via.get("binpack_kept", 1) > 0
+        rows = sorted(decode_job.decode(spark, name, filesystem=fs).collect())
+        assert len(rows) == 3000 and rows == sorted(decode_job.decode(spark, phys).collect())
+        ((_, a),) = table_mod.snapshot_dirs(os.path.join(root, name))
+        ((_, b),) = table_mod.snapshot_dirs(phys)
+        files = sorted(os.listdir(os.path.join(a, "chunks")))
+        assert files == sorted(os.listdir(os.path.join(b, "chunks")))
+        for f in files:
+            with open(os.path.join(a, "chunks", f), "rb") as x, open(os.path.join(b, "chunks", f), "rb") as y:
+                assert x.read() == y.read(), f
+
+    def test_torn_snapshot_fails_metadata_queries(self, spark, subtree):
+        fs, _ = subtree
+        df = spark.range(100).select(F.col("id").alias("k"))
+        encode(spark, df, "snapT", EncodeConfig(target_rows=50, key="k", host_from_key=False, filesystem=fs))
+        fs.delete_file(f"snapT/chunks/{fsio.listdir(fs, 'snapT/chunks')[0]}")
+        with pytest.raises(FileNotFoundError, match="torn"):
+            decode_job.stats(spark, "snapT", filesystem=fs)
+        with pytest.raises(FileNotFoundError, match="torn"):
+            decode_job.quantiles(spark, "snapT", "k", [0.5], filesystem=fs)
+
+
 class TestCopyFileAtomic:
     def test_same_fs_local(self, tmp_path):
         fs = pafs.LocalFileSystem()

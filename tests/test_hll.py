@@ -139,23 +139,30 @@ class TestMixedCoverage:
         rows = {r["column"]: r for r in decode_job.stats(spark, tdir).collect()}
         assert abs(rows["k"]["ndv_est"] - 750) / 750 < 0.02
 
-    def test_two_stage_merge_path_agrees(self, spark, tmp_path, monkeypatch):
-        """The big-table shape (per-batch premerge then grouped final)
-        returns the same estimates as the small-table single-stage path —
-        forced via the partition-count gate, since no unit test writes
-        2000+ real partitions."""
+    def test_two_stage_merge_path_agrees(self, spark, tmp_path):
+        """stats() merges the sketches in two stages (a partial per
+        column per batch, then one final merge per column): its estimate
+        is that of one merge over every chunk's stored sketch."""
+        import glob
+        import os
+
+        import pyarrow.parquet as pq
+
         snap = str(tmp_path / "s2s")
         df = spark.range(2000).select(
             F.col("id").alias("k"), (F.col("id") % 37).cast("string").alias("u"))
         encode(spark, df, snap, EncodeConfig(target_rows=500, key="k", sort_by="k",
                                              host_from_key=False))
-        small = {r["column"]: r["ndv_est"]
-                 for r in decode_job.stats(spark, snap).collect()}
-        monkeypatch.setattr(decode_job, "_committed_partition_count",
-                            lambda *a, **k: None)  # force two-stage
-        big = {r["column"]: r["ndv_est"]
-               for r in decode_job.stats(spark, snap).collect()}
-        assert small == big and big["u"] is not None
+        got = {r["column"]: r["ndv_est"] for r in decode_job.stats(spark, snap).collect()}
+        sketches: dict = {}
+        files = glob.glob(os.path.join(snap, "chunks", "*.parquet"))
+        for f in files:
+            for r in pq.read_table(f, columns=["column", "ndv_hll"]).to_pylist():
+                sketches.setdefault(r["column"], []).append(r["ndv_hll"])
+        assert len(files) > 1 and all(len(v) == len(files) and None not in v for v in sketches.values())
+        want = {c: hll.estimate(hll.merge(v)) for c, v in sketches.items()}
+        assert got == want
+        assert abs(got["k"] - 2000) / 2000 < 0.02 and got["u"] == 37
 
 
 class TestSparseFormat:

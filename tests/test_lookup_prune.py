@@ -541,14 +541,17 @@ def test_jobs_per_write(spark, tmp_path):
 
 
 def test_metadata_reads_start_no_inference_jobs(spark, lookup_table):
-    """stats(), quantiles() and the compaction plan over a 3-snapshot
-    table read the chunk files typed: no job per snapshot for schema
-    inference (untyped reads started 9, 4 and 17 jobs here). The plan's
-    counts over the first 1, 2 and 3 snapshots are the baseline for
-    cutting the range compaction's plan cost: 2 jobs plus 4 per
-    snapshot."""
+    """stats(), quantiles(), a row_range read and the compaction plan
+    over a 3-snapshot table read the chunk files' metadata through
+    ``chunks_frame``, typed: no job per snapshot for schema inference
+    (untyped reads started 9, 4 and 17 jobs here). The plan reads one
+    frame over all its snapshots, so it runs as many jobs over 1
+    snapshot as over 3; a union of per-snapshot parquet scans ran 2
+    jobs plus 4 per snapshot. No count is above that of the parquet
+    scans the frame replaced (``SCANS``)."""
     from parquet2_spark.operators import merge_compact
 
+    SCANS = {"stats": 6, "quantiles": 1, "row_range": 5, "plan1": 6, "plan2": 10, "plan3": 14}
     tdir, sdirs, urls = lookup_table
     snaps = sorted(sdirs.items())
     bounds = [urls[1000].encode(), urls[3000].encode()]
@@ -556,6 +559,10 @@ def test_metadata_reads_start_no_inference_jobs(spark, lookup_table):
         "stats": _jobs(spark, "stats", lambda: decode_job.stats(spark, tdir).collect()),
         "quantiles": _jobs(
             spark, "quantiles", lambda: decode_job.quantiles(spark, tdir, "warc_ts", [0.5])
+        ),
+        "row_range": _jobs(
+            spark, "row_range",
+            lambda: decode_job.decode(spark, sdirs[1], row_range=(100, 300)).collect(),
         ),
         **{
             f"plan{n}": _jobs(
@@ -565,7 +572,9 @@ def test_metadata_reads_start_no_inference_jobs(spark, lookup_table):
             for n in (1, 2, 3)
         },
     }
-    assert got == {"stats": 6, "quantiles": 1, "plan1": 6, "plan2": 10, "plan3": 14}
+    assert got == {"stats": 6, "quantiles": 1, "row_range": 5, "plan1": 6, "plan2": 6, "plan3": 6}
+    assert got["plan1"] == got["plan3"]
+    assert all(got[k] <= SCANS[k] for k in SCANS)
 
 
 def _executions(spark) -> list:
@@ -587,13 +596,9 @@ def _decode_scans(spark, snap_dir: str, kw: dict) -> list[str]:
 @pytest.mark.parametrize("kind", sorted(JOBS_PER_READ))
 def test_no_decode_query_reads_payload(spark, url_snap, src, kind):
     """The JVM reads no chunk file: no decode query holds a file scan,
-    except row_range's prefix sums over the row counts, which read no
-    payload. The decoder reads every chunk file itself."""
-    schemas = _decode_scans(spark, url_snap, _read_kwargs(src, kind))
-    if kind == "row_range":
-        assert schemas and not [m for m in schemas if "payload" in m]
-    else:
-        assert schemas == []
+    row_range's prefix sums included (they read the row counts through
+    ``chunks_frame``). The decoder reads every chunk file itself."""
+    assert _decode_scans(spark, url_snap, _read_kwargs(src, kind)) == []
 
 
 def _part_rows(snap_dir: str) -> list[tuple[str, int]]:
@@ -837,6 +842,45 @@ def test_each_chunk_file_is_opened_once(spark, url_snap, src, kind, tmp_path):
             payload_read.add(p)
     assert payload_read == _read_survivors(spark, url_snap, src, kind)
     assert parts == len(payload_read)
+
+
+def test_metadata_frame_never_reads_payload(spark, url_snap, lookup_table, tmp_path):
+    """The metadata queries read the chunk files through ``chunks_frame``
+    and a filesystem that logs every open and read: each opens every
+    listed chunk file, and none reads a byte of a ``payload`` column
+    chunk. The footer read (the one that ends at the end of the file) is
+    not a payload read."""
+    from parquet2_spark.operators import merge_compact
+
+    tdir, sdirs, urls = lookup_table
+    calls = {
+        "chunks_df": lambda fs: decode_job.chunks_df(spark, url_snap, filesystem=fs).collect(),
+        "stats": lambda fs: decode_job.stats(spark, url_snap, filesystem=fs).collect(),
+        "quantiles": lambda fs: decode_job.quantiles(spark, url_snap, "warc_ts", [0.5], filesystem=fs),
+        "row_counts": lambda fs: decode_job.chunks_frame(
+            spark, decode_job.check_integrity(url_snap, filesystem=fs), ["column", "n_rows"], fs
+        ).collect(),
+        "plan": lambda fs: merge_compact.plan(
+            spark, sorted(sdirs.items()), "url", [urls[1000].encode()], filesystem=fs
+        ).collect(),
+    }
+    table_files = set().union(*(_all_files(d) for d in sdirs.values()))
+    for name, call in calls.items():
+        log = str(tmp_path / f"{name}.log")
+        call(_logging_fs(log))
+        lines = [ln.split("\t") for ln in open(log).read().splitlines()]
+        opened = {os.path.realpath(p) for op, p, *_ in lines if op == "open"}
+        assert opened == (table_files if name == "plan" else _all_files(url_snap)), name
+        payload_read = []
+        for op, p, *at in lines:
+            if op != "read" or not p.endswith(".parquet"):
+                continue
+            p = os.path.realpath(p)
+            lo, hi = _payload_span(p)
+            off, n = int(at[0]), int(at[1])
+            if off < hi and off + n > lo and off + n < os.path.getsize(p):
+                payload_read.append((p, off, n))
+        assert payload_read == [], name
 
 
 @pytest.mark.parametrize("kind", ["full", "key_eq", "row_range"])

@@ -1,50 +1,20 @@
 """Physical-plan assertions: the scale story must be visible in explain().
 
-- stats queries must never read the payload column (projection pruning
-  reaches the parquet scan of the chunks table);
-- zone-map range filters must be pushed to the parquet scan
-  (PushedFilters on min/max stat columns);
-- the hot-host table in encode planning must be broadcast, not shuffled.
+The hot-host table in encode planning must be broadcast, not shuffled.
+That the metadata queries never read a payload byte is counted through a
+logging filesystem instead (tests/test_lookup_prune.py).
 """
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from parquet2_spark.operators import decode_job
-from parquet2_spark.operators.encode_job import EncodeConfig, encode, plan_partitions
+from parquet2_spark.operators.encode_job import EncodeConfig, plan_partitions
 from parquet2_spark.sources import webgen
-
-
-@pytest.fixture(scope="module")
-def snap(spark, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("snap_plans"))
-    df = webgen.webpages_df(spark, 1500, partitions=4)
-    encode(spark, df, d, EncodeConfig(target_rows=500, page_rows=250))
-    return d
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_stats_scan_never_reads_payload(spark, snap):
-    plan = _plan(decode_job.stats(spark, snap))
-    assert "ReadSchema" in plan
-    read_schema = [l for l in plan.splitlines() if "ReadSchema" in l][0]
-    assert "payload" not in read_schema
-
-
-def test_zone_map_filter_pushed_to_parquet_scan(spark, snap):
-    df = decode_job.chunks_df(spark, snap)
-    pruned = decode_job.prune_by_range(
-        df.filter(df["column"] == "url"), "url", "https://a", "https://z"
-    ).select("part_id")
-    plan = _plan(pruned)
-    pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
-    assert pushed, plan
-    assert "max_bin" in pushed[0] and "min_bin" in pushed[0]
 
 
 def test_hot_host_join_is_broadcast(spark):

@@ -77,17 +77,6 @@ def test_decode_projection_reads_no_chunk_file_in_the_jvm(spark, snap):
     assert df.p2s_decode_metrics["parts_read"].value == len(os.listdir(os.path.join(snap, "chunks")))
 
 
-def test_chunk_frame_pushes_column_filter(spark, snap):
-    """The metadata queries (stats, quantiles, compaction plans) read the
-    chunks frame: a column filter reaches its parquet scan, and the
-    filename-derived part_id does not block the pushdown."""
-    df = decode_job.chunks_df(spark, snap).filter(F.col("column") == "url")
-    plan = _explain(df.select("part_id", "min_bin"))
-    assert re.search(r"PushedFilters: \[[^\]]*EqualTo\(column,url\)", plan)
-    rs = re.search(r"ReadSchema: [^\n]*", plan).group(0)
-    assert "payload" not in rs and "bloom" not in rs
-
-
 def test_key_range_prunes_in_the_decoder(spark, snap):
     lo, hi = "https://host001", "https://host004"
     df = decode_job.decode(spark, snap, key_range=("url", lo, hi))
