@@ -88,9 +88,11 @@ def _entry_keys(table: SymbolTable) -> tuple[np.ndarray, np.ndarray]:
     uint64. Ordering by (value, length) is ordering by the bytes."""
     val = np.zeros(512, dtype=np.uint64)
     ln = np.zeros(512, dtype=np.int64)
-    for e, s in enumerate(table.symbols):
-        val[e] = int.from_bytes(s.ljust(8, b"\0"), "big")
-        ln[e] = len(s)
+    n = len(table.symbols)
+    if n:
+        packed = b"".join([sym.ljust(8, b"\0") for sym in table.symbols])
+        val[:n] = np.frombuffer(packed, ">u8")
+        ln[:n] = np.frombuffer(bytes(map(len, table.symbols)), np.uint8)
     val[256:] = np.arange(256, dtype=np.uint64) << np.uint64(56)
     ln[256:] = 1
     return val, ln
@@ -120,17 +122,18 @@ def train(sample: bytes, generations: int = GENERATIONS) -> SymbolTable:
         single = np.flatnonzero(cnt)
         vals, lens, counts = [ent_val[single]], [ent_len[single]], [cnt[single]]
         if len(entries) > 1:
-            pair_cnt = np.bincount(entries[:-1] * 512 + entries[1:])
+            pk, pair_cnt = np.unique(entries[:-1] * 512 + entries[1:], return_counts=True)
             # rare pairs can never earn a code slot (diverse text has 10k+
             # singleton pairs)
-            pk = np.flatnonzero(pair_cnt >= 4)
+            often = pair_cnt >= 4
+            pk, pair_cnt = pk[often], pair_cnt[often]
             a, b = pk >> 9, pk & 511
             la, lb = ent_len[a], ent_len[b]
             fit = la + lb <= MAX_SYMBOL_LEN
-            a, b, la, lb, pk = a[fit], b[fit], la[fit], lb[fit], pk[fit]
+            a, b, la, lb, pair_cnt = a[fit], b[fit], la[fit], lb[fit], pair_cnt[fit]
             vals.append(ent_val[a] | (ent_val[b] >> (np.uint64(8) * la.astype(np.uint64))))
             lens.append(la + lb)
-            counts.append(pair_cnt[pk])
+            counts.append(pair_cnt)
         val, ln, c = np.concatenate(vals), np.concatenate(lens), np.concatenate(counts)
         order = np.lexsort((ln, val))
         val, ln, c = val[order], ln[order], c[order]

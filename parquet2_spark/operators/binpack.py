@@ -82,7 +82,8 @@ def binpack_compact(
     # chunk files lack the later columns, and a verbatim copy would
     # plant a partition with missing column chunks in the new snapshot.
     # O(#snapshots) driver work, metadata JSON only.
-    union_cols = decode_job.lineage(table_dir, filesystem=cfg.filesystem)["columns"]
+    union = decode_job.lineage(table_dir, filesystem=cfg.filesystem)
+    union_cols = union["columns"]
     eligible_sids = []
     snaps = table_mod.snapshot_dirs(table_dir, filesystem=cfg.filesystem)
     for sid, sdir in snaps:
@@ -182,11 +183,9 @@ def binpack_compact(
     )
     job = snapshot.metrics_job()
     metrics_df = snapshot.copy_keepers(plan, snap_dir, cfg.filesystem, job)
-    # dtypes-only frame for lineage schema (never executed)
-    full = decode_job.decode(spark, table_dir, filesystem=cfg.filesystem)
     lin = commit_metrics_action(
-        spark, metrics_df, snap_dir, cfg, union_cols, full,
-        k + m_keep, t0, 1, job,
+        spark, metrics_df, snap_dir, cfg, union_cols,
+        {c: union["schema"][c] for c in union_cols}, k + m_keep, t0, 1, job,
     )
     lin["binpack_kept"] = m_keep
     return lin

@@ -643,19 +643,28 @@ def _typed_lit(v, ddl: str):
     return F.lit(v).cast(ddl)
 
 
+def _residual_lit(v, ddl: str):
+    """The literal a residual row filter compares a column of type ``ddl``
+    with: datetimes and dates, and ints against temporal columns (epoch
+    micros/days, the zone-map units), take the session-tz-safe
+    ``_typed_lit``; any other value stays a plain literal, so Spark
+    compares in the wider type and a float probe on an integer column is
+    never truncated (``1.5`` matches no int)."""
+    import datetime as _dt
+
+    temporal = ddl.startswith("timestamp") or ddl == "date"
+    if isinstance(v, (_dt.date, _dt.datetime)) or (
+        temporal and isinstance(v, int) and not isinstance(v, bool)
+    ):
+        return _typed_lit(v, ddl)
+    return F.lit(v)
+
+
 def _local(spark: SparkSession, vals: list, ddl: str) -> DataFrame:
     """One-column frame ``m`` of ``vals`` typed as ``ddl``, over a local
     Arrow relation: collecting it, or a projection of it, runs on the
     driver and starts no Spark job."""
     return spark.createDataFrame(pa.table({"m": vals}), f"`m` {ddl}")
-
-
-def _hashes(df: DataFrame, col) -> np.ndarray:
-    """``F.xxhash64(col)`` over a local frame, as the uint64 keys the
-    stored blooms hold: the same JVM function that hashed the column at
-    encode time, collected with no Spark job."""
-    rows = df.select(F.xxhash64(col)).collect()
-    return np.array([r[0] for r in rows], dtype=np.int64).view(np.uint64)
 
 
 def _probe_frame(spark: SparkSession, vals: list, ddl: str) -> DataFrame:
@@ -666,8 +675,8 @@ def _probe_frame(spark: SparkSession, vals: list, ddl: str) -> DataFrame:
     travel as epoch ints (wall-clock strings for ``timestamp_ntz``) and
     convert through session-timezone-independent functions; a date probe
     against a timestamp column is promoted to midnight UTC python-side
-    (this engine defines naive instants as UTC). Built on ``_local``, so
-    hashing it starts no job."""
+    (this engine defines naive instants as UTC). Built on ``_local``, a
+    driver-side relation."""
     import datetime as _dt
 
     n_temporal = sum(isinstance(v, (_dt.date, _dt.datetime)) for v in vals)
@@ -1033,13 +1042,22 @@ def decode(
     reference's index-assisted read, SURVEY §3.3): the zone map prunes
     the range ``[value, value]`` and the decoder probes the stored
     split-block bloom (``EncodeConfig.bloom_columns``) with the value's
-    ``xxhash64``, hashed by the JVM function that hashed the column at
-    encode time over a local relation (no job, and a plan that does not
-    depend on the value). A null bloom keeps its partition.
+    ``xxhash64``, computed on the driver by ``bloom.probe_hashes`` as
+    Spark hashed the column at encode time (no Spark query, and a plan
+    that does not depend on the value). A null bloom keeps its
+    partition, and so does a value whose Python type is not the column's
+    own (a float on an int column, a date on a timestamp column). The
+    residual ``column == value`` makes the result exact.
 
     ``key_in=(column, values)`` is the batch lookup: the ``[min, max]``
-    envelope of the values, and a bloom that may hold ANY of their
-    hashes; the residual keeps the listed values.
+    envelope of the values prunes zone maps (none when NaN is listed), a
+    bloom must hold ANY of their hashes, and the residual keeps the
+    listed values (a broadcast semi-join for a temporal column).
+
+    The plan is the decoder over a ``spark.range`` of listing positions,
+    emitting ``columns`` in order, then one ``Filter`` when a predicate
+    needs residual rows and one ``Project`` when a predicate reads a
+    column ``columns`` lacks.
 
     ``_chunk_filter`` (internal, bin-pack compaction): a callable
     ``(sid, metadata rows) -> bool`` over a listed chunk file's
@@ -1190,52 +1208,54 @@ def decode(
                 if lo < hi:
                     row_spans[pid] = (lo, hi)
 
-    # key_range(s) AND-combine with the point lookups' ranges below
-    if key_eq is not None:
-        # zone maps prune equality as the degenerate range [v, v]: a
-        # sorted or range-partitioned key prunes partitions AND pages
-        # (binary-searched on boundary-ordered chunks) even when no
-        # bloom was stored — the bloom below stays the hash-based second
-        # stage. NaN is excluded: Spark equality holds NaN == NaN, but a
-        # range compare would prune the NaN-bearing pages.
-        import math as _math
+    # the zone maps (chunk and page) prune the point lookups as ranges:
+    # key_eq as the degenerate range [v, v] (a sorted or range-partitioned
+    # key prunes partitions AND pages, binary-searched on boundary-ordered
+    # chunks, even when no bloom was stored), key_in as the coarse
+    # [min, max] envelope of its values (a clustered id batch-fetch
+    # touches only the overlapping key range). They prune only: the
+    # residual ``==``/``isin`` below is exact without them. A NaN probe
+    # prunes no range: Spark equality holds NaN == NaN, but a range
+    # compare would prune the NaN-bearing pages.
+    import math as _math
 
+    def _nan(v) -> bool:
+        return isinstance(v, float) and _math.isnan(v)
+
+    prune = list(preds)
+    if key_eq is not None:
         eqc, eqv = key_eq
-        if eqv is not None and not (isinstance(eqv, float) and _math.isnan(eqv)):
-            preds.append((eqc, eqv, eqv))
-    if key_in is not None and key_in[1]:
-        # coarse [min, max] zone-map envelope over the IN-list (exact
-        # membership still enforced by bloom + residual): a clustered id
-        # batch-fetch touches only the overlapping key range
+        if eqv is not None and not _nan(eqv):
+            prune.append((eqc, eqv, eqv))
+    if key_in is not None and key_in[1] and not any(map(_nan, key_in[1])):
         try:
-            preds.append((key_in[0], min(key_in[1]), max(key_in[1])))
+            prune.append((key_in[0], min(key_in[1]), max(key_in[1])))
         except TypeError:
             pass  # unorderable/mixed values — bloom + residual only
 
-    # bloom probe hashes per lookup column: a partition survives if its
-    # bloom may hold one of each list's hashes; a null bloom (column or
-    # snapshot encoded without one) keeps it. Hashes are collected from
-    # local relations (no job); _typed_lit keeps datetime probes
-    # session-timezone-independent (UTC instants, like the stored data)
-    probes: dict[str, list] = {}
-    if key_eq is not None:
-        eq_lit = _typed_lit(key_eq[1], schema_map[key_eq[0]])
-        probes[key_eq[0]] = [_hashes(_local(spark, [0], "int"), eq_lit)]
-    if key_in is not None:
-        # IN-list point lookup: the batch-fetch path a training pipeline
-        # uses to pull N documents by id. The typed probe frame is
-        # reused by the residual semi-join below
-        in_col, in_vals = key_in
-        in_probe_frame = _probe_frame(spark, list(in_vals), schema_map[in_col])
-        probes.setdefault(in_col, []).append(_hashes(in_probe_frame, F.col("__p2s_probe")))
+    # bloom probe hashes per lookup column, hashed here as Spark hashed
+    # the column at encode time (``bloom.probe_hashes``, no Spark query): a
+    # partition survives if its bloom may hold one of each list's hashes.
+    # A null bloom (column or snapshot encoded without one) keeps it, and
+    # so does a probe of a foreign type (a float on an int column), which
+    # has no hash; the residual still makes it exact.
+    from ..plans import bloom as bloom_mod
 
-    need = sorted(
-        set(cols)
-        | {p[0] for p in preds}
-        | set(probes)
-        | set(nn_cols)
-        | set(isnull_cols)
-    )
+    lookups = []
+    if key_eq is not None:
+        lookups.append((key_eq[0], [key_eq[1]]))
+    if key_in is not None:
+        lookups.append((key_in[0], list(key_in[1])))
+    probes: dict[str, list] = {}
+    for c, vals in lookups:
+        h = bloom_mod.probe_hashes(vals, schema_map[c])
+        if h is not None:
+            probes.setdefault(c, []).append(h)
+
+    # the decoder emits the caller's columns, then the ones only a
+    # predicate reads (one select drops those after the residual)
+    extra = [c for c in dict.fromkeys(pred_cols) if c not in cols]
+    need = cols + extra
     # the decoder's task list: the listed chunk files (a row range's
     # only), as global part ids in part id order
     ids, sizes, dirs = _task_list(listing)
@@ -1245,8 +1265,8 @@ def decode(
     n_tasks = _read_tasks(spark, sizes)
 
     # the survival test each listed file's metadata rows must pass
-    zone_tests = [(c, t) for c, t in ((p[0], _zone_test(p[1], p[2])) for p in preds) if t]
-    positive = {p[0] for p in preds} | set(probes) | set(nn_cols)
+    zone_tests = [(c, t) for c, t in ((p[0], _zone_test(p[1], p[2])) for p in prune) if t]
+    positive = {p[0] for p in prune} | {c for c, _ in lookups} | set(nn_cols)
     tested = bool(positive or isnull_cols or _chunk_filter)
     meta_fields = ["column", "n_rows", "null_count"]
     if zone_tests:
@@ -1304,7 +1324,6 @@ def decode(
                 f = T.StructField(f.name, dt, f.nullable)
             pruned.append(f)
         stype = T.StructType(pruned)
-    out_schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in stype.fields)
     expected_pa = {f.name: spark_type_to_pa(f.dataType, ts_tz=session_tz) for f in stype.fields}
     # decode metrics (read back after an action via df.p2s_decode_metrics):
     # pages decoded vs pages skipped by the page-level indexes, and chunk
@@ -1313,7 +1332,6 @@ def decode(
     acc_pages_read = spark.sparkContext.accumulator(0)
     acc_pages_skipped = spark.sparkContext.accumulator(0)
     acc_parts_read = spark.sparkContext.accumulator(0)
-    from ..plans import bloom as bloom_mod
 
     need_arr = pa.array(need, pa.string())
 
@@ -1347,7 +1365,7 @@ def decode(
         ct = ct.filter(pc.is_in(ct.column("column"), value_set=need_arr))
         # page zone maps and the null index skip whole pages inside
         # surviving chunks — the IndexedPageReader/select_pages analog
-        page_keep = _page_keep(ct, preds, nn_cols, isnull_cols)
+        page_keep = _page_keep(ct, prune, nn_cols, isnull_cols)
         kept = n_pages if page_keep is None else len(page_keep)
         acc_pages_read.add(kept)
         acc_pages_skipped.add(n_pages - kept)
@@ -1374,52 +1392,42 @@ def decode(
 
     import datetime as _dt
 
-    out = spark.range(len(ids), numPartitions=n_tasks).mapInArrow(decode_parts, out_schema)
-    # residual row filters, as one filter: zone maps prune at chunk/page
-    # granularity, these make every predicate exact. The key column rides
-    # along for pruning; the final select drops it unless requested.
-    # Residual equality filters go through _typed_lit for the same
-    # session-tz reason as the bloom probe hashes above.
+    # the parsed output type, so mapInArrow parses no DDL string again
+    out = spark.range(len(ids), numPartitions=n_tasks).mapInArrow(decode_parts, stype)
+    # residual row filters, as one filter: the zone maps and blooms prune
+    # files and pages, these make every predicate exact. They take
+    # ``_residual_lit``'s literals (session-tz-safe typed literals for
+    # temporal values, plain ones otherwise).
     exact = []
     if key_eq is not None:
-        exact.append(F.col(key_eq[0]) == _typed_lit(key_eq[1], schema_map[key_eq[0]]))
+        exact.append(F.col(key_eq[0]) == _residual_lit(key_eq[1], schema_map[key_eq[0]]))
     if key_in is not None:
         in_col, in_vals = key_in
         in_ddl = schema_map[in_col]
         if in_ddl.startswith("timestamp") or in_ddl == "date" or any(
             isinstance(v, (_dt.date, _dt.datetime)) for v in in_vals
         ):
-            # residual via broadcast semi-join on the SAME typed probe
-            # frame the bloom probe hashed — session-tz-safe like
-            # _typed_lit, O(1) expression depth (an N-deep Or tree of
-            # typed literals fails codegen for large batch-fetch lists),
-            # and unit-correct for epoch-int probes (isin would read an
-            # int against a timestamp column as SECONDS)
-            pf = in_probe_frame
+            # residual via broadcast semi-join on a typed probe frame —
+            # session-tz-safe like _typed_lit, O(1) expression depth (an
+            # N-deep Or tree of typed literals fails codegen for large
+            # batch-fetch lists), and unit-correct for epoch-int probes
+            # (isin would read an int against a timestamp column as SECONDS)
+            pf = _probe_frame(spark, list(in_vals), in_ddl)
             out = out.join(
                 F.broadcast(pf), out[in_col] == pf["__p2s_probe"], "left_semi"
             )
         else:
             exact.append(F.col(in_col).isin(list(in_vals)))
     for pcol, lo, hi in preds:
-        # Datetimes/dates, and ints against temporal columns (epoch
-        # micros/days, the zone-map units), take the session-tz-safe typed
-        # literal; any other value stays a plain literal, so a float bound
-        # on an integer column is never truncated.
-        ddl = schema_map[pcol]
-        temporal = ddl.startswith("timestamp") or ddl == "date"
         for v, cmp in ((lo, operator.ge), (hi, operator.le)):
-            if v is None:
-                continue
-            typed = isinstance(v, (_dt.date, _dt.datetime)) or (
-                temporal and isinstance(v, int) and not isinstance(v, bool)
-            )
-            exact.append(cmp(F.col(pcol), _typed_lit(v, ddl) if typed else F.lit(v)))
+            if v is not None:
+                exact.append(cmp(F.col(pcol), _residual_lit(v, schema_map[pcol])))
     exact += [F.col(c).isNotNull() for c in nn_cols]
     exact += [F.col(c).isNull() for c in isnull_cols]
     if exact:
         out = out.filter(functools.reduce(operator.and_, exact))
-    out = out.select(*cols)
+    if extra:
+        out = out.select(*cols)
     # decode metrics ride on the result (read after an action):
     # {"pages_read": acc, "pages_skipped": acc, "parts_read": acc} —
     # accumulator .value

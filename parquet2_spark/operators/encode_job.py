@@ -579,7 +579,7 @@ def encode(
     metrics_df = planned.mapInArrow(run, snapshot.METRICS_DDL)
 
     return commit_metrics_action(
-        spark, metrics_df, snapshot_dir, cfg, columns, df, n_parts, t0,
+        spark, metrics_df, snapshot_dir, cfg, columns, dict(df.dtypes), n_parts, t0,
         len(already), job,
     )
 
@@ -590,7 +590,7 @@ def commit_metrics_action(
     snapshot_dir: str,
     cfg: EncodeConfig,
     columns: list[str],
-    df: DataFrame,
+    schema: dict,
     n_parts: int,
     t0: float,
     n_resumed: int,
@@ -601,8 +601,9 @@ def commit_metrics_action(
     ``_metrics/<job>/`` rows as side effects inside the UDF) and finalize
     lineage. Shared by the shuffle encode path, the keeper copies
     (operators/binpack.py) and the fused merge-compaction path
-    (operators/merge_compact.py), so all commit identically. ``df`` is
-    only consulted for dtypes (lineage schema)."""
+    (operators/merge_compact.py), so all commit identically. ``schema``
+    maps column names to their Spark type strings (``df.dtypes``), in
+    column order: the lineage schema."""
     # When THIS job's metric rows provably cover the whole snapshot
     # (fresh dir, nothing resumed), the lineage aggregates ride the job's
     # own action as observed metrics — per-column conditional aggregates
@@ -685,7 +686,7 @@ def commit_metrics_action(
         )
 
     return finalize(
-        spark, snapshot_dir, cfg, columns, df, n_parts, time.time() - t0,
+        spark, snapshot_dir, cfg, columns, schema, n_parts, time.time() - t0,
         n_resumed, precomputed=precomputed,
     )
 
@@ -695,7 +696,7 @@ def finalize(
     snapshot_dir: str,
     cfg: EncodeConfig,
     columns: list[str],
-    df: DataFrame,
+    schema: dict,
     n_parts: int,
     wall_s: float,
     resumed_parts: int = 0,
@@ -762,7 +763,7 @@ def finalize(
             "key": cfg.key,
             "outer": cfg.selector.outer,
         },
-        "schema": {c: t for c, t in df.dtypes if c in columns},
+        "schema": {c: t for c, t in schema.items() if c in columns},
         "columns": columns,
         "n_partitions_planned": n_parts,
         "n_partitions_committed": n_committed,

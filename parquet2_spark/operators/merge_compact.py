@@ -469,6 +469,6 @@ def encode_fused(
             snapshot.copy_keepers(keepers, snapshot_dir, filesystem, job)
         )
     return commit_metrics_action(
-        spark, metrics_df, snapshot_dir, cfg, columns, empty_df, n_parts, t0,
+        spark, metrics_df, snapshot_dir, cfg, columns, dict(empty_df.dtypes), n_parts, t0,
         n_resumed, job,
     )

@@ -489,7 +489,7 @@ def test_range_and_null_decode_plans_have_no_join(spark, url_snap, src, kind):
 
 # Spark jobs started by decode(...) plus collect(), per predicate kind:
 # the one decode action (chunk reads are typed, so no schema-inference
-# job, and probe hashes come from local relations, so no hash job);
+# job, and probe hashes are computed in Python, so no hash job);
 # row_range adds the jobs of its prefix-sum pass
 JOBS_PER_READ = {
     "full": 1, "key_eq": 1, "key_in": 1, "key_range": 1, "key_ranges": 1,

@@ -97,6 +97,58 @@ def test_key_range_prunes_in_the_decoder(spark, snap):
     assert df.p2s_decode_metrics["parts_read"].value == want
 
 
+def _linear_plan(df) -> list[str]:
+    """Node names of ``df``'s analyzed logical plan, top down, to the
+    first node without exactly one child: the plan ``decode`` built, before
+    any optimizer rule rewrites it."""
+    names, node = [], df._jdf.queryExecution().analyzed()
+    while node is not None:
+        names.append(node.nodeName())
+        kids = node.children()
+        node = kids.apply(0) if kids.size() == 1 else None
+    return names
+
+
+@pytest.mark.parametrize(
+    "kw,plan",
+    [
+        ({}, ["MapInArrow", "Range"]),
+        ({"key_eq": ("url", "https://host001/x")}, ["Filter", "MapInArrow", "Range"]),
+        ({"columns": ["url", "lang"], "key_range": ("url", "a", "z")}, ["Filter", "MapInArrow", "Range"]),
+        (
+            {"columns": ["lang"], "key_eq": ("url", "https://host001/x")},
+            ["Project", "Filter", "MapInArrow", "Range"],
+        ),
+        ({"columns": ["lang", "url"], "not_null": "text"}, ["Project", "Filter", "MapInArrow", "Range"]),
+    ],
+    ids=["full", "key_eq", "key_range_projected", "key_eq_key_not_returned", "not_null_extra"],
+)
+def test_decode_plan_is_the_decoder_and_what_predicates_need(spark, snap, kw, plan):
+    """A read is the decoder over a range of listing positions, emitting
+    the caller's columns in order; a predicate adds one Filter, and one
+    Project only when it reads a column the caller did not ask for."""
+    df = decode_job.decode(spark, snap, **kw)
+    assert _linear_plan(df) == plan
+    assert df.columns == (kw.get("columns") or ["url", "warc_ts", "html", "text", "lang"])
+
+
+def test_building_a_lookup_runs_no_action(spark, snap, monkeypatch):
+    """Building a key_eq or key_in read collects nothing: the bloom probe
+    hashes are computed in Python, not by a query."""
+    import datetime as dt
+
+    from pyspark.sql import DataFrame
+
+    calls = []
+    collect = DataFrame.collect
+    monkeypatch.setattr(DataFrame, "collect", lambda self: calls.append(1) or collect(self))
+    decode_job.decode(spark, snap, key_eq=("url", "https://host001/x"))
+    decode_job.decode(spark, snap, key_in=("url", ["https://host001/x", "https://host002/y"]))
+    decode_job.decode(spark, snap, key_eq=("warc_ts", dt.datetime(2020, 1, 1)))
+    decode_job.decode(spark, snap, key_in=("warc_ts", [dt.datetime(2020, 1, 1)]))
+    assert calls == []
+
+
 def test_lsh_census_broadcast_and_smj_candidates(spark):
     docs = spark.createDataFrame(
         [(i, f"text number {i} with words {i * 3}") for i in range(300)],
